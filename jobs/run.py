@@ -1,4 +1,5 @@
-"""spark-submit entry point.
+"""spark-submit entry point. Build the zip from the tree first; dist/ is not
+tracked, so a stale copy never ships.
 
     scripts/build_dist.sh
     spark-submit --py-files dist/nabu_spark.zip jobs/run.py harvest \

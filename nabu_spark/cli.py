@@ -9,7 +9,8 @@
     store    SPARQL-Update-able snapshot graph store              [north-star]
 
 Run via ``spark-submit --py-files dist/nabu_spark.zip jobs/run.py <cmd> ...``
-(see scripts/build_dist.sh) or plain ``python -m nabu_spark.cli <cmd> ...``.
+after building the zip with ``scripts/build_dist.sh``, or plain
+``python -m nabu_spark.cli <cmd> ...``.
 """
 
 from __future__ import annotations

@@ -12,107 +12,134 @@ Reference semantics (studied, not copied):
   * pull-with-skip compares the stored sidecar against the computed sum and
     skips unchanged releases (s3/client.go:286-318).
 
-All line construction is JVM-side (concat_ws); only the byte summation uses
-an Arrow-vectorized UDF (numpy reduction per batch).
+Every release path builds its lines with one helper (``release_lines``,
+JVM-side ``concat_ws``). Byte sums come from one Arrow-native kernel
+(``utf8_bytesums``): a single ``cumsum`` over a batch's UTF-8 values buffer,
+differenced at the offsets — no per-row Python. ``write_release`` evaluates
+it once per line, writes each release graph from exactly one task (one part
+file per graph) and sums the sidecar from the persisted line relation in a
+JVM-only job.
 """
 
 from __future__ import annotations
 
+import gzip
+import itertools
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-
-MASK64 = (1 << 64) - 1
-
-
-def quad_lines(quads: DataFrame) -> DataFrame:
-    """quads -> one N-Quads text line per row (release file content)."""
-    return quads.select(
-        F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit(".")).alias("line"),
-        "prov",
-    )
 
 
 def with_release_name(quads: DataFrame) -> DataFrame:
     """Route each quad to its release file from the prov URN
     (urn:iow:summoned:{sitemap}:{key}) per helpers.go:29-52: the path after
     the bucket-class segment names the file."""
-    prefix_class = F.split(F.regexp_replace("prov", r"^<|>$", ""), ":").getItem(2)
-    sitemap = F.split(F.regexp_replace("prov", r"^<|>$", ""), ":").getItem(3)
-    return quads.withColumn(
+    # the split URN gets a projection of its own so it is computed once per
+    # row: Spark does not collapse a non-trivial expression into the four
+    # places that read it
+    urn = quads.withColumn(
+        "_urn", F.split(F.regexp_replace("prov", r"^<|>$", ""), ":")
+    )
+    prefix_class, sitemap = F.col("_urn").getItem(2), F.col("_urn").getItem(3)
+    return urn.withColumn(
         "release_name",
         F.when(prefix_class == "summoned", F.concat(sitemap, F.lit("_release.nq")))
         .when(prefix_class == "prov", F.concat(sitemap, F.lit("_prov.nq")))
         .when(prefix_class == "orgs", F.lit("organizations.nq"))
         .otherwise(F.lit(None)),
+    ).drop("_urn")
+
+
+def release_lines(quads: DataFrame) -> DataFrame:
+    """quads -> ``(release_name, line)``: the N-Quads text line of each quad
+    and the release graph it belongs to."""
+    return with_release_name(quads).select(
+        "release_name",
+        F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit(".")).alias("line"),
     )
 
 
-def _utf8_bytesum_fn(texts: pd.Series) -> pd.Series:
+def utf8_bytesums(texts: pa.Array) -> pa.Array:
     """Sum of UTF-8 byte VALUES per string — the reference's order-agnostic
-    hash kernel (hash.go:29-51 sums the bytes of each object's content)."""
-    out = np.empty(len(texts), dtype=np.int64)
-    for i, s in enumerate(texts):
-        b = (s or "").encode("utf-8")
-        out[i] = int(np.frombuffer(b, dtype=np.uint8).sum())
-    return pd.Series(out)
+    hash kernel (hash.go:29-51 sums the bytes of each object's content).
+    One uint64 ``cumsum`` over the values buffer, differenced at the
+    offsets; honours the array's slice offset, and a null sums to 0."""
+    if len(texts) == 0:
+        return pa.array([], pa.int64())
+    width = np.dtype(np.int64 if pa.types.is_large_string(texts.type) else np.int32)
+    _, offsets, values = texts.buffers()
+    ends = np.frombuffer(offsets, width, len(texts) + 1, texts.offset * width.itemsize)
+    prefix = np.zeros(values.size + 1, dtype=np.uint64)
+    np.cumsum(np.frombuffer(values, np.uint8), dtype=np.uint64, out=prefix[1:])
+    sums = prefix[ends[1:]] - prefix[ends[:-1]]
+    if texts.null_count:
+        # a null slot may still span bytes of the values buffer
+        sums[texts.is_null().to_numpy(zero_copy_only=False)] = 0
+    return pa.array(sums.view(np.int64))
 
 
 def utf8_bytesum(col):
-    """Arrow-vectorized UTF-8 byte-value sum column (the real kernel; also
-    used by the driver-contract ``bytesum`` query)."""
-    return F.pandas_udf(_utf8_bytesum_fn, "long")(col)
+    """Arrow-native UTF-8 byte-value sum column (the release sidecar kernel;
+    also used by the driver-contract ``bytesum`` query)."""
+    return F.arrow_udf(utf8_bytesums, "long")(col)
 
 
-def _line_bytesum(col):
-    # +10 per line for the trailing '\n' of the concatenated release stream
-    return utf8_bytesum(col) + F.lit(10)
-
-
-def release_bytesums(quads: DataFrame) -> DataFrame:
-    """Per-release bytesum sidecar values (uint64 wrap-around). The signed
-    Spark long wraps mod 2^64 identically; presented as unsigned."""
-    lines = with_release_name(quads)
-    lines = lines.withColumn(
-        "line", F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit("."))
+def _bytesum_lines(quads: DataFrame) -> DataFrame:
+    """``(release_name, line, b)``: each release line with its byte sum,
+    +10 for the newline ending the line in the release stream."""
+    return release_lines(quads).withColumn(
+        "b", utf8_bytesum(F.col("line")) + F.lit(10)
     )
-    summed = (
+
+
+def _sum_by_release(lines: DataFrame) -> DataFrame:
+    """Per-release sum of ``b`` (uint64 wrap-around). The signed Spark long
+    wraps mod 2^64 identically; presented as unsigned."""
+    signed = F.col("signed_sum").cast("decimal(20,0)")
+    return (
         lines.groupBy("release_name")
-        .agg(F.sum(_line_bytesum(F.col("line"))).alias("signed_sum"))
+        .agg(F.sum("b").alias("signed_sum"))
         .withColumn(
             "bytesum",
-            F.when(F.col("signed_sum") >= 0, F.col("signed_sum").cast("decimal(20,0)"))
-            .otherwise(
-                F.col("signed_sum").cast("decimal(20,0)")
-                + F.expr("CAST('18446744073709551616' AS DECIMAL(21,0))")
+            F.when(F.col("signed_sum") >= 0, signed).otherwise(
+                signed + F.expr("CAST('18446744073709551616' AS DECIMAL(21,0))")
             ),
         )
         .drop("signed_sum")
     )
-    return summed
+
+
+def release_bytesums(quads: DataFrame) -> DataFrame:
+    """Per-release bytesum sidecar values: ``(release_name, bytesum)``."""
+    return _sum_by_release(_bytesum_lines(quads))
 
 
 def write_release(quads: DataFrame, out_dir: str, *, compress: bool = False) -> None:
-    """Write release text files (one directory per release graph) + bytesum
-    sidecars. Text lines are the canonical release content; ordering is
-    deliberately unspecified, matching the reference's rationale for the
-    order-agnostic hash. ``compress`` gzips the text parts; unlike the
-    reference's deterministic-gzip (helpers.go:57-68), compressed bytes are
-    NOT the hashed artifact — the bytesum is always over the uncompressed
-    canonical line set (documented deviation, SURVEY §2 #37)."""
-    named = with_release_name(quads).withColumn(
-        "line", F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit("."))
-    )
-    out = named.select("release_name", "line")
-    writer = out.write.mode("overwrite").partitionBy("release_name")
-    if compress:
-        writer = writer.option("compression", "gzip")
-    writer.text(os.path.join(out_dir, "graphs"))
-    release_bytesums(quads).write.mode("overwrite").json(
-        os.path.join(out_dir, "bytesums")
-    )
+    """Write release text files (one directory per release graph, one part
+    file each) + bytesum sidecars. Text lines are the canonical release
+    content; ordering is deliberately unspecified, matching the reference's
+    rationale for the order-agnostic hash. ``compress`` gzips the text parts;
+    unlike the reference's deterministic-gzip (helpers.go:57-68), compressed
+    bytes are NOT the hashed artifact — the bytesum is always over the
+    uncompressed canonical line set (documented deviation, SURVEY §2 #37).
+    Lines and byte sums are computed once, by the graph write; the sidecar
+    job aggregates the persisted relation."""
+    parallelism = quads.sparkSession.sparkContext.defaultParallelism
+    lines = _bytesum_lines(quads).repartition(parallelism, "release_name").persist()
+    try:
+        writer = (lines.select("release_name", "line").write
+                  .mode("overwrite").partitionBy("release_name"))
+        if compress:
+            writer = writer.option("compression", "gzip")
+        writer.text(os.path.join(out_dir, "graphs"))
+        _sum_by_release(lines).write.mode("overwrite").json(
+            os.path.join(out_dir, "bytesums")
+        )
+    finally:
+        lines.unpersist()
 
 
 def write_release_canonical(quads: DataFrame, out_dir: str) -> None:
@@ -122,11 +149,8 @@ def write_release_canonical(quads: DataFrame, out_dir: str) -> None:
     discharged by content-hash skolemization upstream). Deterministic bytes,
     suitable for file-level diffing; the order-agnostic bytesum still matches
     because addition commutes."""
-    named = with_release_name(quads).withColumn(
-        "line", F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit("."))
-    )
     (
-        named.select("release_name", "line")
+        release_lines(quads)
         .repartition(F.col("release_name"))
         .sortWithinPartitions("release_name", "line")
         .write.mode("overwrite")
@@ -144,55 +168,27 @@ def write_release_deterministic_gzip(quads: DataFrame, out_dir: str) -> list[dic
     that owns its sorted partition via Python's gzip with ``mtime=0`` —
     distributed one-pass, same carry-over pattern as the SHACL evaluator.
     Returns the manifest [(release_name, path, lines)...]."""
-    import gzip
-
-    named = with_release_name(quads).withColumn(
-        "line", F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit("."))
-    )
     os.makedirs(out_dir, exist_ok=True)
 
     def write_groups(it):
-        out_rows: list[dict] = []
-        cur_name = None
-        cur_fh = None
-        cur_raw = None
-        cur_n = 0
-
-        def close():
-            nonlocal cur_fh, cur_raw, cur_n
-            if cur_fh is not None:
-                cur_fh.close()
-                cur_raw.close()
-                out_rows.append(
-                    {"release_name": cur_name,
-                     "path": os.path.join(out_dir, f"{cur_name}.gz"),
-                     "lines": cur_n}
-                )
-                cur_fh, cur_raw, cur_n = None, None, 0
-
-        for pdf in it:
-            for name, line in zip(pdf["release_name"], pdf["line"]):
-                if name is None:
-                    continue
-                if name != cur_name:
-                    close()
-                    cur_name = name
-                    cur_raw = open(os.path.join(out_dir, f"{name}.gz"), "wb")
-                    cur_fh = gzip.GzipFile(
-                        filename="", mode="wb", fileobj=cur_raw,
-                        compresslevel=9, mtime=0,
-                    )
-                cur_fh.write(line.encode("utf-8"))
-                cur_fh.write(b"\n")
-                cur_n += 1
-        close()
-        yield pd.DataFrame(
-            out_rows if out_rows
-            else {"release_name": [], "path": [], "lines": []}
-        )
+        rows = ((name, line) for pdf in it
+                for name, line in zip(pdf["release_name"], pdf["line"])
+                if name is not None)
+        out_rows = []
+        for name, group in itertools.groupby(rows, key=lambda r: r[0]):
+            path = os.path.join(out_dir, f"{name}.gz")
+            n = 0
+            with open(path, "wb") as raw, gzip.GzipFile(
+                filename="", mode="wb", fileobj=raw, compresslevel=9, mtime=0
+            ) as fh:
+                for _, line in group:
+                    fh.write(line.encode("utf-8") + b"\n")
+                    n += 1
+            out_rows.append({"release_name": name, "path": path, "lines": n})
+        yield pd.DataFrame(out_rows, columns=["release_name", "path", "lines"])
 
     manifest = (
-        named.select("release_name", "line")
+        release_lines(quads)
         .repartition(F.col("release_name"))
         .sortWithinPartitions("release_name", "line")
         .mapInPandas(write_groups, "release_name string, path string, lines long")

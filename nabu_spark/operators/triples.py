@@ -16,6 +16,7 @@ aggregation over the same output, with no second UDF pass.
 from __future__ import annotations
 
 import json
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -28,7 +29,8 @@ from ..functions.ntriples import _term_is_valid_cached, term_is_valid
 from ..functions.skolem import SKOLEM_PREFIX, skolemize_terms
 from ..functions.urn import make_urn
 
-_SKOLEM_TERM_PREFIX = "<" + SKOLEM_PREFIX
+# the exact shape of a skolem IRI we minted: prefix + sha256 hex
+_is_minted_skolem = re.compile("<" + re.escape(SKOLEM_PREFIX) + "[0-9a-f]{64}>").fullmatch
 
 QUADS_SCHEMA = T.StructType(
     [
@@ -71,14 +73,15 @@ def finish_quads(
     quads = []
     dropped = 0
     valid = _term_is_valid_cached  # bypass the keyword-arg wrapper in the hot loop
-    skol = _SKOLEM_TERM_PREFIX
+    minted = _is_minted_skolem
     for s, p, o in triples:
-        # terms we minted ourselves (skolem IRIs: constant prefix + sha256
-        # hex) are valid by construction — skip the regex gate for them
+        # terms we minted ourselves are valid by construction — skip the
+        # regex gate for them; anything else under the public prefix (an
+        # untrusted @id) still goes through it
         if (
-            (s.startswith(skol) or valid(s, True, False))
+            (minted(s) or valid(s, True, False))
             and valid(p, False, True)
-            and (o.startswith(skol) or valid(o, False, False))
+            and (minted(o) or valid(o, False, False))
         ):
             quads.append((s, p, o, prov))
         else:

@@ -7,9 +7,9 @@ engine (cli.py query --nquads) and the diff/integrity operators without any
 external service.
 
 Scale shape: ``spark.read.text`` parallelizes by input split across files
-(gzip is NOT splittable — each .nq.gz file is one task, so a 100-TB release
-should ship many part files, which write_release's partitioned layout
-already does), and the line parse is ONE codegen regexp per column — no
+(gzip is NOT splittable — each .nq.gz file is one task; write_release
+writes one part file per release graph, so one gzipped graph is one read
+task), and the line parse is ONE codegen regexp per column — no
 Python, no shuffle. Malformed lines become error rows carrying the raw
 line (lineage, never task failure), mirroring the strict NtToNq gate of
 operators/triples.py (reference: internal/common/nt_to_nq.go — studied,

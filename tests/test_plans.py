@@ -379,3 +379,39 @@ class TestFgbJoinShape:
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
         # the fact side reads straight into the join: no Exchange below it
         assert "Exchange hashpartitioning" not in plan
+
+
+class TestReleaseShape:
+    @pytest.fixture(scope="class")
+    def quads(self, spark):
+        rows = [(f"<https://x.org/{i}>", "<https://schema.org/name>", f'"n{i}"',
+                 f"<urn:iow:summoned:site{i % 3}:k{i}.jsonld>") for i in range(30)]
+        return spark.createDataFrame(rows, "subj string, pred string, obj string, prov string")
+
+    def test_bytesum_is_one_arrow_pass(self, spark, quads):
+        from nabu_spark.operators.release import release_bytesums
+
+        plan = plan_of(release_bytesums(quads))
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "BatchEvalPython" not in plan, plan
+
+    def test_sidecar_reads_persisted_lines(self, spark, quads, tmp_path, monkeypatch):
+        """The sidecar job aggregates the relation the graph write persisted;
+        it evaluates no Python of its own."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from nabu_spark.operators.release import write_release
+
+        plans = []
+        json_write = DataFrameWriter.json
+
+        def capture(self, path, *args, **kwargs):
+            plans.append(plan_of(self._df))
+            return json_write(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "json", capture)
+        write_release(quads, str(tmp_path / "rel"))
+        (plan,) = plans
+        above_cache = plan.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in above_cache, plan
+        assert "EvalPython" not in above_cache, plan

@@ -110,6 +110,21 @@ class TestBytesumProperties:
     def test_concat_additive(self, a, b):
         assert bytesum_lines(a + b) == (bytesum_lines(a) + bytesum_lines(b)) & MASK64
 
+    @given(st.lists(st.one_of(st.none(), st.text(max_size=30)), max_size=20),
+           st.integers(0, 20), st.integers(0, 20), st.booleans())
+    @settings(max_examples=300)
+    def test_arrow_kernel_matches_oracle(self, texts, start, length, large):
+        """The buffer-level release kernel equals the per-string oracle on
+        multi-byte text, empty strings, nulls and sliced arrays."""
+        import pyarrow as pa
+
+        from nabu_spark.operators.release import utf8_bytesums
+
+        arr = pa.array(texts, pa.large_string() if large else pa.string())
+        arr = arr.slice(min(start, len(texts)), length)
+        want = [0 if t is None else bytesum_lines([t]) - 10 for t in arr.to_pylist()]
+        assert utf8_bytesums(arr).to_pylist() == want
+
 
 class TestUrnProperties:
     @given(st.lists(st.from_regex(r"[a-zA-Z0-9_.\-]{1,10}", fullmatch=True), min_size=2, max_size=5))

@@ -15,8 +15,8 @@ from nabu_spark.functions.bytesum import bytesum_lines
 from nabu_spark.operators.extract import extract_docs, with_object_key
 from nabu_spark.operators.release import (
     pull_skip_list,
-    quad_lines,
     release_bytesums,
+    release_lines,
     with_release_name,
     write_release,
 )
@@ -38,6 +38,30 @@ def corpus(spark):
     return pages, docs, quads
 
 
+def _check_release_files(quads, out, *, compress):
+    """One part file per release graph; each sidecar equals the byte sum of
+    its graph's uncompressed text, gzipped or not."""
+    import gzip
+
+    write_release(quads, out, compress=compress)
+    graphs = glob.glob(os.path.join(out, "graphs", "release_name=*"))
+    names = {r["release_name"] for r in release_lines(quads).select("release_name").distinct().collect()}
+    assert {g.split("release_name=")[-1] for g in graphs} == names
+    totals = {}
+    for g in graphs:
+        (part,) = glob.glob(os.path.join(g, "part-*"))
+        assert part.endswith(".txt.gz" if compress else ".txt")
+        with (gzip.open if compress else open)(part, "rb") as fh:
+            totals[g.split("release_name=")[-1]] = sum(fh.read())
+    sidecars = {}
+    for f in glob.glob(os.path.join(out, "bytesums", "*.json")):
+        for line in open(f):
+            if line.strip():
+                d = json.loads(line)
+                sidecars[d["release_name"]] = int(d["bytesum"])
+    assert sidecars == totals
+
+
 class TestRelease:
     def test_release_routing(self, spark, corpus):
         _, _, quads = corpus
@@ -52,9 +76,7 @@ class TestRelease:
             r["release_name"]: int(r["bytesum"])
             for r in release_bytesums(quads).collect()
         }
-        named = with_release_name(quads).withColumn(
-            "line", F.concat_ws(" ", "subj", "pred", "obj", "prov", F.lit("."))
-        )
+        named = release_lines(quads)
         for name, rows in {
             n: [r["line"] for r in named.filter(F.col("release_name") == n).collect()]
             for n in sums
@@ -62,25 +84,10 @@ class TestRelease:
             assert sums[name] == bytesum_lines(rows), name
 
     def test_write_release_roundtrip(self, spark, corpus, tmp_path):
-        _, _, quads = corpus
-        out = str(tmp_path / "rel")
-        write_release(quads, out)
-        files = glob.glob(os.path.join(out, "graphs", "release_name=*", "*.txt"))
-        assert files
-        # re-read one release and recompute its bytesum from the actual file
-        one = os.path.dirname(files[0])
-        name = one.split("release_name=")[-1]
-        total = 0
-        for f in glob.glob(os.path.join(one, "*.txt")):
-            with open(f, "rb") as fh:
-                total += sum(fh.read())
-        sidecars = {}
-        for f in glob.glob(os.path.join(out, "bytesums", "*.json")):
-            for line in open(f):
-                if line.strip():
-                    d = json.loads(line)
-                    sidecars[d["release_name"]] = int(d["bytesum"])
-        assert sidecars[name] == total
+        _check_release_files(corpus[2], str(tmp_path / "rel"), compress=False)
+
+    def test_write_release_gzip_roundtrip(self, spark, corpus, tmp_path):
+        _check_release_files(corpus[2], str(tmp_path / "rel"), compress=True)
 
     def test_canonical_release_is_sorted_and_deterministic(self, spark, corpus, tmp_path):
         from nabu_spark.operators.release import write_release_canonical

@@ -54,3 +54,33 @@ def test_remote_context_is_error_row_not_crash(spark, hostile_pages):
         F.col("error_code") == "jsonld_convert"
     )
     assert remote.count() >= 1
+
+
+_NQHASH = "https://docs.geoconnex.us/nqhash/"
+
+
+@pytest.mark.parametrize("tail", ["foo bar", "x>y", "a" * 64 + "> <https://e/p> <https://e/o"])
+def test_hostile_id_under_skolem_prefix_is_gated(tail):
+    """Only the minted skolem shape skips the strict term gate; an untrusted
+    IRI that merely starts with the public prefix is dropped and counted."""
+    import json
+
+    from nabu_spark.operators.triples import doc_to_quads, finish_quads
+
+    hostile = "<" + _NQHASH + tail + ">"
+    minted = "<" + _NQHASH + "0" * 64 + ">"
+    name = ("<https://x.org/s>", "<https://schema.org/name>", '"n"')
+    quads, err, dropped = finish_quads(
+        [(hostile, "<https://schema.org/p>", '"v"'),
+         ("<https://x.org/s>", "<https://schema.org/p>", hostile),
+         (minted, "<https://schema.org/p>", minted), name],
+        "summoned/site/a.jsonld", skolemize=False,
+    )
+    assert err == "" and dropped == 2
+    assert [q[:3] for q in quads] == [(minted, "<https://schema.org/p>", minted), name]
+
+    doc = {"@context": {"@vocab": "https://schema.org/"}, "@id": "https://x.org/s",
+           "@type": _NQHASH + tail, "name": "n"}
+    quads, err, dropped = doc_to_quads(json.dumps(doc), "summoned/site/a.jsonld")
+    assert err == "" and dropped == 1
+    assert all(_NQHASH + tail not in "".join(q) for q in quads)
