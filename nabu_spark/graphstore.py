@@ -54,7 +54,10 @@ broadcast it) instantiated delete set, and (c) a union with the
 deduplicated insert set. Nothing is collected; ``GraphStore`` commits only
 the DELTA rows (Iceberg-v2-style equality-delete markers, merged at read
 with one max_by aggregation) so a 100-TB store is never rewritten by a
-small update — ``compact()`` folds the log back to a pure add set.
+small update — ``compact()`` folds the log back to a pure add set. A
+ground (INSERT DATA / DELETE DATA only) script never reads the store: its
+rows are built on the driver and written by pyarrow, with no Spark job.
+Raw reads pass ``RAW_SCHEMA`` and so skip parquet schema inference.
 """
 
 from __future__ import annotations
@@ -63,7 +66,7 @@ import hashlib
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .sparql import (
     Group,
@@ -74,6 +77,11 @@ from .sparql import (
 )
 
 QUAD_COLS = ("subj", "pred", "obj", "prov")
+# the delta log's one physical row shape: every writer emits it (__seq is
+# long, never int32) and every raw read passes it instead of inferring one
+RAW_SCHEMA = T.StructType(
+    [T.StructField(c, T.StringType()) for c in (*QUAD_COLS, "__op")]
+    + [T.StructField("__seq", T.LongType())])
 
 
 # ---------------------------------------------------------------------------
@@ -407,26 +415,31 @@ def _quad_minus(a: DataFrame, b: DataFrame | None) -> DataFrame:
     return a.join(bb, cond, "left_anti")
 
 
+def _ground_rows(quads: list, op_index: int, *,
+                 fresh_bnodes: bool) -> list[tuple]:
+    """A ground DATA block as distinct (subj, pred, obj, prov) tuples, in
+    template order. Blank nodes are fresh per operation and deterministic
+    across runs."""
+    def term(atom):
+        if atom is None:
+            return None
+        t = atom[1]
+        if t.startswith("_:"):
+            if not fresh_bnodes:
+                raise SparqlError("blank nodes are not allowed here")
+            h = hashlib.sha256(
+                f"data\x1f{op_index}\x1f{t}".encode()).hexdigest()[:16]
+            return "_:u" + h
+        return t
+    return list(dict.fromkeys(
+        (term(s), term(p), term(o), term(ga)) for ga, s, p, o in quads))
+
+
 def _ground_df(spark: SparkSession, quads: list, op_index: int,
                *, fresh_bnodes: bool) -> DataFrame:
-    rows = []
-    for ga, s, p, o in quads:
-        def term(atom):
-            if atom is None:
-                return None
-            t = atom[1]
-            if t.startswith("_:"):
-                if not fresh_bnodes:
-                    raise SparqlError("blank nodes are not allowed here")
-                # fresh per operation, deterministic across runs
-                h = hashlib.sha256(
-                    f"data\x1f{op_index}\x1f{t}".encode()).hexdigest()[:16]
-                return "_:u" + h
-            return t
-        rows.append((term(s), term(p), term(o), term(ga)))
     return spark.createDataFrame(
-        rows, "subj string, pred string, obj string, prov string"
-    ).distinct()
+        _ground_rows(quads, op_index, fresh_bnodes=fresh_bnodes),
+        "subj string, pred string, obj string, prov string")
 
 
 def _in_ref(ref):
@@ -708,6 +721,12 @@ def _apply_one_local(cur: set, op, op_index: int) -> set:
 # ---------------------------------------------------------------------------
 
 
+def _tag(quads: DataFrame, op: str, seq: int) -> DataFrame:
+    """Quad rows as delta-log rows of one ``__op`` and ``__seq``."""
+    return quads.select(*QUAD_COLS, F.lit(op).alias("__op"),
+                        F.lit(seq).cast("long").alias("__seq"))
+
+
 class GraphStore:
     """A SPARQL-updatable quad store on top of :class:`SnapshotTable`.
 
@@ -730,46 +749,66 @@ class GraphStore:
         m = self.tbl.manifest() if self.tbl.exists() else None
         return int((m or {}).get("metrics", {}).get("max_seq", -1)) + 1
 
-    def _commit_delta(self, delta: DataFrame, seq_hi: int, stage: str,
+    def _commit_delta(self, delta, seq_hi: int, stage: str,
                       operation: str = "append",
                       extra: dict | None = None) -> int:
         metrics = {"max_seq": seq_hi, **(extra or {})}
         return self.tbl.commit(delta, operation=operation, stage=stage,
                                metrics=metrics)
 
+    def _commit_rows(self, rows: list, seq_hi: int, stage: str,
+                     extra: dict | None = None) -> int:
+        """Commit driver-held (subj, pred, obj, prov, __op, __seq) tuples
+        as one parquet file written by pyarrow: no Spark job."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(RAW_SCHEMA)
+        cols = zip(*rows) if rows else [()] * len(schema)
+        table = pa.table(dict(zip(schema.names, cols)), schema=schema)
+        return self._commit_delta(table, seq_hi, stage, extra=extra)
+
     def init(self, quads: DataFrame, stage: str = "graphstore-init") -> int:
         """Seed (or reset) the store from a quad DataFrame."""
         seq = self._next_seq()
-        rows = (quads.select(*QUAD_COLS).distinct()
-                .withColumn("__op", F.lit("a"))
-                .withColumn("__seq", F.lit(seq)))
+        rows = _tag(quads.select(*QUAD_COLS).distinct(), "a", seq)
         return self._commit_delta(rows, seq, stage, operation="overwrite")
 
     def update(self, text: str) -> int:
         """Apply a SPARQL Update script as ONE atomic snapshot commit of
-        its delta rows. Returns the new version."""
+        its delta rows. Returns the new version.
+
+        Op ``i`` deletes at ``seq0 + 2i`` and inserts at ``seq0 + 2i + 1``
+        (deletes before inserts, spec §3.1.3). A ground script (INSERT DATA
+        / DELETE DATA only) never reads the store: its de-duplicated rows
+        are committed from the driver with no Spark job, and a quad it
+        re-inserts is a redundant 'a' row that ``read()``'s max_by merge
+        ignores (as in ``append_quads``)."""
         ops = parse_update(text)
-        cur = self.read()
         seq0 = self._next_seq()
+        seq_hi = seq0 + 2 * len(ops) - 1
+        if all(isinstance(op, Modify) and op.where is None for op in ops):
+            rows = []
+            for i, op in enumerate(ops):
+                if op.delete:
+                    rows += [(*q, "d", seq0 + 2 * i) for q in _ground_rows(
+                        op.delete, i, fresh_bnodes=False)]
+                if op.insert:
+                    rows += [(*q, "a", seq0 + 2 * i + 1) for q in _ground_rows(
+                        op.insert, i, fresh_bnodes=True)]
+            return self._commit_rows(rows, seq_hi, "sparql-update")
+        cur = self.read()
         parts: list[DataFrame] = []
         for i, op in enumerate(ops):
             cur, dels, adds = _apply_one(cur, op, i)
-            # within one op, deletes order before inserts (spec §3.1.3) so
-            # a quad both deleted and re-inserted resolves to 'a' at merge
             if dels is not None:
-                parts.append(dels.withColumn("__op", F.lit("d"))
-                             .withColumn("__seq", F.lit(seq0 + 2 * i)))
+                parts.append(_tag(dels, "d", seq0 + 2 * i))
             if adds is not None:
-                parts.append(adds.withColumn("__op", F.lit("a"))
-                             .withColumn("__seq", F.lit(seq0 + 2 * i + 1)))
+                parts.append(_tag(adds, "a", seq0 + 2 * i + 1))
         if not parts:
-            delta = self.spark.createDataFrame(
-                [], "subj string, pred string, obj string, prov string, "
-                    "__op string, __seq long")
-        else:
-            delta = reduce(lambda a, b: a.unionByName(b), parts)
-        return self._commit_delta(delta, seq0 + 2 * len(ops) - 1,
-                                  "sparql-update")
+            return self._commit_rows([], seq_hi, "sparql-update")
+        return self._commit_delta(reduce(DataFrame.unionByName, parts),
+                                  seq_hi, "sparql-update")
 
     def append_quads(self, quads: DataFrame, stage: str = "append") -> int:
         """Append a batch of quads as one snapshot of 'a' rows — O(batch),
@@ -779,9 +818,7 @@ class GraphStore:
         the physical duplicates away. The incremental-view path re-derives
         from the replayed rows and its anti-join adds nothing."""
         seq = self._next_seq()
-        rows = (quads.select(*QUAD_COLS).distinct()
-                .withColumn("__op", F.lit("a"))
-                .withColumn("__seq", F.lit(seq)))
+        rows = _tag(quads.select(*QUAD_COLS).distinct(), "a", seq)
         return self._commit_delta(rows, seq, stage)
 
     def sync(self, release: DataFrame, prefix: str) -> int:
@@ -791,12 +828,7 @@ class GraphStore:
         cur = self.read()
         _, dels, adds = sync_graphs(cur, release, prefix)
         seq = self._next_seq()
-        delta = (
-            dels.withColumn("__op", F.lit("d")).withColumn("__seq", F.lit(seq))
-            .unionByName(
-                adds.withColumn("__op", F.lit("a"))
-                .withColumn("__seq", F.lit(seq + 1)))
-        )
+        delta = _tag(dels, "d", seq).unionByName(_tag(adds, "a", seq + 1))
         return self._commit_delta(delta, seq + 1, "graph-sync")
 
     def load(self, path: str, graph: str | None = None) -> int:
@@ -864,11 +896,7 @@ class GraphStore:
         dels = _quad_minus(old_inf, derived)
         adds = _quad_minus(derived, old_inf)
         seq = self._next_seq()
-        delta = (
-            dels.withColumn("__op", F.lit("d")).withColumn("__seq", F.lit(seq))
-            .unionByName(adds.withColumn("__op", F.lit("a"))
-                         .withColumn("__seq", F.lit(seq + 1)))
-        )
+        delta = _tag(dels, "d", seq).unionByName(_tag(adds, "a", seq + 1))
         return self._commit_delta(delta, seq + 1, f"{profile}-entail",
                                   extra={"entail_graph": graph})
 
@@ -894,15 +922,8 @@ class GraphStore:
             [(s, p, o, graph, "d", seq) for s, p, o in dels]
             + [(s, p, o, graph, "a", seq + 1) for s, p, o in adds]
         )
-        # driver-built and bounded: one output file, not one per slice
-        # (repartition, NOT coalesce — coalescing a local relation folds
-        # every slice's row-pickling into one task and is ~8x slower)
-        delta = self.spark.createDataFrame(
-            delta_rows,
-            "subj string, pred string, obj string, prov string, "
-            "__op string, __seq int").repartition(1)
-        return self._commit_delta(
-            delta, seq + 1, "rdfs-entail",
+        return self._commit_rows(
+            delta_rows, seq + 1, "rdfs-entail",
             extra={"entail_mode": "incremental", "entail_graph": graph})
 
     def _collect_merged(self, cap: int) -> list | None:
@@ -914,7 +935,7 @@ class GraphStore:
         ``cap`` rows — a stricter bound than the merged size, so the only
         effect of long delete histories is an earlier fall-back to the
         distributed plan."""
-        raw = self.tbl.read(self.spark)
+        raw = self.tbl.read(self.spark, schema=RAW_SCHEMA)
         rows = raw.limit(cap + 1).collect()
         if len(rows) > cap:
             return None
@@ -946,15 +967,8 @@ class GraphStore:
             [(s, p, o, graph, "d", seq) for s, p, o in dels]
             + [(s, p, o, graph, "a", seq + 1) for s, p, o in adds]
         )
-        # driver-built and bounded: one output file, not one per slice
-        # (repartition, NOT coalesce — coalescing a local relation folds
-        # every slice's row-pickling into one task and is ~8x slower)
-        delta = self.spark.createDataFrame(
-            delta_rows,
-            "subj string, pred string, obj string, prov string, "
-            "__op string, __seq int").repartition(1)
-        return self._commit_delta(delta, seq + 1, f"{profile}-entail",
-                                  extra={"entail_graph": graph})
+        return self._commit_rows(delta_rows, seq + 1, f"{profile}-entail",
+                                 extra={"entail_graph": graph})
 
     _SCHEMA_PREDS = (
         "<http://www.w3.org/2000/01/rdf-schema#subClassOf>",
@@ -978,13 +992,8 @@ class GraphStore:
             return None
         head = self.tbl.latest_version()
         if head == last:  # nothing committed since -> no-op delta
-            seq = self._next_seq()
-            empty = self.spark.createDataFrame(
-                [], "subj string, pred string, obj string, prov string"
-            ).withColumn("__op", F.lit("a")).withColumn(
-                "__seq", F.lit(seq))
-            return self._commit_delta(
-                empty, seq, "rdfs-entail",
+            return self._commit_rows(
+                [], self._next_seq(), "rdfs-entail",
                 extra={"entail_mode": "incremental", "entail_graph": graph})
         window = self.raw_window(last, head)
         if window is None:
@@ -1042,11 +1051,7 @@ class GraphStore:
             window.select("subj", "pred", "obj").distinct(),
             on=["subj", "pred", "obj"], how="left_semi")
         seq = self._next_seq()
-        delta = (
-            dels.withColumn("__op", F.lit("d")).withColumn("__seq", F.lit(seq))
-            .unionByName(adds.withColumn("__op", F.lit("a"))
-                         .withColumn("__seq", F.lit(seq + 1)))
-        )
+        delta = _tag(dels, "d", seq).unionByName(_tag(adds, "a", seq + 1))
         return self._commit_delta(
             delta, seq + 1, "rdfs-entail",
             extra={"entail_mode": "incremental", "entail_graph": graph})
@@ -1073,9 +1078,8 @@ class GraphStore:
     def compact(self) -> int:
         """Fold the delete log: rewrite the merged view as pure add rows."""
         seq = self._next_seq()
-        rows = (self.read().withColumn("__op", F.lit("a"))
-                .withColumn("__seq", F.lit(seq)))
-        return self._commit_delta(rows, seq, "graphstore-compact",
+        return self._commit_delta(_tag(self.read(), "a", seq), seq,
+                                  "graphstore-compact",
                                   operation="overwrite")
 
     # -- read paths ---------------------------------------------------------
@@ -1097,14 +1101,12 @@ class GraphStore:
         base = set(m0["files"])
         new_files = [f for f in m1["files"] if f not in base]
         if not new_files:
-            return self.spark.createDataFrame(
-                [], "subj string, pred string, obj string, prov string, "
-                    "__op string, __seq long")
-        return self.spark.read.parquet(*new_files)
+            return self.spark.createDataFrame([], RAW_SCHEMA)
+        return self.spark.read.schema(RAW_SCHEMA).parquet(*new_files)
 
     def read(self, version: int | None = None) -> DataFrame:
         """The merged quad-set view at ``version`` (default latest)."""
-        raw = self.tbl.read(self.spark, version)
+        raw = self.tbl.read(self.spark, version, schema=RAW_SCHEMA)
         merged = (
             raw.groupBy(*QUAD_COLS)
             .agg(F.max_by("__op", "__seq").alias("__op"))

@@ -238,7 +238,9 @@ def candidate_pairs(
 ) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs from shared LSH buckets.
     Oversized buckets (boilerplate) are dropped — the standard guardrail —
-    and the drop count is reported through an observation."""
+    and the drop count is reported through an observation. ``id_a`` and
+    ``id_b`` keep the input's ``id`` type."""
+    id_type = bands_df.schema["id"].dataType
     buckets = bands_df.groupBy("band", "band_hash").agg(
         F.sort_array(F.collect_set("id")).alias("ids")
     )
@@ -253,19 +255,19 @@ def candidate_pairs(
         for pdf in it:
             outs_a, outs_b = [], []
             for ids in pdf["ids"]:
-                arr = np.asarray(ids, dtype=np.int64)
+                arr = np.asarray(ids)
                 i, j = np.triu_indices(len(arr), k=1)
                 outs_a.append(arr[i])
                 outs_b.append(arr[j])
-            if not outs_a:
-                yield pd.DataFrame({"id_a": [], "id_b": []})
-                continue
-            yield pd.DataFrame(
-                {"id_a": np.concatenate(outs_a), "id_b": np.concatenate(outs_b)}
-            )
+            if outs_a:
+                yield pd.DataFrame(
+                    {"id_a": np.concatenate(outs_a), "id_b": np.concatenate(outs_b)}
+                )
 
-    pairs = ok.select("ids").mapInPandas(pair_batches, "id_a long, id_b long")
-    return pairs.distinct()
+    out_schema = T.StructType(
+        [T.StructField("id_a", id_type), T.StructField("id_b", id_type)]
+    )
+    return ok.select("ids").mapInPandas(pair_batches, out_schema).distinct()
 
 
 def verify_jaccard(

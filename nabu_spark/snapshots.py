@@ -133,7 +133,7 @@ class SnapshotTable:
 
     def commit(
         self,
-        df: DataFrame,
+        df,
         *,
         operation: str = "append",
         stage: str | None = None,
@@ -142,11 +142,23 @@ class SnapshotTable:
         """Write ``df``'s rows as parquet data files, then publish them in a
         new snapshot. Nothing is visible to readers until the manifest
         lands; a crash before that leaves only unreferenced data files
-        (reclaimable with ``vacuum``)."""
+        (reclaimable with ``vacuum``).
+
+        ``df`` is a Spark DataFrame (written by a Spark job) or a
+        ``pyarrow.Table`` of rows already on the driver, written as ONE
+        parquet file by ``pyarrow.parquet.write_table`` with no Spark job.
+        Both land in a fresh ``snap-<uuid>`` directory and publish through
+        the same manifest link."""
         if operation not in ("append", "overwrite"):
             raise ValueError(f"unknown operation {operation!r}")
         snap_dir = os.path.join(self.data_dir, f"snap-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(snap_dir)
+        if isinstance(df, DataFrame):
+            df.write.mode("overwrite").parquet(snap_dir)
+        else:
+            import pyarrow.parquet as pq
+
+            os.makedirs(snap_dir)
+            pq.write_table(df, os.path.join(snap_dir, "part-00000.parquet"))
         files = sorted(
             os.path.join(snap_dir, f)
             for f in os.listdir(snap_dir)
@@ -163,17 +175,22 @@ class SnapshotTable:
         }
         return self._publish(manifest)
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def read(self, spark: SparkSession, version: int | None = None, *,
+             schema=None) -> DataFrame:
         """The table at ``version`` (default: latest committed). Reads the
         manifest's exact file list — never a directory listing — so torn
-        writes are invisible by construction."""
+        writes are invisible by construction. ``schema`` (a DDL string or
+        StructType) skips parquet schema inference, which otherwise costs a
+        footer-reading Spark job per read; columns match by name, and files
+        written with a narrower integer type read widened."""
         m = self.manifest(version)
         if m is None or not m["files"]:
             raise FileNotFoundError(
                 f"no committed snapshot at {self.root}"
                 + (f" version {version}" if version is not None else "")
             )
-        return spark.read.parquet(*m["files"])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*m["files"])
 
     def exists(self) -> bool:
         return self.latest_version() is not None

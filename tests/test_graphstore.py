@@ -535,3 +535,149 @@ class TestRollbackSequencing:
         assert ("<urn:a>", "<urn:p>", '"1"', None) not in rows
         assert ("<urn:z>", "<urn:p>", '"9"', None) in rows
         assert not any(s == "<urn:z2>" for s, _, _, _ in rows)
+
+
+def _jobs_launched(spark, fn):
+    """Spark job ids that ``fn()`` launched, via a one-off job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+class TestGroundUpdatePath:
+    """Scripts of INSERT DATA / DELETE DATA only never read the store: the
+    delta rows are built on the driver and committed by pyarrow."""
+
+    def test_ground_update_launches_no_job(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "g1"))
+        # the probe sees jobs: init writes through Spark
+        assert _jobs_launched(spark, lambda: gs.init(_store(spark, BASE)))
+        script = ('DELETE DATA { <urn:a> <urn:p> "1" } ; '
+                  'INSERT DATA { <urn:n> <urn:p> "9" . _:b <urn:q> _:b }')
+        assert _jobs_launched(spark, lambda: gs.update(script)) == []
+        got = sorted((tuple(r) for r in gs.read().collect()), key=_key)
+        assert got == sorted(apply_update_local(BASE, script), key=_key)
+
+    def test_ground_update_commits_one_file(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "g2"))
+        gs.init(_store(spark, BASE))
+        v = gs.update('INSERT DATA { <urn:n> <urn:p> "9" . '
+                      '<urn:n> <urn:p> "9" . <urn:m> <urn:p> "8" } ; '
+                      'DELETE DATA { <urn:a> <urn:p> "1" }')
+        m = gs.tbl.manifest(v)
+        assert len(m["new_files"]) == 1
+        assert m["row_count"] == 3  # the duplicated template quad once
+        raw = {tuple(r)
+               for r in spark.read.parquet(*m["new_files"]).collect()}
+        # op i deletes at seq0 + 2i and inserts at seq0 + 2i + 1
+        seq0 = m["metrics"]["max_seq"] - 3
+        assert raw == {("<urn:n>", "<urn:p>", '"9"', None, "a", seq0 + 1),
+                       ("<urn:m>", "<urn:p>", '"8"', None, "a", seq0 + 1),
+                       ("<urn:a>", "<urn:p>", '"1"', None, "d", seq0 + 2)}
+
+    def test_redundant_insert_and_absent_delete_are_noops(self, spark,
+                                                          tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "g3"))
+        gs.init(_store(spark, BASE))
+        before = sorted((tuple(r) for r in gs.read().collect()), key=_key)
+        script = ('INSERT DATA { <urn:a> <urn:p> "1" . '
+                  'GRAPH <urn:g1> { <urn:b> <urn:p> "2" } } ; '
+                  'DELETE DATA { <urn:zz> <urn:p> "9" }')
+        v = gs.update(script)
+        # the redundant 'a' rows are committed; the merge ignores them
+        assert gs.tbl.manifest(v)["row_count"] == 3
+        got = sorted((tuple(r) for r in gs.read().collect()), key=_key)
+        assert got == before
+        assert got == sorted(apply_update_local(BASE, script), key=_key)
+
+    def test_query_construction_launches_no_job(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "g4"))
+        gs.init(_store(spark, BASE))
+        gs.update('DELETE DATA { <urn:a> <urn:p> "1" }')
+        text = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
+        assert _jobs_launched(spark, lambda: gs.query(text)) == []
+        assert len(gs.query(text).collect()) == 2
+
+    def test_redundant_insert_keeps_views_incremental(self, spark, tmp_path):
+        from nabu_spark.matview import MaterializedView
+        from nabu_spark.sparql import sparql_query
+
+        sub = "<http://www.w3.org/2000/01/rdf-schema#subClassOf>"
+        typ = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+        rows = [("<urn:C1>", sub, "<urn:C2>", None),
+                ("<urn:x>", typ, "<urn:C1>", None),
+                ("<urn:x>", "<urn:knows>", "<urn:y>", "<urn:g1>"),
+                ("<urn:y>", "<urn:knows>", "<urn:z>", "<urn:g1>")]
+        view_q = ("CONSTRUCT { ?a <urn:foaf> ?c } "
+                  "WHERE { ?a <urn:knows> ?b . ?b <urn:knows> ?c }")
+
+        def inference(st):
+            return {tuple(r) for r in st.read().filter(
+                F.col("prov") == "<urn:nabu:inference>").collect()}
+
+        gs = GraphStore(spark, str(tmp_path / "g5"))
+        gs.init(_store(spark, rows))
+        gs.entail()
+        mv = MaterializedView(gs, str(tmp_path / "view"), view_q)
+        assert mv.refresh()["mode"] == "full"
+        redundant = ("INSERT DATA { GRAPH <urn:g1> "
+                     "{ <urn:x> <urn:knows> <urn:y> } }")
+        gs.update(redundant)
+
+        res = mv.refresh()
+        assert res["mode"] == "incremental" and res["added"] == 0
+        want = {tuple(r) for r in sparql_query(
+            gs.read(), view_q, graph_col="prov").collect()}
+        assert {tuple(r) for r in mv.read().collect()} == want
+
+        v = gs.entail(incremental=True)
+        assert gs.tbl.manifest(v)["metrics"]["entail_mode"] == "incremental"
+        full = GraphStore(spark, str(tmp_path / "g5-full"))
+        full.init(_store(spark, rows))
+        full.update(redundant)
+        full.entail()
+        assert inference(gs) == inference(full)
+        assert ("<urn:x>", typ, "<urn:C2>", "<urn:nabu:inference>") \
+            in inference(gs)
+
+
+class TestSeqPhysicalType:
+    def test_mixed_int32_and_int64_seq_files_merge(self, spark, tmp_path):
+        """Stores written before __seq was pinned to long hold int32 files;
+        every raw read passes the long schema, so they read widened and
+        merge with the int64 files by sequence."""
+        from pyspark.sql import types as T
+
+        from nabu_spark.graphstore import RAW_SCHEMA
+
+        gs = GraphStore(spark, str(tmp_path / "mixed"))
+        old = spark.createDataFrame(
+            [(*q, "a", 0) for q in BASE],
+            "subj string, pred string, obj string, prov string, "
+            "__op string, __seq int")
+        gs.tbl.commit(old, operation="overwrite", metrics={"max_seq": 0})
+        gs.tbl.commit(spark.createDataFrame(
+            [("<urn:a>", "<urn:p>", '"1"', None, "d", 1),
+             ("<urn:n>", "<urn:p>", '"7"', None, "a", 1)],
+            "subj string, pred string, obj string, prov string, "
+            "__op string, __seq int"), metrics={"max_seq": 1})
+        gs.update('INSERT DATA { <urn:a> <urn:p> "1" } ; '
+                  'DELETE DATA { <urn:n> <urn:p> "7" }')
+        # the int64 rows out-sequence the int32 ones: back to BASE
+        want = sorted(BASE, key=_key)
+        assert sorted((tuple(r) for r in gs.read().collect()),
+                      key=_key) == want
+        assert sorted(gs._collect_merged(1000), key=_key) == want
+        raw = gs.tbl.read(spark, schema=RAW_SCHEMA)
+        assert raw.schema["__seq"].dataType == T.LongType()
+        assert sorted(r["__seq"] for r in raw.collect()) == \
+            [0] * len(BASE) + [1, 1, 3, 4]
+        window = gs.raw_window(1, 3)
+        assert sorted(r["__seq"] for r in window.collect()) == [1, 1, 3, 4]

@@ -32,6 +32,25 @@ class TestSnapshotTable:
         assert sorted(got.columns) == ["id", "v"]
         assert tbl.manifest()["row_count"] == 10
 
+    def test_arrow_commit_appends_one_file_and_reads_with_schema(
+            self, spark, tbl):
+        """Driver-held rows commit as one pyarrow-written parquet file
+        through the same manifest publish, and mix with Spark-written
+        files under an explicit read schema."""
+        import pyarrow as pa
+
+        tbl.commit(_df(spark, 0, 10), operation="overwrite")
+        v = tbl.commit(pa.table({"id": pa.array([10, 11], pa.int64()),
+                                 "v": pa.array([20, 22], pa.int64())}),
+                       stage="arrow")
+        m = tbl.manifest(v)
+        assert len(m["new_files"]) == 1 and m["row_count"] == 2
+        assert os.path.basename(os.path.dirname(m["new_files"][0])
+                                ).startswith("snap-")
+        got = tbl.read(spark, schema="id long, v long")
+        assert sorted(tuple(r) for r in got.collect()) == [
+            (i, 2 * i) for i in range(12)]
+
     def test_append_creates_new_version_time_travel(self, spark, tbl):
         tbl.commit(_df(spark, 0, 10), operation="overwrite")
         tbl.commit(_df(spark, 10, 15), operation="append")

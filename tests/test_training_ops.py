@@ -65,6 +65,19 @@ class TestDedup:
         # the unrelated doc never pairs with the base family
         assert not any(3 in p for p in found)
 
+    def test_candidate_pairs_keep_string_ids(self, spark):
+        from nabu_spark.operators.dedup import candidate_pairs
+
+        bands = spark.createDataFrame(
+            [("doc-b", 0, 7), ("doc-a", 0, 7), ("doc-c", 0, 7),
+             ("doc-a", 1, 9), ("doc-c", 1, 9), ("doc-z", 1, 5)],
+            "id string, band int, band_hash long")
+        pairs = candidate_pairs(bands)
+        assert [f.dataType.simpleString() for f in pairs.schema] == [
+            "string", "string"]
+        assert sorted(tuple(r) for r in pairs.collect()) == [
+            ("doc-a", "doc-b"), ("doc-a", "doc-c"), ("doc-b", "doc-c")]
+
     def test_minhash_ml_variant(self, spark, docs):
         from nabu_spark.operators.dedup import minhash_dedup_ml
 
