@@ -270,6 +270,10 @@ def candidate_pairs(
     return ok.select("ids").mapInPandas(pair_batches, out_schema).distinct()
 
 
+# per-task cap on the UTF-8 bytes of the texts verify_jaccard memoizes
+_JACCARD_MEMO_BYTES = 64 << 20
+
+
 def verify_jaccard(
     pairs: DataFrame,
     df: DataFrame,
@@ -280,7 +284,8 @@ def verify_jaccard(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Exact shingle Jaccard for candidate pairs (two broadcast-friendly
-    joins to fetch texts, one Arrow UDF to score)."""
+    joins to fetch texts, one Arrow UDF to score). ``id_a`` and ``id_b``
+    keep the types they have in ``pairs``."""
     docs = df.select(F.col(id_col).alias("_vid"), F.col(text_col).alias("_vtext"))
     joined = (
         pairs.join(docs.withColumnRenamed("_vid", "id_a").withColumnRenamed("_vtext", "text_a"), "id_a")
@@ -289,8 +294,8 @@ def verify_jaccard(
 
     out_schema = T.StructType(
         [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
+            T.StructField("id_a", pairs.schema["id_a"].dataType),
+            T.StructField("id_b", pairs.schema["id_b"].dataType),
             T.StructField("jaccard", T.DoubleType()),
         ]
     )
@@ -298,15 +303,20 @@ def verify_jaccard(
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # near-dup candidates repeat documents across pairs (a k-clique
         # contributes k-1 pairs per member) — shingle each distinct text
-        # once per task, not once per pair side
+        # once per task, not once per pair side; the memo stops growing once
+        # its cached texts hold _JACCARD_MEMO_BYTES of UTF-8
         memo: dict[str, set] = {}
+        room = _JACCARD_MEMO_BYTES
 
         def sh(txt: str) -> set:
+            nonlocal room
             v = memo.get(txt)
             if v is None:
                 v = shingles_of(txt, shingle_k)
-                if len(memo) < 1 << 16:
+                size = len(txt.encode("utf-8"))
+                if size <= room:
                     memo[txt] = v
+                    room -= size
             return v
 
         for pdf in it:

@@ -50,6 +50,15 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
+def with_sitemap_id(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """``with_host`` plus the default page key: ``sitemap_id`` is the host
+    with every character outside ``[A-Za-z0-9_]`` mapped to ``_`` (the
+    grouping key of the offline corpus), JVM-side."""
+    return with_host(df, url_col).withColumn(
+        "sitemap_id", F.regexp_replace(F.col("host"), r"[^A-Za-z0-9_]", "_")
+    )
+
+
 def fan_out(df: DataFrame, *key_cols: str, min_parts: int | None = None) -> DataFrame:
     """Hash-spread a NARROW input across the cluster when its scan yields
     fewer splits than cores — the tiny-file / single-row-group case where a
@@ -132,13 +141,10 @@ def extract_docs(
     """pages -> docs. ``sitemap_id`` defaults to the url-host (the grouping
     key of the offline corpus); pass ``sitemap_col`` to use a real dimension.
     """
-    df = with_host(pages)
     if sitemap_col:
-        df = df.withColumn("sitemap_id", F.col(sitemap_col))
+        df = with_host(pages).withColumn("sitemap_id", F.col(sitemap_col))
     else:
-        df = df.withColumn(
-            "sitemap_id", F.regexp_replace(F.col("host"), r"[^A-Za-z0-9_]", "_")
-        )
+        df = with_sitemap_id(pages)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     if salt:
         df = salted_repartition(df, n)

@@ -1,22 +1,20 @@
 """pages -> quads from HTML-embedded microdata + RDFa (the JSON-LD-free web).
 
-Same stage shape as the JSON-LD path: one mapInPandas, doc-local bnodes ->
-skolemization -> strict quad gate -> URN prov; failed pages become lineage
-rows. ``formats`` selects which extractors run; a page can contribute from
+Same stage shape as the JSON-LD path: one ``triples.emit_quads`` pass
+(``mapInArrow``), doc-local bnodes -> skolemization -> strict quad gate -> URN
+prov; a failed page becomes one lineage row with the shared failure-row
+``prov``. ``formats`` selects which extractors run; a page can contribute from
 several (shared bnode namespace keeps cross-format references disjoint).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.structured import _BnodeGen, extract_microdata, extract_rdfa
 from ..functions.urn import object_key
-from ..operators.extract import with_host
-from ..operators.triples import QUADS_SCHEMA, finish_quads
+from ..operators.extract import with_sitemap_id
+from ..operators.triples import emit_quads, finish_quads
 
 ERR_NO_STRUCTURED = "no_structured_data"
 
@@ -51,39 +49,11 @@ def page_structured_quads(
 def pages_to_structured_quads(
     pages: DataFrame, *, formats=("microdata", "rdfa")
 ) -> DataFrame:
-    df = with_host(pages).withColumn(
-        "sitemap_id", F.regexp_replace(F.col("host"), r"[^A-Za-z0-9_]", "_")
-    ).select("url", "host", "sitemap_id", "html")
+    def per_page(url, sid, body):
+        if url is None or sid is None:
+            return [], "invalid_url", None
+        obj_key = object_key(sid, url)
+        quads, err = page_structured_quads(body, url, sid, formats=formats)
+        return quads, err, obj_key
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_s, out_p, out_o, out_g, out_h, out_e = [], [], [], [], [], []
-            for url, host, sid, body in zip(
-                pdf["url"], pdf["host"], pdf["sitemap_id"], pdf["html"]
-            ):
-                if url is None or sid is None:
-                    out_s.append(None); out_p.append(None); out_o.append(None)
-                    out_g.append(None); out_h.append(host); out_e.append("invalid_url")
-                    continue
-                if isinstance(body, memoryview):
-                    body = bytes(body)
-                quads, err = page_structured_quads(body, url, sid, formats=formats)
-                if err:
-                    out_s.append(None); out_p.append(None); out_o.append(None)
-                    out_g.append(None); out_h.append(host); out_e.append(err)
-                    continue
-                for s, p, o, g in quads:
-                    out_s.append(s); out_p.append(p); out_o.append(o)
-                    out_g.append(g); out_h.append(host); out_e.append(None)
-            yield pd.DataFrame(
-                {
-                    "subj": pd.Series(out_s, dtype="object"),
-                    "pred": pd.Series(out_p, dtype="object"),
-                    "obj": pd.Series(out_o, dtype="object"),
-                    "prov": pd.Series(out_g, dtype="object"),
-                    "host": pd.Series(out_h, dtype="object"),
-                    "error_code": pd.Series(out_e, dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(batches, QUADS_SCHEMA)
+    return emit_quads(with_sitemap_id(pages), per_page, "url", "sitemap_id", "html")

@@ -7,20 +7,21 @@ path, /root/reference/internal/synchronizer/client_release_graphs.go:100-159):
     done upstream) -> toRdf -> skolemize -> strict term validation (the
     NtToNq drop-malformed-line gate) -> tag graph URN
 
-All doc-local, so the whole chain runs in ONE ``mapInPandas`` pass — no
-shuffle between steps; blank nodes never cross documents. Failed docs emit a
-single row with null subj and an error_code so lineage falls out of a cheap
-aggregation over the same output, with no second UDF pass.
+All doc-local, so the whole chain runs in ONE ``mapInArrow`` pass — no
+shuffle between steps; blank nodes never cross documents. ``emit_quads`` is
+that pass for every path (fused pages, staged docs, microdata/RDFa pages):
+each caller hands it only a per-document function. Failed docs emit a single
+row with null subj, ``prov = _failed_prov(obj_key)`` and an error_code, so
+lineage falls out of a cheap aggregation over the same output, with no
+second UDF pass.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.jsonld import (
     JsonLdError, jsonld_to_triples_ex, standardize_jsonld_context,
@@ -31,17 +32,6 @@ from ..functions.urn import make_urn
 
 # the exact shape of a skolem IRI we minted: prefix + sha256 hex
 _is_minted_skolem = re.compile("<" + re.escape(SKOLEM_PREFIX) + "[0-9a-f]{64}>").fullmatch
-
-QUADS_SCHEMA = T.StructType(
-    [
-        T.StructField("subj", T.StringType()),
-        T.StructField("pred", T.StringType()),
-        T.StructField("obj", T.StringType()),
-        T.StructField("prov", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("error_code", T.StringType()),
-    ]
-)
 
 try:  # optional fast path; stdlib fallback keeps behavior identical
     from orjson import loads as _fast_loads
@@ -170,47 +160,89 @@ def _relabel_rdfc(quads: list[tuple[str, str, str, str]], obj_key: str):
     return [(sub(s), p, sub(o), g) for s, p, o, g in quads], ""
 
 
-def _quads_batches(
-    batches: Iterator[pd.DataFrame], bnode_mode: str = "skolem"
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out_s, out_p, out_o, out_g, out_h, out_e = [], [], [], [], [], []
-        for doc_text, obj_key, host, err in zip(
-            pdf["doc"], pdf["obj_key"], pdf["host"], pdf["error_code"]
-        ):
-            if err or obj_key is None:  # upstream failure -> lineage row
-                out_s.append(None); out_p.append(None); out_o.append(None)
-                out_g.append(_failed_prov(obj_key)); out_h.append(host)
-                out_e.append(err or "invalid_url")
-                continue
-            quads, qerr, _dropped = doc_to_quads(
-                doc_text, obj_key, skolemize=bnode_mode == "skolem"
+def emit_quads(df: DataFrame, per_doc, *arg_cols: str) -> DataFrame:
+    """The one per-document quad emitter behind every pages/docs -> quads
+    path. ``per_doc(*row[arg_cols])`` runs once per document and returns
+    ``(quads, error_code, obj_key)``; a truthy ``error_code`` makes the
+    document one failure row.
+
+    One ``mapInArrow`` pass emits ONE row per document — ``host`` passed
+    through as Arrow, ``prov``, ``error_code`` and three parallel
+    array<string> columns built from flat Python string lists sharing one
+    int32 offsets buffer (no pandas object-Series introspection of nested
+    tuples) — and the flatten to quad rows happens JVM-side
+    (``explode_outer`` over ``arrays_zip``, in whole-stage codegen).
+
+    Output ``(subj, pred, obj, prov, host, error_code)``. Failure rows, on
+    every path: null ``subj``/``pred``/``obj``, ``prov =
+    _failed_prov(obj_key)`` (``<urn:iow:invalid>`` without a key) — the
+    value the resume anti-joins key on — and a non-null ``error_code``."""
+
+    def emit(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            args = [rb.column(i).to_pylist() for i in range(1, rb.num_columns)]
+            provs, errs = [], []
+            subj_flat: list[str] = []
+            pred_flat: list[str] = []
+            obj_flat: list[str] = []
+            offsets = [0]
+            for row in zip(*args):
+                quads, err, obj_key = per_doc(*row)
+                if err:
+                    provs.append(_failed_prov(obj_key))
+                    errs.append(err)
+                else:
+                    provs.append(quads[0][3])
+                    errs.append(None)
+                    for s, p, o, _ in quads:
+                        subj_flat.append(s)
+                        pred_flat.append(p)
+                        obj_flat.append(o)
+                offsets.append(len(subj_flat))
+            off = pa.array(offsets, type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    pa.array(provs, type=pa.string()),
+                    pa.array(errs, type=pa.string()),
+                    *(
+                        pa.ListArray.from_arrays(off, pa.array(flat, type=pa.string()))
+                        for flat in (subj_flat, pred_flat, obj_flat)
+                    ),
+                ],
+                ["host", "prov", "error_code", "subjs", "preds", "objs"],
             )
-            if not qerr and bnode_mode == "rdfc":
-                quads, qerr = _relabel_rdfc(quads, obj_key)
-            if qerr:
-                out_s.append(None); out_p.append(None); out_o.append(None)
-                out_g.append(_failed_prov(obj_key)); out_h.append(host)
-                out_e.append(qerr)
-                continue
-            for s, p, o, g in quads:
-                out_s.append(s); out_p.append(p); out_o.append(o)
-                out_g.append(g); out_h.append(host); out_e.append(None)
-        yield pd.DataFrame(
-            {
-                "subj": pd.Series(out_s, dtype="object"),
-                "pred": pd.Series(out_p, dtype="object"),
-                "obj": pd.Series(out_o, dtype="object"),
-                "prov": pd.Series(out_g, dtype="object"),
-                "host": pd.Series(out_h, dtype="object"),
-                "error_code": pd.Series(out_e, dtype="object"),
-            }
-        )
+
+    nested = df.select("host", *arg_cols).mapInArrow(
+        emit,
+        "host string, prov string, error_code string, "
+        "subjs array<string>, preds array<string>, objs array<string>",
+    )
+    # a failure row's arrays are empty: explode_outer keeps it as one
+    # null-subj row, so lineage is an aggregation over the same output
+    t = F.explode_outer(F.arrays_zip("subjs", "preds", "objs")).alias("t")
+    return nested.select(t, "prov", "host", "error_code").select(
+        F.col("t.subjs").alias("subj"),
+        F.col("t.preds").alias("pred"),
+        F.col("t.objs").alias("obj"),
+        "prov",
+        "host",
+        "error_code",
+    )
 
 
 def docs_to_quads(docs_with_key: DataFrame, *, bnode_mode: str = "skolem") -> DataFrame:
     """docs(url, host, sitemap_id, obj_key, doc, error_code) -> quads rows
-    (+ one null-subj row per failed doc, for lineage).
+    (subj, pred, obj, prov, host, error_code), through ``emit_quads``.
+
+    A doc without an ``obj_key`` fails as ``invalid_url``; an upstream
+    ``error_code`` passes through; a doc that fails here gets its
+    ``doc_to_quads`` code. Each failed doc is ONE row with null
+    subj/pred/obj and ``prov = _failed_prov(obj_key)`` — the value
+    ``pipeline.with_prov_key`` derives, so a resume anti-join skips recorded
+    failures too.
 
     ``bnode_mode``: 'skolem' (reference-parity content-hash IRIs, default),
     'rdfc' (doc-scoped W3C-canonical `_:g<dochash>c14nN` labels kept as
@@ -219,10 +251,20 @@ def docs_to_quads(docs_with_key: DataFrame, *, bnode_mode: str = "skolem") -> Da
     single-object-release skip; caller owns cross-doc label collisions)."""
     if bnode_mode not in ("skolem", "rdfc", "raw"):
         raise ValueError(f"unknown bnode_mode {bnode_mode!r}")
-    cols = docs_with_key.select("doc", "obj_key", "host", "error_code")
-    return cols.mapInPandas(
-        lambda it: _quads_batches(it, bnode_mode), QUADS_SCHEMA
-    )
+    skolemize = bnode_mode == "skolem"
+    rdfc = bnode_mode == "rdfc"
+
+    def per_doc(doc_text, obj_key, upstream_err):
+        if obj_key is None:
+            return [], "invalid_url", None
+        if upstream_err:
+            return [], upstream_err, obj_key
+        quads, err, _ = doc_to_quads(doc_text, obj_key, skolemize=skolemize)
+        if not err and rdfc:
+            quads, err = _relabel_rdfc(quads, obj_key)
+        return quads, err, obj_key
+
+    return emit_quads(docs_with_key, per_doc, "doc", "obj_key", "error_code")
 
 
 def quads_only(quads: DataFrame) -> DataFrame:

@@ -5,7 +5,11 @@ stand-in for Iceberg snapshots; on a real cluster swap ``format("parquet")``
 for ``format("iceberg")`` and the resume anti-join for a MERGE INTO):
 
     pages --extract(mapInPandas, salted on host)--> docs/   (+ lineage)
-    docs  --toRdf+skolemize+URN (mapInPandas)-----> quads/  (+ lineage)
+    docs  --toRdf+skolemize+URN (mapInArrow)------> quads/  (+ lineage)
+
+``pages_to_quads_fused`` runs both stages in one ``mapInArrow`` pass with no
+docs table; both quads paths go through ``operators.triples.emit_quads``, so
+their rows and failure rows are the same.
 
 Resume semantics mirror the reference's incremental hash-skip
 (/root/reference/internal/crawl/hash_checks/hash_check.go:34-122): a restarted
@@ -196,26 +200,19 @@ def pages_to_quads_fused(
     salt: bool = True,
     fallback_structured: bool = False,
 ) -> DataFrame:
-    """Single-UDF fused path: one ``mapInArrow`` does extract -> toRdf ->
-    skolemize -> URN tag, avoiding the Arrow round-trip between stages.
+    """Single-UDF fused path: one ``triples.emit_quads`` pass does extract ->
+    toRdf -> skolemize -> URN tag per page, avoiding the Arrow round-trip
+    between stages. Rows and failure rows are those of
+    ``docs_to_quads(with_object_key(extract_docs(pages)))``.
 
-    The UDF emits ONE row per document — (host, prov, error_code, and three
-    parallel array<string> columns sharing one offsets buffer) — and the
-    flatten to quad rows happens JVM-side (arrays_zip + explode in
-    whole-stage codegen). ``mapInArrow`` instead of ``mapInPandas``: the
-    output ListArrays are built directly from flat Python string lists +
-    offsets, skipping the pandas object-Series -> Arrow introspection of
-    nested tuples (~10-15% of headline wall time at 400k pages)."""
-    from pyspark.sql import functions as F
-
+    ``fallback_structured``: a page whose JSON-LD path fails is retried
+    through the microdata/RDFa extractors."""
     from .functions.html_extract import OK, extract_document
     from .functions.urn import object_key
-    from .operators.extract import salted_repartition, with_host
-    from .operators.triples import doc_to_quads
+    from .operators.extract import salted_repartition, with_sitemap_id
+    from .operators.triples import doc_to_quads, emit_quads
 
-    df = with_host(pages).withColumn(
-        "sitemap_id", F.regexp_replace(F.col("host"), r"[^A-Za-z0-9_]", "_")
-    )
+    df = with_sitemap_id(pages)
     # Scale note: extraction is per-row CPU, so its parallelism comes from the
     # table's input splits (spark.sql.files.maxPartitionBytes), NOT from a
     # repartition — shuffling the html binary column costs more than the whole
@@ -238,85 +235,26 @@ def pages_to_quads_fused(
         # .rdd is illegal on streams; micro-batch sizing is the source's job
         if not df.isStreaming and df.rdd.getNumPartitions() > target:
             df = df.coalesce(target)
-    df = df.select("url", "host", "sitemap_id", "html")
 
-    def fused(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            urls = rb.column(0).to_pylist()
-            hosts_in = rb.column(1).to_pylist()
-            sids = rb.column(2).to_pylist()
-            htmls = rb.column(3).to_pylist()
-            hosts, provs, errs = [], [], []
-            subj_flat: list[str] = []
-            pred_flat: list[str] = []
-            obj_flat: list[str] = []
-            offsets = [0]
-            for url, host, sid, body in zip(urls, hosts_in, sids, htmls):
-                if url is None or sid is None:
-                    hosts.append(host); provs.append(None)
-                    errs.append("invalid_url"); offsets.append(len(subj_flat))
-                    continue
-                doc_text, err = extract_document(body)
-                quads = None
-                if err == OK:
-                    quads, qerr, _ = doc_to_quads(doc_text, object_key(sid, url))
-                    err = qerr
-                if (quads is None or err) and fallback_structured and err in (
-                    "no_jsonld", "json_parse", "jsonld_convert", "empty_graph"
-                ):
-                    # JSON-LD-free page: try microdata/RDFa (the long tail of
-                    # the open web annotates without script tags); absolute
-                    # import — the closure is unpickled outside the package
-                    from nabu_spark.operators.structured_extract import (
-                        page_structured_quads,
-                    )
-
-                    quads, err = page_structured_quads(body, url, sid)
-                if err:
-                    hosts.append(host); provs.append(None)
-                    errs.append(err); offsets.append(len(subj_flat))
-                    continue
-                hosts.append(host)
-                provs.append(quads[0][3])
-                errs.append(None)
-                for s, p, o, _ in quads:
-                    subj_flat.append(s)
-                    pred_flat.append(p)
-                    obj_flat.append(o)
-                offsets.append(len(subj_flat))
-            off = pa.array(offsets, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(hosts, type=pa.string()),
-                    pa.array(provs, type=pa.string()),
-                    pa.array(errs, type=pa.string()),
-                    pa.ListArray.from_arrays(off, pa.array(subj_flat, type=pa.string())),
-                    pa.ListArray.from_arrays(off, pa.array(pred_flat, type=pa.string())),
-                    pa.ListArray.from_arrays(off, pa.array(obj_flat, type=pa.string())),
-                ],
-                ["host", "prov", "error_code", "subjs", "preds", "objs"],
+    def per_page(url, sid, body):
+        if url is None or sid is None:
+            return [], "invalid_url", None
+        obj_key = object_key(sid, url)
+        doc_text, err = extract_document(body)
+        quads = None
+        if err == OK:
+            quads, err, _ = doc_to_quads(doc_text, obj_key)
+        if err and fallback_structured and err in (
+            "no_jsonld", "json_parse", "jsonld_convert", "empty_graph"
+        ):
+            # JSON-LD-free page: try microdata/RDFa (the long tail of the
+            # open web annotates without script tags); absolute import —
+            # the closure is unpickled outside the package
+            from nabu_spark.operators.structured_extract import (
+                page_structured_quads,
             )
 
-    nested = df.mapInArrow(
-        fused,
-        "host string, prov string, error_code string, "
-        "subjs array<string>, preds array<string>, objs array<string>",
-    )
-    # JVM-side flatten; failed docs (empty arrays) keep one null-subj row
-    # for lineage via explode_outer over the zipped (empty -> null) arrays
-    exploded = nested.select(
-        F.explode_outer(F.arrays_zip("subjs", "preds", "objs")).alias("t"),
-        "prov",
-        "host",
-        "error_code",
-    )
-    return exploded.select(
-        F.col("t.subjs").alias("subj"),
-        F.col("t.preds").alias("pred"),
-        F.col("t.objs").alias("obj"),
-        "prov",
-        "host",
-        "error_code",
-    )
+            quads, err = page_structured_quads(body, url, sid)
+        return quads, err, obj_key
+
+    return emit_quads(df, per_page, "url", "sitemap_id", "html")

@@ -3,8 +3,8 @@
 The reference's incremental story is batch + content-hash skip; the Spark
 engine additionally exposes the natural streaming formulation: new page files
 landing in the corpus directory are picked up by a file-source readStream,
-flow through the SAME fused extract->toRdf->skolemize transform (mapInPandas
-is streaming-safe: doc-local, no state), and append to the quads table with
+flow through the SAME fused extract->toRdf->skolemize transform (its one
+mapInArrow pass is streaming-safe: doc-local, no state), and append to the quads table with
 exactly-once file-sink semantics via the checkpoint directory. A watermarked
 windowed aggregation provides streaming lineage (late pages tolerated up to
 the watermark).

@@ -56,6 +56,26 @@ class TestShuffleShape:
         plan = plan_of(q)
         assert "Exchange" not in plan, f"unexpected shuffle in fused KG path:\n{plan}"
 
+    @pytest.mark.parametrize("path", ["staged", "structured"])
+    def test_quad_paths_are_one_arrow_pass(self, spark, pages_path, path):
+        """The staged and microdata paths run the fused path's emitter: one
+        MapInArrow, no pandas UDF, no shuffle."""
+        from nabu_spark.operators.structured_extract import pages_to_structured_quads
+        from nabu_spark.operators.triples import docs_to_quads
+
+        pages = spark.read.parquet(pages_path)
+        if path == "staged":
+            # a scanned table shaped like the committed docs stage
+            docs = pages.select(
+                "url", F.col("lang").alias("host"), F.col("text").alias("doc"),
+                F.lit("").alias("error_code"), F.col("url").alias("obj_key"))
+            q = docs_to_quads(docs)
+        else:
+            q = pages_to_structured_quads(pages)
+        plan = plan_of(q)
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan and "Exchange" not in plan, plan
+
     def test_mainstem_join_broadcasts(self, spark, pages_path):
         from nabu_spark.operators.enrich import mainstem_join
         from nabu_spark.operators.extract import extract_docs, with_object_key

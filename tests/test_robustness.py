@@ -42,10 +42,54 @@ def test_fused_never_fails_on_garbage(spark, hostile_pages):
     assert {r["prov"] for r in good if r["prov"]}
 
 
-def test_staged_path_never_fails_on_garbage(spark, hostile_pages):
-    docs = with_object_key(extract_docs(hostile_pages, salt=False))
-    out = docs_to_quads(docs).collect()
-    assert len(out) >= len(hostile_pages.collect())
+_ROW = ("subj", "pred", "obj", "prov", "host", "error_code")
+
+
+def test_fused_and_staged_agree_including_failure_rows(spark, hostile_pages):
+    """The fused and staged paths share one emitter, so they give the same
+    multiset of rows — failure rows (and their prov) included — on garbage
+    and on a generated corpus, and neither fails a task on garbage."""
+    from collections import Counter
+
+    from nabu_spark.datagen import generate_pages
+
+    # a null url over a body that fails extraction: the missing key wins
+    keyless = spark.createDataFrame([(None, None, b"x", None, "en")], PAGES_DDL)
+    pages = hostile_pages.unionByName(keyless).unionByName(
+        generate_pages(spark, 150)).cache()
+    fused = pages_to_quads_fused(pages, salt=False).collect()
+    staged = docs_to_quads(
+        with_object_key(extract_docs(pages, salt=False))).collect()
+    assert len(staged) >= pages.count()
+    failed = [r for r in fused if r["error_code"]]
+    assert {r["error_code"] for r in failed} >= {
+        "invalid_url", "empty_body", "json_parse", "jsonld_convert"}
+    assert all(r["prov"] and r["subj"] is None for r in failed)
+    assert sum(r["prov"] == "<urn:iow:invalid>" for r in failed) == 2
+    assert Counter(tuple(r[c] for c in _ROW) for r in fused) == Counter(
+        tuple(r[c] for c in _ROW) for r in staged)
+
+
+def test_structured_failure_row_carries_prov(spark):
+    from nabu_spark.functions.urn import object_key
+    from nabu_spark.operators.structured_extract import pages_to_structured_quads
+    from nabu_spark.operators.triples import _failed_prov
+
+    md = (b'<html><body><div itemscope itemtype="https://schema.org/Place" '
+          b'itemid="https://x/md1"><meta itemprop="name" content="MD"></div>'
+          b'</body></html>')
+    pages = spark.createDataFrame(
+        [("https://h.org/md", None, md, None, "en"),
+         ("https://h.org/none", None, b"<html><body>nothing</body></html>", None, "en"),
+         (None, None, md, None, "en")], PAGES_DDL)
+    rows = pages_to_structured_quads(pages).collect()
+    failed = {r["error_code"]: r for r in rows if r["error_code"]}
+    assert set(failed) == {"no_structured_data", "invalid_url"}
+    assert failed["no_structured_data"]["prov"] == _failed_prov(
+        object_key("h_org", "https://h.org/none"))
+    assert failed["invalid_url"]["prov"] == "<urn:iow:invalid>"
+    assert all(r["subj"] is None for r in failed.values())
+    assert any(r["subj"] == "<https://x/md1>" for r in rows if not r["error_code"])
 
 
 def test_remote_context_is_error_row_not_crash(spark, hostile_pages):

@@ -78,6 +78,21 @@ class TestDedup:
         assert sorted(tuple(r) for r in pairs.collect()) == [
             ("doc-a", "doc-b"), ("doc-a", "doc-c"), ("doc-b", "doc-c")]
 
+    def test_verify_jaccard_keeps_string_ids(self, spark):
+        from nabu_spark.operators.dedup import verify_jaccard
+
+        texts = spark.createDataFrame(
+            [("a", BASE), ("b", BASE), ("c", BASE.replace("golden", "crimson")),
+             ("d", "short text")], "key string, text string")
+        pairs = spark.createDataFrame(
+            [("a", "b"), ("a", "c"), ("a", "d")], "id_a string, id_b string")
+        out = verify_jaccard(pairs, texts, "key", "text", threshold=0.5)
+        assert [f.dataType.simpleString() for f in out.schema] == [
+            "string", "string", "double"]
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        assert set(got) == {("a", "b"), ("a", "c")}
+        assert got[("a", "b")] == 1.0 and 0.5 <= got[("a", "c")] < 1.0
+
     def test_minhash_ml_variant(self, spark, docs):
         from nabu_spark.operators.dedup import minhash_dedup_ml
 
