@@ -330,8 +330,7 @@ def _dispatch(args) -> int:
             bnode_mode=args.bnode_mode,
         )
         quads = raw.filter(F.col("error_code").isNull()).drop("error_code")
-        write_release(quads, args.out)
-        n = quads.count()
+        n = sum(r["lines"] for r in write_release(quads, args.out))
         print(json.dumps({"cmd": "release", "quads": n}))
         return 0
 

@@ -15,22 +15,35 @@ Reference semantics (studied, not copied):
 Every release path builds its lines with one helper (``release_lines``,
 JVM-side ``concat_ws``). Byte sums come from one Arrow-native kernel
 (``utf8_bytesums``): a single ``cumsum`` over a batch's UTF-8 values buffer,
-differenced at the offsets — no per-row Python. ``write_release`` evaluates
-it once per line, writes each release graph from exactly one task (one part
-file per graph) and sums the sidecar from the persisted line relation in a
-JVM-only job.
+differenced at the offsets — no per-row Python. Every graph writer
+(``write_release``, ``write_release_canonical``,
+``write_release_deterministic_gzip``) is one Spark job: lines shuffled by
+graph, sorted within each partition, and written by one ``mapInArrow`` task
+writer that joins each graph's values-buffer slice with newlines
+(``join_lines``) and sums exactly the bytes it writes. Each graph is one file,
+written under a hidden attempt-unique name and renamed into its
+partition-determined final name, so a retried or speculative attempt replaces
+rather than duplicates it. The tasks write straight to the output directory:
+like ``pull_release_graphs``, this assumes the driver and every executor see
+one local or POSIX-shared filesystem.
 """
 
 from __future__ import annotations
 
 import gzip
 import itertools
+import json
 import os
+import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.bytesum import MASK64
 
 
 def with_release_name(quads: DataFrame) -> DataFrame:
@@ -62,6 +75,15 @@ def release_lines(quads: DataFrame) -> DataFrame:
     )
 
 
+def _utf8_buffers(texts: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """``(ends, values)`` of a string array: its ``len + 1`` offsets (the
+    array's slice offset applied) and its whole UTF-8 values buffer."""
+    width = np.dtype(np.int64 if pa.types.is_large_string(texts.type) else np.int32)
+    _, offsets, values = texts.buffers()
+    ends = np.frombuffer(offsets, width, len(texts) + 1, texts.offset * width.itemsize)
+    return ends, np.frombuffer(values or b"", np.uint8)
+
+
 def utf8_bytesums(texts: pa.Array) -> pa.Array:
     """Sum of UTF-8 byte VALUES per string — the reference's order-agnostic
     hash kernel (hash.go:29-51 sums the bytes of each object's content).
@@ -69,16 +91,24 @@ def utf8_bytesums(texts: pa.Array) -> pa.Array:
     offsets; honours the array's slice offset, and a null sums to 0."""
     if len(texts) == 0:
         return pa.array([], pa.int64())
-    width = np.dtype(np.int64 if pa.types.is_large_string(texts.type) else np.int32)
-    _, offsets, values = texts.buffers()
-    ends = np.frombuffer(offsets, width, len(texts) + 1, texts.offset * width.itemsize)
+    ends, values = _utf8_buffers(texts)
     prefix = np.zeros(values.size + 1, dtype=np.uint64)
-    np.cumsum(np.frombuffer(values, np.uint8), dtype=np.uint64, out=prefix[1:])
+    np.cumsum(values, dtype=np.uint64, out=prefix[1:])
     sums = prefix[ends[1:]] - prefix[ends[:-1]]
     if texts.null_count:
         # a null slot may still span bytes of the values buffer
         sums[texts.is_null().to_numpy(zero_copy_only=False)] = 0
     return pa.array(sums.view(np.int64))
+
+
+def join_lines(lines: pa.Array) -> np.ndarray:
+    """Release text of a null-free string array as uint8: every line's
+    UTF-8 followed by a newline. The values-buffer slice the lines span,
+    with one ``np.insert`` of a newline at every line end."""
+    if len(lines) == 0:
+        return np.zeros(0, np.uint8)
+    ends, values = _utf8_buffers(lines)
+    return np.insert(values[ends[0]:ends[-1]], ends[1:] - ends[0], 10)
 
 
 def utf8_bytesum(col):
@@ -117,84 +147,175 @@ def release_bytesums(quads: DataFrame) -> DataFrame:
     return _sum_by_release(_bytesum_lines(quads))
 
 
-def write_release(quads: DataFrame, out_dir: str, *, compress: bool = False) -> None:
-    """Write release text files (one directory per release graph, one part
-    file each) + bytesum sidecars. Text lines are the canonical release
-    content; ordering is deliberately unspecified, matching the reference's
-    rationale for the order-agnostic hash. ``compress`` gzips the text parts;
-    unlike the reference's deterministic-gzip (helpers.go:57-68), compressed
-    bytes are NOT the hashed artifact — the bytesum is always over the
-    uncompressed canonical line set (documented deviation, SURVEY §2 #37).
-    Lines and byte sums are computed once, by the graph write; the sidecar
-    job aggregates the persisted relation."""
-    parallelism = quads.sparkSession.sparkContext.defaultParallelism
-    lines = _bytesum_lines(quads).repartition(parallelism, "release_name").persist()
-    try:
-        writer = (lines.select("release_name", "line").write
-                  .mode("overwrite").partitionBy("release_name"))
-        if compress:
-            writer = writer.option("compression", "gzip")
-        writer.text(os.path.join(out_dir, "graphs"))
-        _sum_by_release(lines).write.mode("overwrite").json(
-            os.path.join(out_dir, "bytesums")
+_MANIFEST = pa.schema([("release_name", pa.string()), ("path", pa.string()),
+                       ("lines", pa.int64()), ("bytesum", pa.int64())])
+
+# characters Spark escapes as %XX in a partition directory name
+# (ExternalCatalogUtils.escapePathName)
+_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset('"#%\'*/:=?\\\x7f{[]^')
+
+
+def _partition_dir(name: str | None) -> str:
+    """``release_name=<name>`` exactly as Spark's partitioned writer names
+    it; a null (or empty) name is Hive's default partition."""
+    if not name:
+        return "release_name=__HIVE_DEFAULT_PARTITION__"
+    return "release_name=" + "".join(
+        f"%{ord(c):02X}" if c in _ESCAPED else c for c in name
+    )
+
+
+class _GraphFile:
+    """One graph's output file: written under a hidden attempt-unique name
+    and renamed to ``path`` when the ``with`` block completes (removed if it
+    raises). Counts the lines and sums the uncompressed bytes written
+    (uint64 wrap-around)."""
+
+    def __init__(self, path, attempt, level):
+        self.path, self.lines, self.bytesum = path, 0, 0
+        folder, base = os.path.split(path)
+        os.makedirs(folder, exist_ok=True)
+        self.tmp = os.path.join(folder, f".{base}.{attempt}.tmp")
+        self.level = level
+
+    def __enter__(self):
+        self.raw = open(self.tmp, "wb")
+        self.fh = self.raw if self.level is None else gzip.GzipFile(
+            filename="", mode="wb", fileobj=self.raw, compresslevel=self.level, mtime=0
         )
-    finally:
-        lines.unpersist()
+        return self
+
+    def write(self, lines: pa.Array) -> None:
+        data = join_lines(lines)
+        self.fh.write(data)
+        self.lines += len(lines)
+        self.bytesum = (self.bytesum + int(data.sum(dtype=np.uint64))) & MASK64
+
+    def __exit__(self, exc_type, *_):
+        self.fh.close()
+        self.raw.close()
+        if exc_type is None:
+            os.replace(self.tmp, self.path)
+        else:
+            os.remove(self.tmp)
+
+
+def _runs(batches):
+    """``(release_name, lines)`` per run of equal names in ``(release_name,
+    line)`` batches sorted by name; the run boundaries come from Arrow."""
+    for batch in batches:
+        runs = pc.run_end_encode(batch.column(0))
+        start = 0
+        for name, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+            yield name, batch.column(1).slice(start, end - start)
+            start = end
+
+
+def _write_graphs(lines: DataFrame, sort: tuple[str, ...], path_of, level) -> list[dict]:
+    """Write every graph of ``(release_name, line)`` to one file in one Spark
+    job: lines shuffled by graph, sorted by ``sort`` within each partition,
+    each task writing the graphs it owns to ``path_of(name, partition)``
+    (gzip at ``level``, plain text if None). Returns one manifest row per
+    graph, ``bytesum`` unsigned."""
+    def write(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        part, attempt = ctx.partitionId(), ctx.taskAttemptId()
+        rows = []
+        for name, runs in itertools.groupby(_runs(batches), key=lambda run: run[0]):
+            with _GraphFile(path_of(name, part), attempt, level) as out:
+                for _, run in runs:
+                    out.write(run)
+            rows.append({"release_name": name, "path": out.path, "lines": out.lines,
+                         # the uint64 sum's bits in a signed long
+                         "bytesum": out.bytesum - (out.bytesum >> 63 << 64)})
+        yield pa.RecordBatch.from_pylist(rows, schema=_MANIFEST)
+
+    parallelism = lines.sparkSession.sparkContext.defaultParallelism
+    rows = (
+        lines.repartition(parallelism, "release_name")
+        .sortWithinPartitions(*sort)
+        .mapInArrow(write, "release_name string, path string, lines long, bytesum long")
+        .collect()
+    )
+    return [{**r.asDict(), "bytesum": r["bytesum"] & MASK64} for r in rows]
+
+
+def _write_partitioned(lines: DataFrame, graphs_dir: str, sort, compress: bool) -> list[dict]:
+    """Replace ``graphs_dir`` with ``release_name=<name>/part-<partition>-<run>.txt``
+    files in Spark's partitioned-text layout, one per graph, plus ``_SUCCESS``."""
+    shutil.rmtree(graphs_dir, ignore_errors=True)
+    run, ext = uuid.uuid4().hex, ".txt.gz" if compress else ".txt"
+
+    def path_of(name, part):
+        return os.path.join(graphs_dir, _partition_dir(name), f"part-{part:05d}-{run}{ext}")
+
+    # level 6: the Hadoop gzip codec's default
+    rows = _write_graphs(lines, sort, path_of, 6 if compress else None)
+    os.makedirs(graphs_dir, exist_ok=True)
+    open(os.path.join(graphs_dir, "_SUCCESS"), "wb").close()
+    return rows
+
+
+def write_release(quads: DataFrame, out_dir: str, *, compress: bool = False) -> list[dict]:
+    """Write the release: ``graphs/release_name=<name>/part-*.txt`` (one
+    file per release graph) and the bytesum sidecar
+    ``bytesums/part-00000.json`` (one compact JSON object per graph; a null
+    graph name has no ``release_name`` key and the
+    ``__HIVE_DEFAULT_PARTITION__`` directory). Line order within a graph is
+    deliberately unspecified, matching the reference's rationale for the
+    order-agnostic hash. ``compress`` gzips the text files (level 6, zeroed
+    mtime); unlike the reference's deterministic-gzip (helpers.go:57-68),
+    compressed bytes are NOT the hashed artifact — the bytesum is always over
+    the uncompressed line set (documented deviation, SURVEY §2 #37).
+
+    Commit protocol: the driver clears ``graphs/`` and ``bytesums/``; one
+    Spark job writes every graph (see ``_write_graphs``; each file is renamed
+    into place by its task) and returns one manifest row per graph; the
+    driver then writes the sidecar from those rows and ``_SUCCESS`` in both
+    directories, with no further Spark job. Tasks write to ``out_dir``
+    directly, so it must be on a filesystem the driver and every executor
+    share (local or POSIX). Returns the manifest rows
+    ``{release_name, path, lines, bytesum}``."""
+    sums_dir = os.path.join(out_dir, "bytesums")
+    shutil.rmtree(sums_dir, ignore_errors=True)
+    rows = _write_partitioned(release_lines(quads), os.path.join(out_dir, "graphs"),
+                              ("release_name",), compress)
+    os.makedirs(sums_dir)
+    with open(os.path.join(sums_dir, "part-00000.json"), "w", encoding="utf-8") as fh:
+        for r in rows:
+            # like Spark's JSON writer: a null name is left out, not null
+            rec = {k: r[k] for k in ("release_name", "bytesum") if r[k] is not None}
+            fh.write(json.dumps(rec, ensure_ascii=False, separators=(",", ":")) + "\n")
+    open(os.path.join(sums_dir, "_SUCCESS"), "wb").close()
+    return rows
 
 
 def write_release_canonical(quads: DataFrame, out_dir: str) -> None:
-    """Canonical-ordering variant: one file per release graph with lines in
-    lexicographic order (the skolemized graph has no blank labels left, so a
-    plain sort IS its canonical serialization — the RDFC ordering concern is
-    discharged by content-hash skolemization upstream). Deterministic bytes,
-    suitable for file-level diffing; the order-agnostic bytesum still matches
-    because addition commutes."""
-    (
-        release_lines(quads)
-        .repartition(F.col("release_name"))
-        .sortWithinPartitions("release_name", "line")
-        .write.mode("overwrite")
-        .partitionBy("release_name")
-        .text(os.path.join(out_dir, "graphs_canonical"))
-    )
+    """Canonical-ordering variant: one file per release graph under
+    ``graphs_canonical/`` with lines in lexicographic order (the skolemized
+    graph has no blank labels left, so a plain sort IS its canonical
+    serialization — the RDFC ordering concern is discharged by content-hash
+    skolemization upstream). Deterministic bytes, suitable for file-level
+    diffing; the order-agnostic bytesum still matches because addition
+    commutes."""
+    _write_partitioned(release_lines(quads), os.path.join(out_dir, "graphs_canonical"),
+                       ("release_name", "line"), False)
 
 
 def write_release_deterministic_gzip(quads: DataFrame, out_dir: str) -> list[dict]:
     """Deterministic-gzip release export — the full helpers.go:57-68
-    semantics: one ``<release>.nq.gz`` per release graph whose BYTES are
-    reproducible across runs (lines in canonical sorted order, gzip header
-    with zeroed mtime and OS=unknown, max compression). Spark's builtin gzip
-    codec stamps wall-clock mtimes, so each release is written by the task
-    that owns its sorted partition via Python's gzip with ``mtime=0`` —
-    distributed one-pass, same carry-over pattern as the SHACL evaluator.
-    Returns the manifest [(release_name, path, lines)...]."""
+    semantics: one ``<release>.nq.gz`` per named release graph whose BYTES
+    are reproducible across runs (lines in canonical sorted order, gzip
+    header with zeroed mtime and OS=unknown, level 9). Spark's builtin gzip
+    codec stamps wall-clock mtimes, so the shared task writer compresses with
+    Python's gzip. Returns the manifest ``{release_name, path, lines,
+    bytesum}`` per graph."""
     os.makedirs(out_dir, exist_ok=True)
-
-    def write_groups(it):
-        rows = ((name, line) for pdf in it
-                for name, line in zip(pdf["release_name"], pdf["line"])
-                if name is not None)
-        out_rows = []
-        for name, group in itertools.groupby(rows, key=lambda r: r[0]):
-            path = os.path.join(out_dir, f"{name}.gz")
-            n = 0
-            with open(path, "wb") as raw, gzip.GzipFile(
-                filename="", mode="wb", fileobj=raw, compresslevel=9, mtime=0
-            ) as fh:
-                for _, line in group:
-                    fh.write(line.encode("utf-8") + b"\n")
-                    n += 1
-            out_rows.append({"release_name": name, "path": path, "lines": n})
-        yield pd.DataFrame(out_rows, columns=["release_name", "path", "lines"])
-
-    manifest = (
-        release_lines(quads)
-        .repartition(F.col("release_name"))
-        .sortWithinPartitions("release_name", "line")
-        .mapInPandas(write_groups, "release_name string, path string, lines long")
-        .collect()
-    )
-    return [r.asDict() for r in manifest]
+    lines = release_lines(quads).filter(F.col("release_name").isNotNull())
+    return _write_graphs(lines, ("release_name", "line"),
+                         lambda name, _: os.path.join(out_dir, f"{name}.gz"), 9)
 
 
 def _graph_part_files(spark, release_dir: str) -> DataFrame:

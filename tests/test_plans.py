@@ -415,23 +415,37 @@ class TestReleaseShape:
         assert plan.count("ArrowEvalPython") == 1, plan
         assert "BatchEvalPython" not in plan, plan
 
-    def test_sidecar_reads_persisted_lines(self, spark, quads, tmp_path, monkeypatch):
-        """The sidecar job aggregates the relation the graph write persisted;
-        it evaluates no Python of its own."""
-        from pyspark.sql.readwriter import DataFrameWriter
-
+    def test_write_release_is_one_writer_pass(self, spark, quads, tmp_path, monkeypatch):
+        """Graph text and byte sums come from one mapInArrow writer job with
+        no Python eval and no cached relation; the sidecar and ``_SUCCESS``
+        are written by the driver with no further Spark job."""
         from nabu_spark.operators.release import write_release
 
-        plans = []
-        json_write = DataFrameWriter.json
+        sc = spark.sparkContext
+        group = "release-writer-probe"
+        plans, after_writer = [], []
+        collect = type(quads).collect
 
-        def capture(self, path, *args, **kwargs):
-            plans.append(plan_of(self._df))
-            return json_write(self, path, *args, **kwargs)
+        def jobs():
+            # the status store is fed by the listener bus: drain it first
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(sc.statusTracker().getJobIdsForGroup(group))
 
-        monkeypatch.setattr(DataFrameWriter, "json", capture)
-        write_release(quads, str(tmp_path / "rel"))
+        def capture(self):
+            plans.append(plan_of(self))
+            rows = collect(self)
+            after_writer.append(jobs())
+            return rows
+
+        monkeypatch.setattr(type(quads), "collect", capture)
+        sc.setJobGroup(group, "release writer probe")
+        try:
+            write_release(quads, str(tmp_path / "rel"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         (plan,) = plans
-        above_cache = plan.split("InMemoryRelation")[0]
-        assert "InMemoryTableScan" in above_cache, plan
-        assert "EvalPython" not in above_cache, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+        assert "InMemoryRelation" not in plan, plan
+        (writer_jobs,) = after_writer
+        assert writer_jobs and jobs() == writer_jobs

@@ -125,6 +125,23 @@ class TestBytesumProperties:
         want = [0 if t is None else bytesum_lines([t]) - 10 for t in arr.to_pylist()]
         assert utf8_bytesums(arr).to_pylist() == want
 
+    @given(st.lists(st.text(max_size=30), max_size=20),
+           st.integers(0, 20), st.integers(0, 20), st.booleans())
+    @settings(max_examples=300)
+    def test_line_joiner_matches_str_join(self, texts, start, length, large):
+        """The release writer's buffer-level joiner gives exactly the UTF-8
+        of the newline-terminated lines, on multi-byte text, empty strings
+        and sliced arrays."""
+        import pyarrow as pa
+
+        from nabu_spark.operators.release import join_lines
+
+        arr = pa.array(texts, pa.large_string() if large else pa.string())
+        arr = arr.slice(min(start, len(texts)), length)
+        lines = arr.to_pylist()
+        want = ("\n".join(lines) + "\n").encode() if lines else b""
+        assert join_lines(arr).tobytes() == want
+
 
 class TestUrnProperties:
     @given(st.lists(st.from_regex(r"[a-zA-Z0-9_.\-]{1,10}", fullmatch=True), min_size=2, max_size=5))

@@ -89,6 +89,62 @@ class TestRelease:
     def test_write_release_gzip_roundtrip(self, spark, corpus, tmp_path):
         _check_release_files(corpus[2], str(tmp_path / "rel"), compress=True)
 
+    def test_null_graph_name_matches_spark_writers(self, spark, tmp_path):
+        """A quad whose prov names no release goes where Spark's partitioned
+        text writer puts a null partition value, and its sidecar row has no
+        ``release_name`` key, as Spark's JSON writer leaves it."""
+        quads = spark.createDataFrame(
+            [("<urn:a>", "<urn:p>", '"é"', "<urn:iow:summoned:sm:k1>"),
+             ("<urn:b>", "<urn:p>", '"o"', "<urn:other:x:y>")],
+            "subj string, pred string, obj string, prov string",
+        )
+        ours, spark_dir = str(tmp_path / "ours"), str(tmp_path / "spark")
+        write_release(quads, ours)
+        release_lines(quads).write.partitionBy("release_name").text(spark_dir + "/graphs")
+        release_bytesums(quads).write.json(spark_dir + "/bytesums")
+
+        def graphs(base):
+            out = {}
+            for d in glob.glob(os.path.join(base, "graphs", "release_name=*")):
+                data = b"".join(open(f, "rb").read() for f in glob.glob(d + "/part-*"))
+                out[os.path.basename(d)] = data
+            return out
+
+        def sidecars(base):
+            return sorted(
+                (json.loads(line) for f in glob.glob(base + "/bytesums/part-*")
+                 for line in open(f) if line.strip()),
+                key=lambda d: d.get("release_name", ""),
+            )
+
+        got = graphs(ours)
+        assert set(got) == {"release_name=sm_release.nq",
+                            "release_name=__HIVE_DEFAULT_PARTITION__"}
+        assert got == graphs(spark_dir)
+        assert sidecars(ours) == sidecars(spark_dir)
+        assert [set(d) for d in sidecars(ours)] == [{"bytesum"}, {"release_name", "bytesum"}]
+
+    def test_rewrite_replaces_previous_release(self, spark, corpus, tmp_path):
+        """A second release into the same directory leaves only its own
+        graphs: one part file each, no stale graph, no hidden temp file."""
+        _, _, quads = corpus
+        named = with_release_name(quads)
+        names = sorted(r["release_name"] for r in named.select("release_name").distinct().collect())
+        assert len(names) >= 2
+        out = str(tmp_path / "rel")
+        write_release(quads, out)
+        fewer = named.filter(F.col("release_name") != names[0]).drop("release_name")
+        manifest = write_release(fewer, out)
+        dirs = {os.path.basename(d).split("=", 1)[1]
+                for d in glob.glob(os.path.join(out, "graphs", "release_name=*"))}
+        assert dirs == set(names[1:]) == {r["release_name"] for r in manifest}
+        for name in dirs:
+            assert len(glob.glob(os.path.join(out, "graphs", f"release_name={name}", "part-*"))) == 1
+        left = [f for _, _, files in os.walk(out) for f in files if f.startswith(".")]
+        assert left == []
+        (sidecar,) = glob.glob(os.path.join(out, "bytesums", "part-*"))
+        assert len(open(sidecar).read().splitlines()) == len(names) - 1
+
     def test_canonical_release_is_sorted_and_deterministic(self, spark, corpus, tmp_path):
         from nabu_spark.operators.release import write_release_canonical
 
