@@ -53,16 +53,18 @@ of the quad table joined on shared variables, same as the SELECT engine —
 broadcast it) instantiated delete set, and (c) a union with the
 deduplicated insert set. Nothing is collected; ``GraphStore`` commits only
 the DELTA rows (Iceberg-v2-style equality-delete markers, merged at read
-with one max_by aggregation) so a 100-TB store is never rewritten by a
-small update — ``compact()`` folds the log back to a pure add set. A
-ground (INSERT DATA / DELETE DATA only) script never reads the store: its
-rows are built on the driver and written by pyarrow, with no Spark job.
+with one max_by aggregation, once per committed file set) so a 100-TB store
+is never rewritten by a small update — ``compact()`` folds the log back to
+a pure add set. A ground (INSERT DATA / DELETE DATA only) script never
+reads the store: its rows are built on the driver and written by pyarrow,
+with no Spark job.
 Raw reads pass ``RAW_SCHEMA`` and so skip parquet schema inference.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 from dataclasses import dataclass
 from functools import reduce
 
@@ -75,6 +77,7 @@ from .sparql import (
     _LocalEval,
     _Parser,
 )
+from .telemetry import maybe_span
 
 QUAD_COLS = ("subj", "pred", "obj", "prov")
 # the delta log's one physical row shape: every writer emits it (__seq is
@@ -734,15 +737,23 @@ class GraphStore:
     a quad, 'd' rows are equality-delete markers (Iceberg v2 shape), __seq
     is a store-global operation sequence so a quad deleted then re-inserted
     resolves correctly. ``read()`` merges with ONE hash aggregation
-    (max_by(__op, __seq) per quad); ``compact()`` folds the log into a pure
-    add set so steady-state reads pay no delete history. Every ``update``
-    call commits only its delta rows — the base data is never rewritten."""
+    (max_by(__op, __seq) per quad), once per committed file set: the store
+    holds one persisted merged view keyed on (applicationId, manifest file
+    list), filled lazily by the first query that runs at that key, and
+    only when the files fit ``spark.sql.autoBroadcastJoinThreshold``. So
+    reads between commits scan the cache, and the first read after a
+    commit pays the merge plus the cache fill. ``compact()`` folds the log
+    into a pure add set so steady-state reads pay no delete history. Every
+    ``update`` call commits only its delta rows — the base data is never
+    rewritten."""
 
     def __init__(self, spark: SparkSession, root: str):
         from .snapshots import SnapshotTable
 
         self.spark = spark
         self.tbl = SnapshotTable(root)
+        # (key, persisted merged view): the one read() memo entry
+        self._memo: tuple | None = None
 
     # -- write paths --------------------------------------------------------
     def _next_seq(self) -> int:
@@ -1105,13 +1116,49 @@ class GraphStore:
         return self.spark.read.schema(RAW_SCHEMA).parquet(*new_files)
 
     def read(self, version: int | None = None) -> DataFrame:
-        """The merged quad-set view at ``version`` (default latest)."""
-        raw = self.tbl.read(self.spark, version, schema=RAW_SCHEMA)
-        merged = (
-            raw.groupBy(*QUAD_COLS)
-            .agg(F.max_by("__op", "__seq").alias("__op"))
-        )
-        return merged.filter(F.col("__op") == "a").select(*QUAD_COLS)
+        """The merged quad-set view at ``version`` (default latest).
+
+        Memoized per committed file set: data files are immutable, so
+        ``(applicationId, manifest file list)`` names one merged set, and a
+        read at the key of the store's one entry returns that same
+        DataFrame (``memo="hit"``). A miss builds the merge plan and
+        ``persist()``s it — lazily, so constructing a query launches no job
+        and the first query that runs fills the cache — then unpersists the
+        previous entry. Update, rollback, compact, time travel and another
+        process's commit all change the key; no invalidation is needed.
+        Only a log whose files total at most
+        ``spark.sql.autoBroadcastJoinThreshold`` on-disk bytes is
+        memoized; a larger one gets the plain merge plan every time
+        (``memo="over_cap"``). The persisted entry spills to disk under
+        Spark's storage memory. The cost moves to the first read after each
+        commit: it pays the whole-log merge plus the cache fill, where an
+        unmemoized selective query would merge only a filter-pushed slice.
+        Each decision opens a ``graphstore.read`` span (a no-op without an
+        ambient tracer).
+        """
+        files = self.tbl.files(version)
+        nbytes = sum(map(os.path.getsize, files))
+        cap = self.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        key = (self.spark.sparkContext.applicationId, tuple(files))
+        memo = ("over_cap" if nbytes > cap else
+                "hit" if self._memo and self._memo[0] == key else "miss")
+        with maybe_span("graphstore.read", memo=memo, files=len(files),
+                        bytes=nbytes):
+            if memo == "hit":
+                return self._memo[1]
+            raw = self.spark.read.schema(RAW_SCHEMA).parquet(*files)
+            merged = (
+                raw.groupBy(*QUAD_COLS)
+                .agg(F.max_by("__op", "__seq").alias("__op"))
+                .filter(F.col("__op") == "a").select(*QUAD_COLS)
+            )
+            if memo == "over_cap":
+                return merged
+            if self._memo:
+                self._memo[1].unpersist()
+            self._memo = (key, merged.persist())
+            return self._memo[1]
 
     def query(self, text: str, version: int | None = None) -> DataFrame:
         from .sparql import sparql_query

@@ -158,15 +158,17 @@ def minhash_bands(
     bands: int = 32,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """(id, band, band_hash) rows — the LSH bucketing relation."""
+    """(id, band, band_hash) rows — the LSH bucketing relation. ``id``
+    keeps the type and values of ``id_col``."""
     rows_per_band = num_perm // bands
     a, b = _perm_params(num_perm)
     mixers = _band_mixers(rows_per_band)
     band_idx = np.arange(bands, dtype=np.int32)
+    docs = df.select(F.col(id_col), F.col(text_col))
 
     out_schema = T.StructType(
         [
-            T.StructField("id", T.LongType()),
+            T.StructField("id", docs.schema[0].dataType),
             T.StructField("band", T.IntegerType()),
             T.StructField("band_hash", T.LongType()),
         ]
@@ -174,24 +176,20 @@ def minhash_bands(
 
     def sig_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ids, band_ids, hashes = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                sig = minhash_signature(shingles_of(text or "", shingle_k), a, b)
-                ids.append(np.full(bands, int(doc_id), dtype=np.int64))
-                band_ids.append(band_idx)
-                hashes.append(band_hashes(sig, bands, mixers))
-            if not ids:
-                yield pd.DataFrame({"id": [], "band": [], "band_hash": []})
-                continue
+            hashes = [
+                band_hashes(minhash_signature(shingles_of(text or "", shingle_k), a, b),
+                            bands, mixers)
+                for text in pdf[text_col]
+            ]
             yield pd.DataFrame(
                 {
-                    "id": np.concatenate(ids),
-                    "band": np.concatenate(band_ids),
-                    "band_hash": np.concatenate(hashes),
+                    "id": np.repeat(pdf[id_col].to_numpy(), bands),
+                    "band": np.tile(band_idx, len(pdf)),
+                    "band_hash": np.concatenate(hashes) if hashes else np.empty(0, np.int64),
                 }
             )
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(sig_batches, out_schema)
+    return docs.mapInPandas(sig_batches, out_schema)
 
 
 # unique suffix for named observations (Spark requires observation names to be

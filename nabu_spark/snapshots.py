@@ -175,6 +175,17 @@ class SnapshotTable:
         }
         return self._publish(manifest)
 
+    def files(self, version: int | None = None) -> list[str]:
+        """The exact data file list of ``version`` (default: latest
+        committed); raises FileNotFoundError when there is none."""
+        m = self.manifest(version)
+        if m is None or not m["files"]:
+            raise FileNotFoundError(
+                f"no committed snapshot at {self.root}"
+                + (f" version {version}" if version is not None else "")
+            )
+        return m["files"]
+
     def read(self, spark: SparkSession, version: int | None = None, *,
              schema=None) -> DataFrame:
         """The table at ``version`` (default: latest committed). Reads the
@@ -183,14 +194,8 @@ class SnapshotTable:
         StructType) skips parquet schema inference, which otherwise costs a
         footer-reading Spark job per read; columns match by name, and files
         written with a narrower integer type read widened."""
-        m = self.manifest(version)
-        if m is None or not m["files"]:
-            raise FileNotFoundError(
-                f"no committed snapshot at {self.root}"
-                + (f" version {version}" if version is not None else "")
-            )
         reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(*m["files"])
+        return reader.parquet(*self.files(version))
 
     def exists(self) -> bool:
         return self.latest_version() is not None

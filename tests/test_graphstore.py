@@ -681,3 +681,150 @@ class TestSeqPhysicalType:
             [0] * len(BASE) + [1, 1, 3, 4]
         window = gs.raw_window(1, 3)
         assert sorted(r["__seq"] for r in window.collect()) == [1, 1, 3, 4]
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=_key)
+
+
+def _plan_nodes(plan):
+    """Physical operator names of an executed plan, through AQE wrappers
+    and query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [name] + _plan_nodes(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return [name] + _plan_nodes(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size())
+                     for n in _plan_nodes(kids.apply(i))]
+
+
+def _unmemoized(gs, version=None):
+    """read()'s groupBy/max_by merge built by hand over the same files.
+    The extra grouping column keeps its plan distinct from the memoized
+    one, so Spark's cache lookup cannot substitute the persisted view."""
+    from nabu_spark.graphstore import QUAD_COLS, RAW_SCHEMA
+
+    raw = gs.spark.read.schema(RAW_SCHEMA).parquet(*gs.tbl.files(version))
+    merged = (raw.withColumn("__probe", F.lit(0))
+              .groupBy(*QUAD_COLS, "__probe")
+              .agg(F.max_by("__op", "__seq").alias("__op"))
+              .filter(F.col("__op") == "a").select(*QUAD_COLS))
+    assert "InMemoryTableScanExec" not in _plan_nodes(
+        merged._jdf.queryExecution().executedPlan())
+    return merged
+
+
+class TestReadMemo:
+    """read() memoizes the merged view per committed file set."""
+
+    @staticmethod
+    def _check(gs, want, version=None):
+        got = _rows(gs.read(version))
+        assert got == _rows(_unmemoized(gs, version))
+        assert got == sorted(want, key=_key)
+        assert gs.read(version) is gs.read(version)
+
+    def test_read_matches_unmemoized_plan_and_local_twin(self, spark,
+                                                         tmp_path):
+        root = str(tmp_path / "memo")
+        gs = GraphStore(spark, root)
+        v0 = gs.init(_store(spark, BASE))
+        self._check(gs, BASE)
+        cur, states = set(BASE), {v0: set(BASE)}
+
+        def update(store, text):
+            nonlocal cur
+            v = store.update(text)
+            cur = apply_update_local(cur, text)
+            states[v] = cur
+            return v
+
+        v1 = update(gs, 'INSERT DATA { <urn:n> <urn:p> "9" }')
+        self._check(gs, cur)
+        update(gs, "WITH <urn:g1> DELETE { ?s <urn:p> ?o } "
+                   "INSERT { ?s <urn:r> ?o } WHERE { ?s <urn:p> ?o }")
+        self._check(gs, cur)
+        gs.rollback(v1)
+        cur = states[v1]
+        self._check(gs, cur)
+        gs.compact()
+        self._check(gs, cur)
+        self._check(gs, BASE, v0)
+        # a commit by another instance on the same root changes the key
+        update(GraphStore(spark, root), 'DELETE DATA { <urn:a> <urn:p> "1" }')
+        self._check(gs, cur)
+
+    def test_same_file_list_returns_same_dataframe(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "same"))
+        v0 = gs.init(_store(spark, BASE))
+        first = gs.read()
+        assert gs.read(v0) is first
+        gs.update('INSERT DATA { <urn:n> <urn:p> "9" }')
+        # a rollback republishes v0's exact file list: the memo still holds
+        gs.rollback(v0)
+        assert gs.read() is first
+
+    def test_stale_dataframe_recomputes_from_lineage(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "stale"))
+        gs.init(_store(spark, BASE))
+        old = gs.read()
+        before = _rows(old)
+        gs.update('DELETE DATA { <urn:a> <urn:p> "1" }')
+        assert _rows(gs.read()) != before  # the memo moved and unpersisted
+        assert _rows(old) == before == sorted(BASE, key=_key)
+
+    def test_lookup_on_hit_scans_cache_without_exchange(self, spark,
+                                                        tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "hit"))
+        gs.init(_store(spark, BASE))
+        gs.update('INSERT DATA { <urn:a> <urn:p> "9" }')
+        gs.read().count()  # fills the cache
+        df = gs.query("SELECT ?p ?o WHERE { <urn:a> ?p ?o }")
+        assert len(df.collect()) == 3
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in nodes
+        assert not [n for n in nodes if "Exchange" in n]
+
+    def test_one_persisted_relation_per_store(self, spark, tmp_path):
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        gs = GraphStore(spark, str(tmp_path / "bound"))
+        gs.init(_store(spark, BASE))
+        before = persisted()
+        for i in range(5):
+            gs.update(f'INSERT DATA {{ <urn:n{i}> <urn:p> "{i}" }}')
+            assert gs.read().count() == len(BASE) + i + 1
+            assert len(persisted() - before) <= 1
+        assert len(persisted() - before) == 1
+
+    def test_read_decisions_are_recorded_as_spans(self, spark, tmp_path):
+        from nabu_spark.telemetry import Tracer, set_active
+
+        gs = GraphStore(spark, str(tmp_path / "spans"))
+        gs.init(_store(spark, BASE))
+        files = gs.tbl.files()
+        conf = "spark.sql.autoBroadcastJoinThreshold"
+        tracer = Tracer()
+        set_active(tracer)
+        try:
+            gs.read()
+            gs.read()
+            prev = spark.conf.get(conf)
+            spark.conf.set(conf, "-1")
+            try:
+                over = gs.read()
+            finally:
+                spark.conf.set(conf, prev)
+        finally:
+            set_active(None)
+        spans = [s.attributes for s in tracer.spans
+                 if s.name == "graphstore.read"]
+        nbytes = sum(os.path.getsize(f) for f in files)
+        assert spans == [
+            {"memo": m, "files": len(files), "bytes": nbytes}
+            for m in ("miss", "hit", "over_cap")]
+        assert over is not gs.read()
+        assert _rows(over) == sorted(BASE, key=_key)

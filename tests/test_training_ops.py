@@ -93,6 +93,30 @@ class TestDedup:
         assert set(got) == {("a", "b"), ("a", "c")}
         assert got[("a", "b")] == 1.0 and 0.5 <= got[("a", "c")] < 1.0
 
+    def test_string_ids_round_trip_bands_pairs_verify(self, spark, docs):
+        from nabu_spark.operators.dedup import (
+            candidate_pairs,
+            minhash_bands,
+            verify_jaccard,
+        )
+
+        texts = docs.select(
+            F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("key"),
+            "text")
+        bands = minhash_bands(texts, "key", "text")
+        assert bands.schema["id"].dataType.simpleString() == "string"
+        assert {r["id"] for r in bands.select("id").distinct().collect()} == {
+            f"doc-{i}" for i in range(6)}
+        pairs = candidate_pairs(bands)
+        out = verify_jaccard(pairs, texts, "key", "text", threshold=0.5)
+        assert [f.dataType.simpleString() for f in out.schema] == [
+            "string", "string", "double"]
+        found = {(r["id_a"], r["id_b"]) for r in out.collect()}
+        # the long-id path over the same texts, ids mapped to strings
+        want = {(f"doc-{r['id_a']}", f"doc-{r['id_b']}") for r in
+                minhash_dedup(docs, "doc_id", "text", threshold=0.5).collect()}
+        assert ("doc-0", "doc-1") in found and found == want
+
     def test_minhash_ml_variant(self, spark, docs):
         from nabu_spark.operators.dedup import minhash_dedup_ml
 
