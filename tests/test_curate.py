@@ -200,3 +200,54 @@ class TestC4Stage:
         out, report = curate_corpus(docs)
         assert {r.doc_id for r in out.collect()} == {0, 1}
         assert "n_c4_ok" not in report
+
+
+# characters whose case mapping or length differs by engine: dotted capital I
+# (lowers to i + U+0307), the Kelvin sign (lowers to ASCII k), final sigma,
+# sharp s and its capital, a combining acute, fullwidth letters, a non-BMP
+# letter (one code point, two UTF-16 units), a titlecase digraph, a ligature
+ADVERSARIAL = [
+    "\u0130", "\u0130N", "D\u0130E", "TH\u0130S", "\u212a", "\u212aELVIN",
+    "\u212a\u212a\u212a", "\u039f\u0394\u039f\u03a3", "STRA\u00dfE", "\u1e9eAA",
+    "e\u0301te", "CAFE\u0301", "\uff34\uff28\uff25", "the\uff41nd", "\U0001d400bc",
+    "x\U0001f600yz", "\u01c5EMO", "\ufb01ne", "\u0131s", "ABC", "DIE",
+]
+
+
+def _adversarial_docs() -> list[str]:
+    """Each adversarial word placed where one token, one character or one
+    letter decides a gate: 50 tokens, mean word length 3, alpha ratio 0.8,
+    symbol ratio 0.1, and a tie between two languages."""
+    docs = []
+    for w in ADVERSARIAL:
+        docs.append(" ".join(["river"] * 49 + [w]))              # token count
+        docs.append(" ".join(["abc"] * 49 + [w]))                # mean length
+        docs.append(" ".join(["river"] * 39 + ["12345"] * 10 + [w]))  # alpha
+        docs.append(" ".join(["the", "and", "der", "und"] + ["river"] * 46 + [w]))
+        body = " ".join(["abc"] * 50 + [w]) + " " + "#" * 25
+        for n_chars in (250, 249):  # symbol ratio exactly 0.1, and just over
+            docs.append(body.ljust(n_chars))
+    return docs
+
+
+def test_gate_kernel_matches_expressions_on_non_ascii(spark):
+    """curate.lang_gopher_kernel (the fused funnel's Python gates) gives the
+    same (lang_pred, gopher_pass) as the JVM expressions of textstats."""
+    from nabu_spark.curate import lang_gopher_kernel
+    from nabu_spark.operators.textstats import gopher_exprs, lang_pred_expr, lang_scores
+
+    docs = _adversarial_docs()
+    df = spark.createDataFrame(list(enumerate(docs)), "id long, text string")
+    got = {
+        r.id: (r.lang_pred, r.gopher_pass)
+        for r in df.select("id", "text", *lang_scores("text"))
+        .select("id", lang_pred_expr().alias("lang_pred"),
+                gopher_exprs("text")["gopher_pass"].alias("gopher_pass"))
+        .collect()
+    }
+    want = {i: lang_gopher_kernel(t) for i, t in enumerate(docs)}
+    diverged = {i: (docs[i], want[i], got[i]) for i in want if want[i] != got[i]}
+    assert not diverged, diverged
+    # the corpus sits on the gates' edges: both verdicts and several languages
+    assert {g for _, g in want.values()} == {True, False}
+    assert {p for p, _ in want.values()} == {"und", "en", "de"}

@@ -56,6 +56,26 @@ class TestShuffleShape:
         plan = plan_of(q)
         assert "Exchange" not in plan, f"unexpected shuffle in fused KG path:\n{plan}"
 
+    @pytest.mark.parametrize("files", [2, 48])
+    def test_fused_path_coalesces_to_core_count(self, spark, tmp_path, files):
+        """The fused path runs min(input splits, defaultParallelism) tasks:
+        adjacent splits merge, and a small input keeps its own count."""
+        path = str(tmp_path / "pages")
+        generate_pages(spark, 2 * files).repartition(files).write.parquet(path)
+        # one split per small file, as for a crawled table
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "4m")
+        try:
+            pages = spark.read.parquet(path)
+            splits = pages.rdd.getNumPartitions()
+            q = pages_to_quads_fused(pages, salt=False)
+            parts = q.rdd.getNumPartitions()
+        finally:
+            spark.conf.set(key, old)
+        assert splits == files
+        assert parts == min(splits, spark.sparkContext.defaultParallelism)
+
     @pytest.mark.parametrize("path", ["staged", "structured"])
     def test_quad_paths_are_one_arrow_pass(self, spark, pages_path, path):
         """The staged and microdata paths run the fused path's emitter: one
