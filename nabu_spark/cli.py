@@ -683,7 +683,7 @@ def _dispatch(args) -> int:
         return 0
 
     if args.cmd == "snap":
-        from .snapshots import SnapshotTable, run_pipeline_snapshots
+        from .snapshots import SnapshotTable, _parquet_rows, run_pipeline_snapshots
 
         if args.action == "run":
             if not args.pages:
@@ -696,7 +696,8 @@ def _dispatch(args) -> int:
             print(json.dumps({
                 "cmd": "snap",
                 "action": "run",
-                "quads": res["raw_quads"].count(),
+                # footer row count of the committed files: no Spark job
+                "quads": _parquet_rows(res["tables"]["quads"].files()),
                 "versions": {
                     name: tbl.latest_version()
                     for name, tbl in res["tables"].items()

@@ -86,7 +86,7 @@ _MARKER_SETS: dict[str, frozenset] = {}
 
 def fix_clean_kernel(s: str | None) -> tuple[str | None, int]:
     """Mojibake repair + unicode hygiene for one document — the shared
-    per-row kernel of the batch and streaming funnels (byte-equal to
+    per-row kernel of the curation funnel (byte-equal to
     composing encoding.fix_text with textstats.clean_text)."""
     from .operators.encoding import fix_text
 
@@ -101,7 +101,7 @@ def fix_clean_kernel(s: str | None) -> tuple[str | None, int]:
     s = unicodedata.normalize("NFC", s)
     # .strip(" "): F.trim strips ONLY ASCII spaces — a bare .strip() would
     # also remove trailing NBSP/ideographic space and silently diverge from
-    # the gated clean_text operator (parity pinned in the streaming tests)
+    # the gated clean_text operator (parity pinned in test_training_ops)
     return _WS_RE.sub(" ", _CTRL_RE.sub("", s)).strip(" "), rounds
 
 

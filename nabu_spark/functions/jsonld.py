@@ -765,12 +765,6 @@ def jsonld_to_triples_ex(
     return state.triples, state.bnode_counter > 0 or bool(state.bnode_map)
 
 
-def triples_to_nt(triples: list[tuple[str, str, str]]) -> str:
-    if not triples:
-        return ""
-    return "\n".join(f"{s} {p} {o} ." for s, p, o in triples) + "\n"
-
-
 # --- context standardization (jsonld_standardize.go:15-92 semantics) ---
 
 _HYF_CANON = "https://www.opengis.net/def/schema/hy_features/hyf/"

@@ -170,8 +170,3 @@ def _term_is_valid_cached(term: str, as_subject: bool, as_predicate: bool) -> bo
         return dt is None or bool(_IRI_RE.match(dt))
     return False
 
-
-def quad_line(subj: str, pred: str, obj: str, graph: str | None = None) -> str:
-    if graph:
-        return f"{subj} {pred} {obj} {graph} ."
-    return f"{subj} {pred} {obj} ."

@@ -824,8 +824,8 @@ class GraphStore:
     def append_quads(self, quads: DataFrame, stage: str = "append") -> int:
         """Append a batch of quads as one snapshot of 'a' rows — O(batch),
         no read of the store. Duplicate assertions are harmless: read()'s
-        max_by merge is a set union, so a replayed batch (streaming
-        foreachBatch retry) changes nothing logically and compact() folds
+        max_by merge is a set union, so a replayed batch (a retried
+        task) changes nothing logically and compact() folds
         the physical duplicates away. The incremental-view path re-derives
         from the replayed rows and its anti-join adds nothing."""
         seq = self._next_seq()

@@ -354,42 +354,6 @@ def minhash_dedup(
     )
 
 
-def minhash_dedup_ml(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    threshold: float = 0.7,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """pyspark.ml variant: HashingTF token-set features -> MinHashLSH
-    approxSimilarityJoin. Same contract as minhash_dedup (id_a < id_b,
-    jaccard >= threshold); the custom implementation above gives exact
-    shingle-level control, this one leans on the built-in estimator."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, RegexTokenizer
-
-    tok = RegexTokenizer(
-        inputCol=text_col, outputCol="_toks", pattern="[^a-z0-9]+", toLowercase=True
-    )
-    tf = HashingTF(inputCol="_toks", outputCol="_feat", numFeatures=num_features, binary=True)
-    feats = tf.transform(tok.transform(df.select(id_col, text_col)))
-    feats = feats.filter(F.size("_toks") > 0)
-    lsh = MinHashLSH(inputCol="_feat", outputCol="_sig", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(
-        feats, feats, 1.0 - threshold, distCol="_dist"
-    )
-    return (
-        joined.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1.0 - F.col("_dist"), 6).alias("jaccard"),
-        )
-    )
-
-
 # --- near-dup clustering -------------------------------------------------------
 
 

@@ -70,8 +70,6 @@ def fan_out(df: DataFrame, *key_cols: str, min_parts: int | None = None) -> Data
     splits), so the shuffle is only paid when it buys parallelism. Key by a
     high-cardinality id so the hash spreads evenly; keyless falls back to
     round-robin."""
-    if df.isStreaming:  # .rdd is illegal on streams; micro-batches split fine
-        return df
     sc = df.sparkSession.sparkContext
     n = min_parts or sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:

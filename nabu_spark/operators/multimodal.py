@@ -1,45 +1,36 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-Decode coverage:
-  * **BMP images** (uncompressed 24/32-bit) — REAL decode: header parse,
-    pixel extraction to a numpy array, and nearest-neighbor resize that
-    re-encodes valid BMP bytes. Pure struct+numpy, no external libs.
-  * **PNG images** (8-bit gray/RGB/palette/gray-alpha/RGBA, non-interlaced)
-    — REAL decode: chunk walk, zlib inflate with a size-bounded
-    decompressor (zip-bomb guard), per-row unfiltering (None/Sub/Up/
-    Average/Paeth) in numpy, palette lookup; plus a minimal deterministic
-    encoder for resize round-trips. Pure stdlib zlib + numpy.
-  * **GIF images/animations** (87a/89a) — REAL decode: full LZW, 4-pass
-    deinterlace, global/local palettes, per-frame pixel access; plus a
-    deterministic encoder. Header paths parse structure only.
-  * **Baseline JPEG** — REAL decode: Huffman (DC/AC), dequant, IDCT,
-    chroma upsample (factors 1-2), YCbCr->RGB, grayscale; plus a 4:4:4
-    encoder with the standard Annex K tables (lossy, PSNR-asserted).
-  * **WAV audio** (PCM) — REAL decode: RIFF/fmt/data chunk walk; reported
-    as (width=sample_rate, height=channels, n_frames=sample count).
+Decode reads headers into (kind, width, height, n_frames, payload_bytes);
+pixels are never decoded. Coverage, pure struct + numpy:
+  * **BMP images** (uncompressed 24/32-bit): BITMAPINFOHEADER.
+  * **PNG images** (8-bit gray/RGB/palette/gray-alpha/RGBA, non-interlaced):
+    IHDR chunk walk.
+  * **GIF images/animations** (87a/89a): block walk counting frames.
+  * **Baseline JPEG**: marker walk to the SOF frame header.
+  * **WAV audio** (PCM): RIFF/fmt/data chunk walk; reported as
+    (width=sample_rate, height=channels, n_frames=sample count).
+  * **MP4 (ISO-BMFF)** and **Ogg** containers: box / page walks.
   * **FAKE** — the deterministic synthetic format for plumbing tests:
     b"FAKE" + type(1B: 0=img,1=aud,2=vid) + width/height/n_frames (4B LE
     each) + payload bytes.
-  * anything else (progressive/arithmetic JPEG, MP4, 16-bit or interlaced
-    PNG...) raises NotImplementedError — the clearly-marked boundary where
-    PIL/libav would plug in (not available in this container).
+  * anything else (progressive/arithmetic JPEG, WebP, TIFF, 16-bit or
+    interlaced PNG...) raises NotImplementedError.
 
-Everything Spark-side is format-agnostic: schema, partition-preserving
-mapInPandas plumbing, Arrow batch shapes, frame sampling, and resize
-propagation. Per-row decode errors become rows, never task failures.
+The encoders (BMP, PNG, GIF, baseline JPEG) exist for the ``synth_*``
+generators. Spark-side the pass is format-agnostic: one partition-preserving
+mapInPandas, and per-row decode errors become rows, never task failures.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 import struct
 import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -156,9 +147,6 @@ def _decode_bmp(blob: bytes) -> dict:
         "height": abs(int(h)),
         "n_frames": 1,
         "payload_bytes": len(blob) - pixel_off,
-        "_bpp": bpp,
-        "_pixel_off": pixel_off,
-        "_topdown": h < 0,
     }
 
 
@@ -180,9 +168,9 @@ def _png_chunks(blob: bytes):
 
 
 def _decode_png(blob: bytes) -> dict:
-    """PNG header + IDAT accounting (pixels decoded lazily by png_pixels).
-    payload_bytes reports the DECODED pixel byte count (h * w * channels) —
-    deterministic in the header alone, unlike compressed stream length."""
+    """PNG header. payload_bytes reports the DECODED pixel byte count
+    (h * w * channels) — deterministic in the header alone, unlike
+    compressed stream length."""
     if len(blob) < 33 or blob[:8] != _PNG_SIG:
         raise MediaDecodeError("truncated or non-PNG signature")
     chunks = _png_chunks(blob)
@@ -200,97 +188,13 @@ def _decode_png(blob: bytes) -> dict:
             "only 8-bit non-interlaced PNG decodes natively; other variants "
             "need an imaging library not available in this container"
         )
-    channels = _PNG_CHANNELS[color_type]
     return {
         "kind": "image",
         "width": int(w),
         "height": int(h),
         "n_frames": 1,
-        "payload_bytes": int(w) * int(h) * channels,
-        "_color_type": color_type,
-        "_channels": channels,
+        "payload_bytes": int(w) * int(h) * _PNG_CHANNELS[color_type],
     }
-
-
-def _png_unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Reverse PNG row filters. raw is (h, 1+stride) int16; returns (h,
-    stride) uint8. Sub rows vectorize as per-lane cumsum; Up as a running
-    add; Average/Paeth keep the inherent left-recursion per byte."""
-    out = np.zeros((h, stride), dtype=np.int16)
-    for y in range(h):
-        f = int(raw[y, 0])
-        row = raw[y, 1:]
-        prev = out[y - 1] if y > 0 else np.zeros(stride, dtype=np.int16)
-        if f == 0:
-            out[y] = row
-        elif f == 1:  # Sub
-            r = row.copy()
-            for lane in range(bpp):
-                r[lane::bpp] = np.cumsum(r[lane::bpp]) & 0xFF
-            out[y] = r
-        elif f == 2:  # Up
-            out[y] = (row + prev) & 0xFF
-        elif f == 3:  # Average
-            r = out[y]
-            for x in range(stride):
-                left = r[x - bpp] if x >= bpp else 0
-                r[x] = (row[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            r = out[y]
-            for x in range(stride):
-                a = int(r[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                r[x] = (row[x] + pred) & 0xFF
-        else:
-            raise MediaDecodeError(f"invalid PNG filter type {f}")
-    return out.astype(np.uint8)
-
-
-def png_pixels(blob: bytes) -> np.ndarray:
-    """(height, width, 3) uint8 RGB array from an 8-bit non-interlaced PNG."""
-    d = _decode_png(blob)
-    w, h, channels, color_type = d["width"], d["height"], d["_channels"], d["_color_type"]
-    stride = w * channels
-    expected = h * (stride + 1)
-    palette = None
-    dec = zlib.decompressobj()
-    parts = []
-    got = 0
-    for ctype, data in _png_chunks(blob):
-        if ctype == b"PLTE":
-            palette = np.frombuffer(data[: (len(data) // 3) * 3], dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            # size-bounded inflate: never allocate beyond the expected
-            # scanline bytes no matter what the stream claims (zip bomb)
-            part = dec.decompress(data, expected - got)
-            got += len(part)
-            parts.append(part)
-            if got >= expected:
-                break
-    scan = b"".join(parts)
-    if len(scan) < expected:
-        raise MediaDecodeError("truncated PNG pixel data")
-    raw = np.frombuffer(scan[:expected], dtype=np.uint8).astype(np.int16).reshape(h, stride + 1)
-    px = _png_unfilter(raw, h, stride, bpp=channels).reshape(h, w, channels)
-    if color_type == 2:
-        return np.ascontiguousarray(px)
-    if color_type == 6:
-        return np.ascontiguousarray(px[:, :, :3])
-    if color_type == 0:
-        return np.repeat(px, 3, axis=2)
-    if color_type == 4:
-        return np.repeat(px[:, :, :1], 3, axis=2)
-    # color_type 3: palette lookup with index bound guard
-    if palette is None or len(palette) == 0:
-        raise MediaDecodeError("palette PNG missing PLTE")
-    idx = px[:, :, 0]
-    if int(idx.max()) >= len(palette):
-        raise MediaDecodeError("PNG palette index out of range")
-    return np.ascontiguousarray(palette[idx])
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
@@ -343,139 +247,18 @@ def _decode_wav(blob: bytes) -> dict:
     }
 
 
-# --- native-codec plug-in registry (VERDICT r4 task #6) --------------------
-# Same pattern as validate.full_shacl_available: detect an optional native
-# imaging library at executor import and route through it, keeping the pure-
-# Python kernels as the always-available fallback AND the parity oracle.
-# NABU_NATIVE_CODECS selects the policy (read per call so tests can flip it):
-#   auto (default) - pure kernels first; PIL only for image variants they
-#                    refuse (progressive JPEG, 16-bit/interlaced PNG, WebP,
-#                    TIFF, ...)
-#   pil            - prefer PIL for every image blob it can open (the
-#                    throughput path on a cluster with Pillow installed:
-#                    C decode loops instead of Python Huffman/IDCT)
-#   pure           - never use PIL (parity-oracle mode)
-
-_PIL_CACHE: list = []
-
-
-def pil_available() -> bool:
-    if not _PIL_CACHE:
-        try:
-            from PIL import Image  # noqa: F401
-
-            _PIL_CACHE.append(Image)
-        except Exception:
-            _PIL_CACHE.append(None)
-    return _PIL_CACHE[0] is not None
-
-
-def _codec_mode() -> str:
-    return os.environ.get("NABU_NATIVE_CODECS", "auto")
-
-
-def _looks_image(blob: bytes) -> bool:
-    return (
-        blob[:2] in (b"BM", b"\xff\xd8")
-        or blob[:8] == _PNG_SIG
-        or blob[:6] in (b"GIF87a", b"GIF89a")
-        or (blob[:4] == b"RIFF" and blob[8:12] == b"WEBP")
-        or blob[:4] in (b"II*\x00", b"MM\x00*")  # TIFF
-    )
-
-
-def _decode_image_pil(blob: bytes) -> dict:
-    """PIL-backed decode producing the same metadata dict as the pure
-    kernels, INCLUDING their per-format payload_bytes conventions (the
-    decode-mode env var must never change table values): BMP counts the
-    encoded pixel section with its 4-byte row padding, GIF counts
-    frames * w * h * 3 decoded RGB, PNG/JPEG/others count
-    w * h * bands [* frames]."""
-    import io
-
-    Image = _PIL_CACHE[0]
-    try:
-        with Image.open(io.BytesIO(blob)) as im:
-            w, h = im.size
-            bands = len(im.getbands())
-            n = int(getattr(im, "n_frames", 1))
-            fmt = im.format
-    except Exception as e:  # PIL raises format-specific error classes
-        raise MediaDecodeError(f"PIL decode failed: {e}") from e
-    w, h = int(w), int(h)
-    if fmt == "BMP":
-        step = 4 if bands == 4 else 3
-        payload = ((w * step + 3) & ~3) * h
-    elif fmt == "GIF":
-        payload = n * w * h * 3
-    else:
-        payload = w * h * bands * n
-    return {
-        "kind": "image",
-        "width": w,
-        "height": h,
-        "n_frames": n,
-        "payload_bytes": payload,
-    }
-
-
-def _resize_image_pil(blob: bytes, max_side: int) -> bytes:
-    """PIL-backed resize with the SAME target-dimension rule as
-    :func:`_nn_resize` (aspect-preserving, never upscales), re-encoded in
-    the source format when PIL can write it, else PNG."""
-    import io
-
-    Image = _PIL_CACHE[0]
-    with Image.open(io.BytesIO(blob)) as im:
-        w, h = im.size
-        scale = min(1.0, max_side / max(h, w))
-        tw, th = max(1, round(w * scale)), max(1, round(h * scale))
-        buf = io.BytesIO()
-        fmt = im.format if im.format in ("BMP", "PNG", "GIF", "JPEG") else "PNG"
-        n_frames = int(getattr(im, "n_frames", 1))
-        if fmt == "GIF" and n_frames > 1:
-            # every frame resizes (parity with the pure resize_gif —
-            # a single save() would silently drop frames 1..n)
-            from PIL import ImageSequence
-
-            frames = [f.resize((tw, th), Image.NEAREST)
-                      for f in ImageSequence.Iterator(im)]
-            frames[0].save(buf, format="GIF", save_all=True,
-                           append_images=frames[1:])
-        else:
-            im.resize((tw, th), Image.NEAREST).save(buf, format=fmt)
-        return buf.getvalue()
-
-
 def _decode_one(blob: bytes) -> dict:
-    """Dispatch on magic bytes, routed through the codec registry: the
-    pure struct/numpy kernels decode natively; with Pillow importable the
-    registry routes image blobs to it (always in ``pil`` mode, on
-    pure-kernel NotImplementedError in ``auto`` mode); everything neither
-    side can decode raises NotImplementedError — the honest plug-in
-    boundary."""
+    """Dispatch on magic bytes to the header kernels; a codec none of them
+    reads raises NotImplementedError."""
     if blob is None or len(blob) < 12:
         raise MediaDecodeError("truncated media blob")
-    if _codec_mode() == "pil" and pil_available() and _looks_image(blob):
-        return _decode_image_pil(blob)
-    try:
-        return _decode_one_pure(blob)
-    except NotImplementedError:
-        if _codec_mode() != "pure" and pil_available() and _looks_image(blob):
-            return _decode_image_pil(blob)
-        raise
-
-
-def _decode_one_pure(blob: bytes) -> dict:
     if blob[:2] == b"BM":
         return _decode_bmp(blob)
     if blob[:8] == _PNG_SIG:
         return _decode_png(blob)
     if blob[:4] == b"RIFF":
         if blob[8:12] == b"WEBP":
-            raise NotImplementedError(
-                "WebP needs an imaging library (codec registry routes to "
-                "PIL when importable)")
+            raise NotImplementedError("WebP needs an imaging library")
         return _decode_wav(blob)
     if blob[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif(blob)
@@ -496,25 +279,7 @@ def _decode_one_pure(blob: bytes) -> dict:
             "n_frames": frames,
             "payload_bytes": len(blob) - 17,
         }
-    raise NotImplementedError(
-        "this codec requires PIL/libav, not available in this container"
-    )
-
-
-def bmp_pixels(blob: bytes) -> np.ndarray:
-    """(height, width, 3) uint8 RGB array from an uncompressed BMP."""
-    d = _decode_bmp(blob)
-    w, h, bpp = d["width"], d["height"], d["_bpp"]
-    step = bpp // 8
-    row_size = (w * step + 3) & ~3  # rows pad to 4 bytes
-    px = np.frombuffer(blob, dtype=np.uint8, offset=d["_pixel_off"])
-    if len(px) < row_size * h:
-        raise MediaDecodeError("truncated BMP pixel data")
-    rows = px[: row_size * h].reshape(h, row_size)[:, : w * step].reshape(h, w, step)
-    rgb = rows[:, :, :3][:, :, ::-1]  # BGR -> RGB
-    if not d["_topdown"]:
-        rgb = rgb[::-1]  # bottom-up storage
-    return np.ascontiguousarray(rgb)
+    raise NotImplementedError("this codec needs an imaging library")
 
 
 def encode_bmp(rgb: np.ndarray) -> bytes:
@@ -528,52 +293,6 @@ def encode_bmp(rgb: np.ndarray) -> bytes:
     header = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
     info = struct.pack("<IiihHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
     return header + info + data
-
-
-def _nn_resize(rgb: np.ndarray, max_side: int) -> np.ndarray:
-    """Nearest-neighbor downsample via numpy index striding, preserving
-    aspect ratio (never upscales)."""
-    h, w = rgb.shape[:2]
-    scale = min(1.0, max_side / max(h, w))
-    tw, th = max(1, round(w * scale)), max(1, round(h * scale))
-    ys = (np.arange(th) * (h / th)).astype(int).clip(0, h - 1)
-    xs = (np.arange(tw) * (w / tw)).astype(int).clip(0, w - 1)
-    return rgb[ys][:, xs]
-
-
-def resize_bmp(blob: bytes, max_side: int) -> bytes:
-    """REAL resize for BMP media: re-encodes valid BMP bytes."""
-    return encode_bmp(_nn_resize(bmp_pixels(blob), max_side))
-
-
-def resize_png(blob: bytes, max_side: int) -> bytes:
-    """REAL resize for PNG media: decode, downsample, re-encode as RGB PNG."""
-    return encode_png(_nn_resize(png_pixels(blob), max_side))
-
-
-def resize_image(blob: bytes, max_side: int) -> bytes:
-    """Format-dispatching pixel resize through the codec registry: each
-    natively-decodable image codec re-encodes in its own format; PIL takes
-    the blob when the registry prefers it or the pure kernel refuses it;
-    others raise for the caller's error row."""
-    if _codec_mode() == "pil" and pil_available() and _looks_image(blob):
-        return _resize_image_pil(blob, max_side)
-    try:
-        if blob[:2] == b"BM":
-            return resize_bmp(blob, max_side)
-        if blob[:8] == _PNG_SIG:
-            return resize_png(blob, max_side)
-        if blob[:6] in (b"GIF87a", b"GIF89a"):
-            return resize_gif(blob, max_side)
-        if blob[:2] == b"\xff\xd8":
-            return encode_jpeg(_nn_resize(jpeg_pixels(blob), max_side))
-        raise NotImplementedError(
-            "this codec requires PIL/libav, not available in this container"
-        )
-    except NotImplementedError:
-        if _codec_mode() != "pure" and pil_available() and _looks_image(blob):
-            return _resize_image_pil(blob, max_side)
-        raise
 
 
 DECODED_SCHEMA = T.StructType(
@@ -629,21 +348,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, DECODED_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_nth: int = 4) -> DataFrame:
-    """Frame sampling: explode (media_id, frame_idx) for every nth frame —
-    JVM-side sequence. VISUAL rows only: audio has no frames (its n_frames
-    reports the PCM sample count)."""
-    decoded = decode_media(media).filter(
-        F.col("decode_error").isNull() & (F.col("media_type") != "audio")
-    )
-    return decoded.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth))
-        ).alias("frame_idx"),
-    )
-
-
 def synth_bmp(i: int, w: int = 24, h: int = 16) -> bytes:
     """Deterministic test BMP: a gradient + id-seeded stripe pattern."""
     y, x = np.mgrid[0:h, 0:w]
@@ -686,85 +390,12 @@ def synth_wav(i: int, rate: int = 8000, n_samples: int = 400) -> bytes:
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resize_error", T.StringType()),
-    ]
-)
+# --- native GIF codec (87a/89a subset: frame walk + LZW encoder) -----------
 
 
-def resize_media(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """REAL pixel resize for natively-decodable media (BMP, PNG, GIF — each
-    re-encoded in its own format, GIF frame-by-frame): one mapInPandas pass
-    emitting resized blobs + new dims; rows whose codec needs an external
-    library carry a resize_error instead of failing the task."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["media"]):
-                if isinstance(blob, memoryview):
-                    blob = bytes(blob)
-                try:
-                    resized = resize_image(blob, max_side)
-                    d = _decode_one(resized)
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "media": resized,
-                            "width": d["width"],
-                            "height": d["height"],
-                            "resize_error": None,
-                        }
-                    )
-                except (MediaDecodeError, NotImplementedError) as e:
-                    out.append(
-                        {
-                            "media_id": int(mid),
-                            "media": None,
-                            "width": None,
-                            "height": None,
-                            "resize_error": type(e).__name__,
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "media").mapInPandas(batches, RESIZED_SCHEMA)
-
-
-def resize_meta(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Resize planning: compute target dims preserving aspect ratio —
-    pure column math. Applies to VISUAL rows only (for audio, width/height
-    report sample-rate/channels, which are not resizable dims)."""
-    decoded = decode_media(media).filter(
-        F.col("decode_error").isNull() & (F.col("media_type") != "audio")
-    )
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest(F.col("width"), F.col("height")),
-    )
-    return decoded.select(
-        "media_id",
-        "width",
-        "height",
-        F.greatest(F.lit(1), F.round(F.col("width") * scale).cast("int")).alias("target_width"),
-        F.greatest(F.lit(1), F.round(F.col("height") * scale).cast("int")).alias("target_height"),
-    )
-
-
-# --- native GIF codec (87a/89a subset: LZW, palettes, interlace, frames) -----
-
-
-def _gif_subblocks(blob: bytes, pos: int, *, collect: bool = True) -> tuple[bytes, int]:
-    """Walk a GIF sub-block chain starting at ``pos``; returns
-    (data, pos_after_terminator). ``collect=False`` skips without copying —
-    the header/lineage path advances past frame data for free. Raises on
-    truncation."""
-    out = bytearray() if collect else None
+def _skip_gif_subblocks(blob: bytes, pos: int) -> int:
+    """Walk a GIF sub-block chain starting at ``pos`` without copying it;
+    returns the position after its terminator. Raises on truncation."""
     n = len(blob)
     while True:
         if pos >= n:
@@ -772,11 +403,9 @@ def _gif_subblocks(blob: bytes, pos: int, *, collect: bool = True) -> tuple[byte
         size = blob[pos]
         pos += 1
         if size == 0:
-            return (bytes(out) if collect else b""), pos
+            return pos
         if pos + size > n:
             raise MediaDecodeError("truncated GIF sub-block")
-        if collect:
-            out += blob[pos : pos + size]
         pos += size
 
 
@@ -784,20 +413,17 @@ _GIF_MAX_PIXELS = 64_000_000  # decompression-bomb guard (frames x w x h)
 _GIF_MAX_FRAMES = 10_000
 
 
-def _parse_gif(blob: bytes, *, want_frames: bool) -> dict:
-    """Structural parse: screen size, frame descriptors, palettes. LZW data
-    is collected only when ``want_frames`` (pixel decode is on-demand —
-    header/lineage paths never pay for it)."""
+def _parse_gif(blob: bytes) -> dict:
+    """Structural parse: screen size and each frame's (w, h); color tables
+    and LZW data are bounds-checked and skipped."""
     if blob[:6] not in (b"GIF87a", b"GIF89a") or len(blob) < 13:
         raise MediaDecodeError("not a GIF")
     w, h, packed, _bg, _aspect = struct.unpack("<HHBBB", blob[6:13])
     pos = 13
-    gct = None
     if packed & 0x80:
         size = 3 * (2 << (packed & 0x07))
         if pos + size > len(blob):
             raise MediaDecodeError("truncated GIF color table")
-        gct = np.frombuffer(blob[pos : pos + size], dtype=np.uint8).reshape(-1, 3)
         pos += size
     frames = []
     total_px = 0
@@ -810,8 +436,7 @@ def _parse_gif(blob: bytes, *, want_frames: bool) -> dict:
         if marker == 0x21:  # extension: label + sub-block chain, skipped
             if pos >= n:
                 raise MediaDecodeError("truncated GIF extension")
-            pos += 1
-            _, pos = _gif_subblocks(blob, pos, collect=False)
+            pos = _skip_gif_subblocks(blob, pos + 1)
             continue
         if marker != 0x2C:
             raise MediaDecodeError(f"unexpected GIF block 0x{marker:02x}")
@@ -824,12 +449,10 @@ def _parse_gif(blob: bytes, *, want_frames: bool) -> dict:
         total_px += fw * fh
         if total_px > _GIF_MAX_PIXELS or len(frames) >= _GIF_MAX_FRAMES:
             raise MediaDecodeError("GIF exceeds safety bounds")
-        lct = gct
         if fpacked & 0x80:
             size = 3 * (2 << (fpacked & 0x07))
             if pos + size > n:
                 raise MediaDecodeError("truncated GIF local color table")
-            lct = np.frombuffer(blob[pos : pos + size], dtype=np.uint8).reshape(-1, 3)
             pos += size
         if pos >= n:
             raise MediaDecodeError("truncated GIF image data")
@@ -837,100 +460,11 @@ def _parse_gif(blob: bytes, *, want_frames: bool) -> dict:
         pos += 1
         if not (2 <= min_code <= 11):
             raise MediaDecodeError("invalid GIF LZW code size")
-        data, pos = _gif_subblocks(blob, pos, collect=want_frames)
-        frames.append(
-            {
-                "w": fw, "h": fh,
-                "interlace": bool(fpacked & 0x40),
-                "palette": lct,
-                "min_code": min_code,
-                "data": data if want_frames else None,
-            }
-        )
+        pos = _skip_gif_subblocks(blob, pos)
+        frames.append({"w": fw, "h": fh})
     if not frames:
         raise MediaDecodeError("GIF contains no frames")
     return {"width": w, "height": h, "frames": frames}
-
-
-def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytes:
-    """GIF LZW (LSB-first variable-width codes) -> ``expected`` index bytes."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    init_len = len(table)
-    out = bytearray()
-    prev: bytes | None = None
-    acc = 0
-    nacc = 0
-    pos = 0
-    n = len(data)
-    while len(out) < expected:
-        while nacc < width:
-            if pos >= n:
-                raise MediaDecodeError("GIF LZW underrun")
-            acc |= data[pos] << nacc
-            pos += 1
-            nacc += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nacc -= width
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if code < len(table) and (code < clear or len(table[code]) > 0):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise MediaDecodeError("invalid GIF LZW code")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    if len(out) < expected:
-        raise MediaDecodeError("GIF LZW underrun")
-    return bytes(out[:expected])
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _frame_pixels(f: dict) -> np.ndarray:
-    """Decode one parsed frame record -> (fh, fw, 3) uint8 RGB."""
-    if f["palette"] is None:
-        raise MediaDecodeError("GIF frame has no color table")
-    idx = np.frombuffer(
-        _lzw_decode(f["data"], f["min_code"], f["w"] * f["h"]), dtype=np.uint8
-    )
-    if int(idx.max(initial=0)) >= len(f["palette"]):
-        raise MediaDecodeError("GIF palette index out of range")
-    rows = idx.reshape(f["h"], f["w"])
-    if f["interlace"]:
-        out = np.empty_like(rows)
-        src = 0
-        for start, step in _GIF_INTERLACE_PASSES:
-            cnt = len(range(start, f["h"], step))
-            out[start::step] = rows[src : src + cnt]
-            src += cnt
-        rows = out
-    return f["palette"][rows]
-
-
-def gif_pixels(blob: bytes, frame: int = 0) -> np.ndarray:
-    """Full pixel decode of one frame -> (fh, fw, 3) uint8 RGB. Frames are
-    decoded against their own rect + palette (no disposal compositing —
-    documented subset; each frame stands alone)."""
-    g = _parse_gif(blob, want_frames=True)
-    if not (0 <= frame < len(g["frames"])):
-        raise MediaDecodeError("GIF frame index out of range")
-    return _frame_pixels(g["frames"][frame])
 
 
 def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
@@ -989,47 +523,8 @@ def encode_gif_indexed(
     return bytes(out)
 
 
-def _rgb_to_indices(flat: np.ndarray, palette: np.ndarray) -> np.ndarray:
-    """Vectorized exact-color palette lookup (packed uint32 + searchsorted);
-    raises when a color is missing from the palette."""
-    pk = (
-        palette[:, 0].astype(np.uint32) << 16
-        | palette[:, 1].astype(np.uint32) << 8
-        | palette[:, 2].astype(np.uint32)
-    )
-    order = np.argsort(pk)
-    pk_sorted = pk[order]
-    fk = (
-        flat[:, 0].astype(np.uint32) << 16
-        | flat[:, 1].astype(np.uint32) << 8
-        | flat[:, 2].astype(np.uint32)
-    )
-    pos = np.searchsorted(pk_sorted, fk)
-    if int(pos.max(initial=0)) >= len(pk_sorted) or not np.array_equal(
-        pk_sorted[np.minimum(pos, len(pk_sorted) - 1)], fk
-    ):
-        raise MediaDecodeError("GIF frame color not in palette")
-    return order[pos].astype(np.uint8)
-
-
-def encode_gif(frames_rgb: list[np.ndarray], palette: np.ndarray) -> bytes:
-    """Animated GIF89a from full-size RGB frames whose colors ALL appear in
-    ``palette`` (<= 256 rows)."""
-    if not frames_rgb:
-        raise MediaDecodeError("GIF needs at least one frame")
-    h, w = frames_rgb[0].shape[:2]
-    frames_idx = []
-    for fr in frames_rgb:
-        if fr.shape[:2] != (h, w):
-            raise MediaDecodeError("GIF frames must share dimensions")
-        frames_idx.append(
-            _rgb_to_indices(fr.reshape(-1, 3), np.asarray(palette)).reshape(h, w)
-        )
-    return encode_gif_indexed(frames_idx, np.asarray(palette))
-
-
 def _decode_gif(blob: bytes) -> dict:
-    g = _parse_gif(blob, want_frames=False)
+    g = _parse_gif(blob)
     nf = len(g["frames"])
     return {
         "kind": "video" if nf > 1 else "image",
@@ -1067,27 +562,11 @@ def synth_gif(i: int, w: int, h: int, n_frames: int) -> bytes:
     return encode_gif_indexed(frames, pal)
 
 
-def resize_gif(blob: bytes, max_side: int) -> bytes:
-    """Resize every frame (nearest-neighbor) and re-encode. One parse per
-    blob (frames decode from the parsed records). Nearest-neighbor only
-    samples existing pixels, so each frame keeps <= 256 colors; the combined
-    set across frames can still exceed one table when frames carry disjoint
-    LOCAL color tables, or frames may use differing rects — both valid GIFs
-    this re-encoder does not reproduce (single global table, shared dims):
-    they raise MediaDecodeError and surface as resize_error rows."""
-    g = _parse_gif(blob, want_frames=True)
-    resized = [_nn_resize(_frame_pixels(f), max_side) for f in g["frames"]]
-    colors = np.unique(np.concatenate([r.reshape(-1, 3) for r in resized]), axis=0)
-    if len(colors) > 256:
-        raise MediaDecodeError("GIF resize: frames exceed one 256-color table")
-    return encode_gif(resized, colors)
-
-
 # --- native baseline JPEG codec ----------------------------------------------
 # Baseline sequential DCT, 8-bit, Huffman (the overwhelming majority of web
 # JPEGs). Progressive (SOF2), arithmetic coding, and 12-bit precision raise
-# NotImplementedError — the honest remaining boundary. Header/lineage paths
-# read only the SOF frame header; entropy decode happens in jpeg_pixels.
+# NotImplementedError. Decode reads only the headers; the encoder below
+# writes synth_jpeg's test images.
 
 _ZIGZAG = np.array([
      0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
@@ -1100,19 +579,6 @@ _SOF_BASELINE = {0xC0, 0xC1}          # baseline + extended sequential
 _SOF_UNSUPPORTED = {0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
 
 
-def _canonical_codes(counts: list[int], syms: list[int]):
-    """Canonical Huffman assignment shared by the DHT parser and the
-    encoder-table builder: yields (symbol, code, length)."""
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            yield syms[k], code, length
-            code += 1
-            k += 1
-        code <<= 1
-
-
 def _dct_basis() -> np.ndarray:
     k = np.arange(8)
     c = np.where(k == 0, 1.0 / np.sqrt(2.0), 1.0)
@@ -1122,18 +588,14 @@ def _dct_basis() -> np.ndarray:
 _DCT_A = _dct_basis()  # A @ x = DCT; A.T @ X @ A ... (see use sites)
 
 
-def _jpeg_headers(blob: bytes) -> dict:
-    """Marker walk up to (and including) SOS; returns dims, components,
-    tables, DRI, and the offset of the entropy-coded data."""
+def _jpeg_frame(blob: bytes) -> tuple[int, int]:
+    """Marker walk up to (and including) SOS, checking that each segment's
+    tables fit it; returns the SOF frame's (width, height)."""
     if blob[:2] != b"\xff\xd8":
         raise MediaDecodeError("not a JPEG")
     pos = 2
     n = len(blob)
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
     frame = None
-    scan = None
-    dri = 0
     while pos + 4 <= n:
         if blob[pos] != 0xFF:
             raise MediaDecodeError("JPEG marker desync")
@@ -1161,223 +623,43 @@ def _jpeg_headers(blob: bytes) -> dict:
             precision, h, w, nc = struct.unpack_from(">BHHB", body, 0)
             if precision != 8:
                 raise NotImplementedError("only 8-bit JPEG supported")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", body, 6 + c * 3)
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            frame = {"w": w, "h": h, "comps": comps}
-        elif marker == 0xDB:  # DQT
-            p = 0
-            while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 0x0F
-                p += 1
-                if pq != 0:
+            if len(body) < 6 + 3 * nc:
+                raise MediaDecodeError("truncated JPEG component list")
+            frame = (w, h)
+        elif marker == 0xDB:  # DQT: one precision/id byte + 64 entries each
+            for p in range(0, len(body), 65):
+                if body[p] >> 4:
                     raise NotImplementedError("16-bit quant tables unsupported")
-                qt[tq] = np.frombuffer(body[p : p + 64], dtype=np.uint8).astype(np.int32)
-                p += 64
-        elif marker == 0xC4:  # DHT
+        elif marker == 0xC4:  # DHT: class/id byte, 16 code counts, symbols
             p = 0
             while p < len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                counts = list(body[p + 1 : p + 17])
-                nsym = sum(counts)
-                syms = list(body[p + 17 : p + 17 + nsym])
-                huff[(tc, th)] = {
-                    (ln, code): sym for sym, code, ln in _canonical_codes(counts, syms)
-                }
-                p += 17 + nsym
-        elif marker == 0xDD:  # DRI
-            dri = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            mapping = []
-            for c in range(ns):
-                cs, tt = struct.unpack_from(">BB", body, 1 + c * 2)
-                mapping.append({"id": cs, "td": tt >> 4, "ta": tt & 0x0F})
-            scan = mapping
-            pos += seg_len
-            break
+                p += 17 + sum(body[p + 1 : p + 17])
+            if p > len(body):
+                raise MediaDecodeError("truncated JPEG huffman table")
+        elif marker == 0xDD and len(body) < 2:  # DRI
+            raise MediaDecodeError("truncated JPEG restart interval")
+        elif marker == 0xDA:  # SOS: component count + 2 bytes per component
+            if not body or len(body) < 1 + 2 * body[0]:
+                raise MediaDecodeError("truncated JPEG scan header")
+            if frame is None:
+                break
+            return frame
         pos += seg_len
-    if frame is None or scan is None:
-        raise MediaDecodeError("JPEG missing SOF/SOS")
-    return {"frame": frame, "qt": qt, "huff": huff, "dri": dri,
-            "scan": scan, "data_at": pos}
-
-
-def _jpeg_headers_safe(blob: bytes) -> dict:
-    try:
-        return _jpeg_headers(blob)
-    except (struct.error, IndexError) as e:
-        raise MediaDecodeError(f"malformed JPEG segment: {type(e).__name__}")
+    raise MediaDecodeError("JPEG missing SOF/SOS")
 
 
 def _decode_jpeg(blob: bytes) -> dict:
-    j = _jpeg_headers_safe(blob)
-    f = j["frame"]
+    try:
+        w, h = _jpeg_frame(blob)
+    except (struct.error, IndexError) as e:
+        raise MediaDecodeError(f"malformed JPEG segment: {type(e).__name__}")
     return {
         "kind": "image",
-        "width": f["w"],
-        "height": f["h"],
+        "width": w,
+        "height": h,
         "n_frames": 1,
-        "payload_bytes": f["w"] * f["h"] * 3,  # decoded RGB bytes
+        "payload_bytes": w * h * 3,  # decoded RGB bytes
     }
-
-
-class _BitReader:
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise MediaDecodeError("JPEG entropy underrun")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def read_bits(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def align(self) -> None:
-        self.nbits = 0
-
-
-def _huff_read(r: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | r.read_bit()
-        s = table.get((length, code))
-        if s is not None:
-            return s
-    raise MediaDecodeError("invalid JPEG huffman code")
-
-
-def _extend(v: int, t: int) -> int:
-    return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-def jpeg_pixels(blob: bytes) -> np.ndarray:
-    """Full baseline decode -> (h, w, 3) uint8 RGB (grayscale replicated)."""
-    j = _jpeg_headers_safe(blob)
-    f = j["frame"]
-    w, h = f["w"], f["h"]
-    if w == 0 or h == 0 or w * h > 64_000_000:
-        raise MediaDecodeError("JPEG dims out of bounds")
-    comps = f["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if not all(c["h"] in (1, 2) and c["v"] in (1, 2) for c in comps):
-        raise NotImplementedError("sampling factors beyond 2 unsupported")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # de-stuff entropy data; stop at EOI
-    raw = blob[j["data_at"]:]
-    out = bytearray()
-    rst_positions = []
-    i = 0
-    while i < len(raw):
-        b = raw[i]
-        if b == 0xFF:
-            nxt = raw[i + 1] if i + 1 < len(raw) else 0xD9
-            if nxt == 0x00:
-                out.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:  # restart marker
-                rst_positions.append(len(out))
-                i += 2
-                continue
-            break  # EOI or next segment
-        out.append(b)
-        i += 1
-    r = _BitReader(bytes(out))
-    # per-component coefficient planes (in blocks)
-    planes = {
-        c["id"]: np.zeros(
-            (mcuy * c["v"] * 8, mcux * c["h"] * 8), dtype=np.float32
-        )
-        for c in comps
-    }
-    scan_by_id = {s["id"]: s for s in j["scan"]}
-    dc_pred = {c["id"]: 0 for c in comps}
-    dri = j["dri"]
-    n_mcu = 0
-    rst_iter = iter(rst_positions)
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if dri and n_mcu and n_mcu % dri == 0:
-                r.align()
-                nxt_pos = next(rst_iter, None)
-                if nxt_pos is not None:
-                    r.pos = nxt_pos
-                    r.nbits = 0
-                for cid in dc_pred:
-                    dc_pred[cid] = 0
-            for c in comps:
-                sc = scan_by_id.get(c["id"])
-                if sc is None:
-                    raise NotImplementedError(
-                        "non-interleaved multi-scan JPEG unsupported"
-                    )
-                dct = j["huff"].get((0, sc["td"]))
-                act = j["huff"].get((1, sc["ta"]))
-                q = j["qt"].get(c["tq"])
-                if dct is None or act is None or q is None:
-                    raise MediaDecodeError("JPEG missing huffman/quant table")
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coeffs = np.zeros(64, dtype=np.int32)
-                        t = _huff_read(r, dct)
-                        diff = _extend(r.read_bits(t), t) if t else 0
-                        dc_pred[c["id"]] += diff
-                        coeffs[0] = dc_pred[c["id"]]
-                        k = 1
-                        while k < 64:
-                            rs = _huff_read(r, act)
-                            rr, ss = rs >> 4, rs & 0x0F
-                            if ss == 0:
-                                if rr == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += rr
-                            if k > 63:
-                                raise MediaDecodeError("JPEG AC overflow")
-                            coeffs[k] = _extend(r.read_bits(ss), ss)
-                            k += 1
-                        block = np.zeros(64, dtype=np.float32)
-                        block[_ZIGZAG] = (coeffs * q).astype(np.float32)
-                        blk = block.reshape(8, 8)
-                        pix = _DCT_A.T @ blk @ _DCT_A
-                        py = (my * c["v"] + by) * 8
-                        px = (mx * c["h"] + bx) * 8
-                        planes[c["id"]][py : py + 8, px : px + 8] = pix
-            n_mcu += 1
-    # upsample to full res, crop, color-convert
-    full = []
-    for c in comps:
-        p = planes[c["id"]] + 128.0
-        p = np.repeat(np.repeat(p, hmax // c["h"], axis=1), vmax // c["v"], axis=0)
-        full.append(p[:h, :w])
-    if len(full) == 1:
-        g = np.clip(full[0], 0, 255).astype(np.uint8)
-        return np.stack([g, g, g], axis=2)
-    y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-    rgb = np.stack(
-        [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
-        axis=2,
-    )
-    return np.clip(rgb, 0, 255).astype(np.uint8)
 
 
 # standard JPEG Annex K luminance/chrominance quant tables (quality ~50 base)
@@ -1434,9 +716,18 @@ _H_AC_CHR = (
 
 
 def _enc_table(spec) -> dict[int, tuple[int, int]]:
-    """(counts, symbols) -> {symbol: (code, length)} (canonical codes)."""
+    """(counts, symbols) -> {symbol: (code, length)}: canonical Huffman
+    assignment, codes counting up within a length and doubling per length."""
     counts, syms = spec
-    return {sym: (code, ln) for sym, code, ln in _canonical_codes(counts, syms)}
+    table = {}
+    code = k = 0
+    for length in range(1, 17):
+        for _ in range(counts[length - 1]):
+            table[syms[k]] = (code, length)
+            code += 1
+            k += 1
+        code <<= 1
+    return table
 
 
 class _BitWriter:
@@ -1471,7 +762,7 @@ def _dht_segment(tc: int, th: int, spec) -> bytes:
 
 def encode_jpeg(rgb: np.ndarray) -> bytes:
     """Baseline 4:4:4 JPEG with the standard Annex K tables. Lossy (quant
-    error); decode(encode(x)) approximates x — asserted by PSNR in tests."""
+    error); writes synth_jpeg's test images."""
     h, w = rgb.shape[:2]
     r = rgb[..., 0].astype(np.float32)
     g = rgb[..., 1].astype(np.float32)

@@ -422,98 +422,6 @@ def recall_at_k(exact: DataFrame, approx: DataFrame, k: int = 10) -> float:
 # --- persisted IVF index ------------------------------------------------------
 
 
-def build_ivf_index(
-    corpus: DataFrame,
-    out_dir: str,
-    *,
-    n_clusters: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    distributed_train: bool = False,
-) -> None:
-    """Train the coarse quantizer ONCE and persist the index: centroids as a
-    tiny parquet plus the corpus vectors written ``partitionBy("cluster")``.
-
-    The partition layout is the scale design: each probe touches
-    ``n_probe / n_clusters`` of the corpus, and because ``cluster`` is a
-    partition column, Spark prunes the untouched partitions at scan time
-    (static or dynamic partition pruning) instead of reading 100 TB to throw
-    most of it away. Rebuilds are explicit — the quantizer is immutable
-    once written, as IVF requires (assignments reference centroid ids)."""
-    import os
-
-    trainer = train_ivf_centroids_distributed if distributed_train else train_ivf_centroids
-    centroids = trainer(corpus, n_clusters, vec_col=vec_col, id_col=id_col, seed=seed)
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cluster long, centroid array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
-    # one streaming pass emits (id, cluster, vec) — no join back to the
-    # corpus (a full-corpus shuffle at the 100-TB design point)
-    rows = _ivf_assign(corpus, centroids, id_col, vec_col, id_col, 1, keep_vec=True)
-    rows.select(id_col, vec_col, "cluster").write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(os.path.join(out_dir, "corpus"))
-
-
-def ivf_topk_prebuilt(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    n_probe: int = 4,
-) -> DataFrame:
-    """ANN top-k against a ``build_ivf_index`` output: assign queries to
-    their ``n_probe`` nearest centroids, join the cluster-partitioned corpus
-    (the query side is broadcast, so the probe set reaches the scan as a
-    partition filter), exact-cosine re-rank inside the probed clusters."""
-    import os
-
-    crows = (
-        spark.read.parquet(os.path.join(index_dir, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    centroids = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    corpus_idx = spark.read.parquet(os.path.join(index_dir, "corpus"))
-
-    # run the assignment UDF once and persist it: the distinct-cluster
-    # collect below materializes the cache, and the join reuses it — no
-    # second scan of the queries source, and (unlike collecting the full
-    # assignment) driver memory stays bounded by n_clusters even for huge
-    # query sets
-    q_assign = _ivf_assign(
-        queries, centroids, id_col, vec_col, "query_id", n_probe
-    ).persist()
-    # the probe set is driver-known and bounded by n_clusters: materialize it
-    # as a STATIC partition filter so the scan prunes unprobed clusters
-    # (visible as PartitionFilters on the FileScan — the 100-TB point of the
-    # partitionBy("cluster") layout)
-    probe_clusters = sorted(
-        r["cluster"] for r in q_assign.select("cluster").distinct().collect()
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    q_full = q_assign.join(qv, "query_id")
-    cand = (
-        corpus_idx.filter(F.col("cluster").isin(probe_clusters))
-        .join(F.broadcast(q_full), "cluster")
-        .filter(F.col("query_id") != F.col(id_col))
-    )
-    scored = cand.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr("q_vec", vec_col).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 # --- standing recall telemetry -----------------------------------------------
 
 

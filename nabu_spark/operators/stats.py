@@ -117,47 +117,3 @@ def void_stats(triples: DataFrame) -> DataFrame:
     )
     return globals_.unionByName(prop_part).unionByName(class_part)
 
-
-def void_triples(triples: DataFrame, dataset_iri: str) -> DataFrame:
-    """Render :func:`void_stats` as a VoID RDF description of the dataset
-    (void:triples / void:distinctSubjects / ... plus one deterministic
-    partition node per predicate/class) ready to release alongside the
-    graph itself."""
-    V = "http://rdfs.org/ns/void#"
-    stats = void_stats(triples)
-    ds = F.lit(dataset_iri)
-    lit_n = F.concat(
-        F.lit('"'), F.col("n").cast("string"),
-        F.lit('"^^<http://www.w3.org/2001/XMLSchema#integer>'))
-    glob = stats.filter(F.col("part") == "dataset").select(
-        ds.alias("subj"),
-        F.concat(F.lit(f"<{V}"), F.col("key"), F.lit(">")).alias("pred"),
-        lit_n.alias("obj"),
-    )
-    # partition nodes: deterministic IRIs derived from the partition key so
-    # output is stable across runs and cluster sizes (no blank-node state)
-    pnode = F.concat(
-        F.lit(dataset_iri[:-1] + "/part/"),
-        F.md5(F.concat(F.col("part"), F.lit("\x1f"), F.col("key"))),
-        F.lit(">"))
-    parts = stats.filter(F.col("part") != "dataset")
-    link = parts.select(
-        ds.alias("subj"),
-        F.when(F.col("part") == "property",
-               F.lit(f"<{V}propertyPartition>"))
-        .otherwise(F.lit(f"<{V}classPartition>")).alias("pred"),
-        pnode.alias("obj"),
-    )
-    member = parts.select(
-        pnode.alias("subj"),
-        F.when(F.col("part") == "property", F.lit(f"<{V}property>"))
-        .otherwise(F.lit(f"<{V}class>")).alias("pred"),
-        F.col("key").alias("obj"),
-    )
-    counts = parts.select(
-        pnode.alias("subj"),
-        F.when(F.col("part") == "property", F.lit(f"<{V}triples>"))
-        .otherwise(F.lit(f"<{V}entities>")).alias("pred"),
-        lit_n.alias("obj"),
-    )
-    return glob.unionByName(link).unionByName(member).unionByName(counts)

@@ -55,37 +55,6 @@ def token_count(text_col: str) -> Column:
     return (F.size(toks) + subword_extra).alias("token_count")
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length, punctuation ratio, stopword ratio, mean word length, and a
-    composite quality score in [0,1]."""
-    df = df.select("*", tokens_col(text_col).alias("_q_toks"))
-    toks = F.col("_q_toks")
-    n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    punct = n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
-    stop_hits = F.size(F.array_intersect(toks, F.lit(EN_STOPWORDS).cast("array<string>")))
-    mean_word_len = F.when(
-        n_tokens > 0,
-        F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)) / n_tokens,
-    ).otherwise(0.0)
-    out = df.withColumn("n_chars_m", n_chars).withColumn("n_tokens", n_tokens)
-    out = out.withColumn(
-        "punct_ratio", F.when(n_chars > 0, punct / n_chars).otherwise(0.0)
-    )
-    out = out.withColumn(
-        "stopword_ratio",
-        F.when(n_tokens > 0, stop_hits / F.least(n_tokens, F.lit(len(EN_STOPWORDS)))).otherwise(0.0),
-    )
-    out = out.withColumn("mean_word_len", mean_word_len)
-    score = (
-        F.least(F.col("n_tokens") / 100.0, F.lit(1.0)) * 0.4
-        + F.col("stopword_ratio") * 0.3
-        + F.when((F.col("mean_word_len") >= 3) & (F.col("mean_word_len") <= 8), 0.2).otherwise(0.0)
-        + F.when(F.col("punct_ratio") < 0.2, 0.1).otherwise(0.0)
-    )
-    return out.withColumn("quality_score", F.round(score, 4)).drop("_q_toks")
-
-
 def lang_scores(text_col: str, toks: Column | None = None) -> list[Column]:
     """Per-language marker-hit counts. Pass ``toks`` (a staged token-array
     column) to avoid re-tokenizing once per language."""
@@ -120,14 +89,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         "*", *lang_scores(text_col, toks=F.col("_lang_toks"))
     ).drop("_lang_toks")
     return scored.withColumn("lang_pred", lang_pred_expr())
-
-
-def fingerprint_exprs(text_col: str) -> Column:
-    """Deterministic content fingerprint: md5 of the sorted distinct token
-    set — engine-portable (same value in DuckDB SQL)."""
-    return F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_col(text_col))))
-    ).alias("fingerprint")
 
 
 def winnowing_fingerprints(
@@ -276,10 +237,10 @@ def strip_boilerplate(
 
 
 def gopher_exprs(text_col: str, toks: Column | None = None) -> dict:
-    """The Gopher rule expressions as named Columns — reusable join-free
-    (the streaming funnel inlines them on its own frame). Pass ``toks`` (a
-    staged token-array column) so the rule set does not re-tokenize per
-    rule — the inline form mentions the token array 12 times."""
+    """The Gopher rule expressions as named Columns — reusable join-free.
+    Pass ``toks`` (a staged token-array column) so the rule set does not
+    re-tokenize per rule — the inline form mentions the token array 12
+    times."""
     if toks is None:
         toks = tokens_col(text_col)
     n_tokens = F.size(toks)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.jsonld import (
     JsonLdError, jsonld_to_triples_ex, standardize_jsonld_context,
 )
-from ..functions.ntriples import _term_is_valid_cached, term_is_valid
+from ..functions.ntriples import _term_is_valid_cached
 from ..functions.skolem import SKOLEM_PREFIX, skolemize_terms
 from ..functions.urn import make_urn
 

@@ -10,7 +10,6 @@ a relational predicate on the quads table.
 FULL shape evaluation now lives in operators/shacl.py: a native SHACL-lite
 engine (no pyshacl dependency) that classifies the reference's entire
 valid/invalid corpus correctly and runs distributed per document graph.
-``full_shacl_validate`` below remains as the optional pyshacl-backed path.
 """
 
 from __future__ import annotations
@@ -62,45 +61,3 @@ def shacl_warnings(quads: DataFrame, cap: int = 20) -> DataFrame:
         F.slice(F.sort_array(F.collect_list("prov")), 1, cap).alias("warning_sample"),
     )
 
-
-def full_shacl_available() -> bool:
-    try:
-        import pyshacl  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def full_shacl_validate(docs: DataFrame, shapes_ttl: str) -> DataFrame:
-    """Full SHACL via pyshacl in an Arrow UDF — expensive, off by default like
-    the reference's empty-endpoint default. Raises when pyshacl is absent."""
-    if not full_shacl_available():
-        raise NotImplementedError(
-            "pyshacl is not installed in this environment; structural_check "
-            "covers the reference's pre-check semantics"
-        )
-    import pandas as pd  # pragma: no cover - exercised only with pyshacl
-
-    def batches(it):  # pragma: no cover
-        import pyshacl
-        from rdflib import Graph
-
-        shapes = Graph().parse(data=shapes_ttl, format="turtle")
-        for pdf in it:
-            ok = []
-            for doc in pdf["doc"]:
-                try:
-                    g = Graph().parse(data=doc, format="json-ld")
-                    conforms, _, _ = pyshacl.validate(g, shacl_graph=shapes)
-                    ok.append(bool(conforms))
-                except Exception:
-                    ok.append(False)
-            pdf = pdf.copy()
-            pdf["shacl_ok"] = ok
-            yield pdf
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(list(docs.schema) + [T.StructField("shacl_ok", T.BooleanType())])
-    return docs.mapInPandas(batches, schema)

@@ -96,7 +96,8 @@ def run_quads_stage(
 
     if resume and _committed(quads_path):
         if os.path.exists(mode_marker):
-            prev_mode = open(mode_marker).read().strip()
+            with open(mode_marker) as fh:
+                prev_mode = fh.read().strip()
             if prev_mode != bnode_mode:
                 raise ValueError(
                     f"quads table at {quads_path} was built with "
@@ -232,10 +233,8 @@ def pages_to_quads_fused(
         # are already bounded by maxPartitionBytes so merged tasks stay even.
         # A coalesce never raises the count, so no split-count probe (one
         # more scan planning on the driver, ~65 ms) decides whether to add it.
-        # Micro-batch sizing is a stream source's job.
-        if not df.isStreaming:
-            sc = df.sparkSession.sparkContext
-            df = df.coalesce(num_partitions or sc.defaultParallelism)
+        sc = df.sparkSession.sparkContext
+        df = df.coalesce(num_partitions or sc.defaultParallelism)
 
     def per_page(url, sid, body):
         if url is None or sid is None:

@@ -11,9 +11,8 @@ file — exactly the Common-Crawl processing granularity (archives are ~1 GB
 and individually gzip-membered, so they cannot be split finer without a
 custom input format; a 100 TB crawl is ~100k files = ~100k tasks, ideal).
 Record parsing is a ``mapInPandas`` pass emitting one row per WARC
-``response`` record; malformed records are skipped, and ``warc_file_stats``
-reports the per-archive skip counts (``n_skipped``) and gzip failures
-(``parse_error``) as the data-loss lineage signal.
+``response`` record; malformed records are skipped, and the scan of an
+archive stops at the first record it cannot frame.
 
 Format notes (ISO 28500 subset):
   * records: ``WARC/1.0\\r\\n`` header block, blank line, ``Content-Length``
@@ -31,7 +30,7 @@ from collections.abc import Iterator
 from datetime import datetime, timezone
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 WARC_PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -52,64 +51,44 @@ def _gunzip_members(data: bytes) -> bytes:
     return b"".join(out)
 
 
-def iter_warc_records(
-    raw: bytes, state: dict | None = None
-) -> Iterator[tuple[dict, bytes]]:
-    """Yield (warc_headers, block_bytes) per record; stops at garbage.
-
-    Pass ``state`` (a dict) to learn HOW the scan ended: on exit it holds
-    ``clean`` (True only when the whole archive was consumed as well-formed
-    records) and ``consumed`` (bytes scanned) — the data-loss signal
-    ``warc_file_stats`` reports, since a mid-archive desync silently hides
-    every record after it."""
-    if state is None:
-        state = {}
-    state["clean"] = True
+def iter_warc_records(raw: bytes) -> Iterator[tuple[dict, bytes]]:
+    """Yield (warc_headers, block_bytes) per record; stops at garbage, so a
+    mid-archive desync hides every record after it."""
     pos = 0
     n = len(raw)
-    try:
-        while pos < n:
-            # skip inter-record padding
-            while pos < n and raw[pos : pos + 1] in (b"\r", b"\n"):
-                pos += 1
-            if pos >= n:
-                return
-            if not raw.startswith(b"WARC/", pos):
-                state["clean"] = False
-                return  # desynchronized: stop rather than guess
-            hdr_end = raw.find(b"\r\n\r\n", pos)
-            if hdr_end == -1:
-                state["clean"] = False
-                return
-            headers: dict[str, str] = {}
-            for line in raw[pos:hdr_end].split(b"\r\n")[1:]:
-                k, _, v = line.partition(b":")
-                if _:
-                    headers[k.decode("latin-1").strip().lower()] = (
-                        v.decode("latin-1").strip()
-                    )
-            try:
-                length = int(headers.get("content-length", ""))
-            except ValueError:
-                state["clean"] = False
-                return
-            if length < 0:
-                state["clean"] = False
-                return  # malicious/corrupt length would move pos BACKWARD
-            block_start = hdr_end + 4
-            if block_start + length > n:
-                state["clean"] = False
-                return  # truncated archive
-            yield headers, raw[block_start : block_start + length]
-            pos = block_start + length
-    finally:
-        state["consumed"] = pos
+    while pos < n:
+        # skip inter-record padding
+        while pos < n and raw[pos : pos + 1] in (b"\r", b"\n"):
+            pos += 1
+        if pos >= n:
+            return
+        if not raw.startswith(b"WARC/", pos):
+            return  # desynchronized: stop rather than guess
+        hdr_end = raw.find(b"\r\n\r\n", pos)
+        if hdr_end == -1:
+            return
+        headers: dict[str, str] = {}
+        for line in raw[pos:hdr_end].split(b"\r\n")[1:]:
+            k, _, v = line.partition(b":")
+            if _:
+                headers[k.decode("latin-1").strip().lower()] = (
+                    v.decode("latin-1").strip()
+                )
+        try:
+            length = int(headers.get("content-length", ""))
+        except ValueError:
+            return
+        if length < 0:
+            return  # malicious/corrupt length would move pos BACKWARD
+        block_start = hdr_end + 4
+        if block_start + length > n:
+            return  # truncated archive
+        yield headers, raw[block_start : block_start + length]
+        pos = block_start + length
 
 
 def _maybe_gunzip(fpath: str, raw: bytes) -> bytes | None:
-    """Decompress when the file is gzip'd; None on corrupt streams.
-    Shared by read_warc and warc_file_stats so their notion of a readable
-    archive can never drift."""
+    """Decompress when the file is gzip'd; None on corrupt streams."""
     if fpath.endswith(".gz") or raw[:2] == b"\x1f\x8b":
         try:
             return _gunzip_members(raw)
@@ -119,8 +98,7 @@ def _maybe_gunzip(fpath: str, raw: bytes) -> bytes | None:
 
 
 def _page_of(headers: dict, block: bytes) -> tuple[str, bytes] | None:
-    """(url, body) when the record is an emittable page, else None — the
-    single predicate both read_warc rows and warc_file_stats counts use."""
+    """(url, body) when the record is an emittable page, else None."""
     if headers.get("warc-type") != "response":
         return None
     url = headers.get("warc-target-uri")
@@ -193,49 +171,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     return files.mapInPandas(parse, WARC_PAGES_SCHEMA)
 
 
-def warc_file_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Per-archive lineage: (warc_file, n_records, n_pages, n_skipped,
-    parse_error). ``n_skipped`` counts records present in the archive that
-    produced no page row (non-response types, missing target URI, non-2xx,
-    malformed HTTP block); ``parse_error`` marks archives whose gzip stream
-    failed to decode OR whose record scan ended before clean EOF (desync /
-    truncation) — in both cases rows are silently missing downstream, which
-    is exactly what this signal exists to surface."""
-    files = spark.read.format("binaryFile").option(
-        "pathGlobFilter", "*.warc*"
-    ).load(path).select("path", "content")
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "warc_file": [], "n_records": [], "n_pages": [],
-                "n_skipped": [], "parse_error": [],
-            }
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                raw = _maybe_gunzip(fpath, bytes(content))
-                err = raw is None
-                n_records = n_pages = 0
-                if not err:
-                    scan: dict = {}
-                    for headers, block in iter_warc_records(raw, scan):
-                        n_records += 1
-                        if _page_of(headers, block) is not None:
-                            n_pages += 1
-                    err = not scan["clean"]
-                out["warc_file"].append(fpath)
-                out["n_records"].append(n_records)
-                out["n_pages"].append(n_pages)
-                out["n_skipped"].append(n_records - n_pages)
-                out["parse_error"].append(err)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        stats,
-        "warc_file string, n_records long, n_pages long, n_skipped long, "
-        "parse_error boolean",
-    )
-
-
 # --- deterministic fixture writer (datagen companion; no external data) ------
 
 
@@ -278,87 +213,3 @@ def write_warc_fixture(
         f.write(out.getvalue())
     return offsets
 
-
-def _record_at_offset(raw: bytes, offset: int, gzipped: bool) -> tuple[dict, bytes] | None:
-    """Parse the single WARC record starting at ``offset``: for the
-    Common-Crawl layout each record is its own gzip member, so a member
-    decompression (zlib wbits=31 stops at the member boundary) yields
-    exactly one record; uncompressed archives parse in place."""
-    import zlib
-
-    if offset < 0 or offset >= len(raw):
-        return None
-    if gzipped:
-        try:
-            d = zlib.decompressobj(wbits=31)
-            rec = d.decompress(raw[offset:])
-        except zlib.error:
-            return None
-    else:
-        rec = raw[offset:]
-    return next(iter_warc_records(rec), None)
-
-
-def fetch_from_plan(spark: SparkSession, plan: DataFrame, warc_dir: str) -> DataFrame:
-    """Execute a CDX fetch plan (``cdx.fetch_plan``: filename + sorted
-    offsets) against a directory of WARC archives: one binaryFile task per
-    archive (the Common-Crawl ~1 GB granularity), offsets visited in
-    ascending order, one page row per fetched record.
-
-    The plan side is index-derived and tiny next to the archives, so it
-    broadcasts; rows whose offset does not hold a response record surface
-    as error rows (url null, error set) — lineage, not task failures. On
-    real object storage the per-offset reads become range GETs; in Spark's
-    binaryFile model the archive is the task's input split either way."""
-    if dict(plan.dtypes).get("offsets", "").startswith("array"):
-        # fetch_plan's native shape: serialize to the comma form the Arrow
-        # stage parses (a bare string cast would render '[1, 2]')
-        off_str = F.concat_ws(
-            ",", F.transform("offsets", lambda x: x.cast("string"))
-        )
-    else:
-        off_str = F.col("offsets").cast("string")
-    plan_small = plan.select(F.col("filename"), off_str.alias("_offsets"))
-    files = spark.read.format("binaryFile").load(f"{warc_dir}/*")
-    joined = files.select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),
-        "content",
-    ).join(F.broadcast(plan_small), "filename")
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "warc_ts", "html", "filename", "offset", "error")}
-            for fname, content, offsets_s in zip(
-                pdf["filename"], pdf["content"], pdf["_offsets"]
-            ):
-                raw = bytes(content)
-                gzipped = raw[:2] == b"\x1f\x8b"
-                offs = [int(x) for x in str(offsets_s).split(",") if x != ""]
-                for off in sorted(offs):
-                    rec = _record_at_offset(raw, off, gzipped)
-                    page = _page_of(*rec) if rec is not None else None
-                    out["filename"].append(fname)
-                    out["offset"].append(off)
-                    if rec is None or page is None:
-                        out["url"].append(None)
-                        out["warc_ts"].append(None)
-                        out["html"].append(None)
-                        out["error"].append(
-                            "bad_offset" if rec is None else "not_a_response"
-                        )
-                        continue
-                    url, body = page
-                    out["url"].append(url)
-                    out["warc_ts"].append(
-                        _parse_warc_ts(rec[0].get("warc-date", ""))
-                    )
-                    out["html"].append(body)
-                    out["error"].append(None)
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(
-        fetch,
-        "url string, warc_ts timestamp, html binary, "
-        "filename string, offset long, error string",
-    )

@@ -17,8 +17,7 @@ has:
 nanoseconds, attributes, parent nesting) and exports them as
 OTLP-field-shaped JSON lines — the file artifact mirrors the reference's
 ``trace.out`` path. When the real ``opentelemetry`` SDK is importable the
-spans are ALSO mirrored through it (detect-and-route, the same plug-in
-pattern as the multimodal PIL registry and validate.full_shacl_available);
+spans are ALSO mirrored through it (detect-and-route);
 absent the SDK, the JSONL exporter is the complete fallback — nothing in
 this repo requires the package.
 
@@ -146,29 +145,6 @@ class Tracer:
             }) + "\n")
             for s in self.spans:
                 fh.write(json.dumps(s.to_dict()) + "\n")
-
-
-def lineage_totals(lineage) -> dict:
-    """Aggregate a run_pipeline lineage DataFrame to the per-stage totals a
-    span carries (urls_in, triples_out, parse_failures per stage) — one
-    tiny collect over an already-materialized stage table."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        lineage.groupBy("stage")
-        .agg(F.sum("urls_in").alias("urls_in"),
-             F.sum("triples_out").alias("triples_out"),
-             F.sum("parse_failures").alias("parse_failures"))
-        .collect()
-    )
-    return {
-        r["stage"]: {
-            "urls_in": r["urls_in"] and int(r["urls_in"]),
-            "triples_out": r["triples_out"] and int(r["triples_out"]),
-            "parse_failures": r["parse_failures"] and int(r["parse_failures"]),
-        }
-        for r in rows
-    }
 
 
 # --- ambient tracer (the CLI's span context) -------------------------------

@@ -11,7 +11,6 @@ from nabu_spark.sources.cdx import (
     digest_dedup,
     fetch_plan,
     latest_captures,
-    parse_cdx,
     read_cdx,
 )
 
@@ -74,133 +73,3 @@ class TestOps:
         assert plan["w/0.warc.gz"] == (2, [0, 900])
         assert plan["w/1.warc.gz"] == (2, [100, 4000])
 
-
-class TestFetchFromPlan:
-    """CDX plan -> WARC record fetch: the glue between the index source and
-    the archive source (offset-addressed member decompression)."""
-
-    def _fixture(self, spark, tmp_path, gz):
-        from nabu_spark.sources.warc import write_warc_fixture
-
-        wdir = tmp_path / "warcs"
-        wdir.mkdir()
-        name = "0.warc.gz" if gz else "0.warc"
-        offs = write_warc_fixture(str(wdir / name), 6, gzip_members=gz)
-        name2 = "1.warc.gz" if gz else "1.warc"
-        offs2 = write_warc_fixture(str(wdir / name2), 4, gzip_members=gz,
-                                   start=100)
-        return wdir, {name: offs, name2: offs2}
-
-    @staticmethod
-    def _plan(spark, index, picks):
-        rows = [
-            (fname, ",".join(str(index[fname][i][0]) for i in idxs))
-            for fname, idxs in picks.items()
-        ]
-        return spark.createDataFrame(rows, "filename string, offsets string")
-
-    def _roundtrip(self, spark, tmp_path, gz):
-        from nabu_spark.sources.warc import fetch_from_plan
-
-        wdir, index = self._fixture(spark, tmp_path, gz)
-        picks = {list(index)[0]: [0, 2, 5], list(index)[1]: [1, 3]}
-        plan = self._plan(spark, index, picks)
-        got = fetch_from_plan(spark, plan, str(wdir)).collect()
-        assert all(r["error"] is None for r in got)
-        want_urls = {
-            index[f][i][1] for f, idxs in picks.items() for i in idxs
-        }
-        assert {r["url"] for r in got} == want_urls
-        # bodies are the generator pages, byte-exact
-        from nabu_spark.datagen import page_for
-
-        by_url = {r["url"]: bytes(r["html"]) for r in got}
-        for i in [0, 2, 5]:
-            p = page_for(i)
-            assert by_url[p["url"]] == p["html"]
-
-    def test_gzip_member_archives(self, spark, tmp_path):
-        self._roundtrip(spark, tmp_path, gz=True)
-
-    def test_plain_archives(self, spark, tmp_path):
-        self._roundtrip(spark, tmp_path, gz=False)
-
-    def test_bad_offset_is_error_row(self, spark, tmp_path):
-        from nabu_spark.sources.warc import fetch_from_plan
-
-        wdir, index = self._fixture(spark, tmp_path, True)
-        fname = list(index)[0]
-        plan = spark.createDataFrame(
-            [(fname, f"{index[fname][0][0]},99999999")],
-            "filename string, offsets string",
-        )
-        got = {r["offset"]: r for r in
-               fetch_from_plan(spark, plan, str(wdir)).collect()}
-        assert got[index[fname][0][0]]["error"] is None
-        assert got[99999999]["error"] == "bad_offset"
-
-
-class TestCdxToQuadsIntegration:
-    def test_index_to_plan_to_fetch_to_quads(self, spark, tmp_path):
-        """The full Common-Crawl front half: CDX index -> latest captures ->
-        digest dedup -> per-archive fetch plan -> offset-addressed record
-        fetch -> the fused KG pipeline, byte-exact against the generator."""
-        import json
-
-        from pyspark.sql import functions as F
-
-        from nabu_spark.datagen import page_for
-        from nabu_spark.pipeline import pages_to_quads_fused
-        from nabu_spark.sources.cdx import (
-            fetch_plan,
-            latest_captures,
-            parse_cdx,
-        )
-        from nabu_spark.sources.warc import fetch_from_plan, write_warc_fixture
-
-        wdir = tmp_path / "warcs"
-        wdir.mkdir()
-        offs0 = write_warc_fixture(str(wdir / "0.warc.gz"), 5, gzip_members=True)
-        offs1 = write_warc_fixture(str(wdir / "1.warc.gz"), 5, gzip_members=True,
-                                   start=5)
-        lines = []
-
-        def cdx_line(fname, off, url, ts, digest):
-            payload = {"url": url, "mime": "text/html", "status": "200",
-                       "digest": digest, "length": 1000, "offset": off,
-                       "filename": fname}
-            surt = "org,example)/" + url.rsplit("/", 1)[-1]
-            return f"{surt} {ts} {json.dumps(payload)}"
-
-        for off, url in offs0:
-            lines.append(cdx_line("0.warc.gz", off, url, "20240101000000",
-                                  "d" + url[-6:]))
-        for off, url in offs1:
-            lines.append(cdx_line("1.warc.gz", off, url, "20240101000000",
-                                  "d" + url[-6:]))
-        # a STALE duplicate capture of page 0 (older ts, same url) that
-        # latest_captures must drop — its offset points at page 1's record,
-        # so fetching it would produce the wrong body
-        lines.append(cdx_line("0.warc.gz", offs0[1][0], offs0[0][1],
-                              "20230101000000", "stale"))
-        captures = parse_cdx(
-            spark.createDataFrame([(l,) for l in lines], "value string")
-        )
-        latest = latest_captures(captures)
-        assert latest.count() == 10
-        plan = fetch_plan(latest)
-        pages = fetch_from_plan(spark, plan, str(wdir))
-        got = pages.collect()
-        assert all(r["error"] is None for r in got)
-        by_url = {r["url"]: bytes(r["html"]) for r in got}
-        assert len(by_url) == 10
-        for i in range(10):
-            p = page_for(i)
-            assert by_url[p["url"]] == p["html"]
-        quads = pages_to_quads_fused(
-            pages.select("url", "warc_ts", "html"), salt=False
-        )
-        good = quads.filter(F.col("error_code").isNull())
-        assert good.count() > 0
-        # provenance URNs derive from the fetched urls
-        assert good.filter(F.col("prov").startswith("<urn:iow:")).count() == good.count()

@@ -1,98 +1,30 @@
-"""Native-codec plug-in registry (operators/multimodal.py, VERDICT r4
-task #6): Pillow is routed to when importable, the pure-Python kernels
-stay the fallback and parity oracle. In this container PIL is absent, so
-the parity class self-skips and the fallback semantics are what's pinned.
-"""
+"""Codec boundary of operators/multimodal.py: blobs no native header kernel
+reads raise NotImplementedError, and decode_media turns that into a row."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 from nabu_spark.operators import multimodal as mm
 
-pil_present = mm.pil_available()
+WEBP = b"RIFF" + b"\x10\x00\x00\x00" + b"WEBPVP8 " + b"\x00" * 16
+TIFF_LE = b"II*\x00" + b"\x00" * 16
+TIFF_BE = b"MM\x00*" + b"\x00" * 16
 
 
 class TestFallbackWithoutPil:
-    def test_pure_kernels_serve_all_modes(self, monkeypatch):
-        """With PIL absent, every mode resolves to the pure kernels and
-        decode output is identical across modes."""
-        if pil_present:
-            pytest.skip("PIL installed; fallback-only semantics not in play")
-        blob = mm.synth_bmp(3)
-        expected = mm._decode_one_pure(blob)
-        for mode in ("auto", "pil", "pure"):
-            monkeypatch.setenv("NABU_NATIVE_CODECS", mode)
-            assert mm._decode_one(blob) == expected
-
-    def test_unknown_codec_still_raises(self, monkeypatch):
-        monkeypatch.setenv("NABU_NATIVE_CODECS", "auto")
-        webp = b"RIFF" + b"\x10\x00\x00\x00" + b"WEBPVP8 " + b"\x00" * 16
-        if pil_present:
-            pytest.skip("PIL installed; WebP would decode")
-        with pytest.raises(NotImplementedError):
-            mm._decode_one(webp)
-
-    def test_pure_mode_never_routes(self, monkeypatch):
-        """pure mode is the parity-oracle switch: even with PIL present it
-        must raise at the kernel boundary."""
-        monkeypatch.setenv("NABU_NATIVE_CODECS", "pure")
-        webp = b"RIFF" + b"\x10\x00\x00\x00" + b"WEBPVP8 " + b"\x00" * 16
-        with pytest.raises(NotImplementedError):
-            mm._decode_one(webp)
-
-    def test_looks_image_magic_routing(self):
-        assert mm._looks_image(mm.synth_bmp(0))
-        assert mm._looks_image(mm.synth_png(0))
-        assert mm._looks_image(mm.synth_gif(0, 8, 8, 2))
-        assert mm._looks_image(b"RIFF\x00\x00\x00\x00WEBP....")
-        assert mm._looks_image(b"II*\x00" + b"\x00" * 16)
-        assert not mm._looks_image(mm.synth_wav(0))
-        assert not mm._looks_image(b"FAKE" + b"\x00" * 20)
-
-
-@pytest.mark.skipif(not pil_present, reason="Pillow not installed")
-class TestPilParity:
-    """Parity oracle: when Pillow IS present (a real cluster image), its
-    decode of the formats the pure kernels own must agree exactly."""
-
-    def test_decode_metadata_parity(self, monkeypatch):
-        for blob in (mm.synth_bmp(1), mm.synth_png(2), mm.synth_gif(3, 12, 9, 3)):
-            pure = mm._decode_one_pure(blob)
-            pil = mm._decode_image_pil(blob)
-            for k in ("kind", "width", "height", "n_frames",
-                      "payload_bytes"):
-                assert pil[k] == pure[k], k
-
-    def test_resize_gif_keeps_frames(self, monkeypatch):
-        """pil-mode resize of an animated GIF must not collapse frames."""
-        blob = mm.synth_gif(4, 16, 12, 3)
-        monkeypatch.setenv("NABU_NATIVE_CODECS", "pil")
-        out = mm.resize_image(blob, 8)
-        assert mm._decode_one_pure(out)["n_frames"] == 3
-
-    def test_lossless_pixel_parity(self):
-        import io
-
-        from PIL import Image
-
-        bmp = mm.synth_bmp(5)
-        with Image.open(io.BytesIO(bmp)) as im:
-            assert np.array_equal(np.asarray(im.convert("RGB")),
-                                  mm.bmp_pixels(bmp))
-        png = mm.synth_png(6)
-        with Image.open(io.BytesIO(png)) as im:
-            assert np.array_equal(np.asarray(im.convert("RGB")),
-                                  mm.png_pixels(png))
-
-    def test_resize_dims_parity(self, monkeypatch):
-        blob = mm.synth_bmp(7, w=80, h=50)
-        monkeypatch.setenv("NABU_NATIVE_CODECS", "pil")
-        out_pil = mm.resize_image(blob, 32)
-        monkeypatch.setenv("NABU_NATIVE_CODECS", "pure")
-        out_pure = mm.resize_image(blob, 32)
-        d_pil = mm._decode_one_pure(out_pil)
-        d_pure = mm._decode_one_pure(out_pure)
-        assert (d_pil["width"], d_pil["height"]) == (
-            d_pure["width"], d_pure["height"])
+    def test_unknown_codec_still_raises(self, spark):
+        for blob in (WEBP, TIFF_LE, TIFF_BE):
+            with pytest.raises(NotImplementedError):
+                mm._decode_one(blob)
+        media = spark.createDataFrame(
+            [(i, "image", bytearray(b), ("u", "image/x")) for i, b in
+             enumerate((WEBP, TIFF_LE, TIFF_BE, mm.synth_bmp(0)))],
+            "media_id long, media_type string, media binary, "
+            "meta struct<source_url string, mime string>",
+        )
+        got = {r["media_id"]: r for r in mm.decode_media(media).collect()}
+        assert [got[i]["decode_error"] for i in range(4)] == [
+            "NotImplementedError", "NotImplementedError",
+            "NotImplementedError", None]
+        assert got[0]["width"] is None and got[3]["width"] == 24

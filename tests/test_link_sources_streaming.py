@@ -1,4 +1,4 @@
-"""Entity linking, sitemap/bulk sources, and the streaming pipeline."""
+"""Entity linking and the sitemap/bulk sources."""
 
 from __future__ import annotations
 
@@ -142,111 +142,6 @@ class TestBulkSource:
         assert docs.filter(F.col("error_code") == "").count() > 0
 
 
-class TestStreaming:
-    def test_incremental_exactly_once(self, spark, tmp_path):
-        from nabu_spark.streaming.incremental import start_incremental_quads
-
-        pages_dir = str(tmp_path / "pages")
-        out = str(tmp_path / "quads")
-        ckpt = str(tmp_path / "ckpt")
-        generate_pages(spark, 40).write.mode("append").parquet(pages_dir)
-        q = start_incremental_quads(spark, pages_dir, out, ckpt)
-        q.awaitTermination(120)
-        n1 = spark.read.parquet(out).filter(F.col("error_code").isNull()).count()
-        assert n1 > 0
-        # re-running with no new files appends nothing
-        q = start_incremental_quads(spark, pages_dir, out, ckpt)
-        q.awaitTermination(120)
-        assert spark.read.parquet(out).filter(F.col("error_code").isNull()).count() == n1
-        # new files are picked up incrementally
-        generate_pages(spark, 60).filter(F.col("url").endswith("5")).write.mode(
-            "append"
-        ).parquet(pages_dir)
-        q = start_incremental_quads(spark, pages_dir, out, ckpt)
-        q.awaitTermination(120)
-        n3 = spark.read.parquet(out).filter(F.col("error_code").isNull()).count()
-        assert n3 > n1
-
-    def test_streaming_dedup_drops_recrawled_pages(self, spark, tmp_path):
-        from nabu_spark.streaming.incremental import start_streaming_dedup_quads
-
-        pages_dir = str(tmp_path / "pages_d")
-        out = str(tmp_path / "quads_d")
-        ckpt = str(tmp_path / "ckpt_d")
-        pages = generate_pages(spark, 30).cache()
-        pages.write.mode("append").parquet(pages_dir)
-        # a re-crawl lands the SAME pages again as new files (identical html
-        # bytes + warc_ts) -> the stateful dedup must drop all of them
-        pages.write.mode("append").parquet(pages_dir)
-        q = start_streaming_dedup_quads(spark, pages_dir, out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out).filter(F.col("error_code").isNull())
-        # exactly the single-crawl quad count, not double
-        from nabu_spark.pipeline import pages_to_quads_fused
-
-        expected = (
-            pages_to_quads_fused(pages, salt=False)
-            .filter(F.col("error_code").isNull())
-            .count()
-        )
-        assert got.count() == expected
-
-    def test_streaming_circuit_breaker_state(self, spark, tmp_path):
-        from nabu_spark.streaming.incremental import start_streaming_circuit_breaker
-
-        pages_dir = str(tmp_path / "pages_cb")
-        out = str(tmp_path / "cb")
-        ckpt = str(tmp_path / "ckpt_cb")
-        # host down.example.org only ever returns empty bodies; good host ok
-        rows = []
-        for i in range(25):
-            rows.append((f"https://down.example.org/p{i}", b"", ""))
-        for i in range(5):
-            rows.append(
-                (f"https://good.example.org/p{i}", b"<html>ok body</html>", "x")
-            )
-        df = spark.createDataFrame(
-            [(u, bytearray(h), t) for u, h, t in rows],
-            "url string, html binary, text string",
-        ).withColumn("warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))).withColumn(
-            "lang", F.lit("en")
-        ).select("url", "warc_ts", "html", "text", "lang")
-        # two micro-batch files: state must accumulate across them
-        df.filter(F.col("url").endswith("1")).write.mode("append").parquet(pages_dir)
-        df.filter(~F.col("url").endswith("1")).write.mode("append").parquet(pages_dir)
-        q = start_streaming_circuit_breaker(
-            spark, pages_dir, out, ckpt, failure_threshold=20
-        )
-        q.awaitTermination(120)
-        rows_out = spark.read.parquet(out).collect()
-        latest = {}
-        for r in rows_out:  # keep the max-count (latest) row per host
-            cur = latest.get(r["host"])
-            if cur is None or r["successes"] + r["failures"] > cur["successes"] + cur["failures"]:
-                latest[r["host"]] = r
-        assert latest["down.example.org"]["dataset_down"] is True
-        assert latest["down.example.org"]["failures"] == 25
-        assert latest["good.example.org"]["dataset_down"] is False
-
-    def test_streaming_lineage_window(self, spark, tmp_path):
-        from nabu_spark.streaming.incremental import start_streaming_lineage
-
-        pages_dir = str(tmp_path / "pages")
-        out = str(tmp_path / "lineage")
-        ckpt = str(tmp_path / "ckpt2")
-        # warc_ts spans ~49 minutes -> 10-minute windows, all but the last
-        # close under a 0s watermark (append mode emits only closed windows)
-        generate_pages(spark, 50).write.mode("append").parquet(pages_dir)
-        q = start_streaming_lineage(
-            spark, pages_dir, out, ckpt, window="10 minutes", watermark="0 seconds"
-        )
-        q.awaitTermination(120)
-        lin = spark.read.parquet(out)
-        total = lin.agg(F.sum("urls_in")).first()[0]
-        assert total is not None and 0 < total <= 50
-        assert lin.select("window_start", "host", "urls_in").count() == lin.count()
-
-
 def test_sitemap_index_missing_id_raises():
     # NewSitemapIndex errors when a <sitemap> lacks a geoconnex sitemap_id
     # (sitemap_index.go:102-106)
@@ -317,99 +212,3 @@ class TestBandedLinking:
         assert "MapInPandas" in plan  # banding signatures both sides
         assert out.count() == 4
 
-
-class TestStreamingCuration:
-    def _pages(self, spark, ids, *, dup_of=None, short=()):
-        """Article-shaped pages in PAGES_SCHEMA; body passes Gopher unless
-        the id is in ``short``; ``dup_of`` maps id -> id whose body text it
-        repeats (same content hash after extraction)."""
-        import random
-
-        from pyspark.sql import Row
-
-        vocab = ["river", "mountain", "forest", "valley", "stream", "meadow",
-                 "canyon", "ridge", "lake", "marsh", "field", "grove"]
-        rows = []
-        for i in ids:
-            src = (dup_of or {}).get(i, i)
-            r = random.Random(src)
-            body = ("tiny" if i in short
-                    else " ".join(r.choice(vocab) for _ in range(70)))
-            html = (
-                "<html><body><nav><a href='/'>Home</a></nav>"
-                f"<p>{body}</p>"
-                "<div><p><a href='/tos'>Terms of service footer link</a></p>"
-                "</div></body></html>"
-            ).encode()
-            rows.append(Row(
-                url=f"https://s{i % 3}.example.org/p/{i}",
-                warc_ts=__import__("datetime").datetime(2024, 1, 1, 0, 0, i % 60),
-                html=bytearray(html),
-                text="",
-                lang="en",
-            ))
-        from nabu_spark.datagen import PAGES_SCHEMA
-
-        return spark.createDataFrame(rows, PAGES_SCHEMA)
-
-    def test_streaming_funnel_gates_and_dedup(self, spark, tmp_path):
-        from nabu_spark.streaming.curation import start_streaming_curation
-
-        pages_dir = str(tmp_path / "pages_cur")
-        out = str(tmp_path / "curated")
-        ckpt = str(tmp_path / "ckpt_cur")
-        # 8 good docs, one short (gopher-fails), one content dup of doc 1
-        batch1 = self._pages(
-            spark, range(10), dup_of={9: 1}, short=(5,)
-        )
-        batch1.write.mode("append").parquet(pages_dir)
-        q = start_streaming_curation(spark, pages_dir, out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        # 10 - 1 short - 1 dup = 8 curated docs
-        assert got.count() == 8
-        urls = {r["url"] for r in got.collect()}
-        assert not any("/p/5" in u for u in urls)      # gopher gate
-        # exactly one of the dup pair survived
-        assert sum(("/p/1" in u) or ("/p/9" in u) for u in urls) == 1
-        row = got.first()
-        assert row["n_tokens"] >= 50 and row["text"] and row["doc_id"] is not None
-
-        # batch 2: one new doc + a re-crawl of doc 2's content under a new
-        # url within the watermark -> state drops it across restarts
-        batch2 = self._pages(spark, [20, 21], dup_of={21: 2})
-        batch2.write.mode("append").parquet(pages_dir)
-        q2 = start_streaming_curation(spark, pages_dir, out, ckpt)
-        q2.awaitTermination(120)
-        assert spark.read.parquet(out).count() == 9  # only doc 20 appended
-
-    def test_streaming_matches_batch_kernels(self, spark, tmp_path):
-        """The fused streaming stage reproduces the batch funnel's text for
-        the same page (same extract/fix/clean kernels, different wiring)."""
-        from nabu_spark.curate import docs_from_pages
-        from nabu_spark.operators.encoding import fix_mojibake
-        from nabu_spark.operators.textstats import clean_text
-        from nabu_spark.streaming.curation import curated_docs_stream
-
-        pages = self._pages(spark, range(6))
-        # batch path: extract -> fix -> clean
-        b_docs = docs_from_pages(pages.select("url", "html"))
-        b_fixed = fix_mojibake(b_docs, "doc_id", "text")
-        b_clean = clean_text(b_fixed, "doc_id", "fixed")
-        batch_text = {
-            r["doc_id"]: r["clean_text"] for r in b_clean.collect()
-        }
-        # streaming graph executed on a batch frame (semantics identical
-        # modulo the stateful dedup, which needs a real stream)
-        s_docs = pages.select("url", "warc_ts", "html").mapInPandas(
-            __import__("nabu_spark.streaming.curation",
-                       fromlist=["_extract_fix_clean"])._extract_fix_clean,
-            "url string, warc_ts timestamp, text string",
-        )
-        from pyspark.sql import functions as F
-
-        stream_text = {
-            r["doc_id"]: r["text"]
-            for r in s_docs.withColumn("doc_id", F.xxhash64("url")).collect()
-        }
-        assert batch_text == stream_text

@@ -170,82 +170,6 @@ class TestViewHistory:
         assert mv.synced_version() == st.tbl.latest_version() > v0
 
 
-class TestStreamingStoreAndView:
-    """The full continuously-fresh-KG loop: page files stream in ->
-    per-batch atomic store snapshots -> incremental CONSTRUCT view
-    refresh. Gates: store equals the batch pipeline on the same pages,
-    view equals a full recompute, the second wave's refresh really took
-    the incremental path, and a restarted stream replays nothing."""
-
-    NAME_VIEW = """
-        CONSTRUCT { ?s <urn:hasName> ?n }
-        WHERE { ?s <https://schema.org/name> ?n }
-    """
-
-    def test_stream_two_waves(self, spark, tmp_path):
-        from nabu_spark.datagen import generate_pages
-        from nabu_spark.graphstore import GraphStore
-        from nabu_spark.matview import MaterializedView
-        from nabu_spark.pipeline import pages_to_quads_fused
-        from nabu_spark.sparql import sparql_query
-        from nabu_spark.streaming.incremental import (
-            start_streaming_graph_store,
-        )
-        from pyspark.sql import functions as F
-
-        pages = generate_pages(spark, 40).cache()
-        wave1 = pages.limit(20).cache()
-        wave2 = pages.join(wave1.select("url"), on="url", how="left_anti")
-        pdir, store_root = str(tmp_path / "pages"), str(tmp_path / "store")
-        ckpt, view_root = str(tmp_path / "ckpt"), str(tmp_path / "view")
-        wave1.write.mode("append").parquet(pdir)
-
-        def run():
-            q = start_streaming_graph_store(
-                spark, pdir, store_root, ckpt,
-                view_root=view_root, view_query=self.NAME_VIEW)
-            q.awaitTermination()
-
-        run()
-        st = GraphStore(spark, store_root)
-        mv = MaterializedView(st, view_root, self.NAME_VIEW)
-
-        def store_rows():
-            return sorted(tuple(r) for r in st.read().collect())
-
-        def batch_rows(p):
-            good = pages_to_quads_fused(p, salt=False).filter(
-                F.col("error_code").isNull())
-            return sorted(
-                tuple(r)
-                for r in good.select("subj", "pred", "obj", "prov")
-                .distinct().collect())
-
-        assert store_rows() == batch_rows(wave1)
-        v_after_wave1 = mv.tbl.latest_version()
-        assert mv.synced_version() == st.tbl.latest_version()
-
-        # second wave: only the new file is processed (checkpoint), the
-        # store advances by exactly one snapshot, the view incrementally
-        wave2.write.mode("append").parquet(pdir)
-        run()
-        assert store_rows() == batch_rows(pages)
-        got = sorted(tuple(r) for r in mv.read().collect())
-        want = sorted(
-            tuple(r) for r in
-            sparql_query(st.read(), self.NAME_VIEW, graph_col="prov")
-            .collect())
-        assert got == want and len(got) > 0
-        last = mv.tbl.manifest()
-        assert last["stage"] == "matview-incremental"
-        assert last["version"] > v_after_wave1
-
-        # an idle restart replays nothing: no new store or view snapshot
-        sv, vv = st.tbl.latest_version(), mv.tbl.latest_version()
-        run()
-        assert (st.tbl.latest_version(), mv.tbl.latest_version()) == (sv, vv)
-
-
 class TestIncrementalPlanShape:
     def test_delta_side_broadcasts(self, spark, tmp_path):
         """100-TB invariant: the Σ_i expansion joins must broadcast the

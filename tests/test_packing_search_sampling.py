@@ -419,85 +419,6 @@ class TestTokenDrift:
         assert 0.0 < ab < math.log(2)
 
 
-class TestBPE:
-    FREQS = [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)]
-
-    def test_hand_computed_merge_sequence(self):
-        from nabu_spark.operators.bpe import train_bpe_from_frequencies
-
-        merges = train_bpe_from_frequencies(self.FREQS, n_merges=4)
-        # classic Sennrich corpus: (e,s) wins at 9 (lexicographic tie-break
-        # over (s,t),(t,</w>)), the merged symbol chains to est</w>, then
-        # (l,o)/(o,w) tie at 7 -> lexicographic (l,o)
-        assert merges == [("e", "s"), ("es", "t"), ("est", "</w>"), ("l", "o")]
-
-    def test_encode_word_greedy_rank_order(self):
-        from nabu_spark.operators.bpe import encode_word, train_bpe_from_frequencies
-
-        merges = train_bpe_from_frequencies(self.FREQS, n_merges=4)
-        ranks = {p: i for i, p in enumerate(merges)}
-        assert encode_word("newest", ranks) == ["n", "e", "w", "est</w>"]
-        assert encode_word("widest", ranks) == ["w", "i", "d", "est</w>"]
-
-    def test_distributed_training_and_apply_roundtrip(self, spark, docs):
-        from nabu_spark.operators.bpe import (
-            bpe_decode_expr,
-            bpe_encode,
-            train_bpe,
-        )
-        from nabu_spark.operators.dedup import tokens_of
-
-        merges = train_bpe(docs, "text", n_merges=60)
-        assert len(merges) > 10
-        enc = bpe_encode(docs, merges, "doc_id", "text")
-        decoded = enc.select(
-            "doc_id", bpe_decode_expr("pieces").alias("round")
-        )
-        orig = {r["doc_id"]: " ".join(tokens_of(r["text"])) for r in docs.collect()}
-        for r in decoded.collect():
-            assert r["round"] == orig[r["doc_id"]]
-
-    def test_distributed_apply_equals_driver_reference(self, spark, docs):
-        from nabu_spark.operators.bpe import bpe_encode, encode_word, train_bpe
-        from nabu_spark.operators.dedup import tokens_of
-
-        merges = train_bpe(docs, "text", n_merges=40)
-        ranks = {p: i for i, p in enumerate(merges)}
-        sample = docs.limit(30).collect()
-        want = {
-            r["doc_id"]: [
-                p for w in tokens_of(r["text"]) for p in encode_word(w, ranks)
-            ]
-            for r in sample
-        }
-        got = {
-            r["doc_id"]: list(r["pieces"])
-            for r in bpe_encode(
-                docs.limit(30).repartition(5), merges, "doc_id", "text"
-            ).collect()
-        }
-        assert got == want
-
-    def test_more_merges_fewer_pieces(self, spark, docs):
-        from nabu_spark.operators.bpe import bpe_encode, train_bpe
-        from pyspark.sql import functions as FF
-
-        few = train_bpe(docs, "text", n_merges=10)
-        many = train_bpe(docs, "text", n_merges=120)
-        n_few = bpe_encode(docs, few).agg(FF.sum("n_pieces")).first()[0]
-        n_many = bpe_encode(docs, many).agg(FF.sum("n_pieces")).first()[0]
-        assert n_many < n_few
-
-    def test_merge_list_prefix_stability(self, spark, docs):
-        # BPE merges are a deterministic sequence: training longer only
-        # extends the list
-        from nabu_spark.operators.bpe import train_bpe
-
-        m40 = train_bpe(docs, "text", n_merges=40)
-        m80 = train_bpe(docs, "text", n_merges=80)
-        assert m80[: len(m40)] == m40
-
-
 class TestLmEdgeCases:
     def test_short_and_empty_docs_survive(self, spark):
         from nabu_spark.operators.lm import perplexity, train_bigram_lm
@@ -508,77 +429,6 @@ class TestLmEdgeCases:
         got = {r["doc_id"] for r in perplexity(df, model).collect()}
         # only docs with >= 2 tokens are scorable; the rest drop cleanly
         assert got == {0, 4}
-
-
-class TestQualityModel:
-    def _corpus(self, spark):
-        import random
-
-        rng = random.Random(7)
-        words = ["stream", "table", "query", "join", "window", "batch",
-                 "filter", "merge", "sort", "scan"]
-        rows = []
-        for i in range(120):
-            # good docs: plausible prose-length token streams
-            n = rng.randint(60, 150)
-            rows.append((i, " ".join(rng.choice(words) for _ in range(n))))
-        for i in range(120, 200):
-            # bad docs: too short, symbol-heavy, or repeated single token
-            kind = i % 3
-            if kind == 0:
-                rows.append((i, "### $$$ !!! %%% ^^^ &&&"))
-            elif kind == 1:
-                rows.append((i, "spam " * 300))
-            else:
-                rows.append((i, "x"))
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_learns_separation_and_agrees_with_weak_labeler(self, spark):
-        from nabu_spark.operators.quality_model import (
-            score_quality,
-            train_quality_model,
-            weak_labels,
-        )
-
-        docs = self._corpus(spark)
-        labeled = weak_labels(docs)
-        # the weak labeler must actually split this corpus
-        counts = {r["label"]: r["count"] for r in labeled.groupBy("label").count().collect()}
-        assert counts.get(1.0, 0) > 20 and counts.get(0.0, 0) > 20
-
-        model = train_quality_model(labeled)
-        scored = score_quality(model, docs)
-        joined = scored.join(labeled.select("doc_id", "label"), "doc_id")
-        agree = joined.filter(
-            F.col("quality_pred") == F.col("label")
-        ).count() / joined.count()
-        assert agree > 0.9  # linearly separable synthetic split
-
-    def test_probabilities_ordered_and_deterministic(self, spark):
-        from nabu_spark.operators.quality_model import (
-            score_quality,
-            train_quality_model,
-            weak_labels,
-        )
-
-        docs = self._corpus(spark)
-        labeled = weak_labels(docs)
-        m1 = train_quality_model(labeled)
-        s1 = score_quality(m1, docs).select("doc_id", "quality_prob")
-        good_mean = (
-            s1.join(labeled.filter(F.col("label") == 1.0), "doc_id")
-            .agg(F.avg("quality_prob")).first()[0]
-        )
-        bad_mean = (
-            s1.join(labeled.filter(F.col("label") == 0.0), "doc_id")
-            .agg(F.avg("quality_prob")).first()[0]
-        )
-        assert good_mean > bad_mean + 0.3
-        m2 = train_quality_model(labeled)
-        s2 = score_quality(m2, docs).select("doc_id", "quality_prob")
-        a = {r["doc_id"]: r["quality_prob"] for r in s1.collect()}
-        b = {r["doc_id"]: r["quality_prob"] for r in s2.collect()}
-        assert a == b
 
 
 class TestShardExport:

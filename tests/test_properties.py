@@ -347,54 +347,6 @@ class TestFastPathFuzz:
         assert eq(fast, b.root), doc
 
 
-class TestBpeProperties:
-    words = st.from_regex(r"[a-z]{1,12}", fullmatch=True)
-
-    @given(st.lists(st.tuples(words, st.integers(1, 50)), min_size=1, max_size=25))
-    @settings(max_examples=100, deadline=None)
-    def test_encode_concatenates_back_to_word(self, freqs):
-        from nabu_spark.operators.bpe import (
-            END,
-            encode_word,
-            train_bpe_from_frequencies,
-        )
-
-        merges = train_bpe_from_frequencies(freqs, n_merges=30, min_pair_freq=1)
-        ranks = {p: i for i, p in enumerate(merges)}
-        for w, _ in freqs:
-            pieces = encode_word(w, ranks)
-            assert "".join(pieces) == w + END
-
-    @given(st.lists(st.tuples(words, st.integers(1, 50)), min_size=1, max_size=20))
-    @settings(max_examples=60, deadline=None)
-    def test_training_is_order_invariant(self, freqs):
-        from nabu_spark.operators.bpe import train_bpe_from_frequencies
-
-        # duplicate words collapse identically regardless of list order
-        dedup = {}
-        for w, c in freqs:
-            dedup[w] = dedup.get(w, 0) + c
-        items = list(dedup.items())
-        a = train_bpe_from_frequencies(items, n_merges=20, min_pair_freq=1)
-        b = train_bpe_from_frequencies(list(reversed(items)), n_merges=20, min_pair_freq=1)
-        assert a == b
-
-    @given(st.lists(st.tuples(words, st.integers(1, 9)), min_size=1, max_size=15))
-    @settings(max_examples=60, deadline=None)
-    def test_merges_only_shrink_piece_counts(self, freqs):
-        from nabu_spark.operators.bpe import (
-            encode_word,
-            train_bpe_from_frequencies,
-        )
-
-        merges = train_bpe_from_frequencies(freqs, n_merges=25, min_pair_freq=1)
-        for cut in (0, len(merges) // 2, len(merges)):
-            ranks = {p: i for i, p in enumerate(merges[:cut])}
-            longer = {p: i for i, p in enumerate(merges)}
-            for w, _ in freqs:
-                assert len(encode_word(w, longer)) <= len(encode_word(w, ranks))
-
-
 class TestContainerFuzz:
     """Hostile-input properties for the round-4 container parsers and the
     encoding repair: parsers either parse or raise MediaDecodeError —
@@ -565,15 +517,3 @@ class TestTurtleSerializer:
             '@prefix x: <urn:x:> . x:a x:p "hi"@en-GB, "ho" .')
         objs = sorted(o for _, _, o in got)
         assert objs == ['"hi"@en-GB', '"ho"']
-
-    def test_void_description_roundtrips(self, spark):
-        from nabu_spark.functions.turtle import parse_turtle, serialize_turtle
-        from nabu_spark.operators.stats import void_triples
-
-        df = spark.createDataFrame(
-            [("<urn:a>", "<urn:p>", '"x"'), ("<urn:b>", "<urn:p>", '"y"')],
-            "subj string, pred string, obj string")
-        rows = [tuple(r) for r in void_triples(df, "<urn:ds>").collect()]
-        ttl = serialize_turtle(rows, {"void": "http://rdfs.org/ns/void#"})
-        assert "void:triples" in ttl
-        assert {tuple(t) for t in parse_turtle(ttl)} == set(rows)

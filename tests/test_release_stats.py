@@ -244,15 +244,6 @@ class TestValidate:
             assert len(r["warning_sample"]) <= 3
             assert r["total_warnings"] >= len(r["warning_sample"])
 
-    def test_full_shacl_gated(self, spark, corpus):
-        from nabu_spark.operators.validate import full_shacl_available, full_shacl_validate
-
-        if not full_shacl_available():
-            _, docs, _ = corpus
-            with pytest.raises(NotImplementedError):
-                full_shacl_validate(docs, "")
-
-
 class TestDeterministicGzip:
     def test_bytes_reproducible_across_runs(self, spark, tmp_path):
         """helpers.go:57-68 semantics: the gzipped release bytes are a pure
@@ -342,18 +333,3 @@ class TestVoidStats:
         assert got[("dataset", "properties")] == 2
         assert got[("property", "<urn:p>")] == 2
         assert got[("class", "<urn:C>")] == 2
-
-    def test_void_rdf_deterministic_and_linked(self, spark):
-        from nabu_spark.operators.stats import void_triples
-
-        df = spark.createDataFrame(
-            self.ROWS, "subj string, pred string, obj string")
-        a = sorted(tuple(r) for r in void_triples(df, "<urn:ds>").collect())
-        b = sorted(tuple(r) for r in void_triples(df, "<urn:ds>").collect())
-        assert a == b  # partition-node IRIs are content-derived, not bnodes
-        # every partition node the dataset links to carries its key + count
-        links = {o for s, p, o in a if p.endswith("Partition>")}
-        subjects = {s for s, _, _ in a}
-        assert links and links <= subjects
-        assert ("<urn:ds>", "<http://rdfs.org/ns/void#triples>",
-                '"4"^^<http://www.w3.org/2001/XMLSchema#integer>') in a

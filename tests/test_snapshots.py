@@ -226,7 +226,9 @@ class TestSnapCli:
         rc = main(["snap", "run", "--pages", pages_path, "--out", out, "--no-salt"])
         assert rc == 0
         run_out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert run_out["versions"]["quads"] == 1 and run_out["quads"] > 0
+        n_quads = SnapshotTable(os.path.join(out, "quads_tbl")).read(spark).count()
+        assert run_out["versions"]["quads"] == 1
+        assert run_out["quads"] == n_quads > 0
 
         rc = main(["snap", "history", "--out", out, "--table", "quads"])
         assert rc == 0

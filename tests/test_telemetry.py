@@ -11,7 +11,7 @@ import json
 
 import pytest
 
-from nabu_spark.telemetry import Span, Tracer, lineage_totals, otel_available
+from nabu_spark.telemetry import Span, Tracer, otel_available
 
 
 class TestSpans:
@@ -99,18 +99,6 @@ class TestSpans:
 
 
 class TestPipelineIntegration:
-    def test_lineage_totals(self, spark, tmp_path):
-        from nabu_spark.datagen import generate_pages
-        from nabu_spark.pipeline import run_pipeline
-
-        out = run_pipeline(
-            spark, generate_pages(spark, 60), str(tmp_path / "run"),
-            salt=False)
-        totals = lineage_totals(out["lineage"])
-        assert set(totals) == {"extract", "docs_to_quads"}
-        assert totals["extract"]["urls_in"] == 60
-        assert totals["docs_to_quads"]["triples_out"] > 0
-
     def test_cli_trace_out(self, spark, tmp_path):
         """--trace-out writes the trace artifact around a real harvest
         (reference --trace -> trace.out parity)."""

@@ -118,50 +118,3 @@ class TestWarcRobustnessAndStats:
             b"WARC-Target-URI: http://x/\r\nContent-Length: -54\r\n\r\n"
         ) * 3
         assert list(iter_warc_records(rec)) == []
-
-    def test_file_stats(self, spark, warc_dir, tmp_path):
-        import shutil
-
-        d = tmp_path / "mix"
-        d.mkdir()
-        shutil.copy(f"{warc_dir}/a.warc", d / "a.warc")
-        # archive with one good response + one request record + one 404
-        (d / "odd.warc").write_bytes(
-            b"WARC/1.0\r\nWARC-Type: request\r\n"
-            b"WARC-Target-URI: http://x/\r\nContent-Length: 4\r\n\r\nGET \r\n\r\n"
-            b"WARC/1.0\r\nWARC-Type: response\r\n"
-            b"WARC-Target-URI: http://x/404\r\n"
-            b"WARC-Date: 2026-01-01T00:00:00Z\r\nContent-Length: 28\r\n\r\n"
-            b"HTTP/1.1 404 NF\r\n\r\nnot found\r\n\r\n"
-        )
-        # corrupt gzip archive
-        (d / "bad.warc.gz").write_bytes(b"\x1f\x8b" + b"\x00" * 20)
-        from nabu_spark.sources.warc import warc_file_stats
-
-        stats = {
-            r["warc_file"].rsplit("/", 1)[-1]: r
-            for r in warc_file_stats(spark, str(d)).collect()
-        }
-        assert stats["a.warc"]["n_records"] == 40
-        assert stats["a.warc"]["n_pages"] == 40
-        assert stats["a.warc"]["n_skipped"] == 0
-        assert stats["odd.warc"]["n_records"] == 2
-        assert stats["odd.warc"]["n_pages"] == 0
-        assert stats["odd.warc"]["n_skipped"] == 2
-        assert stats["a.warc"]["parse_error"] is False
-        assert stats["odd.warc"]["parse_error"] is False  # well-formed records
-        assert stats["bad.warc.gz"]["parse_error"] is True
-        assert stats["bad.warc.gz"]["n_pages"] == 0
-
-    def test_mid_archive_desync_is_flagged(self, spark, warc_dir, tmp_path):
-        # a good record followed by garbage: the tail is unscannable, so
-        # parse_error must be True even though some records were read
-        good = open(f"{warc_dir}/a.warc", "rb").read()
-        d = tmp_path / "desync"
-        d.mkdir()
-        (d / "t.warc").write_bytes(good[:2000] + b"GARBAGE NOT A RECORD")
-        from nabu_spark.sources.warc import warc_file_stats
-
-        row = warc_file_stats(spark, str(d)).first()
-        assert row["parse_error"] is True
-        assert row["n_records"] >= 1
