@@ -23,6 +23,7 @@ mapInPandas, and per-row decode errors become rows, never task failures.
 
 from __future__ import annotations
 
+import bisect
 import hashlib
 import struct
 import zlib
@@ -998,25 +999,34 @@ def _parse_track(blob: bytes, a: int, b: int) -> dict | None:
                     int.from_bytes(blob[q:q + 4], "big"),        # first_chunk
                     int.from_bytes(blob[q + 4:q + 8], "big"),    # samples/chunk
                 ))
-            # expand sample -> (chunk, index-in-chunk), then byte offset
+            # sync sample -> (chunk, index-in-chunk) -> byte offset. The walk
+            # visits each chunk of the stco table once, in order, and finds
+            # a chunk's sync samples by bisection: a hostile samples-per-chunk
+            # or first-chunk number never drives the loop.
+            sync_sorted = sorted(set(sync))
+            prefix = [0]  # prefix[j] = bytes of samples 1..j (stsz table)
+            for s in sizes:
+                prefix.append(prefix[-1] + s)
+            n_sized = len(sizes)
             sample_pos: dict[int, int] = {}
             sample_no = 1
-            sync_set = set(sync)  # hoisted: O(1) membership in the hot loop
+            next_chunk = 1
             for e_i, (first, per) in enumerate(ents):
                 last = (
                     ents[e_i + 1][0] - 1 if e_i + 1 < len(ents) else n_chunks
                 )
-                for chunk in range(first, last + 1):
-                    off = chunk_offs[chunk - 1] if chunk <= n_chunks else 0
-                    for k in range(per):
-                        if sample_no in sync_set:
-                            sample_pos[sample_no] = off
-                        size_k = (
-                            const_size if const_size else
-                            (sizes[sample_no - 1] if sample_no <= len(sizes) else 0)
+                for chunk in range(max(first, next_chunk), min(last, n_chunks) + 1):
+                    off = chunk_offs[chunk - 1]
+                    base = prefix[min(sample_no - 1, n_sized)]
+                    lo = bisect.bisect_left(sync_sorted, sample_no)
+                    hi = bisect.bisect_left(sync_sorted, sample_no + per)
+                    for s in sync_sorted[lo:hi]:
+                        sample_pos[s] = off + (
+                            (s - sample_no) * const_size if const_size else
+                            prefix[min(s - 1, n_sized)] - base
                         )
-                        off += size_k
-                        sample_no += 1
+                    sample_no += per
+                    next_chunk = chunk + 1
             keyframes = [sample_pos[s] for s in sync if s in sample_pos]
     return {
         "handler": handler,
