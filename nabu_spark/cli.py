@@ -1,7 +1,7 @@
 """CLI entry points mirroring the reference's commands, Spark-first.
 
-    harvest  pages-parquet -> docs checkpoint (+ crawl stats)     [nabu harvest]
-    release  docs -> enriched -> quads + nq text + bytesums       [nabu release]
+    harvest  pages-parquet -> docs_tbl (+ crawl stats)            [nabu harvest]
+    release  docs_tbl -> enriched -> quads_tbl + nq + bytesums    [nabu release]
     geo      quads -> geoparquet table                            [nabu geoparquet]
     pull     release dir -> local dir with bytesum skip           [nabu pull]
     link     quads + known-iris dict -> owl:sameAs quads          [north-star]
@@ -21,6 +21,12 @@ import os
 import sys
 
 
+QUADS_HELP = (
+    "quads table: a snapshot table root such as <run>/quads_tbl, or parquet "
+    "with (subj, pred, obj[, prov]); failure rows are skipped"
+)
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="nabu-spark")
     p.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
@@ -33,7 +39,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    h = sub.add_parser("harvest", help="pages parquet -> docs checkpoint + stats")
+    h = sub.add_parser("harvest", help="pages parquet -> docs table + stats")
     h.add_argument("--pages", required=True)
     h.add_argument("--out", required=True)
     h.add_argument("--no-salt", action="store_true")
@@ -46,7 +52,7 @@ def build_parser() -> argparse.ArgumentParser:
     r = sub.add_parser("release", help="docs -> quads + release graphs + bytesums")
     r.add_argument(
         "--docs", required=True,
-        help="harvest output dir (reads its docs/ parquet subdirectory)",
+        help="harvest output dir (reads its docs_tbl/ snapshot table)",
     )
     r.add_argument("--out", required=True)
     r.add_argument(
@@ -63,7 +69,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
 
     g = sub.add_parser("geo", help="quads -> geoparquet")
-    g.add_argument("--quads", required=True)
+    g.add_argument("--quads", required=True, help=QUADS_HELP)
     g.add_argument("--out", required=True)
 
     pl = sub.add_parser("pull", help="pull releases with bytesum skip")
@@ -81,7 +87,7 @@ def build_parser() -> argparse.ArgumentParser:
     st.add_argument("--out", required=True)
     st.add_argument("--formats", default="microdata,rdfa")
 
-    b = sub.add_parser("bulk", help="NDJSON bulk source -> docs checkpoint")
+    b = sub.add_parser("bulk", help="NDJSON bulk source -> docs table")
     b.add_argument("--ndjson", required=True, help="NDJSON file/dir of JSON-LD docs")
     b.add_argument("--sitemap-id", required=True)
     b.add_argument("--out", required=True)
@@ -102,7 +108,7 @@ def build_parser() -> argparse.ArgumentParser:
     fu.add_argument("--no-salt", action="store_true")
 
     v = sub.add_parser("validate", help="SHACL-lite validation per document graph")
-    v.add_argument("--quads", required=True)
+    v.add_argument("--quads", required=True, help=QUADS_HELP)
     v.add_argument("--shapes", required=True, help="SHACL shapes turtle file")
     v.add_argument("--out", required=True)
     v.add_argument(
@@ -116,7 +122,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
 
     ln = sub.add_parser("link", help="entity-link quads against a known-IRI dict")
-    ln.add_argument("--quads", required=True)
+    ln.add_argument("--quads", required=True, help=QUADS_HELP)
     ln.add_argument("--dict", required=True, dest="dict_path")
     ln.add_argument("--out", required=True)
     ln.add_argument("--threshold", type=float, default=0.5)
@@ -163,7 +169,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="run a SPARQL SELECT/CONSTRUCT over a quads parquet table",
     )
     qin = qy.add_mutually_exclusive_group(required=True)
-    qin.add_argument("--quads", help="parquet with (subj, pred, obj[, prov])")
+    qin.add_argument("--quads", help=QUADS_HELP)
     qin.add_argument("--nquads", help=".nq/.nt text files (gzip ok)")
     qin.add_argument(
         "--turtle",
@@ -196,8 +202,7 @@ def build_parser() -> argparse.ArgumentParser:
                          "append window since the last entail (falls back "
                          "to full recompute when unsound)")
     up.add_argument("--store", required=True, help="graph store root dir")
-    up.add_argument("--quads",
-                    help="init/sync: parquet with (subj,pred,obj,prov)")
+    up.add_argument("--quads", help="init/sync: " + QUADS_HELP)
     up.add_argument("--prefix", help="sync: graph-URN prefix to mirror")
     up.add_argument("--view-root",
                     help="view: the materialized view's own snapshot dir "
@@ -213,6 +218,22 @@ def build_parser() -> argparse.ArgumentParser:
                     help="query: json/csv/tsv = W3C SPARQL Query Results "
                          "formats; nt = N-Triples (CONSTRUCT/DESCRIBE)")
     return p
+
+
+def _read_quads(spark, path: str):
+    """The quads at ``path`` without failure rows: a ``SnapshotTable`` root
+    (``release`` and ``snap run`` commit ``quads_tbl``) when
+    ``<path>/snapshots`` exists, else a plain parquet table (``structured``
+    writes one)."""
+    from .operators.triples import quads_only
+
+    if os.path.isdir(os.path.join(path, "snapshots")):
+        from .snapshots import SnapshotTable
+
+        quads = SnapshotTable(path).read(spark)
+    else:
+        quads = spark.read.parquet(path)
+    return quads_only(quads) if "error_code" in quads.columns else quads
 
 
 def _print_query_result(out, args, cmd: str, summary) -> int:
@@ -281,7 +302,7 @@ def _dispatch(args) -> int:
 
     if args.cmd == "harvest":
         from .operators.stats import crawl_stats
-        from .pipeline import run_extract_stage
+        from .snapshots import SnapshotTable, commit_docs
         from .telemetry import maybe_span
 
         if getattr(args, "format", "parquet") == "warc":
@@ -291,8 +312,8 @@ def _dispatch(args) -> int:
         else:
             pages = spark.read.parquet(args.pages)
         with maybe_span("harvest.extract"):
-            docs = run_extract_stage(
-                spark, pages, args.out,
+            docs = commit_docs(
+                spark, SnapshotTable(os.path.join(args.out, "docs_tbl")), pages,
                 resume=not args.no_resume, salt=not args.no_salt,
             )
         with maybe_span("harvest.stats") as stat_span:
@@ -314,9 +335,10 @@ def _dispatch(args) -> int:
     if args.cmd == "release":
         from .operators.enrich import enrich_docs
         from .operators.release import write_release
-        from .pipeline import run_quads_stage
+        from .operators.triples import quads_only
+        from .snapshots import SnapshotTable, commit_quads
 
-        docs = spark.read.parquet(os.path.join(args.docs, "docs"))
+        docs = SnapshotTable(os.path.join(args.docs, "docs_tbl")).read(spark)
         if args.mainstems:
             if args.mainstems.endswith(".fgb"):
                 from .sources.flatgeobuf import read_flatgeobuf
@@ -325,22 +347,22 @@ def _dispatch(args) -> int:
             else:
                 mainstems = spark.read.parquet(args.mainstems)
             docs = enrich_docs(docs, mainstems)
-        raw = run_quads_stage(
-            spark, docs, args.out, resume=not args.no_resume,
-            bnode_mode=args.bnode_mode,
-        )
-        quads = raw.filter(F.col("error_code").isNull()).drop("error_code")
-        n = sum(r["lines"] for r in write_release(quads, args.out))
+        try:
+            raw = commit_quads(
+                spark, SnapshotTable(os.path.join(args.out, "quads_tbl")), docs,
+                resume=not args.no_resume, bnode_mode=args.bnode_mode,
+            )
+        except ValueError as e:  # a resume under another bnode_mode
+            print(json.dumps({"cmd": "release", "error": str(e)}))
+            return 2
+        n = sum(r["lines"] for r in write_release(quads_only(raw), args.out))
         print(json.dumps({"cmd": "release", "quads": n}))
         return 0
 
     if args.cmd == "geo":
         from .operators.geoparquet import quads_to_geo, write_geoparquet
 
-        quads = spark.read.parquet(args.quads)
-        if "error_code" in quads.columns:
-            quads = quads.filter(F.col("error_code").isNull())
-        geo = quads_to_geo(quads)
+        geo = quads_to_geo(_read_quads(spark, args.quads))
         manifest = write_geoparquet(geo, args.out)
         # an all-error corpus yields zero geometry rows and zero part files;
         # reading the empty dir would raise instead of reporting rows=0
@@ -414,11 +436,15 @@ def _dispatch(args) -> int:
         return 0
 
     if args.cmd == "bulk":
+        from .snapshots import SnapshotTable, commit_docs
         from .sources.bulk import read_bulk_ndjson
 
-        docs = read_bulk_ndjson(spark, args.ndjson, args.sitemap_id)
-        docs.write.mode("overwrite").parquet(os.path.join(args.out, "docs"))
-        stored = spark.read.parquet(os.path.join(args.out, "docs"))
+        # a bulk export is a full dump of its source: it replaces the table
+        stored = commit_docs(
+            spark, SnapshotTable(os.path.join(args.out, "docs_tbl")),
+            read_bulk_ndjson(spark, args.ndjson, args.sitemap_id),
+            resume=False, extract=False,
+        )
         n_ok = stored.filter(F.col("error_code") == "").count()
         n_err = stored.filter(F.col("error_code") != "").count()
         print(json.dumps({"cmd": "bulk", "docs": n_ok, "errors": n_err}))
@@ -440,7 +466,7 @@ def _dispatch(args) -> int:
         rc = main(rel)
         if rc:
             return rc
-        quads_path = os.path.join(args.out, "quads")
+        quads_path = os.path.join(args.out, "quads_tbl")
         rc = main(["geo", "--quads", quads_path, "--out", os.path.join(args.out, "geo")])
         if rc:
             return rc
@@ -467,9 +493,7 @@ def _dispatch(args) -> int:
     if args.cmd == "validate":
         from .operators.shacl import shacl_validate_quads
 
-        quads = spark.read.parquet(args.quads)
-        if "error_code" in quads.columns:
-            quads = quads.filter(F.col("error_code").isNull())
+        quads = _read_quads(spark, args.quads)
         with open(args.shapes) as fh:
             shapes_ttl = fh.read()
         report = shacl_validate_quads(quads, shapes_ttl)
@@ -501,9 +525,7 @@ def _dispatch(args) -> int:
     if args.cmd == "link":
         from .operators.entitylink import link_and_canonicalize
 
-        quads = spark.read.parquet(args.quads)
-        if "error_code" in quads.columns:
-            quads = quads.filter(F.col("error_code").isNull())
+        quads = _read_quads(spark, args.quads)
         from .operators.entitylink import extract_mentions, link_mentions, same_as_quads
 
         known = spark.read.parquet(args.dict_path)
@@ -556,6 +578,7 @@ def _dispatch(args) -> int:
         return 0
 
     if args.cmd == "query":
+        from .operators.triples import quads_only
         from .sparql import sparql_query
 
         text = args.sparql
@@ -565,15 +588,13 @@ def _dispatch(args) -> int:
         if args.nquads:
             from .sources.nquads import read_nquads
 
-            quads = read_nquads(spark, args.nquads)
+            quads = quads_only(read_nquads(spark, args.nquads))
         elif args.turtle:
             from .sources.turtle import turtle_quads
 
-            quads = turtle_quads(spark, args.turtle)
+            quads = quads_only(turtle_quads(spark, args.turtle))
         else:
-            quads = spark.read.parquet(args.quads)
-        if "error_code" in quads.columns:
-            quads = quads.filter(F.col("error_code").isNull())
+            quads = _read_quads(spark, args.quads)
         out = sparql_query(quads, text)
         if args.out and args.format != "text":
             print(json.dumps({"cmd": "query", "error":
@@ -601,7 +622,7 @@ def _dispatch(args) -> int:
             if not args.quads:
                 print(json.dumps({"cmd": "store", "error": "--quads required"}))
                 return 2
-            v = gs.init(spark.read.parquet(args.quads))
+            v = gs.init(_read_quads(spark, args.quads))
             print(json.dumps({"cmd": "store", "action": "init", "version": v}))
         elif args.action == "update":
             if text is None:
@@ -638,7 +659,7 @@ def _dispatch(args) -> int:
                 print(json.dumps({"cmd": "store",
                                   "error": "--quads and --prefix required"}))
                 return 2
-            v = gs.sync(spark.read.parquet(args.quads), args.prefix)
+            v = gs.sync(_read_quads(spark, args.quads), args.prefix)
             print(json.dumps({"cmd": "store", "action": "sync",
                               "version": v}))
         elif args.action == "view":

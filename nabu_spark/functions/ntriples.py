@@ -15,7 +15,6 @@ Semantics mirrored from the reference (studied, not copied):
 from __future__ import annotations
 
 import re
-from decimal import Decimal
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"

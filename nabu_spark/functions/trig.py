@@ -19,12 +19,7 @@ graph. Driver-side by design — bulk data stays in N-Quads/parquet.
 
 from __future__ import annotations
 
-from .turtle import (
-    TurtleError,
-    _Parser,
-    parse_turtle,  # noqa: F401  (re-export convenience)
-    statement_lines,
-)
+from .turtle import TurtleError, _Parser, statement_lines
 
 
 class _TrigParser(_Parser):

@@ -261,6 +261,91 @@ def _parquet_rows(files: list[str]) -> int:
 # --- snapshot-committed pipeline ---------------------------------------------
 
 
+def _commit_remainder(spark, tbl, rows, key, build, *, resume, stage, metrics):
+    """Commit ``build(rows)`` for the rows whose ``key`` the table does not
+    hold yet, as an append; with ``resume`` off or no committed snapshot,
+    commit ``build`` of every row as an overwrite. Publishes nothing when no
+    row is left."""
+    t0 = time.monotonic()
+    operation = "overwrite"
+    if resume and tbl.exists():
+        done = tbl.read(spark).select(key).distinct()
+        rows = rows.join(done, key, "left_anti")
+        if rows.isEmpty():
+            return
+        operation = "append"
+    tbl.commit(
+        build(rows),
+        operation=operation,
+        stage=stage,
+        metrics={**metrics, "seconds": round(time.monotonic() - t0, 3)},
+    )
+
+
+def commit_docs(
+    spark: SparkSession,
+    docs_tbl: SnapshotTable,
+    pages: DataFrame,
+    *,
+    resume: bool = True,
+    num_partitions: int | None = None,
+    salt: bool = True,
+    extract: bool = True,
+) -> DataFrame:
+    """Docs stage: extract the pages whose ``url`` the docs table does not
+    hold yet (``extract_docs`` + ``with_object_key``) and commit them;
+    returns the committed docs table. ``extract=False`` takes ``pages`` as
+    docs rows already (the bulk NDJSON source)."""
+    from .operators.extract import extract_docs, with_object_key
+
+    def build(todo: DataFrame) -> DataFrame:
+        if not extract:
+            return todo
+        return with_object_key(
+            extract_docs(todo, num_partitions=num_partitions, salt=salt)
+        )
+
+    _commit_remainder(
+        spark, docs_tbl, pages, "url", build,
+        resume=resume, stage="extract", metrics={},
+    )
+    return docs_tbl.read(spark)
+
+
+def commit_quads(
+    spark: SparkSession,
+    quads_tbl: SnapshotTable,
+    docs: DataFrame,
+    *,
+    resume: bool = True,
+    bnode_mode: str = "skolem",
+) -> DataFrame:
+    """Quads stage: ``docs_to_quads`` of the docs whose prov key
+    (``pipeline.with_prov_key``) the quads table does not hold yet, failure
+    rows included; returns the committed raw quads table. Each commit
+    records ``bnode_mode`` in its manifest metrics, and a resume under
+    another mode is refused before any Spark job runs (a table with no
+    recorded mode holds ``skolem`` quads)."""
+    from .operators.triples import docs_to_quads
+    from .pipeline import with_prov_key
+
+    if resume and quads_tbl.exists():
+        prev_mode = quads_tbl.manifest()["metrics"].get("bnode_mode", "skolem")
+        if prev_mode != bnode_mode:
+            raise ValueError(
+                f"quads table at {quads_tbl.root} was built with "
+                f"bnode_mode={prev_mode!r}; resuming with "
+                f"{bnode_mode!r} would mix blank-node conventions — "
+                "use a fresh --out or --no-resume"
+            )
+    _commit_remainder(
+        spark, quads_tbl, with_prov_key(docs), "prov",
+        lambda todo: docs_to_quads(todo.drop("prov"), bnode_mode=bnode_mode),
+        resume=resume, stage="docs_to_quads", metrics={"bnode_mode": bnode_mode},
+    )
+    return quads_tbl.read(spark)
+
+
 def run_pipeline_snapshots(
     spark: SparkSession,
     pages: DataFrame,
@@ -269,14 +354,13 @@ def run_pipeline_snapshots(
     num_partitions: int | None = None,
     salt: bool = True,
 ) -> dict:
-    """The ``pipeline.run_pipeline`` stage graph with every stage committed
-    to a SnapshotTable: extract -> docs table, toRdf -> quads table, plus a
-    lineage table. A killed run restarts from the last committed snapshot
-    (anti-join on what it already holds), exactly once per input row; each
-    commit carries its stage's lineage metrics in the manifest."""
-    from .operators.extract import extract_docs, with_object_key
-    from .operators.triples import docs_to_quads, failures_by_host, quads_only
-    from .pipeline import with_prov_key
+    """pages -> ``<out_dir>/docs_tbl`` (``commit_docs``) -> ``quads_tbl``
+    (``commit_quads``), plus a ``lineage_tbl`` with one row per stage and
+    host: (stage, partition_key, urls_in, triples_out, parse_failures,
+    seconds). A killed run restarts from the last committed snapshot of
+    each table (anti-join on what it already holds), exactly once per input
+    row; ``harvest`` and ``release`` commit the same two tables."""
+    from .operators.triples import failures_by_host, quads_only
     from pyspark.sql import functions as F
 
     docs_tbl = SnapshotTable(os.path.join(out_dir, "docs_tbl"))
@@ -284,66 +368,38 @@ def run_pipeline_snapshots(
     lineage_tbl = SnapshotTable(os.path.join(out_dir, "lineage_tbl"))
 
     t0 = time.monotonic()
-    if docs_tbl.exists():
-        existing = docs_tbl.read(spark)
-        todo = pages.join(existing.select("url"), "url", "left_anti")
-        if not todo.isEmpty():
-            docs_new = with_object_key(
-                extract_docs(todo, num_partitions=num_partitions, salt=salt)
-            )
-            docs_tbl.commit(
-                docs_new,
-                operation="append",
-                stage="extract",
-                metrics={"seconds": round(time.monotonic() - t0, 3)},
-            )
-    else:
-        docs_new = with_object_key(
-            extract_docs(pages, num_partitions=num_partitions, salt=salt)
-        )
-        docs_tbl.commit(
-            docs_new,
-            operation="overwrite",
-            stage="extract",
-            metrics={"seconds": round(time.monotonic() - t0, 3)},
-        )
-    docs = docs_tbl.read(spark)
-
-    t1 = time.monotonic()
-    if quads_tbl.exists():
-        done_provs = quads_tbl.read(spark).select("prov").distinct()
-        todo_docs = (
-            with_prov_key(docs).join(done_provs, "prov", "left_anti").drop("prov")
-        )
-        if not todo_docs.isEmpty():
-            quads_tbl.commit(
-                docs_to_quads(todo_docs),
-                operation="append",
-                stage="docs_to_quads",
-                metrics={"seconds": round(time.monotonic() - t1, 3)},
-            )
-    else:
-        quads_tbl.commit(
-            docs_to_quads(docs),
-            operation="overwrite",
-            stage="docs_to_quads",
-            metrics={"seconds": round(time.monotonic() - t1, 3)},
-        )
-    raw_quads = quads_tbl.read(spark)
-
-    lineage = (
-        failures_by_host(raw_quads, stage="docs_to_quads")
-        .join(
-            docs.groupBy(F.col("host").alias("partition_key")).agg(
-                F.count("*").alias("urls_in")
-            ),
-            "partition_key",
-            "left",
-        )
+    docs = commit_docs(
+        spark, docs_tbl, pages, num_partitions=num_partitions, salt=salt
     )
-    # overwrite, not append: lineage is recomputed over ALL raw_quads each
-    # run, so appending would leave N duplicated copies after N resumes
-    lineage_tbl.commit(lineage, operation="overwrite", stage="lineage")
+    t1 = time.monotonic()
+    raw_quads = commit_quads(spark, quads_tbl, docs)
+    t2 = time.monotonic()
+
+    per_host = docs.groupBy(F.col("host").alias("partition_key")).agg(
+        F.count("*").alias("urls_in"),
+        F.count(F.when(F.col("error_code") != "", 1)).alias("parse_failures"),
+    )
+    extract_lineage = per_host.select(
+        F.lit("extract").alias("stage"),
+        "partition_key",
+        "urls_in",
+        F.lit(None).cast("long").alias("triples_out"),
+        "parse_failures",
+        F.lit(t1 - t0).alias("seconds"),
+    )
+    quads_lineage = (
+        failures_by_host(raw_quads, stage="docs_to_quads")
+        .join(per_host.select("partition_key", "urls_in"), "partition_key", "left")
+        .withColumn("seconds", F.lit(t2 - t1))
+        .select(*extract_lineage.columns)
+    )
+    # overwrite, not append: lineage is recomputed over the whole tables
+    # each run, so appending would leave N duplicated copies after N resumes
+    lineage_tbl.commit(
+        extract_lineage.unionByName(quads_lineage),
+        operation="overwrite",
+        stage="lineage",
+    )
 
     return {
         "docs": docs,

@@ -8,7 +8,7 @@ internal/opentelemetry/trace.go wraps each operation in
 has:
 
 * the DATA plane is already observable — per-partition lineage rows
-  (pipeline.run_pipeline), Observation-counted drops (dedup), the
+  (snapshots.run_pipeline_snapshots), Observation-counted drops (dedup), the
   ann_recall telemetry report, and Spark's own UI/event logs;
 * this module adds the CONTROL plane: driver-side spans around stage
   boundaries with the aggregate counts an operator alerts on.

@@ -30,9 +30,15 @@ def run_cli(args: list[str], timeout: int = 300) -> tuple[int, str]:
     return out.returncode, out.stdout
 
 
+def _last_json(text: str) -> dict:
+    return json.loads([l for l in text.splitlines() if l.startswith("{")][-1])
+
+
 @pytest.mark.slow
-def test_cli_lifecycle(spark, tmp_path):
+def test_cli_lifecycle(spark, tmp_path, capsys):
+    from nabu_spark.cli import main
     from nabu_spark.datagen import generate_mainstems, generate_pages
+    from nabu_spark.snapshots import SnapshotTable
 
     pages = str(tmp_path / "pages")
     run_dir = str(tmp_path / "run")
@@ -45,12 +51,26 @@ def test_cli_lifecycle(spark, tmp_path):
     # reference semantics: exit 3 when any site failed (the generator plants some)
     assert rc == (3 if payload["failed"] else 0)
 
+    # harvest commits <run>/docs_tbl, the layout the snap commands read
+    assert main(["snap", "history", "--out", run_dir, "--table", "docs"]) == 0
+    hist = _last_json(capsys.readouterr().out)["history"]
+    assert [h["version"] for h in hist] == [1]
+    # a second harvest over the same pages has nothing left to publish
+    assert main(["harvest", "--pages", pages, "--out", run_dir, "--no-salt"]) == rc
+    assert _last_json(capsys.readouterr().out)["sites"] == 80
+    assert SnapshotTable(os.path.join(run_dir, "docs_tbl")).latest_version() == 1
+
     rc, out = run_cli(
         ["release", "--docs", run_dir, "--out", run_dir, "--mainstems", str(tmp_path / "mainstems")]
     )
     assert rc == 0
     payload = json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
     assert payload["quads"] > 0
+    # the skolem quads_tbl refuses a resume under another blank-node mode
+    rc = main(["release", "--docs", run_dir, "--out", run_dir,
+               "--bnode-mode", "rdfc"])
+    assert rc != 0
+    assert "bnode_mode='skolem'" in _last_json(capsys.readouterr().out)["error"]
 
     dest = str(tmp_path / "pulled")
     rc, out = run_cli(["pull", "--release-dir", run_dir, "--dest", dest])
@@ -214,10 +234,14 @@ def test_cli_query(spark, tmp_path):
 
 @pytest.mark.slow
 def test_cli_store(spark, tmp_path):
+    from nabu_spark.graphstore import GraphStore
+
+    # a raw quads table: its failure row (null terms) is not a quad
     quads = spark.createDataFrame(
-        [("<urn:a>", "<urn:p>", '"1"', None),
-         ("<urn:b>", "<urn:p>", '"2"', "<urn:g1>")],
-        "subj string, pred string, obj string, prov string",
+        [("<urn:a>", "<urn:p>", '"1"', None, None),
+         ("<urn:b>", "<urn:p>", '"2"', "<urn:g1>", None),
+         (None, None, None, "<urn:iow:summoned:x:eA==.jsonld>", "no_jsonld")],
+        "subj string, pred string, obj string, prov string, error_code string",
     )
     qpath = str(tmp_path / "quads")
     quads.write.parquet(qpath)
@@ -227,6 +251,9 @@ def test_cli_store(spark, tmp_path):
                             "--quads", qpath])
     assert code == 0, stdout
     assert json.loads(stdout.strip().splitlines()[-1])["version"] == 1
+    loaded = {tuple(r) for r in GraphStore(spark, store).read().collect()}
+    assert loaded == {("<urn:a>", "<urn:p>", '"1"', None),
+                      ("<urn:b>", "<urn:p>", '"2"', "<urn:g1>")}
 
     ru = tmp_path / "u.ru"
     ru.write_text('DELETE DATA { <urn:a> <urn:p> "1" } ; '

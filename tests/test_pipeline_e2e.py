@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from nabu_spark.datagen import generate_pages, page_for
 from nabu_spark.operators.extract import extract_docs, with_object_key
 from nabu_spark.operators.triples import doc_to_quads
-from nabu_spark.pipeline import pages_to_quads_fused, run_pipeline
+from nabu_spark.pipeline import pages_to_quads_fused
 
 N = 200
 
@@ -74,24 +74,6 @@ def test_quads_match_local_oracle(spark, pages):
         assert err == ""
         expected.update(qs)
     assert got == expected
-
-
-def test_checkpoint_resume(spark, tmp_path):
-    out = str(tmp_path / "run")
-    pages = generate_pages(spark, 60).cache()
-    r1 = run_pipeline(spark, pages, out, salt=False)
-    n1 = r1["quads"].count()
-    assert n1 > 0
-    # resume with the same input: nothing reprocessed, same result
-    r2 = run_pipeline(spark, pages, out, salt=False)
-    assert r2["quads"].count() == n1
-    # resume with a superset: only the delta is appended
-    more = generate_pages(spark, 90)
-    r3 = run_pipeline(spark, more, out, salt=False)
-    n3 = r3["quads"].count()
-    assert n3 > n1
-    full = run_pipeline(spark, more, str(tmp_path / "fresh"), salt=False)
-    assert n3 == full["quads"].count()
 
 
 def test_lineage_counts(spark, pages):

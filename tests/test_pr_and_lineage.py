@@ -14,7 +14,8 @@ from nabu_spark.functions.skolem import skolemize_terms
 from nabu_spark.functions.urn import make_urn, object_key
 from nabu_spark.operators.extract import extract_docs, with_object_key
 from nabu_spark.operators.triples import doc_to_quads
-from nabu_spark.pipeline import pages_to_quads_fused, run_pipeline
+from nabu_spark.pipeline import pages_to_quads_fused
+from nabu_spark.snapshots import run_pipeline_snapshots
 
 from .conftest import needs_reference, reference_path
 
@@ -99,7 +100,7 @@ def test_pr_vs_single_process_oracle(spark):
 
 def test_lineage_schema_and_reconciliation(spark, tmp_path):
     pages = generate_pages(spark, 80).cache()
-    res = run_pipeline(spark, pages, str(tmp_path / "run"), salt=False)
+    res = run_pipeline_snapshots(spark, pages, str(tmp_path / "run"), salt=False)
     lin = res["lineage"].cache()
     assert set(lin.columns) == {
         "stage", "partition_key", "urls_in", "triples_out", "parse_failures", "seconds",

@@ -5,6 +5,7 @@ per-graph operator."""
 from __future__ import annotations
 
 import random
+import uuid
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -305,21 +306,58 @@ class TestRdfcLabelScoping:
 
 
 class TestResumeModeGuard:
-    def test_resume_with_changed_mode_raises(self, spark, tmp_path):
-        import pytest as _pytest
+    DOC = ('{"@context": {"name": "https://schema.org/name"},'
+           ' "name": "thing"}')
 
-        from nabu_spark.pipeline import run_quads_stage
-
-        doc = ('{"@context": {"name": "https://schema.org/name"},'
-               ' "name": "thing"}')
-        docs = spark.createDataFrame(
-            [("u", "h", "sm", "summoned/sm/k", doc, None)],
+    def _docs(self, spark):
+        return spark.createDataFrame(
+            [("u", "h", "sm", "summoned/sm/k", self.DOC, None)],
             "url string, host string, sitemap_id string, obj_key string, "
             "doc string, error_code string",
         )
-        out = str(tmp_path / "rel")
-        run_quads_stage(spark, docs, out, resume=True)
-        with _pytest.raises(ValueError, match="bnode_mode"):
-            run_quads_stage(spark, docs, out, resume=True, bnode_mode="rdfc")
-        # same mode resumes fine
-        run_quads_stage(spark, docs, out, resume=True)
+
+    @staticmethod
+    def _refused(spark, tbl, docs, mode):
+        """The stage refuses ``mode``, and refuses it before any Spark job."""
+        from nabu_spark.snapshots import commit_quads
+
+        sc = spark.sparkContext
+        group = f"mode-guard-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bnode_mode refusal")
+        try:
+            with pytest.raises(ValueError, match="bnode_mode"):
+                commit_quads(spark, tbl, docs, bnode_mode=mode)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    def test_resume_with_changed_mode_raises(self, spark, tmp_path):
+        from nabu_spark.snapshots import SnapshotTable, commit_quads
+
+        docs = self._docs(spark)
+        tbl = SnapshotTable(str(tmp_path / "quads_tbl"))
+        commit_quads(spark, tbl, docs)
+        assert tbl.manifest()["metrics"]["bnode_mode"] == "skolem"
+        self._refused(spark, tbl, docs, "rdfc")
+        # same mode resumes fine, and has nothing left to commit
+        commit_quads(spark, tbl, docs)
+        assert tbl.latest_version() == 1
+        # --no-resume overwrites under the new mode, and the manifest's
+        # recorded mode is what the next resume is checked against
+        commit_quads(spark, tbl, docs, resume=False, bnode_mode="rdfc")
+        assert tbl.manifest()["metrics"]["bnode_mode"] == "rdfc"
+        self._refused(spark, tbl, docs, "skolem")
+        commit_quads(spark, tbl, docs, bnode_mode="rdfc")
+        assert tbl.latest_version() == 2
+
+    def test_unrecorded_mode_is_skolem(self, spark, tmp_path):
+        from nabu_spark.operators.triples import docs_to_quads
+        from nabu_spark.snapshots import SnapshotTable, commit_quads
+
+        docs = self._docs(spark)
+        tbl = SnapshotTable(str(tmp_path / "quads_tbl"))
+        tbl.commit(docs_to_quads(docs), operation="overwrite",
+                   stage="docs_to_quads", metrics={"seconds": 0.1})
+        self._refused(spark, tbl, docs, "raw")
+        commit_quads(spark, tbl, docs)
+        assert tbl.latest_version() == 1

@@ -10,6 +10,9 @@ assignments or imports. A reached definition reaches every name its own
 body uses, and a name bound by ``import x as y`` reaches ``x``.
 Names are matched without their module, so a name shared by two modules
 reaches both: the closure can only over-approximate what runs.
+
+Every module-level import of a package module is used by that module, or
+named in its ``__all__``, or imported from it by another file.
 """
 
 from __future__ import annotations
@@ -36,7 +39,6 @@ ALLOWED = {
     "nabu_spark/evaluation.py::quads_pr": ORACLE + " (quad-set precision/recall)",
     "nabu_spark/evaluation.py::triple_pr": ORACLE + " (quad-set precision/recall)",
     "nabu_spark/functions/jsonld.py::jsonld_to_triples": ORACLE + " (JSON-LD toRdf)",
-    "nabu_spark/pipeline.py::run_pipeline": ORACLE + " (staged == fused pipeline)",
     # generators
     "nabu_spark/datagen.py::generate_mainstems": GENERATOR,
     "nabu_spark/datagen.py::generate_known_iris": GENERATOR,
@@ -174,3 +176,47 @@ def test_allowlist_is_current():
     stale entry."""
     stale = sorted(set(ALLOWED) - set(unreached()))
     assert not stale, f"stale allowlist entries: {stale}"
+
+
+def _module(path: pathlib.Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_names() -> set[tuple[str, str]]:
+    """``(module, name)`` for every ``from module import name`` in the
+    package, the tests and the roots, relative imports resolved."""
+    out: set[tuple[str, str]] = set()
+    for path in {*PKG.rglob("*.py"), *(REPO / "tests").rglob("*.py"), *_roots()}:
+        pkg = _module(path).split(".")
+        if path.name != "__init__.py":
+            pkg = pkg[:-1]
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.ImportFrom):
+                base = pkg[: len(pkg) - n.level + 1] if n.level else []
+                src = ".".join(base + ([n.module] if n.module else []))
+                out.update((src, a.name) for a in n.names)
+    return out
+
+
+def test_no_unused_module_imports():
+    imported = _imported_names()
+    unused = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for st in tree.body:
+            if isinstance(st, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in st.targets
+            ):
+                used |= {e.value for e in st.value.elts}
+        for st in tree.body:
+            if not isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(st, ast.ImportFrom) and st.module == "__future__":
+                continue
+            for a in st.names:
+                name = (a.asname or a.name).split(".")[0]
+                if name not in used and (_module(path), name) not in imported:
+                    unused.append(f"{path.relative_to(REPO)}:{st.lineno} {name}")
+    assert not unused, f"module-level imports nothing uses: {unused}"

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nabu_spark.datagen import page_for
+from nabu_spark.snapshots import SnapshotTable
 from nabu_spark.sources.warc import (
     _gunzip_members,
     iter_warc_records,
@@ -107,7 +108,7 @@ class TestWarcCli:
             capture_output=True, text=True, timeout=300, cwd="/root/repo",
         )
         assert res.returncode in (0, 3), res.stderr[-2000:]
-        docs = spark.read.parquet(f"{out}/docs")
+        docs = SnapshotTable(f"{out}/docs_tbl").read(spark)
         assert docs.count() == 80
 
 
