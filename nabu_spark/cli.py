@@ -523,8 +523,6 @@ def _dispatch(args) -> int:
         return 1 if (args.exit_on_failure and fails) else 0
 
     if args.cmd == "link":
-        from .operators.entitylink import link_and_canonicalize
-
         quads = _read_quads(spark, args.quads)
         from .operators.entitylink import extract_mentions, link_mentions, same_as_quads
 

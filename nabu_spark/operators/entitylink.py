@@ -345,17 +345,3 @@ def same_as_quads(linked: DataFrame, quads: DataFrame) -> DataFrame:
         )
     )
 
-
-def link_and_canonicalize(
-    quads: DataFrame, known_iris: DataFrame, *, threshold: float = 0.5
-) -> dict:
-    """Full entity-linking pass over a quads table: returns the mapping table
-    and the graph with owl:sameAs edges appended."""
-    mentions = extract_mentions(quads)
-    linked = link_mentions(mentions, known_iris, threshold=threshold)
-    sameas = same_as_quads(linked, quads)
-    return {
-        "linked": linked,
-        "same_as": sameas,
-        "quads_with_links": quads.unionByName(sameas),
-    }

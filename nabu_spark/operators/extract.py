@@ -4,12 +4,13 @@ Input table (BASELINE.json input_hint):
     pages(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
 
 Output:
-    docs(url, host, sitemap_id, obj_key, doc, error_code, text_match)
+    docs(url, host, sitemap_id, doc, error_code, text_match, obj_key)
 
 Spark design notes:
   * the extraction kernel (byte-identical invariant,
     /root/reference/internal/crawl/helpers.go:53-71) runs inside a single
-    ``mapInPandas`` pass — Arrow batches, no per-row Python;
+    ``mapInArrow`` pass: Arrow columns in and out, the page columns passed
+    through untouched;
   * mega-host skew is handled *before* the UDF with salted repartitioning on
     url-host: per-host counts drive the salt fan-out, so one hot host spreads
     over many tasks while cold hosts stay on one (SURVEY.md §4 north rule);
@@ -19,23 +20,9 @@ Spark design notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.html_extract import OK, extract_document
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("sitemap_id", T.StringType()),
-        T.StructField("doc", T.StringType()),
-        T.StructField("error_code", T.StringType()),
-        T.StructField("text_match", T.BooleanType()),
-    ]
-)
 
 
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -105,61 +92,86 @@ def salted_repartition(
     return salted
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        htmls = pdf["html"]
-        texts = pdf["text"] if "text" in pdf else pd.Series([None] * len(pdf))
-        docs, errors, matches = [], [], []
-        for body, expected in zip(htmls, texts):
-            if isinstance(body, memoryview):
-                body = bytes(body)
+DOCS_DDL = (
+    "url string, host string, sitemap_id string, doc string, "
+    "error_code string, text_match boolean, obj_key string"
+)
+
+
+def keyed_pages(pages: DataFrame, *, salt: bool) -> DataFrame:
+    """The prelude of every page path (``extract_docs`` and
+    ``pipeline.pages_to_quads_fused``): ``with_sitemap_id``, then
+    ``with_object_key`` (null for a null url), then either a salted
+    repartition on host or a coalesce to the core count.
+
+    Extraction is per-row CPU, so without ``salt`` its parallelism comes
+    from the table's input splits (``spark.sql.files.maxPartitionBytes``),
+    not from a repartition: shuffling the html column costs more than the
+    whole extraction (measured 10x the UDF time at local[32]). Fewer, larger
+    map tasks still pay off (guide §2.2/§6): every scan task pays a
+    JVM->Python worker handshake and Arrow stream setup, so a
+    many-small-files corpus (256 one-file splits) spent more wall time on
+    per-task boundary overhead than on extraction (3.7 s -> 2.0 s at 200k
+    pages). A coalesce merges adjacent splits with no shuffle and never
+    raises the count, so no split-count probe decides whether to add it."""
+    df = with_object_key(with_sitemap_id(pages))
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return salted_repartition(df, n) if salt else df.coalesce(n)
+
+
+def _extract(batches):
+    import pyarrow as pa
+
+    for rb in batches:
+        docs, errs, matches = [], [], []
+        for body, expected in zip(
+            rb.column("html").to_pylist(), rb.column("text").to_pylist()
+        ):
             doc, err = extract_document(body)
-            docs.append(doc if err == OK else "")
-            errors.append(err)
-            matches.append(bool(err == OK and expected is not None and doc == expected))
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "host": pdf["host"],
-                "sitemap_id": pdf["sitemap_id"],
-                "doc": docs,
-                "error_code": errors,
-                "text_match": matches,
-            }
+            ok = err == OK
+            docs.append(doc if ok else "")
+            errs.append(err)
+            matches.append(ok and doc == expected)
+        yield pa.RecordBatch.from_arrays(
+            [
+                rb.column("url"),
+                rb.column("host"),
+                rb.column("sitemap_id"),
+                pa.array(docs, type=pa.string()),
+                pa.array(errs, type=pa.string()),
+                pa.array(matches, type=pa.bool_()),
+                rb.column("obj_key"),
+            ],
+            ["url", "host", "sitemap_id", "doc", "error_code", "text_match", "obj_key"],
         )
 
 
-def extract_docs(
-    pages: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    sitemap_col: str | None = None,
-    salt: bool = True,
-) -> DataFrame:
-    """pages -> docs. ``sitemap_id`` defaults to the url-host (the grouping
-    key of the offline corpus); pass ``sitemap_col`` to use a real dimension.
-    """
-    if sitemap_col:
-        df = with_host(pages).withColumn("sitemap_id", F.col(sitemap_col))
-    else:
-        df = with_sitemap_id(pages)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if salt:
-        df = salted_repartition(df, n)
-    df = df.select("url", "host", "sitemap_id", "html", "text")
-    return df.mapInPandas(_extract_batches, DOCS_SCHEMA)
+def extract_docs(pages: DataFrame, *, salt: bool = True) -> DataFrame:
+    """pages -> docs(url, host, sitemap_id, doc, error_code, text_match,
+    obj_key): one ``mapInArrow`` pass after ``keyed_pages``. A failed page
+    keeps ``doc = ""`` and its extraction ``error_code``; ``text_match`` says
+    whether an extracted doc equals the page's expected ``text``."""
+    df = keyed_pages(pages, salt=salt).select(
+        "host", "url", "sitemap_id", "obj_key", "html", "text"
+    )
+    return df.mapInArrow(_extract, DOCS_DDL)
 
 
 def with_object_key(docs: DataFrame) -> DataFrame:
     """obj_key = summoned/{sitemap_id}/{base64(url)}.jsonld — pure column
-    expression (sitemap.go:144-149 semantics), stays in codegen."""
+    expression (sitemap.go:144-149 semantics), stays in codegen; null when
+    the url is. ``translate`` drops the CRLF that Spark's MIME-style
+    ``base64`` inserts every 76 characters under
+    ``spark.sql.chunkBase64String.enabled`` (on by default in Spark 4.1):
+    the key is one unbroken standard-base64 string, as ``urn.object_key``
+    computes it, whatever the setting."""
     return docs.withColumn(
         "obj_key",
         F.concat(
             F.lit("summoned/"),
             F.col("sitemap_id"),
             F.lit("/"),
-            F.base64(F.col("url").cast("binary")),
+            F.translate(F.base64(F.col("url").cast("binary")), "\r\n", ""),
             F.lit(".jsonld"),
         ),
     )

@@ -38,7 +38,6 @@ import shutil
 import uuid
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
@@ -201,8 +200,9 @@ class _GraphFile:
 
 
 def _runs(batches):
-    """``(release_name, lines)`` per run of equal names in ``(release_name,
-    line)`` batches sorted by name; the run boundaries come from Arrow."""
+    """``(release_name, values)`` per run of equal names in ``(release_name,
+    value)`` batches sorted by name (release lines, or graph file contents);
+    the run boundaries come from Arrow."""
     for batch in batches:
         runs = pc.run_end_encode(batch.column(0))
         start = 0
@@ -354,26 +354,20 @@ def pull_release_graphs(
         F.col("release_name").isin(list(names))
     )
 
-    def write_groups(it):
-        cur, fh, done = None, None, []
-        for pdf in it:
-            for name, content in zip(pdf["release_name"], pdf["content"]):
-                if name != cur:
-                    if fh is not None:
-                        fh.close()
-                        done.append(cur)
-                    fh = open(os.path.join(dest_dir, name), "wb")
-                    cur = name
-                fh.write(content)
-        if fh is not None:
-            fh.close()
-            done.append(cur)
-        yield pd.DataFrame({"release_name": pd.Series(done, dtype="object")})
+    def write_groups(batches):
+        done = []
+        for name, runs in itertools.groupby(_runs(batches), key=lambda run: run[0]):
+            with open(os.path.join(dest_dir, name), "wb") as fh:
+                for _, run in runs:
+                    fh.writelines(run.to_pylist())
+            done.append(name)
+        yield pa.RecordBatch.from_arrays([pa.array(done, pa.string())], ["release_name"])
 
     written = (
         files.repartition(F.col("release_name"))
         .sortWithinPartitions("release_name", "path")
-        .mapInPandas(write_groups, "release_name string")
+        .select("release_name", "content")
+        .mapInArrow(write_groups, "release_name string")
         .collect()
     )
     return len(written)
@@ -391,19 +385,18 @@ def concat_release_file(
         F.col("release_name").isin(list(names)) if names else F.lit(False)
     )
 
-    def write_all(it):
+    def write_all(batches):
         seen: set[str] = set()
         with open(concat_path, "wb") as out:
-            for pdf in it:
-                for name, content in zip(pdf["release_name"], pdf["content"]):
-                    out.write(content)
-                    seen.add(name)
-        yield pd.DataFrame({"graphs": [len(seen)]})
+            for rb in batches:
+                out.writelines(rb.column("content").to_pylist())
+                seen.update(rb.column("release_name").to_pylist())
+        yield pa.RecordBatch.from_arrays([pa.array([len(seen)], pa.int64())], ["graphs"])
 
     rows = (
         files.repartition(1)
         .sortWithinPartitions("release_name", "path")
-        .mapInPandas(write_all, "graphs long")
+        .mapInArrow(write_all, "graphs long")
         .collect()
     )
     return rows[0]["graphs"] if rows else 0

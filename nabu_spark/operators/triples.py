@@ -10,7 +10,9 @@ path, /root/reference/internal/synchronizer/client_release_graphs.go:100-159):
 All doc-local, so the whole chain runs in ONE ``mapInArrow`` pass — no
 shuffle between steps; blank nodes never cross documents. ``emit_quads`` is
 that pass for every path (fused pages, staged docs, microdata/RDFa pages):
-each caller hands it only a per-document function. Failed docs emit a single
+each caller hands it only a per-document function. ``per_doc`` is the
+docs -> quads step of one document, on the staged path and (after
+``extract_document``) on the fused one. Failed docs emit a single
 row with null subj, ``prov = _failed_prov(obj_key)`` and an error_code, so
 lineage falls out of a cheap aggregation over the same output, with no
 second UDF pass.
@@ -18,6 +20,7 @@ second UDF pass.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 
@@ -233,13 +236,26 @@ def emit_quads(df: DataFrame, per_doc, *arg_cols: str) -> DataFrame:
     )
 
 
+def per_doc(doc_text, obj_key, upstream_err, bnode_mode: str = "skolem"):
+    """The quads stage of one document, as ``emit_quads`` expects it:
+    ``(quads, error_code, obj_key)``. A doc without an ``obj_key`` fails as
+    ``invalid_url``; an upstream ``error_code`` passes through; otherwise the
+    doc gets its ``doc_to_quads`` result, relabelled for ``bnode_mode``
+    'rdfc'."""
+    if obj_key is None:
+        return [], "invalid_url", None
+    if upstream_err:
+        return [], upstream_err, obj_key
+    quads, err, _ = doc_to_quads(doc_text, obj_key, skolemize=bnode_mode == "skolem")
+    if not err and bnode_mode == "rdfc":
+        quads, err = _relabel_rdfc(quads, obj_key)
+    return quads, err, obj_key
+
+
 def docs_to_quads(docs_with_key: DataFrame, *, bnode_mode: str = "skolem") -> DataFrame:
     """docs(url, host, sitemap_id, obj_key, doc, error_code) -> quads rows
-    (subj, pred, obj, prov, host, error_code), through ``emit_quads``.
-
-    A doc without an ``obj_key`` fails as ``invalid_url``; an upstream
-    ``error_code`` passes through; a doc that fails here gets its
-    ``doc_to_quads`` code. Each failed doc is ONE row with null
+    (subj, pred, obj, prov, host, error_code): ``per_doc`` of every doc,
+    through ``emit_quads``. Each failed doc is ONE row with null
     subj/pred/obj and ``prov = _failed_prov(obj_key)`` — the value
     ``pipeline.with_prov_key`` derives, so a resume anti-join skips recorded
     failures too.
@@ -251,20 +267,10 @@ def docs_to_quads(docs_with_key: DataFrame, *, bnode_mode: str = "skolem") -> Da
     single-object-release skip; caller owns cross-doc label collisions)."""
     if bnode_mode not in ("skolem", "rdfc", "raw"):
         raise ValueError(f"unknown bnode_mode {bnode_mode!r}")
-    skolemize = bnode_mode == "skolem"
-    rdfc = bnode_mode == "rdfc"
-
-    def per_doc(doc_text, obj_key, upstream_err):
-        if obj_key is None:
-            return [], "invalid_url", None
-        if upstream_err:
-            return [], upstream_err, obj_key
-        quads, err, _ = doc_to_quads(doc_text, obj_key, skolemize=skolemize)
-        if not err and rdfc:
-            quads, err = _relabel_rdfc(quads, obj_key)
-        return quads, err, obj_key
-
-    return emit_quads(docs_with_key, per_doc, "doc", "obj_key", "error_code")
+    return emit_quads(
+        docs_with_key, functools.partial(per_doc, bnode_mode=bnode_mode),
+        "doc", "obj_key", "error_code",
+    )
 
 
 def quads_only(quads: DataFrame) -> DataFrame:

@@ -49,23 +49,28 @@ class SnapshotTable:
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.manifest_dir = os.path.join(root, "snapshots")
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.manifest_dir, exist_ok=True)
 
     # --- manifest plumbing ---------------------------------------------------
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.manifest_dir, f"v{version:06d}.json")
 
-    def latest_version(self) -> int | None:
+    def _versions(self) -> list[int]:
+        """Every published version; none when the table was never
+        committed (its directories are made by the first commit, so a read
+        of a missing table leaves nothing behind)."""
+        if not os.path.isdir(self.manifest_dir):
+            return []
         # int(name[1:-5]) — strip 'v' and '.json' — so versions beyond the
         # %06d-formatted width (>= 1000000) still resolve correctly
-        versions = [
+        return [
             int(name[1:-5])
             for name in os.listdir(self.manifest_dir)
             if name.startswith("v") and name.endswith(".json")
         ]
-        return max(versions) if versions else None
+
+    def latest_version(self) -> int | None:
+        return max(self._versions(), default=None)
 
     def manifest(self, version: int | None = None) -> dict | None:
         if version is None:
@@ -102,6 +107,7 @@ class SnapshotTable:
         hard-link creation (fails if the version exists — the optimistic
         concurrency point). On collision, re-resolve the head, reparent,
         and retry."""
+        os.makedirs(self.manifest_dir, exist_ok=True)
         for _ in range(max_retries):
             head = self.latest_version()
             version = (head or 0) + 1 if head is not None else 1
@@ -229,13 +235,10 @@ class SnapshotTable:
         freshly written snap-<uuid> dir is unreferenced only for the window
         between its parquet write and its manifest publish, so an age gate
         keeps vacuum safe to run beside live commits."""
+        if not os.path.isdir(self.data_dir):
+            return []
         referenced: set[str] = set()
-        all_versions = [
-            int(name[1:-5])
-            for name in os.listdir(self.manifest_dir)
-            if name.startswith("v") and name.endswith(".json")
-        ]
-        for v in all_versions:
+        for v in self._versions():
             for f in self.manifest(v)["files"]:
                 referenced.add(os.path.dirname(f))
         removed = []
@@ -288,22 +291,17 @@ def commit_docs(
     pages: DataFrame,
     *,
     resume: bool = True,
-    num_partitions: int | None = None,
     salt: bool = True,
     extract: bool = True,
 ) -> DataFrame:
-    """Docs stage: extract the pages whose ``url`` the docs table does not
-    hold yet (``extract_docs`` + ``with_object_key``) and commit them;
-    returns the committed docs table. ``extract=False`` takes ``pages`` as
-    docs rows already (the bulk NDJSON source)."""
-    from .operators.extract import extract_docs, with_object_key
+    """Docs stage: extract (``extract_docs``) the pages whose ``url`` the
+    docs table does not hold yet and commit them; returns the committed docs
+    table. ``extract=False`` takes ``pages`` as docs rows already (the bulk
+    NDJSON source)."""
+    from .operators.extract import extract_docs
 
     def build(todo: DataFrame) -> DataFrame:
-        if not extract:
-            return todo
-        return with_object_key(
-            extract_docs(todo, num_partitions=num_partitions, salt=salt)
-        )
+        return extract_docs(todo, salt=salt) if extract else todo
 
     _commit_remainder(
         spark, docs_tbl, pages, "url", build,
@@ -351,7 +349,6 @@ def run_pipeline_snapshots(
     pages: DataFrame,
     out_dir: str,
     *,
-    num_partitions: int | None = None,
     salt: bool = True,
 ) -> dict:
     """pages -> ``<out_dir>/docs_tbl`` (``commit_docs``) -> ``quads_tbl``
@@ -368,9 +365,7 @@ def run_pipeline_snapshots(
     lineage_tbl = SnapshotTable(os.path.join(out_dir, "lineage_tbl"))
 
     t0 = time.monotonic()
-    docs = commit_docs(
-        spark, docs_tbl, pages, num_partitions=num_partitions, salt=salt
-    )
+    docs = commit_docs(spark, docs_tbl, pages, salt=salt)
     t1 = time.monotonic()
     raw_quads = commit_quads(spark, quads_tbl, docs)
     t2 = time.monotonic()

@@ -4,12 +4,14 @@ Reference semantics: the bulk harvester reads NDJSON docs from a container's
 stdout and keys each by ``base64(@id)``
 (/root/reference/internal/crawl/sitemap_bulk.go:32-313, key at :192-200).
 Here the stream is any text path (the distributed analogue of stdout) and the
-key derivation is a JVM-side column expression.
+key derivation is the page paths' JVM-side ``with_object_key``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..operators.extract import with_object_key
 
 
 def read_bulk_ndjson(spark: SparkSession, path: str, sitemap_id: str) -> DataFrame:
@@ -28,16 +30,7 @@ def read_bulk_ndjson(spark: SparkSession, path: str, sitemap_id: str) -> DataFra
             "error_code"
         ),
     )
-    return docs.withColumn(
-        "obj_key",
-        F.when(
-            F.col("error_code") == "",
-            F.concat(
-                F.lit("summoned/"),
-                F.col("sitemap_id"),
-                F.lit("/"),
-                F.base64(F.col("url").cast("binary")),
-                F.lit(".jsonld"),
-            ),
-        ),
+    # a doc without an @id has no key
+    return with_object_key(docs).withColumn(
+        "obj_key", F.when(F.col("error_code") == "", F.col("obj_key"))
     )

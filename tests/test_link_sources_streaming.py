@@ -11,8 +11,9 @@ from nabu_spark.datagen import generate_known_iris, generate_pages
 from nabu_spark.operators.entitylink import (
     DictionaryIndex,
     extract_mentions,
-    link_and_canonicalize,
+    link_mentions,
     normalize_mention,
+    same_as_quads,
 )
 from nabu_spark.operators.extract import extract_docs, with_object_key
 from nabu_spark.operators.triples import docs_to_quads, quads_only
@@ -52,19 +53,18 @@ class TestEntityLinking:
 
     def test_link_and_canonicalize(self, spark, quads):
         known = generate_known_iris(spark, 200)
-        res = link_and_canonicalize(quads, known)
-        linked = res["linked"].cache()
+        linked = link_mentions(extract_mentions(quads), known, threshold=0.5).cache()
         hits = linked.filter(F.col("iri").isNotNull())
         assert hits.count() > 0
         methods = {r["method"] for r in hits.select("method").distinct().collect()}
         assert "exact" in methods
-        sameas = res["same_as"].cache()
+        sameas = same_as_quads(linked, quads).cache()
         assert sameas.count() == hits.count()
         row = sameas.first()
         assert row["pred"] == "<http://www.w3.org/2002/07/owl#sameAs>"
         assert row["prov"].startswith("<urn:iow:")
         # appended graph contains both original and link edges
-        assert res["quads_with_links"].count() == quads.count() + sameas.count()
+        assert quads.unionByName(sameas).count() == quads.count() + sameas.count()
 
     def test_mentions_extracted(self, spark, quads):
         m = extract_mentions(quads)

@@ -76,10 +76,12 @@ class TestShuffleShape:
         assert splits == files
         assert parts == min(splits, spark.sparkContext.defaultParallelism)
 
-    @pytest.mark.parametrize("path", ["staged", "structured"])
+    @pytest.mark.parametrize("path", ["staged", "structured", "docs"])
     def test_quad_paths_are_one_arrow_pass(self, spark, pages_path, path):
-        """The staged and microdata paths run the fused path's emitter: one
-        MapInArrow, no pandas UDF, no shuffle."""
+        """The staged and microdata paths run the fused path's emitter, and
+        the docs stage its own Arrow loop: one MapInArrow, no pandas UDF, no
+        shuffle."""
+        from nabu_spark.operators.extract import extract_docs
         from nabu_spark.operators.structured_extract import pages_to_structured_quads
         from nabu_spark.operators.triples import docs_to_quads
 
@@ -90,6 +92,8 @@ class TestShuffleShape:
                 "url", F.col("lang").alias("host"), F.col("text").alias("doc"),
                 F.lit("").alias("error_code"), F.col("url").alias("obj_key"))
             q = docs_to_quads(docs)
+        elif path == "docs":
+            q = extract_docs(pages, salt=False)
         else:
             q = pages_to_structured_quads(pages)
         plan = plan_of(q)

@@ -38,7 +38,7 @@ def test_pr_vs_reference_golden_is_perfect(spark):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     # force the reference's sitemap id for prov parity
-    from nabu_spark.operators.extract import DOCS_SCHEMA, extract_docs
+    from nabu_spark.operators.extract import extract_docs
 
     docs = extract_docs(pages, salt=False).withColumn(
         "sitemap_id", F.lit("iow_wqp_stations__5")

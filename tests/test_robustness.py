@@ -70,6 +70,22 @@ def test_fused_and_staged_agree_including_failure_rows(spark, hostile_pages):
         tuple(r[c] for c in _ROW) for r in staged)
 
 
+def test_long_url_keys_are_unbroken_base64(spark):
+    """obj_key is one unbroken standard-base64 string on both page paths,
+    as ``urn.object_key`` computes it, for a url whose base64 passes 76
+    characters (where Spark's base64 may break its output with CRLF)."""
+    from nabu_spark.functions.urn import make_urn, object_key
+
+    url = "https://long.example.org/" + "\u00fc" * 40 + "/station?id=" + "9" * 80
+    pages = spark.createDataFrame([(url, None, GOOD_DOC, None, "en")], PAGES_DDL)
+    want = object_key("long_example_org", url)
+    keyed = with_object_key(pages.withColumn("sitemap_id", F.lit("long_example_org")))
+    assert keyed.first()["obj_key"] == want
+    assert extract_docs(pages, salt=False).first()["obj_key"] == want
+    provs = {r["prov"] for r in pages_to_quads_fused(pages, salt=False).collect()}
+    assert provs == {"<" + make_urn(want) + ">"}
+
+
 def test_structured_failure_row_carries_prov(spark):
     from nabu_spark.functions.urn import object_key
     from nabu_spark.operators.structured_extract import pages_to_structured_quads

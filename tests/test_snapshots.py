@@ -140,6 +140,25 @@ class TestSnapshotTable:
         with pytest.raises(FileNotFoundError):
             tbl.read(spark)
 
+    def test_reading_a_missing_table_creates_nothing(self, tmp_path):
+        """A never-committed table reads as "no snapshot" and leaves no
+        directory behind (a leftover one passes for a snapshot table); the
+        first commit makes the layout. Spark-free: the commit is a pyarrow
+        table."""
+        import pyarrow as pa
+
+        root = tmp_path / "missing" / "docs_tbl"
+        tbl = SnapshotTable(str(root))
+        with pytest.raises(FileNotFoundError):
+            tbl.files()
+        assert tbl.latest_version() is None and tbl.manifest() is None
+        assert tbl.history() == [] and tbl.vacuum() == []
+        assert not tbl.exists()
+        assert not (tmp_path / "missing").exists()
+        assert tbl.commit(pa.table({"id": pa.array([1], pa.int64())})) == 1
+        assert sorted(os.listdir(root)) == ["data", "snapshots"]
+        assert tbl.manifest()["row_count"] == 1
+
     def test_manifest_is_valid_json_with_exact_files(self, spark, tbl):
         tbl.commit(_df(spark, 0, 4), operation="overwrite")
         with open(tbl._manifest_path(1)) as fh:
