@@ -77,9 +77,13 @@ from .sparql import (
     _LocalEval,
     _Parser,
 )
+from .session import bounded_collect, capped
 from .telemetry import maybe_span
 
 QUAD_COLS = ("subj", "pred", "obj", "prov")
+# entail()'s driver fast-path cap, in raw log rows and in window rows
+# (nabu_spark.session.driver_cap overrides it)
+_ENTAIL_DRIVER_CAP = 100_000
 # the delta log's one physical row shape: every writer emits it (__seq is
 # long, never int32) and every raw read passes it instead of inferring one
 RAW_SCHEMA = T.StructType(
@@ -847,8 +851,7 @@ class GraphStore:
         return self.update(f"LOAD <file://{path}>{into}")
 
     def entail(self, graph: str = "<urn:nabu:inference>",
-               profile: str = "rdfs", incremental: bool = False,
-               driver_fast_max: int = 100_000) -> int:
+               profile: str = "rdfs", incremental: bool = False) -> int:
         """Materialize the entailment closure (operators/reasoner.py) of
         the merged store into ``graph``: the inference graph is REPLACED
         with exactly the derived-but-not-asserted triples, committed as
@@ -878,20 +881,19 @@ class GraphStore:
         if profile not in ("rdfs", "owl-rl"):
             raise ValueError(f"unknown entailment profile {profile!r}")
         if incremental and profile == "rdfs":
-            v = self._entail_incremental(graph, driver_fast_max)
+            v = self._entail_incremental(graph)
             if v is not None:
                 return v
         # bounded driver fast path (same economics as the reasoner's own
-        # fast paths): a store within ``driver_fast_max`` merged quads closes
-        # through the exact in-memory twin and the whole delta (closure,
-        # anti-join, old-inference diff) is ONE collect + ONE commit instead
-        # of ~6 shuffle-heavy jobs. Semantics are set-for-set the
-        # distributed plan below (agreement pinned in tests); pass 0 to
-        # force the distributed plan.
-        if driver_fast_max:
-            quads = self._collect_merged(driver_fast_max)
-            if quads is not None:
-                return self._entail_local(quads, graph, profile)
+        # fast paths): a store within ``_ENTAIL_DRIVER_CAP`` raw log rows
+        # closes through the exact in-memory twin and the whole delta
+        # (closure, anti-join, old-inference diff) is ONE collect + ONE
+        # commit instead of ~6 shuffle-heavy jobs. Semantics are set-for-set
+        # the distributed plan below (agreement pinned in tests);
+        # ``driver_cap(0)`` forces the distributed plan.
+        quads = self._collect_merged()
+        if quads is not None:
+            return self._entail_local(quads, graph, profile)
         materialize = (rdfs_materialize if profile == "rdfs"
                        else owl_rl_materialize)
         cur = self.read()
@@ -937,15 +939,20 @@ class GraphStore:
             delta_rows, seq + 1, "rdfs-entail",
             extra={"entail_mode": "incremental", "entail_graph": graph})
 
-    def _collect_merged(self, cap: int) -> list | None:
+    def _collect_merged(self) -> list | None:
         """The merged quad-set view collected driver-side WITHOUT read()'s
         groupBy shuffle: raw delta rows stream to the driver and max_by
         merges in a dict (each commit batch is a quad-set and d/a batches
         carry distinct seqs, so the max seq per quad is unique). Returns
         [(subj, pred, obj, prov), ...] or None when the RAW log exceeds
-        ``cap`` rows — a stricter bound than the merged size, so the only
-        effect of long delete histories is an earlier fall-back to the
-        distributed plan."""
+        ``_ENTAIL_DRIVER_CAP`` rows (or the ``driver_cap`` override) — a
+        stricter bound than the merged size, so the only effect of long
+        delete histories is an earlier fall-back to the distributed plan.
+        A plain probe, not ``bounded_collect``: the fallback reads the
+        merged view, not the raw log, so it has nothing to reuse."""
+        cap = capped(_ENTAIL_DRIVER_CAP)
+        if cap <= 0:
+            return None
         raw = self.tbl.read(self.spark, schema=RAW_SCHEMA)
         rows = raw.limit(cap + 1).collect()
         if len(rows) > cap:
@@ -988,8 +995,7 @@ class GraphStore:
         "<http://www.w3.org/2000/01/rdf-schema#range>",
     )
 
-    def _entail_incremental(self, graph: str,
-                            driver_fast_max: int = 100_000) -> int | None:
+    def _entail_incremental(self, graph: str) -> int | None:
         """The semi-naive append path of entail(); None -> caller must
         run the full recompute."""
         from .operators.reasoner import rdfs_materialize
@@ -1010,27 +1016,23 @@ class GraphStore:
         if window is None:
             return None
         # bounded driver fast path: a window AND store within
-        # ``driver_fast_max`` run the identical semi-naive algorithm
+        # ``_ENTAIL_DRIVER_CAP`` run the identical semi-naive algorithm
         # in-memory — window collect, soundness scan, closure(window ∪
         # schema), store anti-join — as TWO collects + ONE commit instead of
         # checkpoint + probe + materialize + shuffle-join jobs. Falls
-        # through to the distributed plan when either side is over-cap;
-        # unsound windows return None (full recompute) exactly as below.
-        if driver_fast_max:
-            wrows = window.limit(driver_fast_max + 1).collect()
-            if len(wrows) <= driver_fast_max:
-                unsound_local = any(
-                    r["__op"] != "a" or r["prov"] == graph
-                    or r["pred"] in self._SCHEMA_PREDS
-                    for r in wrows)
-                if unsound_local:
-                    return None
-                squads = self._collect_merged(driver_fast_max)
-                if squads is not None:
-                    return self._entail_incremental_local(
-                        graph, wrows, squads)
-                # store over cap: fall through to the distributed plan
-        window = window.localCheckpoint(eager=True)
+        # through to the distributed plan (over the materialized window)
+        # when either side is over-cap; unsound windows return None (full
+        # recompute) exactly as below.
+        wrows, window = bounded_collect(window, _ENTAIL_DRIVER_CAP,
+                                        site="graphstore.entail_window")
+        if wrows is not None:
+            if any(r["__op"] != "a" or r["prov"] == graph
+                   or r["pred"] in self._SCHEMA_PREDS for r in wrows):
+                return None
+            squads = self._collect_merged()
+            if squads is not None:
+                return self._entail_incremental_local(graph, wrows, squads)
+            # store over cap: fall through to the distributed plan
         unsound = window.filter(
             (F.col("__op") != "a")
             | (F.col("prov") == graph)

@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..session import bounded_collect
+
 _TOKEN_RE = re.compile(r"[^a-z0-9]+")
 
 MERSENNE = (1 << 61) - 1
@@ -361,9 +363,10 @@ def minhash_dedup(
 # for scripts/bench_distributed.py; the union-find fast path leaves it)
 LAST_CC_ROUNDS: int | None = None
 
+_CC_DRIVER_CAP = 200_000  # nabu_spark.session.driver_cap overrides it
 
-def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50,
-                   driver_max: int = 200_000) -> DataFrame:
+
+def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50) -> DataFrame:
     """Connected components over near-dup pairs -> (id, cluster_id) with
     cluster_id = the component's minimum id (the canonical survivor).
 
@@ -377,47 +380,40 @@ def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50,
     plan doesn't grow unboundedly. Raises RuntimeError instead of silently
     returning partial components if the cap is ever hit.
 
-    Edge sets up to ``driver_max`` rows label in-memory (one bounded
+    Edge sets up to ``_CC_DRIVER_CAP`` rows label in-memory (one bounded
     collect + union-find) — the iterative rounds cost ~1 s/round of fixed
     job overhead, which dwarfs compute on bounded relations; larger edge
-    sets run the distributed rounds (``driver_max=0`` forces them, and an
+    sets run the distributed rounds (``driver_cap(0)`` forces them, and an
     agreement test pins the two kernels to identical labels)."""
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.distinct()
-    if driver_max:
-        # ONE job: collect the capped edge set directly — checkpointing
-        # first would execute the (minhash-UDF-fed) pair pipeline twice
-        rows = sym.limit(driver_max + 1).collect()
-        if len(rows) <= driver_max:
-            parent: dict = {}
+    rows, sym = bounded_collect(sym.distinct(), _CC_DRIVER_CAP,
+                                site="dedup_clusters")
+    if rows is not None:
+        parent: dict = {}
 
-            def find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
+        def find(x):
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:  # path compression
+                parent[x], x = root, parent[x]
+            return root
 
-            for r in rows:
-                a, b = find(r.src), find(r.dst)
-                if a != b:
-                    # union by canonical order so min stays reachable
-                    lo, hi = (a, b) if a < b else (b, a)
-                    parent[hi] = lo
-            labeled = sorted(
-                {(x, find(x)) for r in rows for x in (r.src, r.dst)})
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = pairs.schema["id_a"].dataType  # preserve caller type
-            return pairs.sparkSession.createDataFrame(
-                labeled, StructType([StructField("id", id_type),
-                                     StructField("cluster_id", id_type)]))
-    # distributed rounds iterate over sym — cut the upstream lineage once
-    sym = sym.localCheckpoint(eager=True)
+        for r in rows:
+            a, b = find(r.src), find(r.dst)
+            if a != b:
+                # union by canonical order so min stays reachable
+                lo, hi = (a, b) if a < b else (b, a)
+                parent[hi] = lo
+        labeled = sorted(
+            {(x, find(x)) for r in rows for x in (r.src, r.dst)})
+        id_type = pairs.schema["id_a"].dataType  # preserve caller type
+        return pairs.sparkSession.createDataFrame(
+            labeled, T.StructType([T.StructField("id", id_type),
+                                   T.StructField("cluster_id", id_type)]))
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     ).localCheckpoint(eager=True)

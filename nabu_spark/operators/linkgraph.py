@@ -26,6 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import bounded_collect
+
+_PAGERANK_DRIVER_CAP = 100_000  # nabu_spark.session.driver_cap overrides it
+
 
 def pagerank(
     edges: DataFrame,
@@ -34,28 +38,24 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_max: int = 100_000,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` rounds of power iteration with
     uniform teleport and dangling-mass redistribution; ranks sum to 1.
 
-    Edge sets up to ``driver_max`` rows iterate in-memory (one bounded
-    collect): each distributed round costs ~10 jobs of checkpoint/shuffle
-    overhead, which dwarfs compute on bounded graphs — host-level link
-    graphs are dictionary-sized. Larger edge sets run the distributed
-    rounds (``driver_max=0`` forces them; agreement pinned by tests)."""
-    e_df = (
+    Edge sets up to ``_PAGERANK_DRIVER_CAP`` rows iterate in-memory (one
+    bounded collect): each distributed round costs ~10 jobs of
+    checkpoint/shuffle overhead, which dwarfs compute on bounded graphs —
+    host-level link graphs are dictionary-sized. Larger edge sets run the
+    distributed rounds (``driver_cap(0)`` forces them; agreement pinned by
+    tests)."""
+    rows, e = bounded_collect(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    if driver_max:
-        rows = e_df.limit(driver_max + 1).collect()
-        if len(rows) <= driver_max:
-            return _pagerank_local(
-                edges.sparkSession, e_df.schema["src"].dataType,
-                [(r.src, r.dst) for r in rows], iterations, damping)
-    e = e_df.localCheckpoint(eager=True)
+        .distinct(), _PAGERANK_DRIVER_CAP, site="pagerank")
+    if rows is not None:
+        return _pagerank_local(
+            edges.sparkSession, e.schema["src"].dataType,
+            [(r.src, r.dst) for r in rows], iterations, damping)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

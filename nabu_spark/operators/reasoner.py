@@ -33,7 +33,11 @@ and never shuffled on its own keys, the shape that survives 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import bounded_collect, capped
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -44,53 +48,58 @@ RANGE = f"<{RDFS}range>"
 
 _MAX_ROUNDS = 32
 
+# driver fast-path caps (nabu_spark.session.driver_cap overrides them all)
+_CLOSURE_DRIVER_CAP = 100_000  # input pairs; the output guard is 4x this
+_RDFS_DRIVER_CAP = 100_000
+_OWL_DRIVER_CAP = 100_000
+
 
 # distributed-fixpoint telemetry: rounds taken by the LAST distributed
-# closure/OWL run in this process (None until one runs; the driver fast
-# paths do not touch it). Read by scripts/bench_distributed.py so the
+# closure (transitive_closure, so SPARQL +/* too) and OWL run in this
+# process (None until one runs; the driver fast paths do not touch it). Read by scripts/bench_distributed.py so the
 # measured cost curve records round counts, not just wall time.
 LAST_ROUNDS: dict = {"closure": None, "owl": None}
 
 
-def transitive_closure(edges: DataFrame, *,
-                       driver_max: int = 20_000) -> DataFrame:
-    """Strict transitive closure of a (child, parent) edge relation.
+def transitive_closure(edges: DataFrame,
+                       keys: Sequence[str] = ()) -> DataFrame:
+    """Strict transitive closure of a (child, parent) edge relation, closed
+    separately per value of the ``keys`` columns (which the result keeps):
+    the SPARQL path engine keys on the named graph, the OWL profile on the
+    transitive property.
 
-    Schema vocabularies are small by nature, so edge sets up to
-    ``driver_max`` close in-memory (one bounded collect, BFS per node)
-    and ship back as one broadcastable relation — this saves ~8 Spark
-    jobs of fixed fixpoint overhead per closure. Larger relations fall
-    through to pointer doubling — ceil(log2 diameter) self-join rounds,
-    each localCheckpoint-ed so lineage stays bounded (same kernel as the
-    SPARQL path engine). Pass ``driver_max=0`` to force the distributed
+    Relations up to ``_CLOSURE_DRIVER_CAP`` pairs close in-memory
+    (``_closure_local`` per key) and ship back as one broadcastable
+    relation, unless the closure passes 4x the cap (a long chain's closure
+    is quadratic in its length). Anything larger runs pointer doubling:
+    ceil(log2 diameter) self-join rounds, each localCheckpoint-ed so
+    lineage stays bounded. ``driver_cap(0)`` forces the distributed
     path."""
-    deduped = edges.select("child", "parent").distinct()
-    if driver_max:
-        rows = deduped.limit(driver_max + 1).collect()
-        if len(rows) <= driver_max:
-            adj: dict[str, set] = {}
-            for r in rows:
-                adj.setdefault(r.child, set()).add(r.parent)
-            closed: set[tuple[str, str]] = set()
-            for start in adj:
-                stack, seen = list(adj[start]), set()
-                while stack:
-                    n = stack.pop()
-                    if n in seen:
-                        continue
-                    seen.add(n)
-                    closed.add((start, n))
-                    stack.extend(adj.get(n, ()))
+    keys = list(keys)
+    rows, result = bounded_collect(
+        edges.select("child", "parent", *keys).distinct(),
+        _CLOSURE_DRIVER_CAP, site="transitive_closure")
+    if rows is not None:
+        by_key: dict[tuple, set] = {}
+        for r in rows:
+            by_key.setdefault(tuple(r[2:]), set()).add((r[0], r[1]))
+        budget = 4 * capped(_CLOSURE_DRIVER_CAP)
+        closed: list[tuple] = []
+        for key, pairs in by_key.items():
+            part = _closure_local(pairs, limit=budget - len(closed))
+            if part is None:
+                break
+            closed.extend((c, p, *key) for c, p in part)
+        else:
             return edges.sparkSession.createDataFrame(
-                sorted(closed), "child string, parent string")
-    result = deduped.localCheckpoint(eager=True)
+                sorted(closed), result.schema)
     prev = result.count()
     for i in range(_MAX_ROUNDS):
         doubled = (
-            result.select("child", F.col("parent").alias("__m"))
-            .join(result.select(F.col("child").alias("__m"), "parent"),
-                  on="__m")
-            .select("child", "parent")
+            result.select("child", F.col("parent").alias("__m"), *keys)
+            .join(result.select(F.col("child").alias("__m"), "parent", *keys),
+                  on=["__m", *keys])
+            .select("child", "parent", *keys)
             .unionByName(result)
             .distinct()
             .localCheckpoint(eager=True)
@@ -108,33 +117,24 @@ def _edges(triples: DataFrame, pred: str) -> DataFrame:
         F.col("subj").alias("child"), F.col("obj").alias("parent"))
 
 
-def rdfs_materialize(triples: DataFrame, *,
-                     driver_fast_max: int = 100_000) -> DataFrame:
+def rdfs_materialize(triples: DataFrame) -> DataFrame:
     """The entailed graph: asserted (subj, pred, obj) triples plus every
     triple the rules above derive, as one distinct relation.
 
-    Ontology-scale graphs (≤ ``driver_fast_max`` distinct triples) close
+    Ontology-scale graphs (≤ ``_RDFS_DRIVER_CAP`` distinct triples) close
     through the exact in-memory mirror (``rdfs_closure_local``) and ship
     back as one local relation — the stratified plan still costs ~10
     Spark jobs of fixed overhead, which dwarfs compute at that size (the
     same economics as the OWL profile's fast path); agreement between
-    the two paths is pinned by tests. Pass 0 to force the distributed
-    plan."""
-    t = triples.select("subj", "pred", "obj")
-    if driver_fast_max:
-        # ONE job: collect the capped distinct directly — the old
-        # distinct().localCheckpoint() + limit().collect() pair executed the
-        # (often join-heavy) input construction twice per materialize call
-        deduped = t.distinct()
-        rows = deduped.limit(driver_fast_max + 1).collect()
-        if len(rows) <= driver_fast_max:
-            closed = rdfs_closure_local(
-                [(r.subj, r.pred, r.obj) for r in rows])
-            return t.sparkSession.createDataFrame(
-                sorted(closed), "subj string, pred string, obj string")
-        # over-cap (rare): checkpoint so the distributed plan below reuses
-        # the distinct's shuffle instead of recomputing the construction
-        t = deduped.localCheckpoint(eager=True)
+    the two paths is pinned by tests. ``driver_cap(0)`` forces the
+    distributed plan."""
+    rows, t = bounded_collect(
+        triples.select("subj", "pred", "obj").distinct(), _RDFS_DRIVER_CAP,
+        site="rdfs_materialize")
+    if rows is not None:
+        closed = rdfs_closure_local([(r.subj, r.pred, r.obj) for r in rows])
+        return t.sparkSession.createDataFrame(
+            sorted(closed), "subj string, pred string, obj string")
 
     spo = transitive_closure(_edges(t, SUBPROP))
     sco = transitive_closure(_edges(t, SUBCLASS))
@@ -200,7 +200,7 @@ def rdfs_materialize(triples: DataFrame, *,
 #
 #     prp-inv1/2   p owl:inverseOf q        ∧ (s p o) → (o q s)
 #     prp-symp     p a owl:SymmetricProperty ∧ (s p o) → (o p s)
-#     prp-trp      p a owl:TransitiveProperty → per-property closure
+#     prp-trp      p a owl:TransitiveProperty → closure keyed on p
 #     prp-fp       p a owl:FunctionalProperty ∧ (s p o1)(s p o2) → o1 = o2
 #     prp-ifp      p a owl:InverseFunctionalProperty ∧ (s1 p o)(s2 p o)
 #                                                            → s1 = s2
@@ -224,9 +224,10 @@ def rdfs_materialize(triples: DataFrame, *,
 #   intersections) are out of scope; SHACL covers shape validation.
 #
 # Execution shape: each round is a bounded set of broadcast joins of the
-# data against vocabulary-sized schema relations, per-transitive-property
-# pointer-doubling closures, and ONE connected-components run over the
-# (data-sized but sparse) sameAs edge set — never an all-pairs product.
+# data against vocabulary-sized schema relations, ONE pointer-doubling
+# closure keyed on the transitive property, and ONE connected-components
+# run over the (data-sized but sparse) sameAs edge set — never an
+# all-pairs product.
 # Rule interaction (e.g. a functional-property merge enabling a new
 # transitive hop) is handled by an outer fixpoint over rounds; real
 # vocabularies converge in 1–2 rounds.
@@ -269,7 +270,7 @@ def _typed_props(t: DataFrame, cls: str) -> list[str]:
     return sorted(r.subj for r in rows)
 
 
-def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
+def _owl_round(t: DataFrame) -> DataFrame:
     """One stratified application of every rule; returns t ∪ derived."""
     spark = t.sparkSession
 
@@ -281,7 +282,7 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
         .unionByName(eqp.select(F.col("parent").alias("child"),
                                 F.col("child").alias("parent")))
     )
-    spo = transitive_closure(subp, driver_max=driver_max)
+    spo = transitive_closure(subp)
     eqc = _edges(t, EQ_CLASS)
     subc = (
         _edges(t, SUBCLASS)
@@ -289,7 +290,7 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
         .unionByName(eqc.select(F.col("parent").alias("child"),
                                 F.col("child").alias("parent")))
     )
-    sco = transitive_closure(subc, driver_max=driver_max)
+    sco = transitive_closure(subc)
 
     inv = t.filter(F.col("pred") == INVERSE_OF).select(
         F.col("subj").alias("p"), F.col("obj").alias("q"))
@@ -313,7 +314,7 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
     # lift inverse-derived triples too, so a p'⊑p / p inv q / q⊑r chain
     # closes within one round instead of three.
     # MATERIALIZE the property-closed relation once per round: it feeds
-    # every per-transitive-property edge filter plus the domain/range/class
+    # the transitive-property closure plus the domain/range/class
     # stages below, and without a checkpoint each consumer re-executes the
     # whole broadcast-join chain (the owl_dist leg spent most of its 74s
     # re-deriving these unions per rule — guide §5 reuse-vs-recompute).
@@ -323,20 +324,18 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    trans_parts = []
-    for p in _typed_props(t, TRANSITIVE):
-        edges = (
-            data_pi.filter((F.col("pred") == p) & _non_literal("obj"))
-            .select(F.col("subj").alias("child"),
-                    F.col("obj").alias("parent"))
-        )
-        trans_parts.append(
-            transitive_closure(edges, driver_max=driver_max).select(
-                F.col("child").alias("subj"), F.lit(p).alias("pred"),
-                F.col("parent").alias("obj")))
     data_pit = data_pi
-    for part in trans_parts:
-        data_pit = data_pit.unionByName(part)
+    trans = _typed_props(t, TRANSITIVE)
+    if trans:
+        # one closure for every transitive property, keyed on the property
+        edges = (
+            data_pi.filter(F.col("pred").isin(*trans) & _non_literal("obj"))
+            .select(F.col("subj").alias("child"),
+                    F.col("obj").alias("parent"), "pred")
+        )
+        part = transitive_closure(edges, keys=("pred",)).select(
+            F.col("child").alias("subj"), "pred",
+            F.col("parent").alias("obj"))
         # invert the freshly closed edges too (inverse of a closure is the
         # closure of the inverse) so p-transitive + p-inv-q converges in
         # one round instead of two
@@ -345,13 +344,13 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
             .select(F.col("obj").alias("subj"), F.col("q").alias("pred"),
                     F.col("subj").alias("obj"))
         )
-        data_pit = data_pit.unionByName(part_inv).unionByName(
-            _rdfs7(part_inv, spo))
-
-    if trans_parts:
         # same economics: the transitive/inverse closure union feeds four
         # downstream rule stages — materialize it once
-        data_pit = data_pit.localCheckpoint(eager=True)
+        data_pit = (
+            data_pi.unionByName(part).unionByName(part_inv)
+            .unionByName(_rdfs7(part_inv, spo))
+            .localCheckpoint(eager=True)
+        )
 
     # --- domain / range / class rules (same shape as rdfs_materialize) ---
     dom, rng = _edges(t, DOMAIN), _edges(t, RANGE)
@@ -455,8 +454,6 @@ def _owl_round(t: DataFrame, driver_max: int) -> DataFrame:
 
 
 def owl_rl_materialize(triples: DataFrame, *,
-                       driver_max: int = 20_000,
-                       driver_fast_max: int = 100_000,
                        max_rounds: int = _MAX_OWL_ROUNDS) -> DataFrame:
     """The OWL-RL-lite closure of (subj, pred, obj): ρdf plus the property
     and equality rules above, with sameAs components canonicalized onto
@@ -466,30 +463,25 @@ def owl_rl_materialize(triples: DataFrame, *,
     stable set — convergence requires count equality AND an empty
     anti-join of the new set against the old.
 
-    Graphs of up to ``driver_fast_max`` distinct triples close in-memory
+    Graphs of up to ``_OWL_DRIVER_CAP`` distinct triples close in-memory
     via the exact twin (``owl_closure_local``) and ship back as one local
     relation — a multi-round distributed fixpoint costs hundreds of Spark
     jobs of fixed overhead, which dwarfs compute at ontology scale (the
     same economics as ``transitive_closure``'s driver path). Larger
     graphs run the distributed rounds; twin/distributed agreement is
-    pinned by randomized tests. Pass ``driver_fast_max=0`` to force the
-    distributed path."""
-    t = triples.select("subj", "pred", "obj").distinct()
-    if driver_fast_max:
-        # ONE job for the fast path (no eager checkpoint first) — see
-        # rdfs_materialize; the checkpoint below only runs when the graph
-        # is over-cap and the distributed fixpoint actually iterates
-        rows = t.limit(driver_fast_max + 1).collect()
-        if len(rows) <= driver_fast_max:
-            closed = owl_closure_local(
-                [(r.subj, r.pred, r.obj) for r in rows],
-                max_rounds=max_rounds)
-            return t.sparkSession.createDataFrame(
-                sorted(closed), "subj string, pred string, obj string")
-    t = t.localCheckpoint(eager=True)
+    pinned by randomized tests. ``driver_cap(0)`` forces the distributed
+    path."""
+    rows, t = bounded_collect(
+        triples.select("subj", "pred", "obj").distinct(), _OWL_DRIVER_CAP,
+        site="owl_rl_materialize")
+    if rows is not None:
+        closed = owl_closure_local(
+            [(r.subj, r.pred, r.obj) for r in rows], max_rounds=max_rounds)
+        return t.sparkSession.createDataFrame(
+            sorted(closed), "subj string, pred string, obj string")
     prev = t.count()
     for i in range(max_rounds):
-        nxt = _owl_round(t, driver_max).localCheckpoint(eager=True)
+        nxt = _owl_round(t).localCheckpoint(eager=True)
         cnt = nxt.count()
         if cnt == prev and nxt.join(
                 t, ["subj", "pred", "obj"], "left_anti").isEmpty():
@@ -539,9 +531,10 @@ def _index(pairs: set) -> dict:
 
 # --- exact in-memory twin (fast path + agreement oracle) -------------------
 
-def _closure_local(edges: set[tuple[str, str]]) -> set[tuple[str, str]]:
-    """Strict transitive closure, same semantics as transitive_closure's
-    driver path (cycles yield reflexive pairs)."""
+def _closure_local(edges: set[tuple[str, str]],
+                   limit: int | None = None) -> set[tuple[str, str]] | None:
+    """Strict transitive closure by BFS from every node (cycles yield
+    reflexive pairs); None once it passes ``limit`` pairs."""
     adj: dict[str, set] = {}
     for c, p in edges:
         adj.setdefault(c, set()).add(p)
@@ -555,6 +548,8 @@ def _closure_local(edges: set[tuple[str, str]]) -> set[tuple[str, str]]:
             seen.add(n)
             closed.add((start, n))
             stack.extend(adj.get(n, ()))
+        if limit is not None and len(closed) > limit:
+            return None
     return closed
 
 

@@ -12,13 +12,19 @@ the stock daemon every Python task re-read Spark's zip archives first (about
 directory goes on ``spark.executorEnv.PYTHONPATH``, so the daemon imports
 whatever the JVM's working directory is. Keys in ``extra_conf`` override both
 settings.
+
+Every driver fast path (an in-memory twin that serves a bounded relation
+instead of a multi-round distributed fixpoint) collects its input through
+``bounded_collect``; ``driver_cap`` overrides all of their caps at once.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _daemon_conf() -> dict:
@@ -59,3 +65,55 @@ def get_spark(
     for k, v in {**_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_DRIVER_CAP: contextvars.ContextVar = contextvars.ContextVar(
+    "nabu_driver_cap", default=None)
+
+
+@contextlib.contextmanager
+def driver_cap(n: int):
+    """Inside the block every driver fast path uses ``n`` as its cap in
+    place of its own; ``driver_cap(0)`` forces every distributed path."""
+    token = _DRIVER_CAP.set(n)
+    try:
+        yield
+    finally:
+        _DRIVER_CAP.reset(token)
+
+
+def capped(cap: int) -> int:
+    """``cap``, or the ``driver_cap`` override when one is active."""
+    n = _DRIVER_CAP.get()
+    return cap if n is None else n
+
+
+def bounded_collect(df: DataFrame, cap: int, *,
+                    site: str) -> tuple[list | None, DataFrame]:
+    """``(rows, relation)``: ``rows`` is ``df`` collected to the driver when
+    it has at most ``cap`` rows, else None; ``relation`` is ``df``
+    materialized, for the distributed fallback to reuse.
+
+    ``df``'s plan runs once on either side of the cap. The probe reads a
+    lazy local checkpoint through one partition, so it is one job (plus
+    ``df``'s own shuffle stages; a ``df`` with no shuffle is computed in
+    that one task), and over the cap Spark completes the checkpoint from
+    the partitions the probe did not reach. One ``bounded_collect`` span
+    records the site, the cap, the rows read and the path taken."""
+    # imported here: session.py imports no other package module at load
+    from .telemetry import maybe_span
+
+    cap = capped(cap)
+    with maybe_span("bounded_collect", site=site, cap=cap) as span:
+        if cap > 0:
+            relation = df.localCheckpoint(eager=False)
+            rows = relation.coalesce(1).limit(cap + 1).collect()
+            read = len(rows)
+            if read > cap:
+                rows = None
+        else:
+            relation, rows, read = df.localCheckpoint(eager=True), None, 0
+        if span is not None:
+            span.attributes.update(
+                rows=read, path="distributed" if rows is None else "driver")
+    return rows, relation

@@ -93,6 +93,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .operators.reasoner import _closure_local, transitive_closure
+
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -999,12 +1001,6 @@ def _c_datatype(c: Column) -> Column:
     )
 
 
-# rounds taken by the LAST distributed path-closure fixpoint in this
-# process (telemetry for scripts/bench_distributed.py; the bounded driver
-# fast path leaves it untouched)
-LAST_PATH_ROUNDS: int | None = None
-
-
 class _DfCompiler:
     def __init__(self, quads: DataFrame, graph_col: str | None,
                  from_graphs: list | None = None,
@@ -1337,9 +1333,6 @@ class _DfCompiler:
         return df.select(*[F.col(c).alias(v) for v, c in proj.items()])
 
     # -- property paths -----------------------------------------------------
-    _CLOSURE_MAX_ITERS = 32
-    _CLOSURE_DRIVER_MAX = 100_000  # 0 forces the distributed fixpoint
-
     def _graph_quads(self, graph) -> DataFrame:
         if graph is None:
             return self.default_quads
@@ -1355,10 +1348,9 @@ class _DfCompiler:
         join/identity is keyed on it, so each named graph's closure is
         computed independently in ONE shared set of jobs (no per-graph
         driver loop — the graph id is just another shuffle key).
-        Closures (+/*) run a pointer-doubling fixpoint: result joins
-        itself each round, so a diameter-D graph converges in ceil(log2 D)
-        rounds, each localCheckpoint-ed so lineage stays bounded — the
-        distributed transitive-closure shape that survives 100 TB."""
+        Closures (+/*) are ``reasoner.transitive_closure`` keyed on __g:
+        in-memory for bounded relations, else pointer doubling, which
+        converges in ceil(log2 D) rounds on a diameter-D graph."""
         keyed = graph is not None and graph[0] == "var"
         gcols = ["__g"] if keyed else []
         tag = ast[0]
@@ -1407,79 +1399,15 @@ class _DfCompiler:
                 self._identity_pairs(graph)
             ).distinct()
         if tag in ("plus", "star"):
-            # pointer-doubling fixpoint: result ∘ result each round, so a
-            # diameter-D graph converges in ceil(log2 D) joins (a 500-hop
-            # chain takes 9 rounds, not 500); localCheckpoint bounds lineage
-            base = self._path_pairs(ast[1], graph).distinct()
-            checkpointed = False
-            if self._CLOSURE_DRIVER_MAX:
-                # bounded relations close in-memory: a multi-round Spark
-                # fixpoint costs ~0.4 s/round of fixed scheduling overhead,
-                # which dwarfs compute below ~100k pairs (same economics as
-                # the reasoner's driver path); bigger relations fall through
-                base = base.localCheckpoint(eager=True)
-                checkpointed = True
-                rows = base.limit(self._CLOSURE_DRIVER_MAX + 1).collect()
-                if len(rows) <= self._CLOSURE_DRIVER_MAX:
-                    adj: dict = {}
-                    for r in rows:
-                        key = r["__g"] if keyed else None
-                        adj.setdefault(key, {}).setdefault(
-                            r["__src"], set()
-                        ).add(r["__dst"])
-                    closed: list | None = []
-                    for key, edges in adj.items():
-                        for start in edges:
-                            stack, seen = list(edges[start]), set()
-                            while stack:
-                                n = stack.pop()
-                                if n in seen:
-                                    continue
-                                seen.add(n)
-                                closed.append(
-                                    (start, n, key) if keyed else (start, n))
-                                stack.extend(edges.get(n, ()))
-                            if len(closed) > 4 * self._CLOSURE_DRIVER_MAX:
-                                # the CLOSURE can be O(V^2) of a small base
-                                # (long chains) — don't materialize it on
-                                # the driver; fall through to the fixpoint
-                                closed = None
-                                break
-                        if closed is None:
-                            break
-                    if closed is not None:
-                        schema = ("__src string, __dst string" +
-                                  (", __g string" if keyed else ""))
-                        result = base.sparkSession.createDataFrame(
-                            sorted(closed), schema)
-                        if tag == "star":
-                            result = result.unionByName(
-                                self._identity_pairs(graph)).distinct()
-                        return result
-            result = base if checkpointed else base.localCheckpoint(
-                eager=True)
-            prev = result.count()
-            for _round_i in range(self._CLOSURE_MAX_ITERS):
-                doubled = (
-                    result.select("__src", F.col("__dst").alias("__m"), *gcols)
-                    .join(result.select(F.col("__src").alias("__m"), "__dst",
-                                        *gcols),
-                          on=["__m"] + gcols)
-                    .select("__src", "__dst", *gcols)
-                    .unionByName(result)
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                cnt = doubled.count()  # cheap: counts the checkpointed blocks
-                if cnt == prev:
-                    global LAST_PATH_ROUNDS
-                    LAST_PATH_ROUNDS = _round_i + 1
-                    break
-                result, prev = doubled, cnt
-            else:
-                raise SparqlError(
-                    f"path closure did not converge in {self._CLOSURE_MAX_ITERS} rounds"
-                )
+            edges = self._path_pairs(ast[1], graph).select(
+                F.col("__src").alias("child"), F.col("__dst").alias("parent"),
+                *gcols)
+            try:
+                closed = transitive_closure(edges, keys=gcols)
+            except RuntimeError as e:
+                raise SparqlError(f"path {e}") from e
+            result = closed.select(F.col("child").alias("__src"),
+                                   F.col("parent").alias("__dst"), *gcols)
             if tag == "star":
                 result = result.unionByName(self._identity_pairs(graph)).distinct()
             return result
@@ -2125,17 +2053,7 @@ class _LocalEval:
         if tag == "opt":
             return self._path_pairs(ast[1], graph) | self._identity_pairs(graph)
         if tag in ("plus", "star"):
-            base = self._path_pairs(ast[1], graph)
-            result = set(base)
-            while True:
-                by_src: dict = {}
-                for s, d in result:
-                    by_src.setdefault(s, []).append(d)
-                stepped = {(s, d2) for s, d in result for d2 in by_src.get(d, ())}
-                new = stepped - result
-                if not new:
-                    break
-                result |= new
+            result = _closure_local(self._path_pairs(ast[1], graph))
             if tag == "star":
                 result |= self._identity_pairs(graph)
             return result

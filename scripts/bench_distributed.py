@@ -4,18 +4,18 @@ The sf0.1 contract suite exercises the bounded-relation DRIVER fast paths
 of the fixpoint operators (documented in SCALING.md); at 100x scale the
 distributed plans are the operative ones. This script measures those plans
 directly, on fixtures sized to overflow every cap (no cap is raised — the
-caps stay exactly as shipped and the `_max=0` switches force the paths the
-caps would otherwise shortcut):
+caps stay exactly as shipped and `driver_cap(0)` forces the paths the caps
+would otherwise shortcut):
 
-  closure_dist      transitive_closure(driver_max=0): 96k-edge block-chain
-                    (3k blocks x 32) -> 1.49M-pair closure
-  rdfs_dist         rdfs_materialize(driver_fast_max=0): 300k data triples
+  closure_dist      transitive_closure under driver_cap(0): 96k-edge
+                    block-chain (3k blocks x 32) -> 1.49M-pair closure
+  rdfs_dist         rdfs_materialize under driver_cap(0): 300k data triples
                     + 6-triple schema
-  owl_dist          owl_rl_materialize(driver_fast_max=0, driver_max=0):
-                    ~50k-doc chain/symmetric/functional graph (>=350k
-                    triples asserted)
-  sparql_path_dist  `+` closure with _CLOSURE_DRIVER_MAX=0: 194k-edge
-                    segmented prev-chain -> 3.1M-pair closure
+  owl_dist          owl_rl_materialize under driver_cap(0): ~50k-doc
+                    chain/symmetric/functional graph (>=350k triples
+                    asserted)
+  sparql_path_dist  `+` closure under driver_cap(0): 194k-edge segmented
+                    prev-chain -> 3.1M-pair closure
   minhash_10x       minhash_dedup at 2,000,000 docs (400x the sf0.1
                     documents table) with Observation drop accounting;
                     includes a 30k-doc boilerplate template block that the
@@ -40,9 +40,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _steal_pct() -> float:
@@ -58,7 +57,7 @@ def _steal_pct() -> float:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from nabu_spark.session import get_spark
+    from nabu_spark.session import driver_cap, get_spark
 
     legs = sys.argv[1:] or [
         "closure_dist", "rdfs_dist", "owl_dist", "sparql_path_dist",
@@ -85,8 +84,8 @@ def main() -> None:
                     F.concat(F.lit("n"), F.col("id") - 1).alias("parent"))
         )
         t0 = time.monotonic()
-        out = reasoner.transitive_closure(edges, driver_max=0)
-        rows = out.count()
+        with driver_cap(0):
+            rows = reasoner.transitive_closure(edges).count()
         record("closure_dist", time.monotonic() - t0, rows,
                rounds=reasoner.LAST_ROUNDS["closure"], input_edges=93_000)
 
@@ -113,9 +112,8 @@ def main() -> None:
             "subj string, pred string, obj string",
         )
         t0 = time.monotonic()
-        out = reasoner.rdfs_materialize(data.unionByName(schema),
-                                        driver_fast_max=0)
-        rows = out.count()
+        with driver_cap(0):
+            rows = reasoner.rdfs_materialize(data.unionByName(schema)).count()
         record("rdfs_dist", time.monotonic() - t0, rows, input_triples=n + 6)
 
     # ---- owl_dist ----------------------------------------------------------
@@ -161,16 +159,16 @@ def main() -> None:
         )
         n_in = data.count() + 6
         t0 = time.monotonic()
-        out = reasoner.owl_rl_materialize(
-            data.unionByName(schema), driver_fast_max=0, driver_max=0)
-        rows = out.count()
+        with driver_cap(0):
+            rows = reasoner.owl_rl_materialize(
+                data.unionByName(schema)).count()
         record("owl_dist", time.monotonic() - t0, rows,
                rounds=reasoner.LAST_ROUNDS["owl"], input_triples=n_in)
 
     # ---- sparql_path_dist --------------------------------------------------
     if "sparql_path_dist" in legs:
-        from nabu_spark import sparql as sparql_mod
-        from nabu_spark.sparql import _DfCompiler, sparql_query
+        from nabu_spark.operators import reasoner
+        from nabu_spark.sparql import sparql_query
 
         chain = spark.range(200_000).filter(F.col("id") % 32 != 0).select(
             F.concat(F.lit("<urn:doc:"), F.col("id"), F.lit(">")).alias("subj"),
@@ -178,24 +176,18 @@ def main() -> None:
             F.concat(F.lit("<urn:doc:"), F.col("id") - 1,
                      F.lit(">")).alias("obj"),
         )
-        saved = _DfCompiler._CLOSURE_DRIVER_MAX
-        _DfCompiler._CLOSURE_DRIVER_MAX = 0
-        try:
-            t0 = time.monotonic()
-            out = sparql_query(
+        t0 = time.monotonic()
+        with driver_cap(0):
+            rows = sparql_query(
                 chain,
                 """
                 PREFIX p: <urn:p:>
                 SELECT ?doc (COUNT(?anc) AS ?n_anc)
                 WHERE { ?doc p:prev+ ?anc } GROUP BY ?doc
                 """,
-            )
-            rows = out.count()
-            sec = time.monotonic() - t0
-        finally:
-            _DfCompiler._CLOSURE_DRIVER_MAX = saved
-        record("sparql_path_dist", sec, rows,
-               rounds=sparql_mod.LAST_PATH_ROUNDS, input_edges=193_750)
+            ).count()
+        record("sparql_path_dist", time.monotonic() - t0, rows,
+               rounds=reasoner.LAST_ROUNDS["closure"], input_edges=193_750)
 
     # ---- minhash_10x / cc_10x ---------------------------------------------
     pairs_df = None

@@ -674,7 +674,7 @@ class TestSeqPhysicalType:
         want = sorted(BASE, key=_key)
         assert sorted((tuple(r) for r in gs.read().collect()),
                       key=_key) == want
-        assert sorted(gs._collect_merged(1000), key=_key) == want
+        assert sorted(gs._collect_merged(), key=_key) == want
         raw = gs.tbl.read(spark, schema=RAW_SCHEMA)
         assert raw.schema["__seq"].dataType == T.LongType()
         assert sorted(r["__seq"] for r in raw.collect()) == \

@@ -20,6 +20,7 @@ from nabu_spark.operators.sampling import (
     temperature_sample,
 )
 from nabu_spark.operators.search import bm25_topk
+from nabu_spark.session import driver_cap
 
 CAP = 64
 
@@ -274,8 +275,9 @@ class TestPageRank:
         df = spark.createDataFrame(edges, "src string, dst string")
         local = {r["node"]: round(r["rank"], 6)
                  for r in pagerank(df, iterations=5).collect()}
-        dist = {r["node"]: round(r["rank"], 6)
-                for r in pagerank(df, iterations=5, driver_max=0).collect()}
+        with driver_cap(0):
+            dist = {r["node"]: round(r["rank"], 6)
+                    for r in pagerank(df, iterations=5).collect()}
         assert local == dist
 
     def test_self_loops_and_dup_edges_ignored(self, spark):

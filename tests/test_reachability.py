@@ -220,3 +220,53 @@ def test_no_unused_module_imports():
                 if name not in used and (_module(path), name) not in imported:
                     unused.append(f"{path.relative_to(REPO)}:{st.lineno} {name}")
     assert not unused, f"module-level imports nothing uses: {unused}"
+
+
+# functions that may call `.limit(...).collect()` directly: the bounded
+# collect itself, the merged-view probe whose fallback has nothing to reuse,
+# and the refusal caps, which never fall back
+BOUNDED_PROBES = {
+    "nabu_spark/session.py::bounded_collect",
+    "nabu_spark/graphstore.py::GraphStore._collect_merged",
+    "nabu_spark/graphstore.py::GraphStore.to_trig",
+    "nabu_spark/operators/reasoner.py::_typed_props",
+    "nabu_spark/cli.py::_print_query_result",
+}
+
+
+class _LimitCollects(ast.NodeVisitor):
+    """The qualified name of the function around each `.limit(...).collect()`."""
+
+    def __init__(self):
+        self.scope: list[str] = []
+        self.found: list[str] = []
+
+    def _scoped(self, node):
+        self.scope.append(node.name)
+        self.generic_visit(node)
+        self.scope.pop()
+
+    visit_FunctionDef = visit_AsyncFunctionDef = visit_ClassDef = _scoped
+
+    def visit_Call(self, node):
+        f = node.func
+        if (isinstance(f, ast.Attribute) and f.attr == "collect"
+                and isinstance(f.value, ast.Call)
+                and isinstance(f.value.func, ast.Attribute)
+                and f.value.func.attr == "limit"):
+            self.found.append(".".join(self.scope))
+        self.generic_visit(node)
+
+
+def test_driver_fast_paths_go_through_bounded_collect():
+    """A hand-rolled `limit(cap + 1).collect()` probe builds its input twice
+    when the fallback runs; driver fast paths call `bounded_collect`."""
+    found = set()
+    for path in sorted(PKG.rglob("*.py")):
+        v = _LimitCollects()
+        v.visit(ast.parse(path.read_text()))
+        rel = path.relative_to(REPO).as_posix()
+        found |= {f"{rel}::{name}" for name in v.found}
+    assert found == BOUNDED_PROBES, (
+        f"unexpected: {sorted(found - BOUNDED_PROBES)}; "
+        f"stale: {sorted(BOUNDED_PROBES - found)}")

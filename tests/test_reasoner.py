@@ -9,6 +9,7 @@ from nabu_spark.operators.reasoner import (
     rdfs_materialize,
     transitive_closure,
 )
+from nabu_spark.session import driver_cap
 
 
 def _df(spark, rows):
@@ -73,8 +74,9 @@ class TestRules:
         rows = [(f"<urn:C{i}>", SUBCLASS, f"<urn:C{i+1}>") for i in range(40)]
         edges = _df(spark, rows).selectExpr("subj as child", "obj as parent")
         fast = sorted(tuple(r) for r in transitive_closure(edges).collect())
-        dist = sorted(tuple(r) for r in
-                      transitive_closure(edges, driver_max=0).collect())
+        with driver_cap(0):
+            dist = sorted(tuple(r) for r in
+                          transitive_closure(edges).collect())
         assert fast == dist
         assert len(fast) == 40 * 41 // 2
 
@@ -262,7 +264,7 @@ class TestOwlRlLite:
 
 
 class TestOwlTwinAgreement:
-    """The distributed OWL-RL path (driver_fast_max=0) must agree exactly
+    """The distributed OWL-RL path (driver_cap(0)) must agree exactly
     with the in-memory twin that serves as the small-graph fast path."""
 
     def _both(self, spark, rows):
@@ -271,8 +273,8 @@ class TestOwlTwinAgreement:
         )
         df = spark.createDataFrame(
             rows, "subj string, pred string, obj string")
-        dist = {tuple(r) for r in
-                owl_rl_materialize(df, driver_fast_max=0).collect()}
+        with driver_cap(0):
+            dist = {tuple(r) for r in owl_rl_materialize(df).collect()}
         local = owl_closure_local(rows)
         assert dist == local, (f"extra={sorted(dist - local)[:5]} "
                                f"missing={sorted(local - dist)[:5]}")
@@ -341,8 +343,8 @@ class TestRdfsTwinAgreement:
         ]
         df = spark.createDataFrame(
             rows, "subj string, pred string, obj string")
-        dist = {tuple(r) for r in
-                rdfs_materialize(df, driver_fast_max=0).collect()}
+        with driver_cap(0):
+            dist = {tuple(r) for r in rdfs_materialize(df).collect()}
         fast = {tuple(r) for r in rdfs_materialize(df).collect()}
         local = rdfs_closure_local(rows)
         assert dist == local == fast
@@ -472,6 +474,6 @@ class TestOwlLiteralSameas:
         assert ("<urn:b>", "<urn:p>", "<urn:c>") not in local
         df = spark.createDataFrame(
             rows, "subj string, pred string, obj string")
-        dist = {tuple(r) for r in
-                owl_rl_materialize(df, driver_fast_max=0).collect()}
+        with driver_cap(0):
+            dist = {tuple(r) for r in owl_rl_materialize(df).collect()}
         assert dist == local

@@ -9,9 +9,11 @@ that the Catalyst compilation implements the documented semantics.
 from __future__ import annotations
 
 import random
+from contextlib import nullcontext
 
 import pytest
 
+from nabu_spark.session import driver_cap
 from nabu_spark.sparql import (
     SparqlError,
     parse_sparql,
@@ -1260,17 +1262,11 @@ class TestClosureDriverFastPath:
     ]
 
     def _run(self, spark, q, force_distributed):
-        from nabu_spark.sparql import _DfCompiler
-
         df = spark.createDataFrame(
             self.QUADS, "subj string, pred string, obj string, prov string")
-        old = _DfCompiler._CLOSURE_DRIVER_MAX
-        try:
-            _DfCompiler._CLOSURE_DRIVER_MAX = 0 if force_distributed else old
+        with driver_cap(0) if force_distributed else nullcontext():
             out = sparql_query(df, q, graph_col="prov")
             return sorted(tuple(r) for r in out.collect())
-        finally:
-            _DfCompiler._CLOSURE_DRIVER_MAX = old
 
     @pytest.mark.parametrize("q", [
         "PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s t:p+ ?o }",
@@ -1438,8 +1434,6 @@ class TestReviewRegressions:
                 " WHERE { ?s t:n ?v }")
 
     def test_closure_output_cap_falls_through(self, spark):
-        from nabu_spark.sparql import _DfCompiler
-
         # 9-node chain: base (8 pairs) fits an 8-pair cap, but the closure
         # (36 pairs) exceeds 4x the cap -> distributed fixpoint must run
         # and produce the same answer as the unbounded driver path
@@ -1448,12 +1442,8 @@ class TestReviewRegressions:
         df = spark.createDataFrame(
             quads, "subj string, pred string, obj string")
         q = "PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s t:p+ ?o }"
-        old = _DfCompiler._CLOSURE_DRIVER_MAX
-        try:
-            _DfCompiler._CLOSURE_DRIVER_MAX = 8
+        with driver_cap(8):
             capped = sorted(tuple(r) for r in sparql_query(df, q).collect())
-        finally:
-            _DfCompiler._CLOSURE_DRIVER_MAX = old
         full = sorted(tuple(r) for r in sparql_query(df, q).collect())
         assert capped == full and len(full) == 36
 

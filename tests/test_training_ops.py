@@ -17,6 +17,7 @@ from nabu_spark.operators.dedup import (
 from nabu_spark.operators.multimodal import decode_media, synth_media
 from nabu_spark.operators.similarity import brute_force_topk, lsh_topk, recall_at_k
 from nabu_spark.operators.textstats import lang_id, token_count, winnowing_fingerprints
+from nabu_spark.session import driver_cap
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the rain in spain "
@@ -1308,8 +1309,9 @@ class TestCcDriverFastPath:
             df = spark.createDataFrame(pairs, "id_a string, id_b string")
             fast = {(r.id, r.cluster_id)
                     for r in dedup_clusters(df).collect()}
-            dist = {(r.id, r.cluster_id)
-                    for r in dedup_clusters(df, driver_max=0).collect()}
+            with driver_cap(0):
+                dist = {(r.id, r.cluster_id)
+                        for r in dedup_clusters(df).collect()}
             assert fast == dist and fast
 
     def test_chain_min_label(self, spark):
