@@ -75,14 +75,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash (SURVEY §2 #19/#29 family): canonical
     representative + duplicate count per distinct text."""
+    from nabu_spark.operators.dedup import exact_dedup
+
     docs = _load(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
-        .agg(
-            F.min("doc_id").alias("canonical_doc_id"),
-            F.count("*").alias("dup_count"),
-        )
-        
+    return exact_dedup(docs, "text", "doc_id").toDF(
+        "text_hash", "canonical_doc_id", "dup_count"
     )
 
 
@@ -273,44 +270,20 @@ def q_release_naming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- training-data pipeline operators (dedup / similarity / text analysis) ---
 
 
-def _tokens(text_col):
-    return F.filter(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda t: t != "")
-
-
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish subword correction."""
+    from nabu_spark.operators.textstats import token_count
+
     docs = _load_spread(spark, sf_dir, "documents", "doc_id")
-    toks = _tokens("text")
-    subword = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + F.when(F.length(t) > 8, F.floor(F.length(t) / 4).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )
-    return docs.select(
-        "doc_id", (F.size(toks) + subword).alias("token_count")
-    )
+    return docs.select("doc_id", token_count("text"))
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID (n-gram heuristic) with deterministic ties."""
-    from nabu_spark.operators.textstats import LANG_MARKERS
+    from nabu_spark.operators.textstats import lang_id
 
     docs = _load_spread(spark, sf_dir, "documents", "doc_id")
-    toks = _tokens("text")
-
-    def marker_hits(markers):
-        # single-arg lambda: F.filter passes the array index to 2-arg lambdas
-        return F.size(F.filter(toks, lambda t: t.isin(markers)))
-
-    scores = {lang: marker_hits(markers) for lang, markers in LANG_MARKERS.items()}
-    best = F.greatest(*scores.values())
-    pred = F.when(best == 0, F.lit("und"))
-    for lang in LANG_MARKERS:
-        pred = pred.when(scores[lang] == best, F.lit(lang))
-    return docs.select("doc_id", pred.alias("lang_pred"))
+    return lang_id(docs).select("doc_id", "lang_pred")
 
 
 def q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,10 +338,10 @@ def _lang_id_ngram_oracle() -> str:
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length / punctuation / stopword-ratio composite."""
-    from nabu_spark.operators.textstats import EN_STOPWORDS
+    from nabu_spark.operators.textstats import EN_STOPWORDS, tokens_col
 
     docs = _load_spread(spark, sf_dir, "documents", "doc_id")
-    toks = _tokens("text")
+    toks = tokens_col("text")
     n_tokens = F.size(toks)
     n_chars = F.length(F.col("text"))
     punct = n_chars - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", ""))
@@ -399,16 +372,20 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 of the sorted distinct token set."""
+    from nabu_spark.operators.textstats import tokens_col
+
     docs = _load_spread(spark, sf_dir, "documents", "doc_id")
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens("text")))))
+    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens_col("text")))))
     return docs.select("doc_id", fp.alias("fingerprint"))
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram (3-token shingle) Jaccard near-dup pairs over a bounded
     id range — the verifier of the MinHash-LSH family, SQL-expressible."""
+    from nabu_spark.operators.textstats import tokens_col
+
     docs = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    toks = _tokens("text")
+    toks = tokens_col("text")
     docs = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 3)
     sh = docs.select(
         "doc_id",

@@ -12,47 +12,41 @@ production corpus build runs them:
       -> near-dup dedup            (MinHash LSH -> cluster survivors)
       -> optional per-host cap     (linkgraph.stratified_cap)
 
-Scale shape: repair + hygiene run as ONE fused Arrow pass that carries
-every other column through (no doc_id re-join — joining narrow stage
-outputs back would shuffle the text column once per stage), and the
-language/Gopher gates are inline codegen expressions on the same frame;
-the funnel report comes from a single aggregation over the annotated frame
-— not a .count() per stage. The only shuffles in the whole flow are the
-dedup ones (ONE content-hash window — no groupBy + semi-join diamond, so
-the Arrow pass is never recomputed — LSH band join, CC pointer jumping)
-plus the optional cap's window; plan-gated in tests/test_curate.py.
+Scale shape: repair + hygiene + both gates run as ONE Arrow pass that
+carries every other column through (no doc_id re-join — joining narrow stage
+outputs back would shuffle the text column once per stage); with ``c4=True``
+the gates move to a second Arrow pass over the post-C4 text. The funnel
+report comes from a single aggregation over the annotated frame — not a
+.count() per stage. The only shuffles in the whole flow are the dedup ones
+(ONE content-hash window — no groupBy + semi-join diamond, so the Arrow pass
+is never recomputed — LSH band join, CC pointer jumping) plus the optional
+cap's window; plan-gated in tests/test_curate.py and tests/test_plans.py.
 """
 
 from __future__ import annotations
 
 import re
 import unicodedata
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import (
-    DataFrame, Observation, SparkSession, Window, functions as F,
-)
+from pyspark.sql import DataFrame, Observation, Window, functions as F, types as T
 
 # the clean_text kernel's exact regex semantics (textstats.clean_text)
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
 _WS_RE = re.compile(r"[ \t\n\r\f]+")
 
-# exact Python mirrors of the textstats gate expressions (tokens_col /
-# lang_scores / gopher_exprs): same token regex, same marker sets, same
-# rule thresholds — value-for-value parity is what lets the funnel compute
-# its gates inside the SAME Arrow pass as the hygiene kernel instead of
-# through interpreted higher-order-function projections (those are
-# CodegenFallback: measured ~1.2s of the funnel's 2.2s at 10k docs)
+# the funnel's gates in Python, value-for-value with textstats.lang_id and
+# gopher_quality_flags (same token regex, marker sets and thresholds): in
+# the Arrow pass they replace interpreted higher-order-function projections
+# (CodegenFallback: measured ~1.2s of the funnel's 2.2s at 10k docs)
 _TOK_RE = re.compile(r"[^a-zA-Z0-9]+")
 _ALPHA_RE = re.compile(r"[a-z]")
 _SYM_RE = re.compile(r"[#\.\{\}\[\]<>\|\\]")
 
 
 def lang_gopher_kernel(s: str | None) -> tuple[str, bool]:
-    """(lang_pred, gopher_pass) for one cleaned document — mirrors
-    textstats.lang_scores + lang_pred_expr + gopher_exprs exactly
-    (parity pinned by the funnel tests and the curate_funnel oracle)."""
+    """(lang_pred, gopher_pass) for one cleaned document — the verdicts of
+    textstats.lang_id and gopher_quality_flags (parity pinned by the funnel
+    tests and the curate_funnel oracle)."""
     from .operators.textstats import LANG_MARKERS
 
     toks = [t for t in _TOK_RE.split((s or "").lower()) if t]
@@ -105,6 +99,40 @@ def fix_clean_kernel(s: str | None) -> tuple[str | None, int]:
     return _WS_RE.sub(" ", _CTRL_RE.sub("", s)).strip(" "), rounds
 
 
+def _text_pass(df: DataFrame, text_col: str, *, fix: bool, gate: bool) -> DataFrame:
+    """One ``mapInArrow`` pass: every column passes through as Arrow.
+    ``fix`` replaces ``text_col`` by its repaired + cleaned form
+    (``fix_clean_kernel``) and appends ``repair_rounds``; ``gate`` appends
+    ``lang_pred`` and ``gopher_pass`` of the (cleaned) text."""
+    ti = df.columns.index(text_col)
+    fields = list(df.schema.fields)
+    if fix:
+        fields.append(T.StructField("repair_rounds", T.IntegerType()))
+    if gate:
+        fields += [T.StructField("lang_pred", T.StringType()),
+                   T.StructField("gopher_pass", T.BooleanType())]
+    names = [f.name for f in fields]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            cols = list(rb.columns)
+            texts = cols[ti].to_pylist()
+            if fix:
+                fixed = [fix_clean_kernel(t) for t in texts]
+                texts = [t for t, _ in fixed]
+                cols[ti] = pa.array(texts, type=pa.string())
+                cols.append(pa.array([r for _, r in fixed], type=pa.int32()))
+            if gate:
+                gates = [lang_gopher_kernel(t) for t in texts]
+                cols.append(pa.array([g[0] for g in gates], type=pa.string()))
+                cols.append(pa.array([g[1] for g in gates], type=pa.bool_()))
+            yield pa.RecordBatch.from_arrays(cols, names)
+
+    return df.mapInArrow(run, T.StructType(fields))
+
+
 def docs_from_pages(pages: DataFrame) -> DataFrame:
     """(doc_id, url, text) from crawled (url, html): main-content
     extraction with a deterministic 64-bit id (xxhash64 of the url)."""
@@ -136,8 +164,8 @@ def curate_corpus(
     """Run the gate + dedup funnel over (id, text[, url]) documents.
     Returns (curated DataFrame, report dict with per-stage counts).
     ``c4=True`` inserts the C4 line cleaner after hygiene (text becomes the
-    line-filtered form) and folds the C4 page verdict into the quality
-    gate — still inline codegen, no extra pass.
+    line-filtered form), gates that text in a second Arrow pass, and folds
+    the C4 page verdict into the quality gate.
     ``near_dup_threshold=None`` skips the MinHash near-dup stage entirely
     (exact-dedup-only mode — the fully oracle-checkable funnel).
     ``near_dup_params`` forwards kwargs to ``minhash_dedup`` (num_perm,
@@ -151,86 +179,25 @@ def curate_corpus(
     Use it when the caller only consumes the curated rows (benchmarks,
     downstream pipelines)."""
     from .operators.dedup import dedup_survivors, minhash_dedup
-    from .operators.textstats import gopher_exprs, lang_pred_expr, lang_scores
 
     other_cols = [c for c in docs.columns if c not in (id_col, text_col)]
-
-    # stages 2-5 (no-c4 path): repair + hygiene AND both gate annotations in
-    # ONE fused Arrow pass carrying every other column through (no doc_id
-    # re-join -> no text shuffle). The gates mirror the textstats
-    # expressions value-for-value (lang_gopher_kernel); running them beside
-    # the hygiene kernel replaces interpreted higher-order-function
-    # projections that re-walked each token list per rule. The c4 variant
-    # keeps the expression gates: its rules evaluate post-c4 text.
-    in_schema = dict(docs.dtypes)
-    fused_gates = not c4
-    out_schema = ", ".join(
-        [f"`{id_col}` {in_schema[id_col]}"]
-        + [f"`{c}` {in_schema[c]}" for c in other_cols]
-        + [f"`{text_col}` string", "repair_rounds int"]
-        + (["lang_pred string", "gopher_pass boolean"] if fused_gates else [])
+    cleaned = _text_pass(
+        docs.select(id_col, *other_cols, text_col), text_col,
+        fix=True, gate=not c4,
     )
-
-    def fix_clean_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            texts, rounds = [], []
-            langs, gophers = [], []
-            for t in pdf[text_col]:
-                f_t, r = fix_clean_kernel(t)
-                texts.append(f_t)
-                rounds.append(r)
-                if fused_gates:
-                    lp, gp = lang_gopher_kernel(f_t)
-                    langs.append(lp)
-                    gophers.append(gp)
-            out = pdf[[id_col] + other_cols].copy()
-            out[text_col] = pd.Series(texts, dtype="object")
-            out["repair_rounds"] = pd.Series(rounds, dtype="int32")
-            if fused_gates:
-                out["lang_pred"] = pd.Series(langs, dtype="object")
-                out["gopher_pass"] = pd.Series(gophers, dtype="bool")
-            yield out
-
-    cleaned = docs.mapInPandas(fix_clean_batches, out_schema)
-
     if c4:
         from .operators.c4 import c4_clean
 
-        cleaned = (
+        cleaned = _text_pass(
             c4_clean(cleaned, text_col=text_col)
             .withColumn(text_col, F.col("c4_text"))
-            .drop("c4_text", "c4_n_lines", "c4_n_sentences")
-        )  # carries a c4_keep column forward
-
-    # stages 4-5: gate annotations. Fused path: already columns from the
-    # Arrow pass above. C4 path: expression gates over the post-c4 text,
-    # with the token array STAGED once (`_toks`) — the inline forms
-    # re-tokenized every row ~16x (interpreted higher-order functions, no
-    # subexpression elimination; see textstats expression-duplication note).
-    if fused_gates:
-        annotated = cleaned.withColumn(
-            "lang_ok",
-            F.lit(True) if lang is None else (F.col("lang_pred") == lang),
+            .drop("c4_text", "c4_n_lines", "c4_n_sentences"),  # keeps c4_keep
+            text_col, fix=False, gate=True,
         )
-    else:
-        from .operators.textstats import tokens_col
-
-        staged = cleaned.select("*", tokens_col(text_col).alias("_toks"))
-        scored = staged.select(
-            "*", *lang_scores(text_col, toks=F.col("_toks"))
-        )
-        annotated = (
-            scored.withColumn("lang_pred", lang_pred_expr())
-            .withColumn(
-                "gopher_pass",
-                gopher_exprs(text_col, toks=F.col("_toks"))["gopher_pass"],
-            )
-            .select(*cleaned.columns, "lang_pred", "gopher_pass")
-            .withColumn(
-                "lang_ok",
-                F.lit(True) if lang is None else (F.col("lang_pred") == lang),
-            )
-        )
+    annotated = cleaned.withColumn(
+        "lang_ok",
+        F.lit(True) if lang is None else (F.col("lang_pred") == lang),
+    )
     if report:
         annotated = annotated.cache()
     quality_pred = F.col("lang_ok") & F.col("gopher_pass")
@@ -341,10 +308,3 @@ def curate_corpus(
         report["n_c4_ok"] = funnel["n_c4_ok"]
     return survivors.drop("lang_ok", "gopher_pass", "c4_keep"), report
 
-
-def curate_pages(
-    spark: SparkSession, pages: DataFrame, **kwargs
-) -> tuple[DataFrame, dict]:
-    """pages (url, html) -> curated docs + report: the full crawl-to-corpus
-    path."""
-    return curate_corpus(docs_from_pages(pages), **kwargs)

@@ -122,27 +122,6 @@ def canonical_number(v: int | float, datatype: str | None = None) -> tuple[str, 
     return str(v), datatype or XSD_INTEGER
 
 
-def split_triple(line: str) -> tuple[str, str, str] | None:
-    """Split an N-Triples line into (subj, pred, obj-rest) on the first two
-    spaces; obj keeps everything up to the trailing `` .``. Returns None for
-    blank lines."""
-    line = line.strip()
-    if not line:
-        return None
-    first = line.find(" ")
-    second = line.find(" ", first + 1)
-    if first < 0 or second < 0:
-        raise ValueError(f"triple must have at least 3 parts, unexpectedly got: '{line}'")
-    subj = line[:first]
-    pred = line[first + 1 : second]
-    rest = line[second + 1 :]
-    if rest.endswith(" ."):
-        rest = rest[:-2]
-    elif rest.endswith("."):
-        rest = rest[:-1].rstrip()
-    return subj, pred, rest
-
-
 def term_is_valid(term: str, *, as_subject: bool = False, as_predicate: bool = False) -> bool:
     """Strict N-Quads term validation (the NtToNq drop-malformed-line gate)."""
     return _term_is_valid_cached(term, as_subject, as_predicate)
@@ -168,4 +147,3 @@ def _term_is_valid_cached(term: str, as_subject: bool, as_predicate: bool) -> bo
         dt = m.group(1)
         return dt is None or bool(_IRI_RE.match(dt))
     return False
-

@@ -285,10 +285,15 @@ def extract_rdfa(
 
 
 def extract_structured_triples(
-    data: bytes | str, base: str = ""
+    data: bytes | str, base: str = "", *, formats=("microdata", "rdfa")
 ) -> list[tuple[str, str, str]]:
-    """Microdata + RDFa triples from one page (shared bnode namespace)."""
+    """Microdata and/or RDFa triples from one page: one DOM parse shared by
+    both extractors (it dominates the kernel), one bnode namespace."""
     bnodes = _BnodeGen("sd")
-    out = extract_microdata(data, base, bnodes=bnodes)
-    out.extend(extract_rdfa(data, base, bnodes=bnodes))
+    tree = parse_html_tree(data)
+    out = []
+    if "microdata" in formats:
+        out.extend(extract_microdata(data, base, bnodes=bnodes, tree=tree))
+    if "rdfa" in formats:
+        out.extend(extract_rdfa(data, base, bnodes=bnodes, tree=tree))
     return out

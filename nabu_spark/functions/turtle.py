@@ -317,21 +317,13 @@ def serialize_turtle(
     triples, prefixes: dict[str, str] | None = None
 ) -> str:
     """Deterministic Turtle text for an iterable of (subj, pred, obj)
-    N-Triples-term triples: prefix table, subjects sorted, one subject
-    block each with ``;``-joined predicates (sorted, rdf:type first) and
-    ``,``-joined objects (sorted). Literal escapes and prefix compaction
-    are the exact inverse of this module's parser — the roundtrip is
-    pinned by tests. Driver-side by design (shape files, VoID
-    descriptions, per-graph release documents — the small artifacts);
-    bulk data stays in N-Quads/parquet."""
-    prefixes = dict(prefixes or {})
-    lines = [
-        f"@prefix {pfx}: <{ns}> ." for pfx, ns in sorted(prefixes.items())
-    ]
-    if lines:
-        lines.append("")
-    lines.extend(statement_lines(triples, prefixes))
-    return "\n".join(lines) + "\n"
+    N-Triples-term triples: ``serialize_trig`` with every statement in the
+    default graph. Literal escapes and prefix compaction are the exact
+    inverse of this module's parser; the parser's roundtrip tests draw
+    their input from it."""
+    from .trig import serialize_trig
+
+    return serialize_trig(((s, p, o, None) for s, p, o in triples), prefixes)
 
 
 def statement_lines(triples, prefixes: dict[str, str],

@@ -11,8 +11,6 @@ and canonicalize entity mentions ... materialize the graph as partitioned
     pointer-jumping min-label CC from the dedup family (``dedup_clusters``
     is type-generic: least/min work on strings), so convergence is
     O(log diameter) rounds of equi-joins.
-  * ``rewrite_canonical`` — rewrite subj/obj through the canonical mapping
-    (two left joins; literal objects miss the mapping by construction).
   * ``release_diff`` — added/removed quads between two release versions
     (exceptAll both ways: one all-column shuffle per direction) — the
     incremental triplestore-sync feed.
@@ -22,8 +20,7 @@ and canonicalize entity mentions ... materialize the graph as partitioned
 
 Scale notes (100 TB of pages → ~1e11 triples): every operator here is a
 constant number of shuffles on triple-sized relations; sameAs subgraphs are
-tiny relative to the corpus (assertions only), and the rewrite join is a
-mapping-sized build side that usually broadcasts.
+tiny relative to the corpus (assertions only).
 """
 
 from __future__ import annotations
@@ -54,30 +51,6 @@ def sameas_closure(edges: DataFrame, *, max_iters: int = 50) -> DataFrame:
     )
     return labels.select(
         F.col("id").alias("iri"), F.col("cluster_id").alias("canonical_iri")
-    )
-
-
-def rewrite_canonical(quads: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Rewrite subj and obj through (iri, canonical_iri); sameAs assertions
-    themselves are dropped (they are now self-referential). The mapping is
-    component-sized — broadcast when small, shuffle-joined otherwise (left
-    to AQE)."""
-    m_subj = mapping.select(
-        F.col("iri").alias("subj"), F.col("canonical_iri").alias("_cs")
-    )
-    m_obj = mapping.select(
-        F.col("iri").alias("obj"), F.col("canonical_iri").alias("_co")
-    )
-    return (
-        quads.filter(F.col("pred") != OWL_SAMEAS)
-        .join(m_subj, "subj", "left")
-        .join(m_obj, "obj", "left")
-        .select(
-            F.coalesce("_cs", "subj").alias("subj"),
-            "pred",
-            F.coalesce("_co", "obj").alias("obj"),
-            "prov",
-        )
     )
 
 

@@ -99,18 +99,6 @@ def pagerank(
     return ranks
 
 
-def host_edges_from_urls(
-    df: DataFrame, src_url_col: str = "url", href_col: str = "href"
-) -> DataFrame:
-    """(src, dst) host pairs from page/link URLs — the extraction front of
-    the link graph (hosts parsed JVM-side)."""
-    host = lambda c: F.lower(F.regexp_extract(F.col(c), r"^[a-z]+://([^/:?#]+)", 1))  # noqa: E731
-    return (
-        df.select(host(src_url_col).alias("src"), host(href_col).alias("dst"))
-        .filter((F.col("src") != "") & (F.col("dst") != "") & (F.col("src") != F.col("dst")))
-    )
-
-
 def stratified_cap(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -9,8 +9,6 @@ add-alpha-smoothed bigram model, trained and applied entirely relationally:
   * ``perplexity`` — per-document exp(mean -ln P(w2|w1)) with
     P(w2|w1) = (c(w1,w2) + alpha) / (c(w1) + alpha * V). Scoring joins the
     doc bigrams against the model tables.
-  * ``perplexity_buckets`` — head/middle/tail ntile split (the CCNet
-    bucketing step).
 
 Corpus drift (``token_js_divergence``) compares token distributions between
 two corpus snapshots with Jensen-Shannon divergence — the standard
@@ -25,7 +23,7 @@ is two map-side-combined aggregations. Nothing leaves the JVM.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .textstats import tokens_col
 
@@ -105,15 +103,6 @@ def perplexity(
             F.round(F.exp(F.avg("_nll")), round_to).alias("ppl"),
         )
     )
-
-
-def perplexity_buckets(
-    ppl: DataFrame, *, n_buckets: int = 3, ppl_col: str = "ppl"
-) -> DataFrame:
-    """CCNet head/middle/tail split: ntile over ascending perplexity
-    (bucket 1 = most fluent under the model)."""
-    w = Window.orderBy(F.col(ppl_col).asc())
-    return ppl.withColumn("bucket", F.ntile(n_buckets).over(w))
 
 
 def token_js_divergence(

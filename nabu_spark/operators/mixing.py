@@ -117,16 +117,3 @@ def mix_corpus(
                         / F.col("__n")).cast("long"))))
     )
     return out.drop("__quota", "__n", "__h", "__rn")
-
-
-def mixture_report(mixed: DataFrame, *, id_col: str = "doc_id",
-                   source_col: str = "source") -> DataFrame:
-    """(source, n_samples, n_unique_docs, max_epoch) — the recipe audit
-    table; one aggregation."""
-    return (
-        mixed.groupBy(source_col)
-        .agg(F.count("*").alias("n_samples"),
-             F.countDistinct(id_col).alias("n_unique_docs"),
-             F.max("epoch").alias("max_epoch"))
-        .orderBy(source_col)
-    )

@@ -152,20 +152,3 @@ def pack_next_fit(
     return counts.mapInPandas(
         pack, f"{id_col} long, shard int, bin long, n_tokens long"
     )
-
-
-def packing_efficiency(packed: DataFrame, *, capacity: int) -> DataFrame:
-    """Per-shard packing telemetry for ``pack_next_fit`` output:
-    (shard, n_bins, n_docs, tokens, fill_ratio)."""
-    cap = F.lit(int(capacity)).cast("double")
-    return (
-        packed.groupBy("shard")
-        .agg(
-            (F.max("bin") + 1).alias("n_bins"),
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("tokens"),
-        )
-        .withColumn(
-            "fill_ratio", F.round(F.col("tokens") / (F.col("n_bins") * cap), 4)
-        )
-    )

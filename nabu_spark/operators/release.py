@@ -16,8 +16,7 @@ Every release path builds its lines with one helper (``release_lines``,
 JVM-side ``concat_ws``). Byte sums come from one Arrow-native kernel
 (``utf8_bytesums``): a single ``cumsum`` over a batch's UTF-8 values buffer,
 differenced at the offsets — no per-row Python. Every graph writer
-(``write_release``, ``write_release_canonical``,
-``write_release_deterministic_gzip``) is one Spark job: lines shuffled by
+(``write_release``, ``write_release_deterministic_gzip``) is one Spark job: lines shuffled by
 graph, sorted within each partition, and written by one ``mapInArrow`` task
 writer that joins each graph's values-buffer slice with newlines
 (``join_lines``) and sums exactly the bytes it writes. Each graph is one file,
@@ -290,18 +289,6 @@ def write_release(quads: DataFrame, out_dir: str, *, compress: bool = False) -> 
             fh.write(json.dumps(rec, ensure_ascii=False, separators=(",", ":")) + "\n")
     open(os.path.join(sums_dir, "_SUCCESS"), "wb").close()
     return rows
-
-
-def write_release_canonical(quads: DataFrame, out_dir: str) -> None:
-    """Canonical-ordering variant: one file per release graph under
-    ``graphs_canonical/`` with lines in lexicographic order (the skolemized
-    graph has no blank labels left, so a plain sort IS its canonical
-    serialization — the RDFC ordering concern is discharged by content-hash
-    skolemization upstream). Deterministic bytes, suitable for file-level
-    diffing; the order-agnostic bytesum still matches because addition
-    commutes."""
-    _write_partitioned(release_lines(quads), os.path.join(out_dir, "graphs_canonical"),
-                       ("release_name", "line"), False)
 
 
 def write_release_deterministic_gzip(quads: DataFrame, out_dir: str) -> list[dict]:

@@ -90,28 +90,3 @@ def temperature_sample(
         .filter(u < F.col("rate"))
         .drop("rate")
     )
-
-
-def sample_report(
-    df: DataFrame,
-    sampled: DataFrame,
-    domain_col: str = "source",
-) -> DataFrame:
-    """(domain, before, after, kept_frac) — the mixing audit table."""
-    before = df.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.count("*").alias("before")
-    )
-    after = sampled.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.count("*").alias("after")
-    )
-    return (
-        before.join(after, "domain", "left")
-        .select(
-            "domain",
-            "before",
-            F.coalesce("after", F.lit(0)).alias("after"),
-            F.round(F.coalesce("after", F.lit(0)) / F.col("before"), 4).alias(
-                "kept_frac"
-            ),
-        )
-    )

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..functions.structured import _BnodeGen, extract_microdata, extract_rdfa
+from ..functions.structured import extract_structured_triples
 from ..functions.urn import object_key
 from ..operators.extract import with_sitemap_id
 from ..operators.triples import emit_quads, finish_quads
@@ -24,20 +24,11 @@ def page_structured_quads(
 ) -> tuple[list, str]:
     if body is None or len(body) <= 2:
         return [], "empty_body"
-    bnodes = _BnodeGen("sd")
-    triples = []
     # row-level garbage must become lineage rows, never task failures: the
     # extract walks are recursive, so one hostile deeply-nested page would
     # otherwise RecursionError the whole task (ADVICE r01, medium)
     try:
-        # one DOM parse shared by both extractors (it dominates the kernel)
-        from ..functions.domtree import parse_html_tree
-
-        tree = parse_html_tree(body)
-        if "microdata" in formats:
-            triples.extend(extract_microdata(body, base=url, bnodes=bnodes, tree=tree))
-        if "rdfa" in formats:
-            triples.extend(extract_rdfa(body, base=url, bnodes=bnodes, tree=tree))
+        triples = extract_structured_triples(body, url, formats=formats)
     except Exception:
         return [], "structured_parse"
     if not triples:

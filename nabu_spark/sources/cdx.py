@@ -3,28 +3,24 @@
 Web-scale pipelines don't start from WARC bytes — they start from the CDX
 index (one line per capture: SURT key, 14-digit timestamp, JSON payload
 with url/mime/status/digest/offset/length/filename) and plan the fetch:
-keep the latest capture per URL, skip duplicate content digests without
-ever fetching them, and group the surviving records by WARC file so range
-reads co-locate. All of it is relational:
+keep the latest capture per URL and group the surviving records by WARC
+file so range reads co-locate. All of it is relational:
 
   * ``parse_cdx`` — split each line into (surt, ts, json) with a 3-limit
     split and ``from_json`` — pure JVM, no UDF; malformed lines surface as
     null-field rows (filterable), never task failures.
   * ``latest_captures`` — row_number per url by (ts desc, digest) → rn = 1.
-  * ``digest_dedup`` — the index-level exact dedup: one groupBy on the
-    content digest BEFORE any fetch happens (the single biggest byte-saver
-    in a Common-Crawl pipeline).
   * ``fetch_plan`` — per-WARC-file sorted offset lists: each task streams
     one archive file's ranges in order.
 
 Scale notes: the CDX index for a full crawl is ~10^10 lines of ~300 bytes —
 text-splittable, so the parse parallelizes on line boundaries; every
-downstream op is one shuffle on its natural key (url, digest, filename).
+downstream op is one shuffle on its natural key (url, filename).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 CDX_PAYLOAD_SCHEMA = T.StructType(
     [
@@ -54,12 +50,6 @@ def parse_cdx(lines: DataFrame, line_col: str = "value") -> DataFrame:
     ).select("surt", "ts", "_p.*")
 
 
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """CDXJ file/dir -> parsed capture table (gzip handled transparently by
-    the text source)."""
-    return parse_cdx(spark.read.text(path))
-
-
 def latest_captures(captures: DataFrame) -> DataFrame:
     """One row per url: the most recent capture (ties broken by digest then
     filename/offset for determinism)."""
@@ -70,17 +60,6 @@ def latest_captures(captures: DataFrame) -> DataFrame:
         captures.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def digest_dedup(captures: DataFrame) -> DataFrame:
-    """(digest, n_captures, canonical_url, total_bytes): the index-level
-    content dedup — every digest is fetched once, from the lexicographically
-    smallest URL (deterministic canonical choice)."""
-    return captures.groupBy("digest").agg(
-        F.count("*").alias("n_captures"),
-        F.min("url").alias("canonical_url"),
-        F.sum("length").alias("total_bytes"),
     )
 
 

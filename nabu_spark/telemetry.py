@@ -160,10 +160,6 @@ def set_active(tracer: "Tracer | None"):
     return _ACTIVE.set(tracer)
 
 
-def active_tracer() -> "Tracer | None":
-    return _ACTIVE.get()
-
-
 @contextlib.contextmanager
 def maybe_span(name: str, **attributes):
     """Child span on the ambient tracer; a silent no-op (yields None)

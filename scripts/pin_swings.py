@@ -19,9 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:

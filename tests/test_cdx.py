@@ -1,4 +1,4 @@
-"""CDX(J) index source: parse, latest-capture, digest dedup, fetch plan."""
+"""CDX(J) index source: parse, latest-capture, fetch plan."""
 
 from __future__ import annotations
 
@@ -7,12 +7,7 @@ import gzip
 import pytest
 from pyspark.sql import functions as F
 
-from nabu_spark.sources.cdx import (
-    digest_dedup,
-    fetch_plan,
-    latest_captures,
-    read_cdx,
-)
+from nabu_spark.sources.cdx import fetch_plan, latest_captures, parse_cdx
 
 CDX_SAMPLE = """\
 org,example)/a 20240101120000 {"url": "https://example.org/a", "mime": "text/html", "status": "200", "digest": "AAAA", "length": 100, "offset": 0, "filename": "w/0.warc.gz"}
@@ -28,7 +23,7 @@ def captures(spark, tmp_path_factory):
     p = tmp_path_factory.mktemp("cdx") / "index.cdxj.gz"
     with gzip.open(p, "wt") as fh:
         fh.write(CDX_SAMPLE)
-    return read_cdx(spark, str(p))
+    return parse_cdx(spark.read.text(str(p)))
 
 
 class TestParse:
@@ -57,14 +52,6 @@ class TestOps:
         assert got["https://example.org/a"] == "BBBB"  # March beats January
         assert len(got) == 3
 
-    def test_digest_dedup(self, captures):
-        d = {
-            r["digest"]: (r["n_captures"], r["canonical_url"])
-            for r in digest_dedup(self._valid(captures)).collect()
-        }
-        assert d["AAAA"] == (2, "https://example.org/a")
-        assert d["BBBB"][0] == 1
-
     def test_fetch_plan_sorted_offsets(self, captures):
         plan = {
             r["filename"]: (r["n_records"], list(r["offsets"]))
@@ -72,4 +59,3 @@ class TestOps:
         }
         assert plan["w/0.warc.gz"] == (2, [0, 900])
         assert plan["w/1.warc.gz"] == (2, [100, 4000])
-

@@ -12,7 +12,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from nabu_spark.curate import curate_corpus, curate_pages
+from nabu_spark.curate import curate_corpus, docs_from_pages
 from nabu_spark.operators.encoding import corrupt_text
 
 VOCAB = ["river", "mountain", "forest", "valley", "stream", "meadow",
@@ -67,7 +67,7 @@ class TestCurateCorpus:
         from nabu_spark.sources.documents import content_pages_from_documents
 
         pages = content_pages_from_documents(spark, "/root/testdata/sf0.001")
-        out, report = curate_pages(spark, pages)
+        out, report = curate_corpus(docs_from_pages(pages))
         assert report["n_input"] == out.sparkSession.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         ).count()
@@ -114,51 +114,19 @@ class TestCurateCli:
 
 class TestCurateFunnelPlan:
     """The repair/hygiene/gate portion of the funnel must contain NO
-    shuffle: one fused Arrow pass + codegen expressions. (Joining the
-    narrow stage outputs back on doc_id would shuffle the text column
-    once per stage — the anti-pattern SCALING.md rules out.)"""
+    shuffle: one Arrow pass. (Joining the narrow stage outputs back on
+    doc_id would shuffle the text column once per stage — the anti-pattern
+    SCALING.md rules out.)"""
 
     def test_fused_stage_plan_direct(self, spark, corpus):
         """Direct probe: the cleaned+annotated frame (everything before
         dedup) executes with zero Exchange."""
-        from pyspark.sql import functions as F
+        from nabu_spark.curate import _text_pass
 
-        from nabu_spark.operators.textstats import gopher_exprs, lang_scores
-
-        # mirror curate's fused construction on the same corpus
-        from nabu_spark.curate import curate_corpus  # noqa: F401
-        import nabu_spark.curate as cur
-
-        docs = corpus
-        in_schema = dict(docs.dtypes)
-        other = [c for c in docs.columns if c not in ("doc_id", "text")]
-
-        import pandas as pd
-
-        def fb(it):
-            for pdf in it:
-                out = pdf[["doc_id"] + other].copy()
-                texts, rounds = [], []
-                for t in pdf["text"]:
-                    ft, r = cur.fix_clean_kernel(t)
-                    texts.append(ft)
-                    rounds.append(r)
-                out["text"] = pd.Series(texts, dtype="object")
-                out["repair_rounds"] = pd.Series(rounds, dtype="int32")
-                yield out
-
-        schema = ", ".join(
-            ["doc_id " + in_schema["doc_id"]]
-            + [f"{c} {in_schema[c]}" for c in other]
-            + ["text string", "repair_rounds int"]
-        )
-        cleaned = docs.mapInPandas(fb, schema)
-        annotated = cleaned.select("*", *lang_scores("text")).withColumn(
-            "gopher_pass", gopher_exprs("text")["gopher_pass"]
-        )
+        annotated = _text_pass(corpus, "text", fix=True, gate=True)
         plan = annotated._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
-        assert plan.count("MapInPandas") == 1
+        assert plan.count("MapInArrow") == 1
 
 
 class TestC4Stage:
@@ -251,3 +219,35 @@ def test_gate_kernel_matches_expressions_on_non_ascii(spark):
     # the corpus sits on the gates' edges: both verdicts and several languages
     assert {g for _, g in want.values()} == {True, False}
     assert {p for p, _ in want.values()} == {"und", "en", "de"}
+
+
+def test_c4_funnel_gates_post_c4_text_like_the_expressions(spark):
+    """With ``c4=True`` the funnel gates the post-C4 text with the kernel:
+    its survivors and their lang_pred are what textstats.lang_id and
+    gopher_quality_flags give over the post-C4 text of the docs C4 keeps."""
+    from nabu_spark.curate import fix_clean_kernel
+    from nabu_spark.operators.c4 import c4_clean
+    from nabu_spark.operators.textstats import gopher_quality_flags, lang_id
+
+    suffix = " Aa aa aa aa aa. Bb bb bb bb bb. Cc cc cc cc cc."
+    docs = [d + suffix for d in _adversarial_docs()]
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    out, _ = curate_corpus(df, c4=True, near_dup_threshold=None, report=False)
+    got = {r.doc_id: r.lang_pred for r in out.collect()}
+
+    cleaned = spark.createDataFrame(
+        [(i, fix_clean_kernel(t)[0]) for i, t in enumerate(docs)],
+        "doc_id long, text string",
+    )
+    kept = (c4_clean(cleaned).filter("c4_keep")
+            .select("doc_id", F.col("c4_text").alias("text")))
+    langs = {r.doc_id: (r.lang_pred, r.text) for r in lang_id(kept).collect()}
+    passed = {r.doc_id for r in gopher_quality_flags(kept, "doc_id", "text")
+              .filter("gopher_pass").collect()}
+    canon: dict[str, int] = {}  # the funnel's exact dedup: min id per text
+    for i in sorted(passed):
+        canon.setdefault(langs[i][1], i)
+    want = {i: langs[i][0] for i in canon.values()}
+    assert got == want
+    # the gate decides here: C4 keeps every doc, Gopher drops some
+    assert len(langs) == len(docs) and 0 < len(want) < len(docs)

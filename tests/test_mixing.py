@@ -1,13 +1,12 @@
 """Corpus mixing (operators/mixing.py): exact quotas, determinism across
-partitionings, epoch upsampling, the approximate hash-threshold path, and
-the audit report."""
+partitionings, epoch upsampling and the approximate hash-threshold path."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from nabu_spark.operators.mixing import mix_corpus, mixture_report
+from nabu_spark.operators.mixing import mix_corpus
 
 
 def _docs(spark, sizes: dict[str, int], partitions: int = 4):
@@ -18,6 +17,15 @@ def _docs(spark, sizes: dict[str, int], partitions: int = 4):
             i += 1
     return spark.createDataFrame(
         rows, "doc_id long, source string").repartition(partitions)
+
+
+def mixture_report(mixed):
+    """(source, n_samples, n_unique_docs, max_epoch) per source."""
+    return mixed.groupBy("source").agg(
+        F.count("*").alias("n_samples"),
+        F.countDistinct("doc_id").alias("n_unique_docs"),
+        F.max("epoch").alias("max_epoch"),
+    )
 
 
 class TestExactMix:

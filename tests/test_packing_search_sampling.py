@@ -9,16 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from nabu_spark.operators.packing import (
-    pack_chunked,
-    pack_next_fit,
-    packing_efficiency,
-)
-from nabu_spark.operators.sampling import (
-    domain_rates,
-    sample_report,
-    temperature_sample,
-)
+from nabu_spark.operators.packing import pack_chunked, pack_next_fit
+from nabu_spark.operators.sampling import domain_rates, temperature_sample
 from nabu_spark.operators.search import bm25_topk
 from nabu_spark.session import driver_cap
 
@@ -129,14 +121,6 @@ class TestPackNextFit:
         got = {r["doc_id"]: r["bin"] for r in packed.collect()}
         assert got[0] == 0 and got[1] == 1 and got[2] == 2
 
-    def test_efficiency_report(self, spark, docs):
-        packed = pack_next_fit(docs, capacity=CAP, n_shards=4)
-        eff = packing_efficiency(packed, capacity=CAP)
-        rows = eff.collect()
-        assert {r["shard"] for r in rows} == {0, 1, 2, 3}
-        for r in rows:
-            assert 0.0 < r["fill_ratio"] <= 1.0
-
 
 class TestBM25:
     def test_hand_computed_score(self, spark):
@@ -214,18 +198,6 @@ class TestTemperatureSample:
         b = {r["doc_id"] for r in temperature_sample(d, "doc_id", "domain", seed=2).collect()}
         assert a != b
 
-    def test_sample_report_fracs(self, spark, docs):
-        d = self._domained(docs)
-        s = temperature_sample(d, "doc_id", "domain", alpha=0.5, sample_frac=0.5)
-        rep = sample_report(d, s, "domain").collect()
-        rates = {
-            r["domain"]: r["rate"]
-            for r in domain_rates(d, "domain", alpha=0.5, sample_frac=0.5).collect()
-        }
-        for r in rep:
-            # realized keep fraction tracks the target rate (binomial noise)
-            assert abs(r["kept_frac"] - rates[r["domain"]]) < 0.25
-
 
 class TestPageRank:
     def _numpy_pagerank(self, edges, iters=5, d=0.85):
@@ -299,18 +271,6 @@ class TestPageRank:
         }
         assert got == clean
 
-    def test_host_edges_from_urls(self, spark):
-        from nabu_spark.operators.linkgraph import host_edges_from_urls
-
-        rows = [
-            ("https://a.org/x", "https://b.org/y"),
-            ("https://a.org/x", "HTTPS://A.ORG/z"),  # self after lowering
-            ("nota url", "https://c.org/"),
-        ]
-        df = spark.createDataFrame(rows, "url string, href string")
-        got = {(r["src"], r["dst"]) for r in host_edges_from_urls(df).collect()}
-        assert got == {("a.org", "b.org")}
-
 
 class TestStratifiedCap:
     def test_cap_and_determinism(self, spark, docs):
@@ -376,19 +336,6 @@ class TestBigramLM:
         model = train_bigram_lm(train)
         got = perplexity(test, model).collect()
         assert len(got) == 1 and got[0]["ppl"] > 0
-
-    def test_buckets(self, spark, docs):
-        from nabu_spark.operators.lm import (
-            perplexity,
-            perplexity_buckets,
-            train_bigram_lm,
-        )
-
-        model = train_bigram_lm(docs)
-        b = perplexity_buckets(perplexity(docs, model), n_buckets=3)
-        per = {r["bucket"]: r["count"] for r in b.groupBy("bucket").count().collect()}
-        assert set(per) == {1, 2, 3}
-        assert max(per.values()) - min(per.values()) <= 1  # ntile balance
 
 
 class TestTokenDrift:

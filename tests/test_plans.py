@@ -360,21 +360,27 @@ class TestCdxShape:
         plan = plan_of(out)
         assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
-    def test_digest_dedup_single_aggregate_exchange(self, spark):
-        from nabu_spark.sources.cdx import digest_dedup, parse_cdx
 
-        lines = spark.createDataFrame(
-            [('a,org)/p 20240101000000 {"url": "https://a.org/p", '
-              '"mime": "t", "status": "200", "digest": "D", "length": 1, '
-              '"offset": 0, "filename": "w.warc.gz"}',)],
-            "value string",
+class TestCurateShape:
+    def test_no_c4_funnel_is_one_arrow_pass(self, spark):
+        """Repair, hygiene and both gates of the no-c4 funnel run in ONE
+        Python map node, and it is Arrow-native; the content-hash window
+        is the only shuffle."""
+        import re
+
+        from nabu_spark.curate import curate_corpus
+
+        docs = spark.createDataFrame(
+            [(1, "https://a.org/x", "river forest " * 30)],
+            "doc_id long, url string, text string",
         )
-        plan = plan_of(digest_dedup(parse_cdx(lines)))
-        # partial agg below the shuffle, final above: map-side combine
-        # (min(url) on strings selects SortAggregate, not HashAggregate)
-        assert plan.count("Aggregate(") + plan.count("HashAggregate") >= 2
-        assert "partial" in plan.lower()
-        assert plan.count("Exchange") == 1
+        out, _ = curate_corpus(docs, near_dup_threshold=None, report=False)
+        plan = plan_of(out)
+        nodes = [re.sub(r"^[\s:+|-]*", "", line).split(" ", 1)[0]
+                 for line in plan.splitlines()]
+        assert [n for n in nodes if re.search("Python|Pandas|Arrow", n)] == [
+            "MapInArrow"], plan
+        assert plan.count("Exchange") == 1, plan
 
 
 class TestTurtleSourceShape:

@@ -12,7 +12,6 @@ from nabu_spark.functions.ntriples import (
     canonical_number,
     escape_literal,
     fmt_literal,
-    split_triple,
     unescape_literal,
 )
 from nabu_spark.functions.skolem import skolemize_terms
@@ -85,13 +84,6 @@ class TestLiteralProperties:
             assert dtype.endswith("integer") and lex == str(int(v))
         else:
             assert dtype.endswith("double") and "E" in lex
-
-    @given(literal_text.filter(lambda s: "\n" not in s and "\r" not in s))
-    @settings(max_examples=200)
-    def test_split_triple_inverse_of_format(self, s):
-        line = f'<https://a.org/s> <https://a.org/p> {fmt_literal(s)} .'
-        parts = split_triple(line)
-        assert parts == ("<https://a.org/s>", "<https://a.org/p>", fmt_literal(s))
 
 
 class TestBytesumProperties:

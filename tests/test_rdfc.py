@@ -190,6 +190,30 @@ class TestDistributedOperator:
         assert subjects == {"_:c14n0", "_:c14n1"}
         assert all(r.error_code is None for r in out)
 
+    def test_canonical_quads_match_the_local_canonical_form(self, spark):
+        """Per prov, canonical_quads' rows are canonical_ntriples' lines in
+        order and graph_sha256 is canonical_graph_hash."""
+        from nabu_spark.operators.graphops import canonical_quads
+
+        graphs = {
+            "<urn:g:a>": [("_:x", "<urn:p>", "_:y"), ("_:y", "<urn:q>", '"v"'),
+                          ("<urn:s>", "<urn:p>", "_:x")],
+            "<urn:g:b>": [("_:k", "<urn:p>", "_:k"), ("<urn:s>", "<urn:q>", '"w"')],
+            "<urn:g:c>": [("<urn:s>", "<urn:q>", '"w"')] * 2,
+        }
+        quads = spark.createDataFrame(
+            [(*t, g) for g, ts in graphs.items() for t in ts],
+            "subj string, pred string, obj string, prov string",
+        ).repartition(3)
+        rows: dict[str, list] = {}
+        for r in canonical_quads(quads).collect():
+            rows.setdefault(r.prov, []).append(r)
+        assert rows.keys() == graphs.keys()
+        for g, ts in graphs.items():
+            assert "".join(f"{r.subj} {r.pred} {r.obj} .\n" for r in rows[g]) == (
+                canonical_ntriples(ts))
+            assert {r.graph_sha256 for r in rows[g]} == {canonical_graph_hash(ts)}
+
     def test_blowup_becomes_error_row(self, spark):
         from nabu_spark.operators.graphops import canonical_quads
 

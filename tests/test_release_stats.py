@@ -145,32 +145,6 @@ class TestRelease:
         (sidecar,) = glob.glob(os.path.join(out, "bytesums", "part-*"))
         assert len(open(sidecar).read().splitlines()) == len(names) - 1
 
-    def test_canonical_release_is_sorted_and_deterministic(self, spark, corpus, tmp_path):
-        from nabu_spark.operators.release import write_release_canonical
-
-        _, _, quads = corpus
-        out1 = str(tmp_path / "c1")
-        out2 = str(tmp_path / "c2")
-        write_release_canonical(quads, out1)
-        write_release_canonical(quads.repartition(7), out2)  # different layout
-        import glob as g
-
-        def read_release(base):
-            rel = {}
-            for d in g.glob(os.path.join(base, "graphs_canonical", "release_name=*")):
-                name = d.split("release_name=")[-1]
-                lines = []
-                for f in sorted(g.glob(os.path.join(d, "*.txt"))):
-                    lines.extend(open(f).read().splitlines())
-                rel[name] = lines
-            return rel
-
-        r1, r2 = read_release(out1), read_release(out2)
-        assert r1 and r1.keys() == r2.keys()
-        for name in r1:
-            assert r1[name] == sorted(r1[name])  # canonical order
-            assert r1[name] == r2[name]  # byte-deterministic across layouts
-
     def test_pull_skip(self, spark):
         cur = spark.createDataFrame(
             [("a.nq", 100), ("b.nq", 200), ("c.nq", 300)], "release_name string, bytesum long"

@@ -549,37 +549,6 @@ class TestValuesAndAsk:
             parse_sparql("ASK { ?s ?p ?o } LIMIT 1")
 
 
-class TestBucketedStarJoin:
-    def test_star_join_on_bucketed_quads_is_shuffle_free(self, spark, tmp_path):
-        """A star query (several patterns sharing ?s) over a subj-bucketed
-        quads table joins bucket-to-bucket with ZERO Exchange — the layout a
-        100-TB triple store uses for repeated subject-keyed query load."""
-        from nabu_spark.operators.bucketing import (
-            is_bucketed_join_shuffle_free,
-            write_bucketed,
-        )
-
-        quads = spark.createDataFrame(
-            [(s, p, o) for s, p, o in small_graph()],
-            "subj string, pred string, obj string",
-        )
-        write_bucketed(
-            quads, "sparql_quads_b",
-            key="subj", buckets=4, path=str(tmp_path / "qb"),
-        )
-        try:
-            tbl = spark.table("sparql_quads_b")
-            out = sparql_query(
-                tbl,
-                "PREFIX t: <urn:t:> SELECT ?s ?n ?a WHERE "
-                "{ ?s t:name ?n . ?s t:age ?a . ?s t:lang ?l }",
-            )
-            assert is_bucketed_join_shuffle_free(out)
-            assert out.count() == 4  # the even-numbered people carry t:lang
-        finally:
-            spark.sql("DROP TABLE IF EXISTS sparql_quads_b")
-
-
 class TestDescribeAndHaving:
     def test_describe_iri(self, spark):
         triples = small_graph()

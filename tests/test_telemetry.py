@@ -131,10 +131,10 @@ class TestPipelineIntegration:
         assert stats["attributes"]["ok"] + stats["attributes"]["failed"] == 30
 
     def test_maybe_span_noop_without_tracer(self):
-        from nabu_spark.telemetry import active_tracer, maybe_span, set_active
+        from nabu_spark.telemetry import _ACTIVE, maybe_span, set_active
 
         set_active(None)
-        assert active_tracer() is None
+        assert _ACTIVE.get() is None
         with maybe_span("x") as s:
             assert s is None
         tr = Tracer()

@@ -1170,25 +1170,6 @@ class TestReviewRegressions:
         with pytest.raises(ValueError, match="cap_per_host"):
             curate_corpus(docs, cap_per_host=5)
 
-    def test_bucketed_check_ignores_broadcast(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from nabu_spark.operators.bucketing import (
-            is_bucketed_join_shuffle_free,
-            write_bucketed,
-        )
-
-        big = spark.range(0, 2000).select(F.col("id").alias("k"))
-        write_bucketed(big, "b_fact", key="k", buckets=4,
-                       path=str(tmp_path / "b_fact"))
-        small = spark.range(0, 10).select(F.col("id").alias("k"))
-        try:
-            j = spark.table("b_fact").join(F.broadcast(small), "k")
-            # broadcast moves no fact rows: still counts as shuffle-free
-            assert is_bucketed_join_shuffle_free(j)
-        finally:
-            spark.sql("DROP TABLE IF EXISTS b_fact")
-
 
 class TestC4Filters:
     """C4 cleaning heuristics (Raffel et al. 2020): each rule pinned."""
