@@ -52,6 +52,24 @@ class TestOps:
         assert got["https://example.org/a"] == "BBBB"  # March beats January
         assert len(got) == 3
 
+    def test_exact_dedup_over_digests(self, captures):
+        """Index-level content dedup is exact_dedup keyed on the digest:
+        one fetch per digest, from the smallest URL."""
+        import hashlib
+
+        from nabu_spark.operators.dedup import exact_dedup
+
+        got = {
+            r["content_hash"]: (r["dup_count"], r["canonical_id"])
+            for r in exact_dedup(self._valid(captures), "digest", "url").collect()
+        }
+        md5 = lambda s: hashlib.md5(s.encode()).hexdigest()  # noqa: E731
+        assert got == {
+            md5("AAAA"): (2, "https://example.org/a"),
+            md5("BBBB"): (1, "https://example.org/a"),
+            md5("CCCC"): (1, "https://other.org/c"),
+        }
+
     def test_fetch_plan_sorted_offsets(self, captures):
         plan = {
             r["filename"]: (r["n_records"], list(r["offsets"]))

@@ -251,3 +251,35 @@ def test_c4_funnel_gates_post_c4_text_like_the_expressions(spark):
     assert got == want
     # the gate decides here: C4 keeps every doc, Gopher drops some
     assert len(langs) == len(docs) and 0 < len(want) < len(docs)
+
+
+def test_text_pass_carries_columns_and_null_text(spark):
+    """The repair + gate pass keeps every other column, repairs and cleans
+    the text, and maps a null text to (null, 0 rounds, "und", fail)."""
+    from nabu_spark.curate import _text_pass
+
+    df = spark.createDataFrame(
+        [(1, "https://a.org/1", None),
+         (2, "https://a.org/2", "  caf\u00c3\u00a9 \x07 bar  ")],
+        "doc_id long, url string, text string",
+    )
+    out = {r.doc_id: r.asDict() for r in
+           _text_pass(df, "text", fix=True, gate=True).collect()}
+    assert out[1] == {"doc_id": 1, "url": "https://a.org/1", "text": None,
+                      "repair_rounds": 0, "lang_pred": "und",
+                      "gopher_pass": False}
+    assert out[2]["url"] == "https://a.org/2"
+    assert out[2]["text"] == "caf\u00e9 bar" and out[2]["repair_rounds"] >= 1
+
+
+def test_gate_only_pass_leaves_text_and_appends_verdicts(spark):
+    """Without ``fix`` the pass leaves the text as it is and appends only
+    the kernel's (lang_pred, gopher_pass)."""
+    from nabu_spark.curate import _text_pass, lang_gopher_kernel
+
+    docs = _adversarial_docs() + ["  caf\u00c3\u00a9 \x07 bar  "]  # fix would change it
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    out = _text_pass(df, "text", fix=False, gate=True)
+    assert out.columns == ["doc_id", "text", "lang_pred", "gopher_pass"]
+    got = {r.doc_id: (r.text, r.lang_pred, r.gopher_pass) for r in out.collect()}
+    assert got == {i: (t, *lang_gopher_kernel(t)) for i, t in enumerate(docs)}

@@ -121,6 +121,20 @@ class TestPackNextFit:
         got = {r["doc_id"]: r["bin"] for r in packed.collect()}
         assert got[0] == 0 and got[1] == 1 and got[2] == 2
 
+    def test_every_shard_fills_its_bins(self, spark, docs):
+        """Every shard gets documents, numbers its bins densely from 0, and
+        fills them to between zero and ``capacity`` tokens on average."""
+        packed = pack_next_fit(docs, capacity=CAP, n_shards=4)
+        rows = packed.groupBy("shard").agg(
+            F.countDistinct("bin").alias("n_bins"),
+            F.max("bin").alias("last_bin"),
+            F.sum("n_tokens").alias("tokens"),
+        ).collect()
+        assert {r["shard"] for r in rows} == {0, 1, 2, 3}
+        for r in rows:
+            assert r["n_bins"] == r["last_bin"] + 1
+            assert 0.0 < r["tokens"] / (r["n_bins"] * CAP) <= 1.0
+
 
 class TestBM25:
     def test_hand_computed_score(self, spark):
@@ -197,6 +211,20 @@ class TestTemperatureSample:
         a = {r["doc_id"] for r in temperature_sample(d, "doc_id", "domain", seed=1).collect()}
         b = {r["doc_id"] for r in temperature_sample(d, "doc_id", "domain", seed=2).collect()}
         assert a != b
+
+    def test_realized_keep_fraction_tracks_rates(self, spark, docs):
+        d = self._domained(docs)
+        s = temperature_sample(d, "doc_id", "domain", alpha=0.5, sample_frac=0.5)
+        before = {r["domain"]: r["count"] for r in d.groupBy("domain").count().collect()}
+        after = {r["domain"]: r["count"] for r in s.groupBy("domain").count().collect()}
+        rates = {
+            r["domain"]: r["rate"]
+            for r in domain_rates(d, "domain", alpha=0.5, sample_frac=0.5).collect()
+        }
+        assert before.keys() == rates.keys() and after.keys() <= before.keys()
+        for domain, n in before.items():
+            # realized keep fraction tracks the target rate (binomial noise)
+            assert abs(after.get(domain, 0) / n - rates[domain]) < 0.25
 
 
 class TestPageRank:

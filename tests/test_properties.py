@@ -86,6 +86,21 @@ class TestLiteralProperties:
             assert dtype.endswith("double") and "E" in lex
 
 
+    @given(st.lists(literal_text, min_size=1, max_size=30))
+    @settings(max_examples=10, deadline=None)
+    def test_parse_nquads_inverse_of_format(self, spark, texts):
+        """The N-Quads source reads back exactly the object term that
+        fmt_literal wrote, whatever the literal holds."""
+        from nabu_spark.sources.nquads import parse_nquads
+
+        s, p, g = "<https://a.org/s>", "<https://a.org/p>", "<https://a.org/g>"
+        lines = [(f"{s} {p} {fmt_literal(t)} {g} .",) for t in texts]
+        rows = parse_nquads(spark.createDataFrame(lines, "value string")).collect()
+        assert [tuple(r) for r in rows] == [
+            (s, p, fmt_literal(t), g, None) for t in texts
+        ]
+
+
 class TestBytesumProperties:
     @given(st.lists(st.text(max_size=30), min_size=0, max_size=20))
     @settings(max_examples=200)

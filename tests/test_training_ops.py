@@ -248,6 +248,34 @@ class TestTextStats:
         assert counts[5] == 2
         assert counts[0] > 30
 
+    @pytest.mark.parametrize(
+        "text, want",
+        [
+            ("", 0),
+            ("abcdefgh", 1),  # 8 chars: no subword correction
+            ("abcdefghi", 3),  # 9 chars: 1 + 9 // 4
+            ("abcdefghijklmnop", 5),  # 1 + 16 // 4
+            ("River, forest; supercalifragilistic!", 8),  # 3 + 20 // 4
+        ],
+        ids=["empty", "len8", "len9", "len16", "mixed"],
+    )
+    def test_token_count_subword_correction(self, spark, text, want):
+        """Tokens longer than 8 chars add len // 4 subwords — the
+        floor(len / 4) that the token_count contract oracle computes."""
+        df = spark.createDataFrame([(text,)], "text string")
+        assert df.select(token_count("text")).first()["token_count"] == want
+
+    def test_lang_id_ties_break_in_marker_order(self, spark):
+        """Equal marker votes go to the language declared first in
+        LANG_MARKERS (en, es, fr, de), as in the funnel's gate kernel."""
+        from nabu_spark.curate import lang_gopher_kernel
+
+        rows = [(1, "la que"), (2, "the el"), (3, "die le"), (4, "und der le")]
+        df = spark.createDataFrame(rows, "id long, text string")
+        out = {r["id"]: r["lang_pred"] for r in lang_id(df).collect()}
+        assert out == {1: "es", 2: "en", 3: "fr", 4: "de"}
+        assert {i: lang_gopher_kernel(t)[0] for i, t in rows} == out
+
     def test_lang_id(self, spark):
         rows = [
             (1, "the cat is on the table and the dog is in the house"),
