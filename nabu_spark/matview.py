@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .graphstore import QUAD_COLS, GraphStore
+from .session import materialize
 from .snapshots import SnapshotTable
 from .sparql import Query, SparqlError, _DfCompiler, parse_sparql
 
@@ -176,10 +177,10 @@ class MaterializedView:
 
         fresh = instantiate_construct(sol, self.query.construct)
         cur = self.read()
-        # localCheckpoint: the commit below re-reads `adds` for the write —
+        # materialized: the commit below re-reads `adds` for the write —
         # without it the whole Σ_i expansion would execute twice
-        adds = (fresh.join(cur, on=list(VIEW_COLS), how="left_anti")
-                .distinct().localCheckpoint(eager=True))
+        adds = materialize(fresh.join(cur, on=list(VIEW_COLS), how="left_anti")
+                           .distinct())
         n = adds.count()
         version = self.tbl.commit(
             adds, operation="append", stage="matview-incremental",

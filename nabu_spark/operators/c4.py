@@ -40,21 +40,21 @@ def c4_clean(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Add C4 columns: ``c4_text`` (surviving lines joined), ``c4_n_lines``
     (kept line count), ``c4_n_sentences`` (terminal-punct count in the
     cleaned text), and ``c4_keep`` (page-level verdict)."""
-    lines = F.split(F.col(text_col), "\n")
-    kept = F.filter(lines, _line_ok)
-    clean = F.array_join(kept, "\n")
-    n_sentences = F.size(
-        F.split(clean, r'[.!?]')
-    ) - F.lit(1)  # k terminators split into k+1 pieces
-    lower = F.lower(F.col(text_col))
+    # one column of kept lines: higher-order functions get no subexpression
+    # elimination, so each inlined copy would re-run the per-line filter
     return (
-        docs.withColumn("c4_text", clean)
-        .withColumn("c4_n_lines", F.size(kept))
-        .withColumn("c4_n_sentences", n_sentences)
+        docs.withColumn(
+            "_c4_kept", F.filter(F.split(F.col(text_col), "\n"), _line_ok))
+        .withColumn("c4_text", F.array_join("_c4_kept", "\n"))
+        .withColumn("c4_n_lines", F.size("_c4_kept"))
+        # k terminators split into k+1 pieces
+        .withColumn("c4_n_sentences",
+                    F.size(F.split("c4_text", r'[.!?]')) - F.lit(1))
         .withColumn(
             "c4_keep",
-            ~lower.contains("lorem ipsum")
+            ~F.lower(F.col(text_col)).contains("lorem ipsum")
             & ~F.col(text_col).contains("{")
-            & (n_sentences >= 3),
+            & (F.col("c4_n_sentences") >= 3),
         )
+        .drop("_c4_kept")
     )

@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..session import bounded_collect
+from ..session import bounded_collect, fixpoint
 
 _TOKEN_RE = re.compile(r"[^a-z0-9]+")
 
@@ -359,26 +359,21 @@ def minhash_dedup(
 # --- near-dup clustering -------------------------------------------------------
 
 
-# rounds taken by the LAST distributed CC run in this process (telemetry
-# for scripts/bench_distributed.py; the union-find fast path leaves it)
-LAST_CC_ROUNDS: int | None = None
-
 _CC_DRIVER_CAP = 200_000  # nabu_spark.session.driver_cap overrides it
+_CC_MAX_ROUNDS = 50
 
 
-def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs -> (id, cluster_id) with
     cluster_id = the component's minimum id (the canonical survivor).
 
     Iterative min-label propagation with pointer jumping: each round every
     node takes the min of its own label, its neighbors' labels, AND its
     label's label (path compression), so convergence needs
-    O(log(component diameter)) rounds — max_iters=50 covers any realistic
-    graph. Near-dup components are near-cliques anyway (the verify stage
-    emits all intra-cluster pairs), so 2-3 rounds in practice. Each round is
-    two equi-joins + a groupBy; lineage is cut with localCheckpoint so the
-    plan doesn't grow unboundedly. Raises RuntimeError instead of silently
-    returning partial components if the cap is ever hit.
+    O(log(component diameter)) ``fixpoint`` rounds of two equi-joins + a
+    groupBy. Near-dup components are near-cliques anyway (the verify stage
+    emits all intra-cluster pairs), so 2-3 rounds in practice; past
+    ``_CC_MAX_ROUNDS`` it raises rather than return partial components.
 
     Edge sets up to ``_CC_DRIVER_CAP`` rows label in-memory (one bounded
     collect + union-find) — the iterative rounds cost ~1 s/round of fixed
@@ -414,21 +409,15 @@ def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50) -> DataFrame:
         return pairs.sparkSession.createDataFrame(
             labeled, T.StructType([T.StructField("id", id_type),
                                    T.StructField("cluster_id", id_type)]))
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    ).localCheckpoint(eager=True)
 
-    converged = False
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy("src")
             .agg(F.min("label").alias("nlabel"))
         )
         # carry the pre-round label through so the convergence check is a
-        # filter on the checkpointed result, not another shuffle join + job
+        # filter on the materialized result, not another shuffle join + job
         stepped = labels.join(
             neighbor_min, labels.id == neighbor_min.src, "left"
         ).select(
@@ -442,28 +431,19 @@ def dedup_clusters(pairs: DataFrame, *, max_iters: int = 50) -> DataFrame:
         parent = stepped.select(
             F.col("id").alias("_pid"), F.col("label").alias("_plabel")
         )
-        updated = (
-            stepped.join(parent, stepped.label == parent._pid, "left")
-            .select(
-                "id",
-                "_old",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_plabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return stepped.join(parent, stepped.label == parent._pid, "left").select(
+            "id",
+            "_old",
+            F.least(
+                F.col("label"), F.coalesce(F.col("_plabel"), F.col("label"))
+            ).alias("label"),
         )
-        labels = updated.select("id", "label")
-        if updated.filter(F.col("label") != F.col("_old")).isEmpty():
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters did not converge within {max_iters} rounds — "
-            "pathological component structure; raise max_iters"
-        )
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = rounds
+
+    labels = fixpoint(
+        sym.select(F.col("src").alias("id")).distinct()
+        .withColumn("label", F.col("id")), step,
+        lambda _, cur: cur.filter(F.col("label") != F.col("_old")).isEmpty(),
+        cap=_CC_MAX_ROUNDS, site="dedup_clusters")
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

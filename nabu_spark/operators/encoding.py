@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 # High-signal mojibake markers: UTF-8 lead bytes 0xC3/0xC2 seen through
@@ -96,6 +95,8 @@ def fix_mojibake(
         sus = df.filter(F.coalesce(non_ascii, F.lit(False)))
         fixed_sus = fix_mojibake(sus, id_col, text_col, route_suspects=False)
         return clean.unionByName(fixed_sus)
+
+    import pandas as pd  # here, so importing the module stays pandas-free
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

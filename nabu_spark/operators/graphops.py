@@ -43,15 +43,11 @@ def sameas_edges(quads: DataFrame) -> DataFrame:
     )
 
 
-def sameas_closure(edges: DataFrame, *, max_iters: int = 50) -> DataFrame:
+def sameas_closure(edges: DataFrame) -> DataFrame:
     """(iri, canonical_iri) for every IRI in a sameAs component — the
     transitive, symmetric closure with the smallest member as canonical."""
-    labels = dedup_clusters(
-        edges.select("id_a", "id_b"), max_iters=max_iters
-    )
-    return labels.select(
-        F.col("id").alias("iri"), F.col("cluster_id").alias("canonical_iri")
-    )
+    return dedup_clusters(edges.select("id_a", "id_b")).select(
+        F.col("id").alias("iri"), F.col("cluster_id").alias("canonical_iri"))
 
 
 def release_diff(old: DataFrame, new: DataFrame) -> DataFrame:

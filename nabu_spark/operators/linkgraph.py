@@ -5,8 +5,8 @@ frontier priority, quality weighting for mixing). Two operators:
 
   * ``pagerank`` — power iteration over a (src, dst) edge table with proper
     dangling-mass redistribution. Each iteration is one equi-join on src and
-    one groupBy on dst — the canonical Spark shape; lineage is cut per round
-    with localCheckpoint so the plan stays bounded at any iteration count.
+    one groupBy on dst — the canonical Spark shape; ``materialize`` keeps the
+    plan and its statistics bounded at any iteration count.
   * ``stratified_cap`` — at most N documents per domain, chosen by a
     deterministic md5 hash order rather than id order so the cap is an
     unbiased uniform subsample of each domain and reproducible across runs
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..session import bounded_collect
+from ..session import bounded_collect, materialize
 
 _PAGERANK_DRIVER_CAP = 100_000  # nabu_spark.session.driver_cap overrides it
 
@@ -56,11 +56,10 @@ def pagerank(
         return _pagerank_local(
             edges.sparkSession, e.schema["src"].dataType,
             [(r.src, r.dst) for r in rows], iterations, damping)
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
@@ -83,7 +82,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("_c").alias("_in"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contribs, nodes.node == contribs.dst, "left")
             .join(F.broadcast(dangling))
             .select(
@@ -94,7 +93,6 @@ def pagerank(
                     * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm") / n)
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
     return ranks
 

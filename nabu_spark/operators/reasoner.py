@@ -37,7 +37,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import bounded_collect, capped
+from ..session import bounded_collect, capped, fixpoint, materialize
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -54,13 +54,6 @@ _RDFS_DRIVER_CAP = 100_000
 _OWL_DRIVER_CAP = 100_000
 
 
-# distributed-fixpoint telemetry: rounds taken by the LAST distributed
-# closure (transitive_closure, so SPARQL +/* too) and OWL run in this
-# process (None until one runs; the driver fast paths do not touch it). Read by scripts/bench_distributed.py so the
-# measured cost curve records round counts, not just wall time.
-LAST_ROUNDS: dict = {"closure": None, "owl": None}
-
-
 def transitive_closure(edges: DataFrame,
                        keys: Sequence[str] = ()) -> DataFrame:
     """Strict transitive closure of a (child, parent) edge relation, closed
@@ -71,10 +64,10 @@ def transitive_closure(edges: DataFrame,
     Relations up to ``_CLOSURE_DRIVER_CAP`` pairs close in-memory
     (``_closure_local`` per key) and ship back as one broadcastable
     relation, unless the closure passes 4x the cap (a long chain's closure
-    is quadratic in its length). Anything larger runs pointer doubling:
-    ceil(log2 diameter) self-join rounds, each localCheckpoint-ed so
-    lineage stays bounded. ``driver_cap(0)`` forces the distributed
-    path."""
+    is quadratic in its length). Anything larger runs pointer doubling
+    through ``fixpoint``: ceil(log2 diameter) self-join rounds, each
+    materialized so lineage and plan statistics stay bounded.
+    ``driver_cap(0)`` forces the distributed path."""
     keys = list(keys)
     rows, result = bounded_collect(
         edges.select("child", "parent", *keys).distinct(),
@@ -93,23 +86,26 @@ def transitive_closure(edges: DataFrame,
         else:
             return edges.sparkSession.createDataFrame(
                 sorted(closed), result.schema)
-    prev = result.count()
-    for i in range(_MAX_ROUNDS):
-        doubled = (
-            result.select("child", F.col("parent").alias("__m"), *keys)
-            .join(result.select(F.col("child").alias("__m"), "parent", *keys),
-                  on=["__m", *keys])
-            .select("child", "parent", *keys)
-            .unionByName(result)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cnt = doubled.count()
-        if cnt == prev:
-            LAST_ROUNDS["closure"] = i + 1
-            return doubled
-        result, prev = doubled, cnt
-    raise RuntimeError(f"closure did not converge in {_MAX_ROUNDS} rounds")
+
+    def double(r: DataFrame) -> DataFrame:
+        return (r.select("child", F.col("parent").alias("__m"), *keys)
+                .join(r.select(F.col("child").alias("__m"), "parent", *keys),
+                      on=["__m", *keys])
+                .select("child", "parent", *keys).unionByName(r).distinct())
+
+    return fixpoint(result, double, _same_count(result), cap=_MAX_ROUNDS,
+                    site="transitive_closure")
+
+
+def _same_count(first: DataFrame):
+    """``fixpoint`` predicate: a round kept its predecessor's row count."""
+    last = first.count()
+
+    def same(_prev: DataFrame, cur: DataFrame) -> bool:
+        nonlocal last
+        before, last = last, cur.count()
+        return last == before
+    return same
 
 
 def _edges(triples: DataFrame, pred: str) -> DataFrame:
@@ -312,16 +308,12 @@ def _owl_round(t: DataFrame) -> DataFrame:
                 F.col("subj").alias("obj"))
     )
     # lift inverse-derived triples too, so a p'⊑p / p inv q / q⊑r chain
-    # closes within one round instead of three.
-    # MATERIALIZE the property-closed relation once per round: it feeds
-    # the transitive-property closure plus the domain/range/class
-    # stages below, and without a checkpoint each consumer re-executes the
-    # whole broadcast-join chain (the owl_dist leg spent most of its 74s
-    # re-deriving these unions per rule — guide §5 reuse-vs-recompute).
-    data_pi = (
+    # closes within one round instead of three. Materialized: the closure
+    # and every rule stage below read it, and each would otherwise re-run
+    # the broadcast-join chain (most of the owl_dist leg's 74 s once).
+    data_pi = materialize(
         data_p.unionByName(inv_derived)
         .unionByName(_rdfs7(inv_derived, spo))
-        .localCheckpoint(eager=True)
     )
 
     data_pit = data_pi
@@ -346,10 +338,9 @@ def _owl_round(t: DataFrame) -> DataFrame:
         )
         # same economics: the transitive/inverse closure union feeds four
         # downstream rule stages — materialize it once
-        data_pit = (
+        data_pit = materialize(
             data_pi.unionByName(part).unionByName(part_inv)
             .unionByName(_rdfs7(part_inv, spo))
-            .localCheckpoint(eager=True)
         )
 
     # --- domain / range / class rules (same shape as rdfs_materialize) ---
@@ -382,13 +373,11 @@ def _owl_round(t: DataFrame) -> DataFrame:
                                 F.lit(SUBCLASS).alias("pred"),
                                 F.col("parent").alias("obj")))
     )
-    full = (
+    # five consumers (the two groupings, the sameAs scan, the emptiness
+    # probe and the canonical rewrite), one materialization
+    full = materialize(
         data_pit.unionByName(types_dom).unionByName(types_rng)
         .unionByName(types_up).unionByName(schema_closed).distinct()
-        # consumed by the functional/inverse-functional groupings, the
-        # asserted-sameAs scan, the emptiness probe AND the canonical
-        # rewrite — five consumers, one materialization
-        .localCheckpoint(eager=True)
     )
 
     # --- equality rules ---------------------------------------------------
@@ -453,8 +442,7 @@ def _owl_round(t: DataFrame) -> DataFrame:
     return rewritten.unionByName(mapping_triples).distinct()
 
 
-def owl_rl_materialize(triples: DataFrame, *,
-                       max_rounds: int = _MAX_OWL_ROUNDS) -> DataFrame:
+def owl_rl_materialize(triples: DataFrame) -> DataFrame:
     """The OWL-RL-lite closure of (subj, pred, obj): ρdf plus the property
     and equality rules above, with sameAs components canonicalized onto
     their minimum-IRI member. Fixpoint over stratified rounds. The
@@ -464,32 +452,25 @@ def owl_rl_materialize(triples: DataFrame, *,
     anti-join of the new set against the old.
 
     Graphs of up to ``_OWL_DRIVER_CAP`` distinct triples close in-memory
-    via the exact twin (``owl_closure_local``) and ship back as one local
-    relation — a multi-round distributed fixpoint costs hundreds of Spark
-    jobs of fixed overhead, which dwarfs compute at ontology scale (the
-    same economics as ``transitive_closure``'s driver path). Larger
-    graphs run the distributed rounds; twin/distributed agreement is
-    pinned by randomized tests. ``driver_cap(0)`` forces the distributed
-    path."""
+    via the exact twin (``owl_closure_local``): the distributed rounds cost
+    hundreds of Spark jobs of fixed overhead, which dwarfs compute at
+    ontology scale. Randomized tests pin twin/distributed agreement;
+    ``driver_cap(0)`` forces the distributed ``fixpoint``."""
     rows, t = bounded_collect(
         triples.select("subj", "pred", "obj").distinct(), _OWL_DRIVER_CAP,
         site="owl_rl_materialize")
     if rows is not None:
-        closed = owl_closure_local(
-            [(r.subj, r.pred, r.obj) for r in rows], max_rounds=max_rounds)
+        closed = owl_closure_local([(r.subj, r.pred, r.obj) for r in rows])
         return t.sparkSession.createDataFrame(
             sorted(closed), "subj string, pred string, obj string")
-    prev = t.count()
-    for i in range(max_rounds):
-        nxt = _owl_round(t).localCheckpoint(eager=True)
-        cnt = nxt.count()
-        if cnt == prev and nxt.join(
-                t, ["subj", "pred", "obj"], "left_anti").isEmpty():
-            LAST_ROUNDS["owl"] = i + 1
-            return nxt
-        t, prev = nxt, cnt
-    raise RuntimeError(
-        f"OWL-RL closure did not converge in {max_rounds} rounds")
+    same = _same_count(t)
+
+    def done(prev: DataFrame, cur: DataFrame) -> bool:
+        return same(prev, cur) and cur.join(
+            prev, ["subj", "pred", "obj"], "left_anti").isEmpty()
+
+    return fixpoint(t, _owl_round, done, cap=_MAX_OWL_ROUNDS,
+                    site="owl_rl_materialize")
 
 
 def rdfs_closure_local(triples) -> set:
@@ -655,13 +636,13 @@ def _owl_round_local(t: set) -> set:
     return rewritten | mapping
 
 
-def owl_closure_local(triples, *, max_rounds: int = _MAX_OWL_ROUNDS) -> set:
+def owl_closure_local(triples) -> set:
     """owl_rl_materialize's semantics over an in-memory triple iterable."""
     t = set(triples)
-    for _ in range(max_rounds):
+    for _ in range(_MAX_OWL_ROUNDS):
         nxt = _owl_round_local(t)
         if nxt == t:
             return nxt
         t = nxt
     raise RuntimeError(
-        f"OWL-RL closure did not converge in {max_rounds} rounds")
+        f"OWL-RL closure did not converge in {_MAX_OWL_ROUNDS} rounds")

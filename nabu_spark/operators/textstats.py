@@ -9,8 +9,6 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 TOKEN_SPLIT = r"[^a-zA-Z0-9]+"
@@ -102,6 +100,8 @@ def winnowing_fingerprints(
     """Winnowing (local-minimum rolling-hash selection) — the standard
     document fingerprint for near-dup/plagiarism detection. One Arrow UDF,
     output (id, fingerprint_hash) rows, joinable on the hash."""
+    import numpy as np  # here, so importing the module stays pandas-free
+    import pandas as pd
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -428,8 +428,6 @@ def clean_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     RE2's \\s disagree about \\x0B, which the control strip removes first),
     so the DuckDB oracle replays the identical pipeline with
     ``nfc_normalize`` + the same regexes."""
-    from collections.abc import Iterator
-
     import pandas as pd
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

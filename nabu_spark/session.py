@@ -16,6 +16,7 @@ settings.
 Every driver fast path (an in-memory twin that serves a bounded relation
 instead of a multi-round distributed fixpoint) collects its input through
 ``bounded_collect``; ``driver_cap`` overrides all of their caps at once.
+Distributed iterations cut lineage with ``materialize`` and loop in ``fixpoint``.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,10 +48,13 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cores
+    builder = SparkSession.builder.appName(app_name)
+    # spark-submit's --master stands (it sets the gateway port); a JVM we
+    # launch reports local[*] as its master, so the conf cannot tell them apart
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -112,8 +117,47 @@ def bounded_collect(df: DataFrame, cap: int, *,
             if read > cap:
                 rows = None
         else:
-            relation, rows, read = df.localCheckpoint(eager=True), None, 0
+            relation, rows, read = materialize(df), None, 0
         if span is not None:
             span.attributes.update(
                 rows=read, path="distributed" if rows is None else "driver")
     return rows, relation
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` computed now, lineage cut, plan statistics back at Spark's
+    default. A checkpoint keeps the size estimate of the plan it replaced
+    and a join multiplies its children's, so self-join rounds doubled the
+    estimate's digits each round (11 closure rounds over a 1,024-edge
+    chain: 8.81E+8452 B) until the planner's BigInt arithmetic dominated.
+    Partitioning, ordering and constraints stay, so joins and exchange
+    reuse plan as over the checkpoint itself."""
+    ckpt = df.localCheckpoint(eager=True)
+    spark = df.sparkSession
+    jss, jvm = spark._jsparkSession, spark._jvm
+    rdd = ckpt._jdf.queryExecution().analyzed()  # the checkpoint's LogicalRDD
+    fresh = rdd.copy(rdd.output(), rdd.rdd(), rdd.outputPartitioning(),
+                     rdd.outputOrdering(), rdd.isStreaming(), rdd.stream(),
+                     jss, jvm.scala.Option.empty(),
+                     jvm.scala.Option.apply(rdd.constraints()))
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, fresh),
+                     spark)
+
+
+def fixpoint(df: DataFrame, step: Callable[[DataFrame], DataFrame],
+             done: Callable[[DataFrame, DataFrame], bool], *, cap: int,
+             site: str) -> DataFrame:
+    """Iterate ``df = materialize(step(df))`` until ``done(previous,
+    current)``; return the last relation. Past ``cap`` rounds it raises
+    RuntimeError naming ``site``. One span records the site and rounds."""
+    from .telemetry import maybe_span
+
+    with maybe_span("fixpoint", site=site) as span:
+        for rounds in range(1, cap + 1):
+            nxt = materialize(step(df))
+            if span is not None:
+                span.attributes["rounds"] = rounds
+            if done(df, nxt):
+                return nxt
+            df = nxt
+        raise RuntimeError(f"{site} did not converge in {cap} rounds")

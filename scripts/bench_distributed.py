@@ -20,13 +20,13 @@ would otherwise shortcut):
                     documents table) with Observation drop accounting;
                     includes a 30k-doc boilerplate template block that the
                     max_bucket=64 guardrail must drop and COUNT
-  cc_10x            dedup_clusters over the minhash_10x pairs (>200k edges
-                    -> the distributed pointer-jumping rounds)
+  cc_10x            dedup_clusters under driver_cap(0) over the
+                    minhash_10x pairs (970k edges at the default size)
   lsh_10x           lsh_topk over 2M synthetic 64-d embeddings, 50 queries
 
 Each leg records wall seconds, output rows, fixpoint ROUNDS (from the
-operators' LAST_*ROUNDS telemetry), and for minhash the dropped-bucket
-observation values. Results go to BENCH/SCALING.json and the generated
+operator's ``fixpoint`` span, read under an active tracer), and for
+minhash the dropped-bucket observation values. Results go to BENCH/SCALING.json and the generated
 table in BENCH/SCALING.md.
 
 Usage: python scripts/bench_distributed.py [leg ...]   (default: all)
@@ -52,6 +52,22 @@ def _steal_pct() -> float:
         return 100.0 * vals[7] / max(1, sum(vals))
     except Exception:
         return -1.0
+
+
+def traced_rounds(run, site: str):
+    """``(run(), rounds)``: the rounds of the outermost ``fixpoint`` span
+    that ``run`` leaves for ``site`` (None when no distributed round ran)."""
+    from nabu_spark.telemetry import Tracer, set_active
+
+    tracer = Tracer("nabu-bench-distributed")
+    set_active(tracer)
+    try:
+        out = run()
+    finally:
+        set_active(None)
+    spans = [s for s in tracer.spans
+             if s.name == "fixpoint" and s.attributes["site"] == site]
+    return out, spans[0].attributes.get("rounds") if spans else None
 
 
 def main() -> None:
@@ -85,9 +101,11 @@ def main() -> None:
         )
         t0 = time.monotonic()
         with driver_cap(0):
-            rows = reasoner.transitive_closure(edges).count()
+            rows, rounds = traced_rounds(
+                lambda: reasoner.transitive_closure(edges).count(),
+                "transitive_closure")
         record("closure_dist", time.monotonic() - t0, rows,
-               rounds=reasoner.LAST_ROUNDS["closure"], input_edges=93_000)
+               rounds=rounds, input_edges=93_000)
 
     # ---- rdfs_dist ---------------------------------------------------------
     if "rdfs_dist" in legs:
@@ -160,14 +178,14 @@ def main() -> None:
         n_in = data.count() + 6
         t0 = time.monotonic()
         with driver_cap(0):
-            rows = reasoner.owl_rl_materialize(
-                data.unionByName(schema)).count()
+            rows, rounds = traced_rounds(
+                lambda: reasoner.owl_rl_materialize(
+                    data.unionByName(schema)).count(), "owl_rl_materialize")
         record("owl_dist", time.monotonic() - t0, rows,
-               rounds=reasoner.LAST_ROUNDS["owl"], input_triples=n_in)
+               rounds=rounds, input_triples=n_in)
 
     # ---- sparql_path_dist --------------------------------------------------
     if "sparql_path_dist" in legs:
-        from nabu_spark.operators import reasoner
         from nabu_spark.sparql import sparql_query
 
         chain = spark.range(200_000).filter(F.col("id") % 32 != 0).select(
@@ -178,16 +196,16 @@ def main() -> None:
         )
         t0 = time.monotonic()
         with driver_cap(0):
-            rows = sparql_query(
+            rows, rounds = traced_rounds(lambda: sparql_query(
                 chain,
                 """
                 PREFIX p: <urn:p:>
                 SELECT ?doc (COUNT(?anc) AS ?n_anc)
                 WHERE { ?doc p:prev+ ?anc } GROUP BY ?doc
                 """,
-            ).count()
+            ).count(), "transitive_closure")
         record("sparql_path_dist", time.monotonic() - t0, rows,
-               rounds=reasoner.LAST_ROUNDS["closure"], input_edges=193_750)
+               rounds=rounds, input_edges=193_750)
 
     # ---- minhash_10x / cc_10x ---------------------------------------------
     pairs_df = None
@@ -240,12 +258,13 @@ def main() -> None:
         from nabu_spark.operators import dedup as dedup_mod
 
         t0 = time.monotonic()
-        clusters = dedup_mod.dedup_clusters(pairs_df)
-        n_nontrivial = clusters.filter(
-            F.col("id") != F.col("cluster_id")).count()
+        with driver_cap(0):  # BENCH_DIST_DOCS below ~450k stays under the cap
+            n_nontrivial, rounds = traced_rounds(
+                lambda: dedup_mod.dedup_clusters(pairs_df).filter(
+                    F.col("id") != F.col("cluster_id")).count(),
+                "dedup_clusters")
         record("cc_10x", time.monotonic() - t0, n_nontrivial,
-               rounds=dedup_mod.LAST_CC_ROUNDS,
-               input_edges=int(pairs_df.count()))
+               rounds=rounds, input_edges=int(pairs_df.count()))
 
     # ---- lsh_10x -----------------------------------------------------------
     if "lsh_10x" in legs:

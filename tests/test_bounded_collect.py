@@ -151,7 +151,8 @@ def test_one_decision_span_per_call(spark):
         bounded_collect(edges, 5, site="probe")
     finally:
         set_active(None)
-    assert [(s.name, s.attributes) for s in tr.spans] == [
+    assert [(s.name, s.attributes) for s in tr.spans
+            if s.name == "bounded_collect"] == [
         ("bounded_collect", {"site": "transitive_closure", "cap": 100_000,
                              "rows": 1, "path": "driver"}),
         ("bounded_collect", {"site": "transitive_closure", "cap": 0,

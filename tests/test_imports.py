@@ -20,14 +20,24 @@ PAGE_PATH_MODULES = (
 )
 
 
-def test_page_to_release_path_imports_no_pandas():
-    code = "".join(f"import {m}\n" for m in PAGE_PATH_MODULES) + (
-        "import sys\nprint('pandas' in sys.modules)\n"
-    )
+def _imports_pandas(code: str) -> bool:
     env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        env=env, cwd=REPO, timeout=120,
+        [sys.executable, "-c", code + "import sys\nprint('pandas' in sys.modules)\n"],
+        capture_output=True, text=True, env=env, cwd=REPO, timeout=120,
     )
     assert out.returncode == 0, out.stderr
-    assert out.stdout.strip() == "False"
+    return out.stdout.strip() == "True"
+
+
+def test_page_to_release_path_imports_no_pandas():
+    assert not _imports_pandas("".join(f"import {m}\n" for m in PAGE_PATH_MODULES))
+
+
+def test_curate_arrow_pass_kernels_import_no_pandas():
+    """The curation pass's kernels import the encoding and text-statistics
+    operators in each fresh worker; neither may pull pandas in."""
+    assert not _imports_pandas(
+        "from nabu_spark.curate import fix_clean_kernel, lang_gopher_kernel\n"
+        "fix_clean_kernel('caf\\u00c3\\u00a9 one two')\n"
+        "lang_gopher_kernel('the river and the forest')\n")

@@ -382,6 +382,24 @@ class TestCurateShape:
             "MapInArrow"], plan
         assert plan.count("Exchange") == 1, plan
 
+    def test_c4_line_filter_runs_once(self, spark):
+        """Higher-order functions get no subexpression elimination: the C4
+        line filter appears once in the plan, and the cleaned text, the
+        line count, the sentence count and the verdict read its result."""
+        from nabu_spark.curate import curate_corpus
+        from nabu_spark.operators.c4 import c4_clean
+
+        docs = spark.createDataFrame(
+            [(1, "https://a.org/x", "One two three four five.\nshort")],
+            "doc_id long, url string, text string",
+        )
+        out, _ = curate_corpus(docs, c4=True, near_dup_threshold=None,
+                               report=False)
+        for df in (c4_clean(docs), out):
+            plan = plan_of(df)
+            assert plan.count("lambdafunction(") == 1, plan
+            assert plan.count("RLIKE(") == 1, plan
+
 
 class TestTurtleSourceShape:
     def test_one_arrow_pass_no_shuffle(self, spark, tmp_path):

@@ -214,10 +214,12 @@ BOUNDED_PROBES = {
 }
 
 
-class _LimitCollects(ast.NodeVisitor):
-    """The qualified name of the function around each `.limit(...).collect()`."""
+class _ScopedCalls(ast.NodeVisitor):
+    """The qualified name of the function around each call that ``match``
+    accepts."""
 
-    def __init__(self):
+    def __init__(self, match):
+        self.match = match
         self.scope: list[str] = []
         self.found: list[str] = []
 
@@ -229,24 +231,50 @@ class _LimitCollects(ast.NodeVisitor):
     visit_FunctionDef = visit_AsyncFunctionDef = visit_ClassDef = _scoped
 
     def visit_Call(self, node):
-        f = node.func
-        if (isinstance(f, ast.Attribute) and f.attr == "collect"
-                and isinstance(f.value, ast.Call)
-                and isinstance(f.value.func, ast.Attribute)
-                and f.value.func.attr == "limit"):
+        if self.match(node):
             self.found.append(".".join(self.scope))
         self.generic_visit(node)
+
+
+def _scoped_calls(match) -> set[str]:
+    """``"<path>::<qualified function>"`` of every call in the package that
+    ``match`` accepts."""
+    found = set()
+    for path in sorted(PKG.rglob("*.py")):
+        v = _ScopedCalls(match)
+        v.visit(ast.parse(path.read_text()))
+        rel = path.relative_to(REPO).as_posix()
+        found |= {f"{rel}::{name}" for name in v.found}
+    return found
+
+
+def _limit_collect(node: ast.Call) -> bool:
+    f = node.func
+    return (isinstance(f, ast.Attribute) and f.attr == "collect"
+            and isinstance(f.value, ast.Call)
+            and isinstance(f.value.func, ast.Attribute)
+            and f.value.func.attr == "limit")
 
 
 def test_driver_fast_paths_go_through_bounded_collect():
     """A hand-rolled `limit(cap + 1).collect()` probe builds its input twice
     when the fallback runs; driver fast paths call `bounded_collect`."""
-    found = set()
-    for path in sorted(PKG.rglob("*.py")):
-        v = _LimitCollects()
-        v.visit(ast.parse(path.read_text()))
-        rel = path.relative_to(REPO).as_posix()
-        found |= {f"{rel}::{name}" for name in v.found}
+    found = _scoped_calls(_limit_collect)
     assert found == BOUNDED_PROBES, (
         f"unexpected: {sorted(found - BOUNDED_PROBES)}; "
         f"stale: {sorted(BOUNDED_PROBES - found)}")
+
+
+def _eager_checkpoint(node: ast.Call) -> bool:
+    f = node.func
+    return (isinstance(f, ast.Attribute) and f.attr == "localCheckpoint"
+            and any(k.arg == "eager" and isinstance(k.value, ast.Constant)
+                    and k.value.value is True for k in node.keywords))
+
+
+def test_eager_checkpoints_go_through_materialize():
+    """A bare eager checkpoint keeps the size estimate of the plan it
+    replaced, and self-joins compound it round after round; every eager
+    lineage cut calls `session.materialize`, which drops it."""
+    found = _scoped_calls(_eager_checkpoint)
+    assert found == {"nabu_spark/session.py::materialize"}, sorted(found)

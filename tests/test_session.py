@@ -172,3 +172,44 @@ def test_no_daemon_when_imported_from_zip(tmp_path):
     where, conf = proc.stdout.strip().splitlines()[-2:]
     assert where.startswith(archive)
     assert conf == "{}"
+
+
+_MASTER_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from nabu_spark.session import get_spark
+
+for cores in map(int, sys.argv[2:]):
+    spark = get_spark(app_name="master", cores=cores,
+                      extra_conf={"spark.driver.memory": "1g"})
+    print(spark.sparkContext.master)
+    spark.stop()
+"""
+
+
+def _masters(tmp_path, argv: list[str]) -> list[str]:
+    script = tmp_path / "master.py"
+    script.write_text(_MASTER_SCRIPT)
+    env = {**os.environ, "PYSPARK_PYTHON": sys.executable}
+    proc = subprocess.run([*argv, str(script), REPO, "4", "1"],
+                          capture_output=True, text=True, timeout=600,
+                          cwd=str(tmp_path), env=env)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return [ln for ln in proc.stdout.splitlines() if ln.startswith("local")]
+
+
+@pytest.mark.slow
+def test_get_spark_keeps_a_submitted_master(tmp_path):
+    """Under spark-submit the submitted --master stands over ``cores``."""
+    import pyspark
+
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    assert _masters(tmp_path, [submit, "--master", "local[2]",
+                               "--driver-memory", "1g"]) == ["local[2]"] * 2
+
+
+@pytest.mark.slow
+def test_get_spark_sets_cores_on_a_launched_jvm(tmp_path):
+    """A JVM the driver launches itself reports local[*] as its master, yet
+    each session gets the requested core count, also after a restart."""
+    assert _masters(tmp_path, [sys.executable]) == ["local[4]", "local[1]"]
