@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 from .graphstore import QUAD_COLS, GraphStore
 from .session import materialize
 from .snapshots import SnapshotTable
-from .sparql import Query, SparqlError, _DfCompiler, parse_sparql
+from .sparql import Query, SparqlError, _SqlCompiler, parse_sparql
 
 VIEW_COLS = ("subj", "pred", "obj")
 
@@ -71,37 +71,29 @@ def _monotone_bgp(q: Query) -> bool:
     return True
 
 
-def _join_shared(acc: DataFrame | None, df: DataFrame) -> DataFrame:
-    if acc is None:
-        return df
-    shared = [c for c in acc.columns if c in df.columns]
-    return acc.join(df, on=shared) if shared else acc.crossJoin(df)
-
-
-def _delta_solutions(q: Query, old: _DfCompiler, new: _DfCompiler,
-                     delta: _DfCompiler) -> DataFrame | None:
-    """The Σ_i semi-naive expansion over the parsed WHERE. Returns None
-    when the BGP has no triple patterns (constant query — nothing to
-    maintain incrementally)."""
+def _delta_solutions(q: Query, comp: _SqlCompiler) -> DataFrame | None:
+    """The Σ_i semi-naive expansion over the parsed WHERE, as one statement
+    whose patterns read the ``old``, ``new`` and ``delta`` relations of
+    ``comp``. Returns None when the BGP has no triple patterns (constant
+    query — nothing to maintain incrementally)."""
     triples = [it for it in q.where.items if it[0] == "triple"]
     if not triples:
         return None
-    out: DataFrame | None = None
+    terms = []
     for i in range(len(triples)):
-        acc: DataFrame | None = None
+        acc = None
         for j, (_, s, p, o) in enumerate(triples):
-            comp = new if j < i else (delta if j == i else old)
-            acc = _join_shared(acc, comp.pattern(s, p, o, None))
-        out = acc if out is None else out.unionByName(acc)
+            rel = "new" if j < i else ("delta" if j == i else "old")
+            acc = comp.join(acc, comp.pattern(s, p, o, None, rel))
+        terms.append(acc)
     # BINDs extend rows, FILTERs restrict them — order-preserving over the
-    # joined relation, exactly as _DfCompiler.group applies them
+    # joined relation, exactly as _SqlCompiler.group applies them
+    out = comp.union(terms)
     for it in q.where.items:
         if it[0] == "bind":
-            out = out.withColumn(it[2], new.expr(it[1], "term"))
-    for it in q.where.items:
-        if it[0] == "filter":
-            out = out.filter(new.expr(it[1], "bool"))
-    return out
+            out = comp.bind(out, it[1], it[2])
+    out = comp.filter(out, [it[1] for it in q.where.items if it[0] == "filter"])
+    return comp.run(out[0])
 
 
 class MaterializedView:
@@ -165,12 +157,10 @@ class MaterializedView:
         # a FROM/FROM NAMED dataset clause restricts all three relations
         # identically (the delta included), so the expansion stays sound
         ds = (self.query.from_graphs, self.query.from_named)
+        views = {"old": self.store.read(v0), "new": self.store.read(head),
+                 "delta": delta_quads}
         sol = _delta_solutions(
-            self.query,
-            old=_DfCompiler(self.store.read(v0), "prov", *ds),
-            new=_DfCompiler(self.store.read(head), "prov", *ds),
-            delta=_DfCompiler(delta_quads, "prov", *ds),
-        )
+            self.query, _SqlCompiler(self.store.spark, views, "prov", *ds))
         if sol is None:
             return self._full(head)
         from .sparql import instantiate_construct

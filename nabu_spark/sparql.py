@@ -27,7 +27,7 @@ Supported grammar (SPARQL 1.1 SELECT subset):
             variables bound),
             VALUES ?v { ... } / VALUES (?v ?w) { (...) ... } inline data
             (UNDEF wildcards fully honored in the local evaluator; in the
-            DataFrame backend an UNDEF cell on a join-shared variable
+            Spark backend an UNDEF cell on a join-shared variable
             drops the row — keep UNDEF off shared variables),
             property paths in predicate position: ^p, p1/p2, p1|p2,
             p+, p*, p? and (...) grouping — SET semantics; closures
@@ -61,18 +61,19 @@ cluster-size independent and twin-evaluator comparable).
 
 One parse, two evaluators:
 
-- ``sparql_query(df, text)`` — DataFrame backend. Each triple pattern is a
-  filtered projection of the quad table (constant positions become column
-  predicates that push down to the parquet scan); each shared variable
-  becomes an equi-join that Catalyst/AQE is free to reorder, broadcast, or
-  skew-split. OPTIONAL compiles to a left join, UNION to unionByName,
-  aggregates to a hash aggregate. At 100 TB this is the right shape: the
-  plan is N filtered scans of one columnar table joined on term strings —
-  no driver-side iteration, no per-row Python.
+- ``sparql_query(df, text)`` — Spark backend: the query compiles to ONE
+  Spark SQL statement with the query's values bound as parameters. Each
+  triple pattern is a filtered projection of the quad table (constant
+  positions become column predicates that push down to the parquet scan);
+  each shared variable becomes an equi-join that Catalyst/AQE is free to
+  reorder, broadcast, or skew-split. OPTIONAL compiles to a left join,
+  UNION to UNION ALL, aggregates to a hash aggregate. At 100 TB this is the
+  right shape: the plan is N filtered scans of one columnar table joined on
+  term strings — no driver-side iteration, no per-row Python.
 - ``sparql_eval_local(triples, text)`` — in-memory evaluator over one small
   graph (a per-document subgraph). Used by the SHACL engine for sh:sparql
   constraints (per-focus-node, inside mapInPandas) and by the test suite as
-  an independent cross-check of the DataFrame compiler.
+  an independent cross-check of the SQL compiler.
 
 Terms are N-Triples strings ('<iri>', '"lit"', '"lit"@en', '"1"^^<dt>',
 '_:b0') exactly as produced by operators/triples.py. Comparison semantics
@@ -925,9 +926,9 @@ _NUM_FUNCS = {"STRLEN", "ABS", "ROUND", "CEIL", "FLOOR",
 
 # ISO 8601 xsd:dateTime / xsd:date lexical shape; groups: 1 year, 2 month,
 # 3 day, 4 hours, 5 minutes, 6 seconds, 7 timezone
-_DT_RE = (r"^(-?\d{4,})-(\d{2})-(\d{2})"
-          r"(?:T(\d{2}):(\d{2}):(\d{2}(?:\.\d+)?))?"
-          r"(Z|[+-]\d{2}:\d{2})?$")
+_DT_RE = (r"^(-?\d\d\d\d+)-(\d\d)-(\d\d)"
+          r"(?:T(\d\d):(\d\d):(\d\d(?:\.\d+)?))?"
+          r"(Z|[+-]\d\d:\d\d)?$")
 _STR_FUNCS = {"STR", "LANG", "DATATYPE", "UCASE", "LCASE", "CONCAT",
               "ENCODE_FOR_URI", "TZ",
               "SUBSTR", "REPLACE", "STRBEFORE", "STRAFTER", "MD5", "SHA1",
@@ -966,644 +967,654 @@ def _cmp_mode(a, b) -> str:
 
 
 # ---------------------------------------------------------------------------
-# DataFrame backend
+# Spark SQL backend
 # ---------------------------------------------------------------------------
+# A query compiles to ONE Spark SQL text that one ``spark.sql`` call runs.
+# Every value read from the query text is a named parameter (:t0, :t1, ...),
+# never spliced. The text holds only backtick-quoted variable names, internal
+# column names, the compiler's own constants and ``{name}`` placeholders of
+# the relations: a registered view's name, or a DataFrame that Spark's
+# SQLStringFormatter registers as a view for the call and drops after it. A
+# relation is (sql, variables): the variables are tracked here, so building
+# a plan asks the JVM nothing. A relation without variables carries one
+# ``__unit`` column, since SQL cannot select zero columns.
 
-def _c_lex(c: Column) -> Column:
+
+def _k(s: str) -> str:
+    """A compiler constant as a raw SQL literal. Never called on text from
+    the query; no constant holds a quote or a formatter brace."""
+    assert not set("'{}") & set(s), s
+    return f"r'{s}'"
+
+
+def _q(name: str) -> str:
+    return f"`{name}`"
+
+
+def _sel(cols: list) -> str:
+    return ", ".join(map(_q, cols)) or "1 AS __unit"
+
+
+_DQ, _AT, _HATS = _k('"'), _k('"@'), _k('"^^<')
+_LEX = _k(r'(?s)^"(.*)"(?:@[A-Za-z0-9-]+|\^\^<[^<>]*>)?$')
+_DT_SUFFIX = _k(r"\^\^<([^<>]*)>$")
+_DT_SQL = _k(_DT_RE)
+_TZ_HM = _k(r"^[+-](\d\d):(\d\d)$")
+
+
+def _s_lex(c: str) -> str:
     # cast first: HAVING / post-aggregate references hand us native numeric
     # columns, for which the lexical form is just their string rendering
-    c = c.cast("string")
-    return (
-        F.when(c.startswith("<"), c.substr(F.lit(2), F.length(c) - 2))
-        .when(c.startswith('"'),
-              F.regexp_extract(c, r'^"(.*)"(?:@[A-Za-z0-9-]+|\^\^<[^<>]*>)?$', 1))
-        .otherwise(c)
-    )
+    c = f"CAST({c} AS STRING)"
+    return (f"CASE WHEN startswith({c}, '<') THEN substr({c}, 2, length({c}) - 2)"
+            f" WHEN startswith({c}, {_DQ}) THEN regexp_extract({c}, {_LEX}, 1)"
+            f" ELSE {c} END")
 
 
-def _c_num(c: Column) -> Column:
+def _s_num(c: str) -> str:
     # try_cast, not cast: ANSI mode (Spark 4 default) would THROW on
     # non-numeric lexical forms; the SPARQL semantics (and the local
     # evaluator) want null -> comparison false / aggregate skip
-    return _c_lex(c).try_cast("double")
+    return f"try_cast({_s_lex(c)} AS DOUBLE)"
 
 
-def _c_lang(c: Column) -> Column:
-    return F.regexp_extract(c, r'@([A-Za-z0-9-]+)$', 1)
+def _s_lang(c: str) -> str:
+    return f"regexp_extract({c}, {_k('@([A-Za-z0-9-]+)$')}, 1)"
 
 
-def _c_datatype(c: Column) -> Column:
-    return (
-        F.when(~c.startswith('"'), F.lit(None).cast("string"))
-        .when(c.rlike(r'\^\^<[^<>]*>$'), F.regexp_extract(c, r'\^\^<([^<>]*)>$', 1))
-        .when(c.rlike(r'@[A-Za-z0-9-]+$'), F.lit(RDF_LANGSTRING))
-        .otherwise(F.lit(XSD_STRING))
-    )
+def _s_datatype(c: str) -> str:
+    return (f"CASE WHEN NOT startswith({c}, {_DQ}) THEN CAST(NULL AS STRING)"
+            f" WHEN {c} RLIKE {_DT_SUFFIX} THEN regexp_extract({c}, {_DT_SUFFIX}, 1)"
+            f" WHEN {c} RLIKE {_k('@[A-Za-z0-9-]+$')} THEN {_k(RDF_LANGSTRING)}"
+            f" ELSE {_k(XSD_STRING)} END")
 
 
-class _DfCompiler:
-    def __init__(self, quads: DataFrame, graph_col: str | None,
+class _SqlCompiler:
+    """Compiles parsed SPARQL to Spark SQL over the quad relations in
+    ``views`` (placeholder -> DataFrame, or the name of a registered view,
+    of subj, pred, obj[, graph column]); patterns read ``q`` unless told
+    otherwise."""
+
+    def __init__(self, spark, views: dict, graph_col: str | None,
                  from_graphs: list | None = None,
                  from_named: list | None = None):
-        self.quads = quads
+        self.spark = spark
+        self.views = dict(views)
         self.graph_col = graph_col
+        self.args: dict[str, object] = {}
+        self._params: dict[tuple, str] = {}
         self._now = None  # NOW() literal, fixed per query execution
+        self._bnode_calls = -1
         # FROM/FROM NAMED (SPARQL §13.2): any dataset clause REPLACES the
         # store's dataset — default graph = merge of the FROM graphs (empty
         # when only FROM NAMED was given), named graphs = the FROM NAMED
         # set (empty when only FROM was given). Without a dataset clause
-        # the union-default-graph convention stands: bare patterns range
-        # over ALL quads.
+        # (named_set None) the union-default-graph convention stands: bare
+        # patterns range over ALL quads.
+        self.from_graphs = from_graphs or []
+        self.named_set = None
         if from_graphs is not None or from_named is not None:
             if graph_col is None:
                 raise SparqlError(
                     "FROM/FROM NAMED used but quads have no graph column")
-            fg = from_graphs or []
-            # the default graph is the RDF MERGE of the FROM graphs — a
-            # SET of triples, so one triple asserted in several FROM
-            # graphs matches once, not once per graph (§13.2)
-            self.default_quads = (
-                quads.filter(F.col(graph_col).isin(fg))
-                .select("subj", "pred", "obj").distinct()
-                if fg else quads.limit(0).select("subj", "pred", "obj")
-            )
-            self.named_set: list | None = from_named or []
-        else:
-            self.default_quads = quads
-            self.named_set = None
+            self.named_set = from_named or []
 
-    def _scope(self, graph) -> DataFrame:
+    def p(self, v) -> str:
+        """Bind one value as a named parameter; equal values share one."""
+        key = (type(v), v)
+        if key not in self._params:
+            self._params[key] = f"t{len(self._params)}"
+            self.args[self._params[key]] = v
+        return ":" + self._params[key]
+
+    def _ps(self, values) -> str:
+        return ", ".join(map(self.p, values))
+
+    def run(self, sql: str) -> DataFrame:
+        frames = {}
+        for k, v in self.views.items():
+            if isinstance(v, str):
+                sql = sql.replace("{%s}" % k, _q(v))
+            elif "{%s}" % k in sql:
+                # the formatter drops the view after the call, and dropping
+                # a view uncaches the plan it names: a no-op filter keeps
+                # that plan apart from the caller's cached one
+                frames[k] = v.where("true")
+        return self.spark.sql(sql, args=self.args, **frames)
+
+    def _default(self, rel: str) -> str:
+        """The dataset's default graph over relation ``rel``: the RDF MERGE
+        of the FROM graphs — a SET of triples, so one triple asserted in
+        several FROM graphs matches once, not once per graph (§13.2)."""
+        src = "{%s}" % rel
+        if self.named_set is None:
+            return src
+        if not self.from_graphs:
+            return f"(SELECT subj, pred, obj FROM {src} WHERE false)"
+        return (f"(SELECT DISTINCT subj, pred, obj FROM {src} WHERE "
+                f"{_q(self.graph_col)} IN ({self._ps(self.from_graphs)}))")
+
+    def _scope(self, graph, rel: str = "q") -> str:
         """The quad relation a pattern ranges over: the dataset's default
         graph outside GRAPH, the named-graph restriction inside it."""
         if graph is None:
-            return self.default_quads
+            return self._default(rel)
         if self.graph_col is None:
             raise SparqlError("GRAPH used but quads have no graph column")
+        src = "{%s}" % rel
         if self.named_set is None:
-            return self.quads
-        if not self.named_set:
-            return self.quads.limit(0)
-        return self.quads.filter(F.col(self.graph_col).isin(self.named_set))
+            return src
+        cond = (f"{_q(self.graph_col)} IN ({self._ps(self.named_set)})"
+                if self.named_set else "false")
+        return f"(SELECT * FROM {src} WHERE {cond})"
 
-    # expression -> Column in a given mode ('term'|'str'|'num'|'bool')
-    def expr(self, e, want: str = "bool") -> Column:
+    # expression -> SQL in a given mode ('term'|'str'|'num'|'bool')
+    def expr(self, e, want: str = "bool") -> str:
         tag = e[0]
         if tag == "var":
-            c = F.col(e[1])
+            c = _q(e[1])
             if want == "num":
-                return _c_num(c)
+                return _s_num(c)
             if want == "str":
-                return _c_lex(c)
+                return _s_lex(c)
             return c
         if tag == "const":
             if want == "num":
-                return F.lit(term_num(e[1]))
-            if want == "str":
-                return F.lit(term_lex(e[1]))
-            return F.lit(e[1])
+                n = term_num(e[1])
+                return "CAST(NULL AS DOUBLE)" if n is None else self.p(n)
+            return self.p(term_lex(e[1]) if want == "str" else e[1])
         if tag == "num":
-            return F.lit(e[1]).cast("double")
-        if tag == "and":
-            return self.expr(e[1], "bool") & self.expr(e[2], "bool")
-        if tag == "or":
-            return self.expr(e[1], "bool") | self.expr(e[2], "bool")
+            return f"CAST({self.p(e[1])} AS DOUBLE)"
+        if tag in ("and", "or"):
+            return f"({self.expr(e[1])} {tag.upper()} {self.expr(e[2])})"
         if tag == "not":
-            return ~self.expr(e[1], "bool")
+            return f"(NOT {self.expr(e[1])})"
         if tag == "cmp":
-            op, a, b = e[1], e[2], e[3]
-            mode = _cmp_mode(a, b)
-            ca, cb = self.expr(a, mode), self.expr(b, mode)
-            return {
-                "=": ca == cb, "!=": ca != cb, "<": ca < cb,
-                "<=": ca <= cb, ">": ca > cb, ">=": ca >= cb,
-            }[op]
+            mode = _cmp_mode(e[2], e[3])
+            op = "<>" if e[1] == "!=" else e[1]
+            return f"({self.expr(e[2], mode)} {op} {self.expr(e[3], mode)})"
         if tag == "arith":
-            op, ca, cb = e[1], self.expr(e[2], "num"), self.expr(e[3], "num")
-            if op == "/":
+            a, b = self.expr(e[2], "num"), self.expr(e[3], "num")
+            if e[1] == "/":
                 # SPARQL: division by zero is an expression error (null),
                 # not IEEE Infinity — matches the local evaluator
-                return F.when(cb != 0, ca / cb)
-            return {"+": ca + cb, "-": ca - cb, "*": ca * cb}[op]
+                return f"CASE WHEN {b} <> 0 THEN {a} / {b} END"
+            return f"({a} {e[1]} {b})"
         if tag == "call":
             return self._call(e[1], e[2], want)
         raise SparqlError(f"bad expr {e!r}")
 
-    def _now_literal(self) -> str:
-        if self._now is None:
-            import time as _time
+    def _call(self, fn: str, args: list, want: str) -> str:
+        def arg(i: int, mode: str) -> str:
+            return self.expr(args[i], mode)
 
-            self._now = (
-                '"' + _time.strftime("%Y-%m-%dT%H:%M:%S",
-                                     _time.gmtime())
-                + 'Z"^^<http://www.w3.org/2001/XMLSchema#dateTime>')
-        return self._now
-
-    def _call(self, fn: str, args: list, want: str) -> Column:
         if fn == "BOUND":
-            return self.expr(args[0], "term").isNotNull()
-        if fn == "REGEX":
-            pat = term_lex(args[1][1])
-            flags = term_lex(args[2][1]) if len(args) > 2 else ""
-            if "i" in flags:
+            return f"({arg(0, 'term')} IS NOT NULL)"
+        if fn in ("REGEX", "REPLACE"):
+            # the parser keeps pattern, replacement and flags constant
+            consts = [term_lex(a[1]) for a in args[1:]]
+            pat = consts[0]
+            if len(args) == (3 if fn == "REGEX" else 4) and "i" in consts[-1]:
                 pat = "(?i)" + pat
-            return self.expr(args[0], "str").rlike(pat)
+            if fn == "REGEX":
+                return f"({arg(0, 'str')} RLIKE {self.p(pat)})"
+            return (f"regexp_replace({arg(0, 'str')}, {self.p(pat)}, "
+                    f"{self.p(consts[1])})")
         if fn == "RAND":
-            return F.rand()
+            return "rand()"
         if fn == "NOW":
             # spec §17.4.5.1: one fixed value for the whole query
             # execution; honor `want` so YEAR(NOW())/STR(NOW()) see the
             # LEXICAL form (the local evaluator re-lexes via term_lex)
-            term = self._now_literal()
-            return F.lit(term_lex(term) if want == "str" else term)
+            if self._now is None:
+                import time as _time
+
+                self._now = (
+                    '"' + _time.strftime("%Y-%m-%dT%H:%M:%S", _time.gmtime())
+                    + 'Z"^^<http://www.w3.org/2001/XMLSchema#dateTime>')
+            return self.p(term_lex(self._now) if want == "str" else self._now)
         if fn == "UUID":
             if want == "str":  # STR(UUID()) = the IRI text, no brackets
-                return F.concat(F.lit("urn:uuid:"), F.expr("uuid()"))
-            return F.concat(F.lit("<urn:uuid:"), F.expr("uuid()"),
-                            F.lit(">"))
+                return "concat('urn:uuid:', uuid())"
+            return "concat('<urn:uuid:', uuid(), '>')"
         if fn == "STRUUID":
-            return F.expr("uuid()")
+            return "uuid()"
         if fn == "BNODE":
             if not args:
                 # fresh label per solution row AND per call site (two
                 # BNODE() in one projection must not collide — spec
                 # requires distinct bnodes per call): a compile-time
                 # call counter salts the row id
-                self._bnode_calls = getattr(self, "_bnode_calls", -1) + 1
-                return F.concat(
-                    F.lit(f"_:bn{self._bnode_calls}c"),
-                    F.monotonically_increasing_id().cast("string"))
+                self._bnode_calls += 1
+                return (f"concat('_:bn{self._bnode_calls}c', "
+                        "CAST(monotonically_increasing_id() AS STRING))")
             # BNODE(str): stable label for the same lexical argument
             # (stable across ALL solutions here — a superset of the spec's
             # per-solution guarantee, shared with the local evaluator)
-            return F.concat(
-                F.lit("_:bh"),
-                F.md5(F.encode(self.expr(args[0], "str"), "UTF-8")))
-        a0 = args[0]
+            return f"concat('_:bh', md5(encode({arg(0, 'str')}, 'UTF-8')))"
         if fn in ("ISIRI", "ISLITERAL", "ISBLANK"):
-            c = self.expr(a0, "term")
-            return {
-                "ISIRI": c.startswith("<"),
-                "ISLITERAL": c.startswith('"'),
-                "ISBLANK": c.startswith("_:"),
-            }[fn]
+            prefix = {"ISIRI": "'<'", "ISLITERAL": _DQ, "ISBLANK": "'_:'"}[fn]
+            return f"startswith({arg(0, 'term')}, {prefix})"
         if fn == "STR":
-            return self.expr(a0, "str")
+            return arg(0, "str")
         if fn == "LANG":
-            return _c_lang(self.expr(a0, "term"))
+            return _s_lang(arg(0, "term"))
         if fn == "DATATYPE":
-            return _c_datatype(self.expr(a0, "term"))
+            return _s_datatype(arg(0, "term"))
         if fn == "STRLEN":
-            return F.length(self.expr(a0, "str")).cast("double")
+            return f"CAST(length({arg(0, 'str')}) AS DOUBLE)"
         if fn in ("UCASE", "LCASE"):
-            c = self.expr(a0, "str")
-            return F.upper(c) if fn == "UCASE" else F.lower(c)
+            return f"{'upper' if fn == 'UCASE' else 'lower'}({arg(0, 'str')})"
         if fn == "ENCODE_FOR_URI":
             # url_encode is form-encoding; fix the three divergences from
             # RFC 3986 unreserved-only: '+'->%20, %7E->'~', '*'->%2A
-            c = F.url_encode(self.expr(a0, "str"))
-            c = F.regexp_replace(c, r"\+", "%20")
-            c = F.regexp_replace(c, "%7E", "~")
-            return F.regexp_replace(c, r"\*", "%2A")
+            c = f"regexp_replace(url_encode({arg(0, 'str')}), '[+]', '%20')"
+            return f"regexp_replace(regexp_replace({c}, '%7E', '~'), '[*]', '%2A')"
         if fn in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS",
                   "TZ"):
-            lex = self.expr(a0, "str")
-            grp = {"YEAR": 1, "MONTH": 2, "DAY": 3, "HOURS": 4,
-                   "MINUTES": 5, "SECONDS": 6, "TZ": 7}[fn]
-            part = F.regexp_extract(lex, _DT_RE, grp)
+            lex = arg(0, "str")
+            grp = ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS",
+                   "TZ").index(fn) + 1
+            part = f"regexp_extract({lex}, {_DT_SQL}, {grp})"
             if fn == "TZ":
                 # "" is the spec's answer for a zoneless dateTime, but a
                 # NON-dateTime operand is an error -> NULL (unbound)
-                return F.when(lex.rlike(_DT_RE), part)
+                return f"CASE WHEN {lex} RLIKE {_DT_SQL} THEN {part} END"
             # a missing time part ("" on xsd:date for HOURS etc.) is a
             # type error -> try_cast yields NULL
-            return part.try_cast("double")
+            return f"try_cast({part} AS DOUBLE)"
         if fn in ("CONTAINS", "STRSTARTS", "STRENDS"):
-            ca, cb = self.expr(a0, "str"), self.expr(args[1], "str")
-            return {
-                "CONTAINS": ca.contains(cb),
-                "STRSTARTS": ca.startswith(cb),
-                "STRENDS": ca.endswith(cb),
-            }[fn]
+            f = {"CONTAINS": "contains", "STRSTARTS": "startswith",
+                 "STRENDS": "endswith"}[fn]
+            return f"{f}({arg(0, 'str')}, {arg(1, 'str')})"
         if fn in ("COALESCE", "IF"):
             # term-valued: a bare FILTER(IF(...)) has no shared EBV across
             # backends, so require an explicit comparison around them
             if want == "bool":
                 raise SparqlError(f"{fn} is term-valued; compare it explicitly")
             if fn == "COALESCE":
-                return F.coalesce(*[self.expr(a, want) for a in args])
-            cond = self.expr(a0, "bool")
-            # two chained whens, NOT .otherwise(): an errored (null)
-            # condition must stay an error, matching the local evaluator
-            return F.when(cond, self.expr(args[1], want)).when(
-                ~cond, self.expr(args[2], want)
-            )
+                return f"coalesce({', '.join(self.expr(a, want) for a in args)})"
+            cond = arg(0, "bool")
+            # two chained WHENs, NOT an ELSE: an errored (null) condition
+            # must stay an error, matching the local evaluator
+            return (f"CASE WHEN {cond} THEN {arg(1, want)} "
+                    f"WHEN NOT ({cond}) THEN {arg(2, want)} END")
         if fn == "CONCAT":
-            return F.concat(*[self.expr(a, "str") for a in args])
+            return f"concat({', '.join(self.expr(a, 'str') for a in args)})"
         if fn == "SUBSTR":
-            c = self.expr(a0, "str")
-            start = F.greatest(self.expr(args[1], "num").cast("int"), F.lit(1))
-            if len(args) > 2:
-                ln = F.greatest(self.expr(args[2], "num").cast("int"), F.lit(0))
-            else:
-                ln = F.length(c)
-            return c.substr(start, ln)
-        if fn == "REPLACE":
-            pat = term_lex(args[1][1])
-            rep = term_lex(args[2][1])
-            flags = term_lex(args[3][1]) if len(args) > 3 else ""
-            if "i" in flags:
-                pat = "(?i)" + pat
-            return F.regexp_replace(self.expr(a0, "str"), pat, rep)
+            c = arg(0, "str")
+            ln = (f"greatest(CAST({arg(2, 'num')} AS INT), 0)"
+                  if len(args) > 2 else f"length({c})")
+            return f"substr({c}, greatest(CAST({arg(1, 'num')} AS INT), 1), {ln})"
         if fn in ("STRBEFORE", "STRAFTER"):
-            ca, cb = self.expr(a0, "str"), self.expr(args[1], "str")
-            pos = F.instr(ca, cb)
-            empty_b = F.lit("") if fn == "STRBEFORE" else ca
-            found = (
-                ca.substr(F.lit(1), pos - 1)
-                if fn == "STRBEFORE"
-                else ca.substr(pos + F.length(cb), F.length(ca))
-            )
-            return (
-                F.when(ca.isNull() | cb.isNull(), F.lit(None).cast("string"))
-                .when(cb == "", empty_b)
-                .when(pos > 0, found)
-                .otherwise(F.lit(""))
-            )
+            a, b = arg(0, "str"), arg(1, "str")
+            pos = f"instr({a}, {b})"
+            empty_b, found = (
+                ("''", f"substr({a}, 1, {pos} - 1)") if fn == "STRBEFORE"
+                else (a, f"substr({a}, {pos} + length({b}), length({a}))"))
+            return (f"CASE WHEN {a} IS NULL OR {b} IS NULL THEN "
+                    f"CAST(NULL AS STRING) WHEN {b} = '' THEN {empty_b} "
+                    f"WHEN {pos} > 0 THEN {found} ELSE '' END")
         if fn in ("ABS", "ROUND", "CEIL", "FLOOR"):
-            c = self.expr(a0, "num")
-            return {
-                "ABS": F.abs(c),
-                # Spark round = HALF_UP away from zero; the local evaluator
-                # pins the same rule (documented divergence from XPath's
-                # ceiling-on-negative-half)
-                "ROUND": F.round(c, 0),
-                "CEIL": F.ceil(c).cast("double"),
-                "FLOOR": F.floor(c).cast("double"),
-            }[fn]
+            c = arg(0, "num")
+            # Spark round = HALF_UP away from zero; the local evaluator
+            # pins the same rule (documented divergence from XPath's
+            # ceiling-on-negative-half)
+            return {"ABS": f"abs({c})", "ROUND": f"round({c}, 0)",
+                    "CEIL": f"CAST(ceil({c}) AS DOUBLE)",
+                    "FLOOR": f"CAST(floor({c}) AS DOUBLE)"}[fn]
         if fn == "SAMETERM":
-            return self.expr(a0, "term") == self.expr(args[1], "term")
+            return f"({arg(0, 'term')} = {arg(1, 'term')})"
         if fn == "ISNUMERIC":
-            c = self.expr(a0, "term")
-            cs = c.cast("string")
-            lex_ok = _c_num(c).isNotNull()
-            dt_ok = _c_datatype(cs).isin(*sorted(_XSD_NUMERIC))
-            return F.when(cs.startswith('"'), lex_ok & dt_ok).otherwise(
-                lex_ok & ~cs.startswith("<") & ~cs.startswith("_:")
-            )
+            cs = f"CAST({arg(0, 'term')} AS STRING)"
+            lex_ok = f"{_s_num(cs)} IS NOT NULL"
+            dt_ok = (f"{_s_datatype(cs)} IN "
+                     f"({', '.join(map(_k, sorted(_XSD_NUMERIC)))})")
+            return (f"CASE WHEN startswith({cs}, {_DQ}) THEN {lex_ok} AND "
+                    f"{dt_ok} ELSE {lex_ok} AND (NOT startswith({cs}, '<')) "
+                    f"AND (NOT startswith({cs}, '_:')) END")
         if fn in ("MD5", "SHA1", "SHA256", "SHA384", "SHA512"):
-            c = F.encode(self.expr(a0, "str"), "UTF-8")
-            return {
-                "MD5": F.md5(c),
-                "SHA1": F.sha1(c),
-                "SHA256": F.sha2(c, 256),
-                "SHA384": F.sha2(c, 384),
-                "SHA512": F.sha2(c, 512),
-            }[fn]
+            c = f"encode({arg(0, 'str')}, 'UTF-8')"
+            if fn in ("MD5", "SHA1"):
+                return f"{fn.lower()}({c})"
+            return f"sha2({c}, {fn[3:]})"
         if fn == "TIMEZONE":
             # xsd:dayTimeDuration from the dateTime's timezone lexical
             # (§17.4.5.7): Z/±00:00 -> PT0S, ±hh:mm -> [-]PThH[mM];
             # a zoneless or non-dateTime operand is an error -> NULL
-            lex = self.expr(a0, "str")
-            tz = F.regexp_extract(lex, _DT_RE, 7)
-            hh = F.regexp_extract(tz, r"^[+-](\d{2}):(\d{2})$", 1).cast("int")
-            mm = F.regexp_extract(tz, r"^[+-](\d{2}):(\d{2})$", 2).cast("int")
-            sign = F.when(tz.startswith("-") & ((hh > 0) | (mm > 0)),
-                          F.lit("-")).otherwise(F.lit(""))
-            body = (
-                F.when((hh == 0) & (mm == 0), F.lit("PT0S"))
-                .when(mm == 0, F.concat(F.lit("PT"), hh.cast("string"),
-                                        F.lit("H")))
-                .when(hh == 0, F.concat(F.lit("PT"), mm.cast("string"),
-                                        F.lit("M")))
-                .otherwise(F.concat(F.lit("PT"), hh.cast("string"),
-                                    F.lit("H"), mm.cast("string"),
-                                    F.lit("M")))
-            )
+            tz = f"regexp_extract({arg(0, 'str')}, {_DT_SQL}, 7)"
+            hh, mm = (f"CAST(regexp_extract({tz}, {_TZ_HM}, {i}) AS INT)"
+                      for i in (1, 2))
+            sign = (f"CASE WHEN startswith({tz}, '-') AND ({hh} > 0 OR "
+                    f"{mm} > 0) THEN '-' ELSE '' END")
+            h, m = (f"CAST({x} AS STRING)" for x in (hh, mm))
+            body = (f"CASE WHEN {hh} = 0 AND {mm} = 0 THEN 'PT0S' "
+                    f"WHEN {mm} = 0 THEN concat('PT', {h}, 'H') "
+                    f"WHEN {hh} = 0 THEN concat('PT', {m}, 'M') "
+                    f"ELSE concat('PT', {h}, 'H', {m}, 'M') END")
             if want == "str":  # STR(TIMEZONE(x)) -> the lexical duration
-                return (F.when(tz == "Z", F.lit("PT0S"))
-                        .when(tz != "", F.concat(sign, body)))
-            dur = F.concat(
-                F.lit('"'), sign, body,
-                F.lit('"^^<http://www.w3.org/2001/XMLSchema'
-                      '#dayTimeDuration>'))
-            return F.when(tz == "Z", F.lit(
-                '"PT0S"^^<http://www.w3.org/2001/XMLSchema'
-                '#dayTimeDuration>')).when(tz != "", dur)
+                return (f"CASE WHEN {tz} = 'Z' THEN 'PT0S' "
+                        f"WHEN {tz} <> '' THEN concat({sign}, {body}) END")
+            dt = '"^^<http://www.w3.org/2001/XMLSchema#dayTimeDuration>'
+            zero, tail = _k('"PT0S' + dt), _k(dt)
+            return (f"CASE WHEN {tz} = 'Z' THEN {zero} WHEN {tz} <> '' THEN "
+                    f"concat({_DQ}, {sign}, {body}, {tail}) END")
         if fn == "IRI":
-            return F.concat(F.lit("<"), self.expr(a0, "str"), F.lit(">"))
+            return f"concat('<', {arg(0, 'str')}, '>')"
         if fn == "STRLANG":
-            return F.concat(
-                F.lit('"'), self.expr(a0, "str"), F.lit('"@'),
-                self.expr(args[1], "str"),
-            )
+            return f"concat({_DQ}, {arg(0, 'str')}, {_AT}, {arg(1, 'str')})"
         if fn == "STRDT":
-            return F.concat(
-                F.lit('"'), self.expr(a0, "str"), F.lit('"^^<'),
-                self.expr(args[1], "str"), F.lit(">"),
-            )
+            return (f"concat({_DQ}, {arg(0, 'str')}, {_HATS}, "
+                    f"{arg(1, 'str')}, '>')")
         if fn == "LANGMATCHES":
-            lang = F.lower(self.expr(a0, "str"))
-            rng = F.lower(self.expr(args[1], "str"))
-            return F.when(rng == "*", lang != "").otherwise(
-                (lang == rng) | lang.startswith(F.concat(rng, F.lit("-")))
-            )
+            lang, rng = f"lower({arg(0, 'str')})", f"lower({arg(1, 'str')})"
+            return (f"CASE WHEN {rng} = '*' THEN {lang} <> '' ELSE ({lang} = "
+                    f"{rng} OR startswith({lang}, concat({rng}, '-'))) END")
         raise SparqlError(f"unsupported function {fn}")
 
-    # one triple pattern -> DataFrame of its variable bindings
-    def pattern(self, s, p, o, graph) -> DataFrame:
-        df = self._scope(graph)
-        cols = [("subj", s), ("pred", p), ("obj", o)]
+    # -- patterns -----------------------------------------------------------
+    def _bind_atoms(self, src: str, atoms: list, conds: list) -> tuple:
+        """Project the variables of (column, atom) pairs over ``src``;
+        constant atoms and repeated variables become conditions."""
+        proj: dict[str, str] = {}
+        for col, atom in atoms:
+            if atom[0] == "term":
+                conds.append(f"{_q(col)} = {self.p(atom[1])}")
+            elif atom[1] in proj:   # repeated var inside one pattern
+                conds.append(f"{_q(col)} = {_q(proj[atom[1]])}")
+            else:
+                proj[atom[1]] = col
+        sel = ", ".join(f"{_q(c)} AS {_q(v)}" for v, c in proj.items())
+        where = " WHERE " + " AND ".join(conds) if conds else ""
+        return f"SELECT {sel or '1 AS __unit'} FROM {src}{where}", list(proj)
+
+    def pattern(self, s, p, o, graph, rel: str = "q") -> tuple:
+        """One triple pattern over relation ``rel`` -> its bindings."""
+        src = self._scope(graph, rel)
+        atoms, conds = [("subj", s), ("pred", p), ("obj", o)], []
         if graph is not None:
             if graph[0] == "var":
                 # GRAPH ?g ranges over NAMED graphs only: a NULL graph
                 # column (default-graph quad in a graph store) must not
                 # match with ?g unbound (the local twin's 3-tuples agree)
-                df = df.filter(F.col(self.graph_col).isNotNull())
-            cols.append((self.graph_col, graph))
-        proj: dict[str, str] = {}
-        for col, atom in cols:
-            if atom[0] == "term":
-                df = df.filter(F.col(col) == atom[1])
-            else:
-                var = atom[1]
-                if var in proj:   # repeated var inside one pattern
-                    df = df.filter(F.col(col) == F.col(proj[var]))
-                else:
-                    proj[var] = col
-        return df.select(*[F.col(c).alias(v) for v, c in proj.items()])
+                conds.append(f"{_q(self.graph_col)} IS NOT NULL")
+            atoms.append((self.graph_col, graph))
+        return self._bind_atoms(src, atoms, conds)
 
     # -- property paths -----------------------------------------------------
-    def _graph_quads(self, graph) -> DataFrame:
+    def _graph_quads(self, graph) -> str:
         if graph is None:
-            return self.default_quads
-        if graph[0] == "term":
-            return self._scope(graph).filter(F.col(self.graph_col) == graph[1])
+            return self._default("q")
         # GRAPH ?var: every named graph (dataset-restricted via _scope);
         # path evaluation stays graph-local by keying pairs on __g
-        return self._scope(graph).filter(F.col(self.graph_col).isNotNull())
+        src, g = self._scope(graph), _q(self.graph_col)
+        cond = (f"{g} = {self.p(graph[1])}" if graph[0] == "term"
+                else f"{g} IS NOT NULL")
+        return f"(SELECT * FROM {src} WHERE {cond})"
 
-    def _path_pairs(self, ast, graph) -> DataFrame:
-        """Evaluate a path expression to its (__src, __dst) pair relation.
+    def _path_pairs(self, ast, graph) -> str:
+        """A path expression -> SQL of its (__src, __dst) pair relation.
         Under GRAPH ?var the relation carries a third __g column and every
         join/identity is keyed on it, so each named graph's closure is
         computed independently in ONE shared set of jobs (no per-graph
         driver loop — the graph id is just another shuffle key).
         Closures (+/*) are ``reasoner.transitive_closure`` keyed on __g:
         in-memory for bounded relations, else pointer doubling, which
-        converges in ceil(log2 D) rounds on a diameter-D graph."""
+        converges in ceil(log2 D) rounds on a diameter-D graph. Its result
+        joins the statement as one more view."""
         keyed = graph is not None and graph[0] == "var"
-        gcols = ["__g"] if keyed else []
+        g = ", __g" if keyed else ""
         tag = ast[0]
-        if tag == "p":
-            q = self._graph_quads(graph).filter(F.col("pred") == ast[1])
-            sel = [F.col("subj").alias("__src"), F.col("obj").alias("__dst")]
-            if keyed:
-                sel.append(F.col(self.graph_col).alias("__g"))
-            return q.select(*sel)
-        if tag == "nps":
-            q = self._graph_quads(graph)
-            if ast[1]:
-                q = q.filter(~F.col("pred").isin(*ast[1]))
-            sel = [F.col("subj").alias("__src"), F.col("obj").alias("__dst")]
-            if keyed:
-                sel.append(F.col(self.graph_col).alias("__g"))
-            return q.select(*sel)
+        if tag in ("p", "nps"):
+            cond = (f"pred = {self.p(ast[1])}" if tag == "p" else
+                    f"pred NOT IN ({self._ps(ast[1])})" if ast[1] else "true")
+            gsel = f", {_q(self.graph_col)} AS __g" if keyed else ""
+            return (f"SELECT subj AS __src, obj AS __dst{gsel} "
+                    f"FROM {self._graph_quads(graph)} WHERE {cond}")
         if tag == "inv":
-            return self._path_pairs(ast[1], graph).select(
-                F.col("__dst").alias("__src"), F.col("__src").alias("__dst"),
-                *gcols
-            )
+            return (f"SELECT __dst AS __src, __src AS __dst{g} "
+                    f"FROM ({self._path_pairs(ast[1], graph)})")
         if tag == "seq":
-            out = None
-            for elt in ast[1]:
-                nxt = self._path_pairs(elt, graph)
-                if out is None:
-                    out = nxt
-                else:
-                    out = (
-                        out.select("__src", F.col("__dst").alias("__m"), *gcols)
-                        .join(nxt.select(F.col("__src").alias("__m"), "__dst",
-                                         *gcols),
-                              on=["__m"] + gcols)
-                        .select("__src", "__dst", *gcols)
-                    )
+            out = self._path_pairs(ast[1][0], graph)
+            on = " AND l.__g = r.__g" if keyed else ""
+            for elt in ast[1][1:]:
+                out = (f"SELECT l.__src, r.__dst{g and ', l.__g'} FROM "
+                       f"({out}) l JOIN ({self._path_pairs(elt, graph)}) r "
+                       f"ON l.__dst = r.__src{on}")
             return out
         if tag == "alt":
-            out = None
-            for elt in ast[1]:
-                nxt = self._path_pairs(elt, graph)
-                out = nxt if out is None else out.unionByName(nxt)
-            return out
+            return " UNION ALL ".join(
+                f"SELECT * FROM ({self._path_pairs(e, graph)})" for e in ast[1])
         if tag == "opt":
-            return self._path_pairs(ast[1], graph).unionByName(
-                self._identity_pairs(graph)
-            ).distinct()
+            return (f"SELECT DISTINCT * FROM ({self._path_pairs(ast[1], graph)}"
+                    f" UNION ALL {self._identity_pairs(graph)})")
         if tag in ("plus", "star"):
-            edges = self._path_pairs(ast[1], graph).select(
-                F.col("__src").alias("child"), F.col("__dst").alias("parent"),
-                *gcols)
+            # __g gets a fresh alias too: a key passed through from below
+            # makes the closure's second materialize fail ("key not found")
+            edges = self.run(f"SELECT __src AS child, __dst AS parent"
+                             f"{g and ', __g AS __g'} "
+                             f"FROM ({self._path_pairs(ast[1], graph)})")
             try:
-                closed = transitive_closure(edges, keys=gcols)
+                closed = transitive_closure(edges, keys=["__g"] if keyed else [])
             except RuntimeError as e:
                 raise SparqlError(f"path {e}") from e
-            result = closed.select(F.col("child").alias("__src"),
-                                   F.col("parent").alias("__dst"), *gcols)
-            if tag == "star":
-                result = result.unionByName(self._identity_pairs(graph)).distinct()
-            return result
+            name = f"c{len(self.views)}"
+            self.views[name] = closed
+            out = f"SELECT child AS __src, parent AS __dst{g} FROM {{{name}}}"
+            if tag == "plus":
+                return out
+            return (f"SELECT DISTINCT * FROM ({out} UNION ALL "
+                    f"{self._identity_pairs(graph)})")
         raise SparqlError(f"bad path {ast!r}")
 
-    def _identity_pairs(self, graph) -> DataFrame:
+    def _identity_pairs(self, graph) -> str:
         # SPARQL zero-length path: every term occurring in the graph
         # (per named graph when keyed — zero-length stays graph-local)
         q = self._graph_quads(graph)
-        if graph is not None and graph[0] == "var":
-            g = F.col(self.graph_col).alias("__g")
-            u = q.select(F.col("subj").alias("__n"), g).unionByName(
-                q.select(F.col("obj").alias("__n"), g)
-            ).distinct()
-            return u.select(F.col("__n").alias("__src"),
-                            F.col("__n").alias("__dst"), "__g")
-        u = q.select(F.col("subj").alias("__n")).unionByName(
-            q.select(F.col("obj").alias("__n"))
-        ).distinct()
-        return u.select(F.col("__n").alias("__src"), F.col("__n").alias("__dst"))
+        keyed = graph is not None and graph[0] == "var"
+        g = f", {_q(self.graph_col)} AS __g" if keyed else ""
+        return (f"SELECT DISTINCT __n AS __src, __n AS __dst{g and ', __g'} "
+                f"FROM (SELECT subj AS __n{g} FROM {q} "
+                f"UNION ALL SELECT obj AS __n{g} FROM {q})")
 
-    def path_pattern(self, s, ast, o, graph) -> DataFrame:
+    def path_pattern(self, s, ast, o, graph) -> tuple:
         # path patterns evaluate with SET semantics on both backends
-        df = self._path_pairs(ast, graph).distinct()
-        atoms = [(s, "__src"), (o, "__dst")]
+        atoms = [("__src", s), ("__dst", o)]
         if graph is not None and graph[0] == "var":
-            atoms.append((graph, "__g"))
-        proj: dict[str, str] = {}
-        for atom, col in atoms:
-            if atom[0] == "term":
-                df = df.filter(F.col(col) == atom[1])
-            else:
-                var = atom[1]
-                if var in proj:
-                    df = df.filter(F.col(col) == F.col(proj[var]))
-                else:
-                    proj[var] = col
-        return df.select(*[F.col(c).alias(v) for v, c in proj.items()])
+            atoms.append(("__g", graph))
+        src = f"(SELECT DISTINCT * FROM ({self._path_pairs(ast, graph)}))"
+        return self._bind_atoms(src, atoms, [])
 
-    def group(self, g: Group, graph=None) -> DataFrame:
-        acc: DataFrame | None = None
+    # -- algebra --------------------------------------------------------------
+    def group(self, g: Group, graph=None) -> tuple:
+        acc = None
         filters = []
         for item in g.items:
             tag = item[0]
             if tag == "triple":
-                if item[2][0] == "path":
-                    acc = self._join(
-                        acc, self.path_pattern(item[1], item[2][1], item[3], graph)
-                    )
-                else:
-                    acc = self._join(
-                        acc, self.pattern(item[1], item[2], item[3], graph)
-                    )
+                acc = self.join(acc, (
+                    self.path_pattern(item[1], item[2][1], item[3], graph)
+                    if item[2][0] == "path"
+                    else self.pattern(item[1], item[2], item[3], graph)))
             elif tag == "filter":
                 filters.append(item[1])
             elif tag == "optional":
-                right = self.group(item[1], graph)
-                acc = self._join(acc, right, how="left")
-            elif tag == "exists":
-                # (NOT) EXISTS: semi/anti join on the shared variables; with
-                # no shared vars the inner group is a constant relation and
-                # the test degenerates to its (non-)emptiness
+                acc = self.join(acc, self.group(item[1], graph), "LEFT")
+            elif tag in ("exists", "minus"):
+                # semi/anti join on the shared variables. With none shared,
+                # MINUS removes nothing (SPARQL §8.3) and (NOT) EXISTS tests
+                # the inner group's (non-)emptiness inside the statement
                 if acc is None:
-                    raise SparqlError("FILTER EXISTS before any pattern")
+                    raise SparqlError(
+                        ("FILTER EXISTS" if tag == "exists" else "MINUS")
+                        + " before any pattern")
                 sub = self.group(item[1], graph)
-                shared = [c for c in acc.columns if c in sub.columns]
+                keep = tag == "exists" and item[2]
+                shared = [c for c in acc[1] if c in sub[1]]
                 if shared:
-                    how = "left_semi" if item[2] else "left_anti"
-                    acc = acc.join(sub, on=shared, how=how)
-                else:
-                    if sub.isEmpty() == item[2]:
-                        acc = acc.limit(0)
-            elif tag == "minus":
-                # MINUS: anti join on shared vars; disjoint domains remove
-                # nothing (SPARQL §8.3)
-                if acc is None:
-                    raise SparqlError("MINUS before any pattern")
-                sub = self.group(item[1], graph)
-                shared = [c for c in acc.columns if c in sub.columns]
-                if shared:
-                    acc = acc.join(sub, on=shared, how="left_anti")
+                    acc = (f"SELECT {_sel(acc[1])} FROM ({acc[0]}) l LEFT "
+                           f"{'SEMI' if keep else 'ANTI'} JOIN ({sub[0]}) r "
+                           f"USING ({_sel(shared)})", acc[1])
+                elif tag == "exists":
+                    acc = (f"SELECT * FROM ({acc[0]}) WHERE "
+                           f"{'' if keep else 'NOT '}EXISTS "
+                           f"(SELECT 1 FROM ({sub[0]}))", acc[1])
             elif tag == "union":
-                branches = [self.group(b, graph) for b in item[1]]
-                u = branches[0]
-                for b in branches[1:]:
-                    u = u.unionByName(b, allowMissingColumns=True)
-                acc = self._join(acc, u)
+                acc = self.join(acc, self.union(
+                    [self.group(b, graph) for b in item[1]]))
             elif tag == "graph":
-                acc = self._join(acc, self.group(item[2], item[1]))
+                acc = self.join(acc, self.group(item[2], item[1]))
             elif tag == "subquery":
-                subq = item[1]
-                sub = _apply_select(self, self.group(subq.where, graph), subq)
-                # numeric aggregate aliases come back as native numerics; a
-                # shared variable against an outer TERM column must compare
-                # on the term's numeric value (try_cast keeps ANSI mode from
-                # throwing on non-numeric lexical forms)
-                num_aliases = {
-                    s.alias for s in subq.select
-                    if isinstance(s, Agg) and s.func != "group_concat"
-                    and s.func != "sample"
-                }
-                if acc is None:
-                    acc = sub
-                else:
-                    shared = [c for c in acc.columns if c in sub.columns]
-                    if not shared:
-                        acc = acc.crossJoin(sub)
-                    else:
-                        cond = None
-                        for c in shared:
-                            left = (
-                                _c_num(acc[c]) if c in num_aliases else acc[c]
-                            )
-                            pc = left == sub[c]
-                            cond = pc if cond is None else (cond & pc)
-                        acc = acc.join(sub, cond)
-                        for c in shared:
-                            acc = acc.drop(sub[c])
+                acc = self._subquery(acc, item[1], graph)
             elif tag == "bind":
                 if acc is None:
                     raise SparqlError("BIND before any pattern")
-                acc = acc.withColumn(item[2], self.expr(item[1], "term"))
+                acc = self.bind(acc, item[1], item[2])
             elif tag == "values":
-                vars_, vrows = item[1], item[2]
-                vdf = self.quads.sparkSession.createDataFrame(
-                    [tuple(r) for r in vrows],
-                    ", ".join(f"{v} string" for v in vars_),
-                )
-                acc = self._join(acc, vdf)
+                acc = self.join(acc, self._values(item[1], item[2]))
             else:
                 raise SparqlError(f"bad group item {tag}")
         if acc is None:
             raise SparqlError("empty group")
-        for fe in filters:
-            acc = acc.filter(self.expr(fe, "bool"))
-        return acc
+        return self.filter(acc, filters)
 
-    def _join(self, acc: DataFrame | None, df: DataFrame, how: str = "inner") -> DataFrame:
+    def filter(self, rel: tuple, exprs: list) -> tuple:
+        if not exprs:
+            return rel
+        cond = " AND ".join(self.expr(e, "bool") for e in exprs)
+        return f"SELECT * FROM ({rel[0]}) WHERE {cond}", rel[1]
+
+    def bind(self, rel: tuple, e, var: str) -> tuple:
+        val = self.expr(e, "term")
+        cols = rel[1] + [var] * (var not in rel[1])
+        sel = ", ".join(f"{val} AS {_q(c)}" if c == var else _q(c)
+                        for c in cols)
+        return f"SELECT {sel} FROM ({rel[0]})", cols
+
+    def join(self, acc: tuple | None, rel: tuple, how: str = "") -> tuple:
+        """Natural join on the shared variables (``how`` "" or "LEFT")."""
         if acc is None:
-            return df
-        shared = [c for c in acc.columns if c in df.columns]
+            return rel
+        shared = [c for c in acc[1] if c in rel[1]]
+        cols = shared + [c for c in acc[1] + rel[1] if c not in shared]
+        if shared:
+            join = f"{how} JOIN ({rel[0]}) r USING ({_sel(shared)})"
+        elif how:
+            join = f"{how} JOIN ({rel[0]}) r ON true"
+        else:
+            join = f"CROSS JOIN ({rel[0]}) r"
+        return f"SELECT {_sel(cols)} FROM ({acc[0]}) l {join}", cols
+
+    def union(self, rels: list) -> tuple:
+        """UNION ALL by variable name; a branch lacking one binds NULL."""
+        cols = list(dict.fromkeys(c for _, rc in rels for c in rc))
+        return " UNION ALL ".join(
+            "SELECT " + (", ".join(_q(c) if c in rc else f"NULL AS {_q(c)}"
+                                   for c in cols) or "1 AS __unit")
+            + f" FROM ({sql})" for sql, rc in rels), cols
+
+    def _values(self, vars_: list, rows: list) -> tuple:
+        if not rows:
+            nulls = [f"CAST(NULL AS STRING) AS {_q(v)}" for v in vars_]
+            return f"SELECT {', '.join(nulls) or '1 AS __unit'} WHERE false", vars_
+        cells = ", ".join(
+            "(" + (", ".join("NULL" if t is None else self.p(t) for t in r)
+                   or "1") + ")" for r in rows)
+        sel = ", ".join(f"CAST({_q(v)} AS STRING) AS {_q(v)}" for v in vars_)
+        names = ", ".join(map(_q, vars_)) or "__unit"
+        return (f"SELECT {sel or '__unit'} FROM VALUES {cells} AS v({names})",
+                vars_)
+
+    def _subquery(self, acc: tuple | None, subq: Query, graph) -> tuple:
+        sub = self.select(self.group(subq.where, graph), subq)
+        shared = [c for c in (acc or ("", []))[1] if c in sub[1]]
         if not shared:
-            return acc.crossJoin(df) if how == "inner" else acc.join(df, how="left")
-        return acc.join(df, on=shared, how=how)
+            return self.join(acc, sub)
+        # numeric aggregate aliases come back as native numerics; a shared
+        # variable against an outer TERM column must compare on the term's
+        # numeric value (try_cast keeps ANSI mode from throwing on
+        # non-numeric lexical forms)
+        num = {s.alias for s in subq.select if isinstance(s, Agg)
+               and s.func not in ("group_concat", "sample")}
+        cond = " AND ".join(
+            f"{_s_num('l.' + _q(c)) if c in num else 'l.' + _q(c)} = r.{_q(c)}"
+            for c in shared)
+        rest = [c for c in sub[1] if c not in shared]
+        sel = ", ".join([f"l.{_q(c)}" for c in acc[1]]
+                        + [f"r.{_q(c)}" for c in rest])
+        return (f"SELECT {sel} FROM ({acc[0]}) l JOIN ({sub[0]}) r ON {cond}",
+                acc[1] + rest)
 
+    def _modifiers(self, q: Query) -> str:
+        """ORDER BY / LIMIT / OFFSET as the tail of one SELECT (OFFSET
+        applies before LIMIT, as in SPARQL)."""
+        tail = ""
+        if q.order_by:
+            tail += " ORDER BY " + ", ".join(
+                f"{_q(v)} {'ASC' if asc else 'DESC'}" for v, asc in q.order_by)
+        if q.limit is not None:
+            tail += f" LIMIT {self.p(q.limit)}"
+        if q.offset:
+            tail += f" OFFSET {self.p(q.offset)}"
+        return tail
 
-def _apply_select(comp: _DfCompiler, df: DataFrame, q: Query) -> DataFrame:
-    """Aggregates, projection, DISTINCT and solution modifiers over a solved
-    WHERE relation — shared by the top-level SELECT driver and subqueries."""
-    has_agg = any(isinstance(s, Agg) for s in q.select)
-    if has_agg or q.group_by:
-        keys = [F.col(v) for v in q.group_by]
-        aggs = []
-        for s in q.select:
-            if not isinstance(s, Agg):
-                continue
-            if s.func == "count":
-                if s.arg is None:
-                    aggs.append(F.count(F.lit(1)).alias(s.alias))
-                elif s.distinct:
-                    aggs.append(F.countDistinct(comp.expr(s.arg, "term")).alias(s.alias))
+    def select(self, rel: tuple, q: Query) -> tuple:
+        """Aggregates, projection, DISTINCT and solution modifiers over a
+        solved WHERE relation — shared by the top-level SELECT and
+        subqueries."""
+        sql, cols = rel
+        aggs = [s for s in q.select if isinstance(s, Agg)]
+        if aggs or q.group_by:
+            keys = [_q(v) for v in q.group_by]
+            outs = []
+            for s in aggs:
+                if s.func == "count":
+                    a = ("1" if s.arg is None else
+                         "DISTINCT " * s.distinct + self.expr(s.arg, "term"))
+                    out = f"count({a})"
+                elif s.func == "group_concat":
+                    # spec leaves concatenation order undefined; both
+                    # backends pin SORTED order so results are comparable
+                    coll = "collect_set" if s.distinct else "collect_list"
+                    out = (f"array_join(array_sort({coll}(CAST("
+                           f"{self.expr(s.arg, 'str')} AS STRING))), "
+                           f"{self.p(s.sep)})")
+                elif s.func == "sample":
+                    # SAMPLE picks an arbitrary value; both backends pin MIN
+                    # so the choice is deterministic and cluster-size
+                    # independent
+                    out = f"min({self.expr(s.arg, 'term')})"
                 else:
-                    aggs.append(F.count(comp.expr(s.arg, "term")).alias(s.alias))
-            elif s.func == "group_concat":
-                # spec leaves concatenation order undefined; both backends
-                # pin SORTED order so results are deterministic + comparable
-                c = comp.expr(s.arg, "str").cast("string")
-                coll = F.collect_set(c) if s.distinct else F.collect_list(c)
-                aggs.append(F.array_join(F.array_sort(coll), s.sep).alias(s.alias))
-            elif s.func == "sample":
-                # SAMPLE picks an arbitrary value; both backends pin MIN so
-                # the choice is deterministic and cluster-size independent
-                aggs.append(F.min(comp.expr(s.arg, "term")).alias(s.alias))
-            else:
-                c = comp.expr(s.arg, "num")
-                fn = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[s.func]
-                aggs.append(fn(c).alias(s.alias))
-        df = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-        if q.having is not None:
-            df = df.filter(comp.expr(q.having, "bool"))
-        out_cols = q.group_by + [s.alias for s in q.select if isinstance(s, Agg)]
-        sel_order = [s[1] if not isinstance(s, Agg) else s.alias for s in q.select] or out_cols
-        df = df.select(*sel_order)
-    else:
-        if q.select:
-            df = df.select(*[s[1] for s in q.select])
-    if q.distinct:
-        df = df.distinct()
-    if q.order_by:
-        df = df.orderBy(*[F.col(v).asc() if asc else F.col(v).desc()
-                          for v, asc in q.order_by])
-    if q.offset:
-        df = df.offset(q.offset)
-    if q.limit is not None:
-        df = df.limit(q.limit)
-    return df
+                    out = f"{s.func}({self.expr(s.arg, 'num')})"
+                outs.append(f"{out} AS {_q(s.alias)}")
+            sql = f"SELECT {', '.join(keys + outs)} FROM ({sql})"
+            if keys:
+                sql += f" GROUP BY {', '.join(keys)}"
+            cols = q.group_by + [s.alias for s in aggs]
+            if q.having is not None:
+                sql = self.filter((sql, cols), [q.having])[0]
+            cols = [s.alias if isinstance(s, Agg) else s[1]
+                    for s in q.select] or cols
+        elif q.select:
+            cols = [s[1] for s in q.select]
+        distinct = "DISTINCT " if q.distinct else ""
+        return (f"SELECT {distinct}{_sel(cols)} FROM ({sql}){self._modifiers(q)}",
+                cols)
+
+    def describe(self, q: Query) -> str:
+        # node set = explicit IRIs + bindings of the described vars; result
+        # = semi-join of the dataset's default graph on subject membership
+        parts = []
+        if any(a[0] == "var" for a in q.describe):
+            sol = self.group(q.where)[0]
+            parts += [f"SELECT {_q(a[1])} AS __n FROM ({sol})"
+                      for a in q.describe if a[0] == "var"]
+        consts = [f"({self.p(a[1])})" for a in q.describe if a[0] == "term"]
+        if consts:
+            parts.append(f"SELECT __n FROM VALUES {', '.join(consts)} AS v(__n)")
+        return (f"SELECT /*+ BROADCAST(n) */ DISTINCT subj, pred, obj FROM "
+                f"{self._default('q')} b LEFT SEMI JOIN (SELECT DISTINCT __n "
+                f"FROM ({' UNION ALL '.join(parts)})) n ON b.subj = n.__n")
 
 
 def instantiate_construct(sol: DataFrame, construct: list) -> DataFrame:
@@ -1628,7 +1639,8 @@ def sparql_query(quads: DataFrame, text: str, graph_col: str | None = None) -> D
     """Run a SPARQL SELECT over a quad DataFrame with columns
     (subj, pred, obj[, graph_col]). Returns one column per selected
     variable/aggregate alias; cells are N-Triples term strings (aggregates:
-    native numerics).
+    native numerics). The query compiles to one parameter-bound Spark SQL
+    statement; only a closure path (+/*) runs one more, for its edges.
 
     Known divergences from full SPARQL (documented, shared with tests and
     identical in both backends):
@@ -1641,54 +1653,29 @@ def sparql_query(quads: DataFrame, text: str, graph_col: str | None = None) -> D
       ?v is visible to FILTERs in the same WHERE group; per spec the
       projection expression is evaluated after the WHERE and ?v would be
       unbound there. Don't reference a projection alias inside WHERE."""
-    q = parse_sparql(text)
     if graph_col is None and "prov" in quads.columns:
         graph_col = "prov"
-    comp = _DfCompiler(quads, graph_col, q.from_graphs, q.from_named)
+    return _answer(quads.sparkSession, quads, text, graph_col)
+
+
+def _answer(spark, quads, text: str, graph_col: str | None) -> DataFrame:
+    """``sparql_query`` over ``quads``, a DataFrame or a registered view."""
+    q = parse_sparql(text)
+    comp = _SqlCompiler(spark, {"q": quads}, graph_col, q.from_graphs,
+                        q.from_named)
     if q.describe is not None:
-        # node set = explicit IRIs + bindings of the described vars;
-        # result = semi-join of the quads on subject membership
-        nodes = None
-        if any(a[0] == "var" for a in q.describe):
-            sol = comp.group(q.where)
-            for a in q.describe:
-                if a[0] == "var":
-                    part = sol.select(F.col(a[1]).alias("__n"))
-                    nodes = part if nodes is None else nodes.unionByName(part)
-        consts = [a[1] for a in q.describe if a[0] == "term"]
-        if consts:
-            cdf = quads.sparkSession.createDataFrame(
-                [(c,) for c in consts], "__n string"
-            )
-            nodes = cdf if nodes is None else nodes.unionByName(cdf)
-        body = comp.default_quads  # DESCRIBE reads the dataset's default graph
-        return (
-            body.join(
-                nodes.distinct().hint("broadcast"),
-                body["subj"] == F.col("__n"),
-                "left_semi",
-            )
-            .select("subj", "pred", "obj")
-            .distinct()
-        )
-    df = comp.group(q.where)
+        return comp.run(comp.describe(q))
+    sql, cols = comp.group(q.where)
     if q.ask:
-        return quads.sparkSession.createDataFrame(
-            [(not df.isEmpty(),)], "ask boolean"
-        )
+        return comp.run(f"SELECT EXISTS (SELECT 1 FROM ({sql})) AS ask")
     if q.construct is not None:
         # solution modifiers apply to the bindings, then each template
         # triple is instantiated per solution; output is the distinct graph
-        if q.order_by:
-            df = df.orderBy(*[F.col(v).asc() if asc else F.col(v).desc()
-                              for v, asc in q.order_by])
-        if q.offset:
-            df = df.offset(q.offset)
-        if q.limit is not None:
-            df = df.limit(q.limit)
-
-        return instantiate_construct(df, q.construct)
-    return _apply_select(comp, df, q)
+        sol = comp.run(f"SELECT * FROM ({sql}){comp._modifiers(q)}")
+        return instantiate_construct(sol, q.construct)
+    sql, cols = comp.select((sql, cols), q)
+    # a query without variables keeps its rows but no columns
+    return comp.run(sql) if cols else comp.run(sql).select()
 
 
 # ---------------------------------------------------------------------------
@@ -1702,12 +1689,12 @@ class _LocalEval:
                  from_named: list | None = None):
         # triples: (s, p, o) or (s, p, o, g)
         self.triples = triples
-        # FROM/FROM NAMED twin of _DfCompiler: dataset clause replaces the
-        # store's dataset (see the DataFrame compiler for the semantics)
+        # FROM/FROM NAMED twin of _SqlCompiler: dataset clause replaces the
+        # store's dataset (see the SQL compiler for the semantics)
         if from_graphs is not None or from_named is not None:
             fg = set(from_graphs or ())
             # RDF merge = triple SET across the FROM graphs (mirrors the
-            # DataFrame compiler's distinct default graph)
+            # SQL compiler's distinct default graph)
             self.default_triples = sorted({
                 t[:3] for t in triples if len(t) > 3 and t[3] in fg
             })
@@ -1872,7 +1859,7 @@ class _LocalEval:
             from urllib.parse import quote
 
             # str(): native numerics from arithmetic/aggregates must
-            # coerce like the DF side's cast-to-string, not crash
+            # coerce like the SQL side's cast-to-string, not crash
             return quote(str(term_lex(v)), safe="")
         if fn in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS",
                   "TZ"):
@@ -2004,7 +1991,7 @@ class _LocalEval:
                 out.append({**row, **nb})
         return out
 
-    # -- property paths (mirrors _DfCompiler._path_pairs) -------------------
+    # -- property paths (mirrors _SqlCompiler._path_pairs) ------------------
     def _graph_triples(self, graph):
         if graph is None:
             return self.default_triples
@@ -2069,7 +2056,7 @@ class _LocalEval:
     def path_rows(self, s, ast, o, graph, rows: list[dict]) -> list[dict]:
         if graph is not None and graph[0] == "var":
             # GRAPH ?var: each named graph's path relation is independent
-            # (the DataFrame twin keys its joins on __g for the same effect)
+            # (the SQL twin keys its joins on __g for the same effect)
             out = []
             for gname in self._named_graphs():
                 pairs = self._path_pairs(ast, ("term", gname))
@@ -2143,7 +2130,7 @@ class _LocalEval:
                 # bottom-up: the subquery never sees outer bindings; its
                 # projected solutions join on the shared variables. A native
                 # numeric (aggregate output) against a term string compares
-                # on the term's numeric value, mirroring the DataFrame join.
+                # on the term's numeric value, mirroring the SQL join.
                 sub = item[1]
                 sols = _apply_select_local(
                     self, sub, self.group(sub.where, [{}], graph)
@@ -2165,7 +2152,7 @@ class _LocalEval:
                                   and s[k] is not None]
                         if all(_veq(row[k], s[k]) for k in shared):
                             # outer (term-form) value wins on shared keys,
-                            # like the DF join keeping acc's column
+                            # like the SQL join keeping the outer column
                             merged = {k: v for k, v in s.items()
                                       if v is not None}
                             for k, v in row.items():
@@ -2204,7 +2191,7 @@ class _LocalEval:
 def _apply_select_local(ev: "_LocalEval", q: Query, rows: list[dict]) -> list[dict]:
     """Aggregates, projection, DISTINCT and solution modifiers over solved
     bindings — shared by sparql_eval_local and local subquery evaluation
-    (mirrors _apply_select on the DataFrame side)."""
+    (mirrors _SqlCompiler.select)."""
     has_agg = any(isinstance(s, Agg) for s in q.select)
     if has_agg or q.group_by:
         groups: dict[tuple, list[dict]] = {}

@@ -5,6 +5,7 @@ Every case runs the DataFrame backend and, where the twin supports it
 implementations of one documented semantics."""
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,6 +106,26 @@ class TestModify:
         assert ("<urn:b>", "<urn:p>", '"2"', "<urn:g1>") in got
         assert ("<urn:a>", "<urn:p2>", '"1"', None) in got
         assert ("<urn:b>", "<urn:p2>", '"2"', None) in got
+
+    def test_where_values_bind_as_parameters(self, spark):
+        """Quotes, backslashes, comment and statement marks, formatter
+        braces and parameter markers in a WHERE match literally."""
+        lits = ['"it\'s"', '"say \\"hi\\""', '"back\\\\slash"',
+                '"a -- b; c"', '"{q}"', '"{{"', '":t0 ?"']
+        rows = BASE + [(f"<urn:n{i}>", "<urn:v>", lit, None)
+                       for i, lit in enumerate(lits)]
+        for lit in lits:
+            got = _run(spark, rows, f"""
+                DELETE {{ ?s <urn:v> ?o }} INSERT {{ ?s <urn:w> {lit} }}
+                WHERE {{ ?s <urn:v> ?o FILTER(?o = {lit}) }}""")
+            assert sum(p == "<urn:w>" and o == lit
+                       for _, p, o, _ in got) == 1, lit
+        got = _run(spark, rows, (
+            "INSERT { ?s <urn:hit> ?o } WHERE { VALUES ?o { "
+            + " ".join(lits) + ' } ?s <urn:v> ?o FILTER(REGEX(STR(?o), '
+            '"^[a-z]{2}")) }'))
+        assert {o for _, p, o, _ in got if p == "<urn:hit>"} == {
+            lits[0], lits[1], lits[2]}
 
     def test_with_scopes_where_and_templates(self, spark):
         got = _run(spark, BASE, """
@@ -604,6 +625,24 @@ class TestGroundUpdatePath:
         text = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
         assert _jobs_launched(spark, lambda: gs.query(text)) == []
         assert len(gs.query(text).collect()) == 2
+        # ASK and an EXISTS that shares no variable compile to SQL EXISTS
+        from nabu_spark.sparql import sparql_eval_local
+
+        quads = [tuple(r) for r in gs.read().collect()]
+        for text in (
+                "ASK { ?s <urn:p> ?o }",
+                "ASK { <urn:zz> ?p ?o }",
+                "SELECT ?s WHERE { ?s <urn:p> ?o "
+                "FILTER EXISTS { <urn:c> <urn:q> ?x } }",
+                "SELECT ?s WHERE { ?s <urn:p> ?o "
+                "FILTER NOT EXISTS { <urn:c> <urn:q> ?x } }",
+                "SELECT ?s WHERE { ?s <urn:p> ?o "
+                "FILTER NOT EXISTS { <urn:zz> ?p ?x } }"):
+            assert _jobs_launched(spark, lambda: gs.query(text)) == [], text
+            got = sorted(tuple(r) for r in gs.query(text).collect())
+            want = sorted(tuple(r.values())
+                          for r in sparql_eval_local(quads, text))
+            assert got == want, text
 
     def test_redundant_insert_keeps_views_incremental(self, spark, tmp_path):
         from nabu_spark.matview import MaterializedView
@@ -828,3 +867,51 @@ class TestReadMemo:
             for m in ("miss", "hit", "over_cap")]
         assert over is not gs.read()
         assert _rows(over) == sorted(BASE, key=_key)
+
+
+HYF = "https://www.opengis.net/def/schema/hy_features/hyf/"
+# perfbench's five read templates, one instance each
+TEMPLATES = {
+    "lookup": "SELECT ?p ?o WHERE { <urn:a> ?p ?o }",
+    "optional": (
+        "SELECT ?s ?n WHERE { { ?s a <https://schema.org/Place> "
+        'FILTER(STRSTARTS(STR(?s), "https://geoconnex.us/iow/demo/site-12")) '
+        "} OPTIONAL { ?s <https://schema.org/name> ?n } }"),
+    "type_count": "SELECT ?t (COUNT(?s) AS ?n) WHERE { ?s a ?t } GROUP BY ?t",
+    "path": (f"SELECT ?s WHERE {{ ?s <{HYF}referencedPosition>/"
+             f"<{HYF}HY_IndirectPosition>/<{HYF}linearElement> "
+             "<https://geoconnex.us/ref/mainstems/36801> }"),
+    "filter": ("SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n "
+               'FILTER(STRSTARTS(STR(?n), "MONITORING SITE 12")) }'),
+}
+
+
+class TestQueryCompile:
+    """A query compiles to one parameter-bound SQL statement: on a memo hit
+    ``GraphStore.query`` crosses the Py4J boundary a bounded number of
+    times, not once per Column and DataFrame transform."""
+
+    @pytest.mark.parametrize("template", sorted(TEMPLATES))
+    def test_template_compiles_in_few_round_trips(self, spark, tmp_path,
+                                                  template):
+        gs = GraphStore(spark, str(tmp_path / "rt"))
+        gs.init(_store(spark, BASE))
+        gs.read().count()  # fills the memo: every query below is a hit
+        text = TEMPLATES[template]
+        gs.query(text)  # first use of each JVM function is not counted
+        client = spark.sparkContext._gateway._gateway_client
+        send, calls, me = client.send_command, [], threading.get_ident()
+
+        def counted(*args, **kwargs):
+            # py4j's finalizer thread frees dead proxies through the same
+            # client; only this thread's calls belong to the query
+            if threading.get_ident() == me:
+                calls.append(args[0])
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            gs.query(text)
+        finally:
+            client.send_command = send
+        assert len(calls) <= 25, (template, len(calls))

@@ -176,7 +176,7 @@ class TestIncrementalPlanShape:
         (small) delta relation — a shuffle of the store per refresh would
         defeat the point of incremental maintenance."""
         from nabu_spark.matview import _delta_solutions
-        from nabu_spark.sparql import _DfCompiler
+        from nabu_spark.sparql import _SqlCompiler
 
         st = _store(spark, tmp_path)
         mv = MaterializedView(st, str(tmp_path / "view"), VIEW_Q)
@@ -188,12 +188,9 @@ class TestIncrementalPlanShape:
         win = st.raw_window(v0, head)
         delta = (win.select("subj", "pred", "obj", "prov").distinct()
                  .hint("broadcast"))
-        sol = _delta_solutions(
-            mv.query,
-            old=_DfCompiler(st.read(v0), "prov"),
-            new=_DfCompiler(st.read(head), "prov"),
-            delta=_DfCompiler(delta, "prov"),
-        )
+        sol = _delta_solutions(mv.query, _SqlCompiler(
+            spark, {"old": st.read(v0), "new": st.read(head),
+                    "delta": delta}, "prov"))
         plan = sol._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
         # and the correctness side: rows match a refresh's additions

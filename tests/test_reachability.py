@@ -278,3 +278,19 @@ def test_eager_checkpoints_go_through_materialize():
     lineage cut calls `session.materialize`, which drops it."""
     found = _scoped_calls(_eager_checkpoint)
     assert found == {"nabu_spark/session.py::materialize"}, sorted(found)
+
+
+def _sql_call(node: ast.Call) -> bool:
+    return isinstance(node.func, ast.Attribute) and node.func.attr == "sql"
+
+
+def test_spark_sql_is_called_once_with_bound_parameters():
+    """SPARQL reaches Spark SQL through one call site, and that call binds
+    the query's values as parameters (`args=`): none becomes SQL text."""
+    calls = [n for path in sorted(PKG.rglob("*.py"))
+             for n in ast.walk(ast.parse(path.read_text()))
+             if isinstance(n, ast.Call) and _sql_call(n)]
+    assert _scoped_calls(_sql_call) == {
+        "nabu_spark/sparql.py::_SqlCompiler.run"}
+    assert len(calls) == 1
+    assert [k.arg for k in calls[0].keywords if k.arg == "args"] == ["args"]

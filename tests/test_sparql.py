@@ -1607,3 +1607,57 @@ class TestNullaryWantModes:
             WHERE { ?s <urn:t:name> ?o }
         """).collect()[0]
         assert out["a"] != out["b"]
+
+
+class TestMultiLineLiterals:
+    """A literal with a real newline (Turtle's triple-quoted strings, or
+    INSERT DATA) keeps its lexical form on the Spark backend too."""
+
+    TRIPLES = [(iri("a"), iri("v"), '"a\nb"'),
+               (iri("b"), iri("v"), '"a\nb\nc"@en'),
+               (iri("c"), iri("v"), '"b"')]
+
+    @pytest.mark.parametrize("q", [
+        "SELECT ?s (STR(?o) AS ?l) WHERE { ?s <urn:t:v> ?o }",
+        "SELECT ?s (STRLEN(?o) AS ?n) WHERE { ?s <urn:t:v> ?o }",
+        'SELECT ?s WHERE { ?s <urn:t:v> ?o FILTER(STRSTARTS(STR(?o), "a")) }',
+        "SELECT ?s (LANG(?o) AS ?lang) WHERE { ?s <urn:t:v> ?o }",
+    ])
+    def test_spark_agrees_with_local(self, spark, q):
+        got, want = both(spark, self.TRIPLES, q)
+        assert got == want and got, q
+
+
+class TestParameterBinding:
+    """Values from the query text are bound as SQL parameters, never
+    spliced: quotes, backslashes, comment and statement marks, formatter
+    braces and parameter markers match literally on both backends."""
+
+    LITS = ['"it\'s"', '"say \\"hi\\""', '"back\\\\slash"', '"a -- b"',
+            '"1; SELECT 2"', '"{q}"', '"{{"', '":t0"', '"why?"']
+    IRIS = ["<urn:t:it's>", "<urn:t:a--b;c>", "<urn:t::t0?x>",
+            "<urn:t:back\\slash>"]
+
+    def _triples(self):
+        t = [(iri(f"s{i}"), iri("v"), lit) for i, lit in enumerate(self.LITS)]
+        return t + [(x, iri("v"), '"iri"') for x in self.IRIS]
+
+    def _queries(self):
+        for lit in self.LITS:
+            yield f"SELECT ?s WHERE {{ ?s <urn:t:v> {lit} }}"
+            yield f"SELECT ?s WHERE {{ ?s <urn:t:v> ?o FILTER(?o = {lit}) }}"
+        for x in self.IRIS:
+            yield f"SELECT ?o WHERE {{ {x} <urn:t:v> ?o }}"
+        yield ("SELECT ?s ?o WHERE { VALUES ?o { " + " ".join(self.LITS)
+               + " } ?s <urn:t:v> ?o }")
+        yield ("SELECT ?s ?o WHERE { VALUES ?s { " + " ".join(self.IRIS)
+               + " } ?s <urn:t:v> ?o }")
+        yield ('SELECT ?o WHERE { ?s <urn:t:v> ?o '
+               'FILTER(REGEX(STR(?o), "^[a-z]{2}")) }')
+        yield ('SELECT ?o WHERE { ?s <urn:t:v> ?o '
+               'FILTER(CONTAINS(STR(?o), "{{") || STRENDS(STR(?o), "?")) }')
+
+    def test_values_match_literally(self, spark):
+        for q in self._queries():
+            got, want = both(spark, self._triples(), q)
+            assert got == want and got, q
