@@ -74,18 +74,22 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .sparql import (
     Group,
     SparqlError,
+    _answer,
+    _answer_local,
     _LocalEval,
     _Parser,
     _SqlCompiler,
-    _answer,
+    parse_sparql,
 )
 from .session import bounded_collect, capped
+from .snapshots import _parquet_rows
 from .telemetry import maybe_span
 
 QUAD_COLS = ("subj", "pred", "obj", "prov")
-# entail()'s driver fast-path cap, in raw log rows and in window rows
+# the store's driver fast paths' cap, in raw log rows (and in window rows
+# for incremental entail): the query twin and entail()'s closures
 # (nabu_spark.session.driver_cap overrides it)
-_ENTAIL_DRIVER_CAP = 100_000
+_DRIVER_CAP = 100_000
 # the delta log's one physical row shape: every writer emits it (__seq is
 # long, never int32) and every raw read passes it instead of inferring one
 RAW_SCHEMA = T.StructType(
@@ -730,6 +734,31 @@ def _apply_one_local(cur: set, op, op_index: int) -> set:
 # ---------------------------------------------------------------------------
 
 
+def _merge_files(files: list[str], cap: int) -> tuple[list, int] | None:
+    """``(quads, raw rows)``: the merged quad set of delta-log ``files``,
+    read by pyarrow on the driver with no Spark job, as [(subj, pred, obj,
+    prov), ...]. It is read()'s max_by(__op, __seq) per quad: rows sorted
+    by __seq fill a dict, so each quad keeps its last op (each commit
+    batch is a quad set and its d/a rows carry distinct seqs). None, with
+    no data read, when the footers count more than ``cap`` raw rows — a
+    stricter bound than the merged size, so a long delete history only
+    falls back earlier."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    raw = _parquet_rows(files)
+    if cap <= 0 or raw > cap:
+        return None
+    schema = to_arrow_schema(RAW_SCHEMA)
+    log = pa.concat_tables(
+        pq.read_table(f, columns=schema.names).cast(schema) for f in files
+    ).sort_by("__seq")
+    s, p, o, g, op = (log.column(c).to_pylist() for c in schema.names[:5])
+    last = dict(zip(zip(s, p, o, g), op))
+    return [q for q, op in last.items() if op == "a"], raw
+
+
 def _tag(quads: DataFrame, op: str, seq: int) -> DataFrame:
     """Quad rows as delta-log rows of one ``__op`` and ``__seq``."""
     return quads.select(*QUAD_COLS, F.lit(op).alias("__op"),
@@ -751,7 +780,13 @@ class GraphStore:
     commit pays the merge plus the cache fill. ``compact()`` folds the log
     into a pure add set so steady-state reads pay no delete history. Every
     ``update`` call commits only its delta rows — the base data is never
-    rewritten."""
+    rewritten.
+
+    A log of at most ``_DRIVER_CAP`` raw rows is also held on the driver,
+    under the same kind of key: the merged quads, hash-indexed, as the
+    twin that ``query`` answers from with no Spark job. A ground update
+    applies its delta rows to the twin it was committed over; every other
+    key change rebuilds the twin on the next query."""
 
     def __init__(self, spark: SparkSession, root: str):
         from .snapshots import SnapshotTable
@@ -762,6 +797,9 @@ class GraphStore:
         # one read() memo entry
         self._memo: list | None = None
         self._view = f"nabu_store_{uuid.uuid4().hex}"
+        # [key, indexed _LocalEval over the merged quads, raw log rows]:
+        # the one query twin
+        self._twin: list | None = None
 
     # -- write paths --------------------------------------------------------
     def _next_seq(self) -> int:
@@ -802,7 +840,8 @@ class GraphStore:
         / DELETE DATA only) never reads the store: its de-duplicated rows
         are committed from the driver with no Spark job, and a quad it
         re-inserts is a redundant 'a' row that ``read()``'s max_by merge
-        ignores (as in ``append_quads``)."""
+        ignores (as in ``append_quads``). Its rows also advance the query
+        twin (``_advance_twin``)."""
         ops = parse_update(text)
         seq0 = self._next_seq()
         seq_hi = seq0 + 2 * len(ops) - 1
@@ -815,7 +854,9 @@ class GraphStore:
                 if op.insert:
                     rows += [(*q, "a", seq0 + 2 * i + 1) for q in _ground_rows(
                         op.insert, i, fresh_bnodes=True)]
-            return self._commit_rows(rows, seq_hi, "sparql-update")
+            v = self._commit_rows(rows, seq_hi, "sparql-update")
+            self._advance_twin(v, rows)
+            return v
         cur = self.read()
         parts: list[DataFrame] = []
         for i, op in enumerate(ops):
@@ -828,6 +869,24 @@ class GraphStore:
             return self._commit_rows([], seq_hi, "sparql-update")
         return self._commit_delta(reduce(DataFrame.unionByName, parts),
                                   seq_hi, "sparql-update")
+
+    def _advance_twin(self, v: int, rows: list) -> None:
+        """Apply a ground update's delta ``rows`` (in seq order, as
+        ``update`` builds them) to the twin and rekey it to version ``v``.
+        Only when ``v`` holds exactly the twin's files plus the ones just
+        committed, and the log stays within the cap; otherwise (another
+        instance committed in between, or the twin is of another version)
+        the twin is dropped."""
+        twin, self._twin = self._twin, None
+        m = self.tbl.manifest(v)
+        if (twin is None or m["operation"] != "append"
+                or tuple(m["files"]) != twin[0][1] + tuple(m["new_files"])
+                or twin[2] + len(rows) > capped(_DRIVER_CAP)):
+            return
+        ev = twin[1]
+        for *q, op, _ in rows:
+            (ev.add if op == "a" else ev.discard)(tuple(q))
+        self._twin = [(twin[0][0], tuple(m["files"])), ev, twin[2] + len(rows)]
 
     def append_quads(self, quads: DataFrame, stage: str = "append") -> int:
         """Append a batch of quads as one snapshot of 'a' rows — O(batch),
@@ -889,10 +948,11 @@ class GraphStore:
             if v is not None:
                 return v
         # bounded driver fast path (same economics as the reasoner's own
-        # fast paths): a store within ``_ENTAIL_DRIVER_CAP`` raw log rows
+        # fast paths): a store within ``_DRIVER_CAP`` raw log rows
         # closes through the exact in-memory twin and the whole delta
-        # (closure, anti-join, old-inference diff) is ONE collect + ONE
-        # commit instead of ~6 shuffle-heavy jobs. Semantics are set-for-set
+        # (closure, anti-join, old-inference diff) is ONE pyarrow read of
+        # the log + ONE commit instead of ~6 shuffle-heavy jobs. Semantics
+        # are set-for-set
         # the distributed plan below (agreement pinned in tests);
         # ``driver_cap(0)`` forces the distributed plan.
         quads = self._collect_merged()
@@ -944,31 +1004,10 @@ class GraphStore:
             extra={"entail_mode": "incremental", "entail_graph": graph})
 
     def _collect_merged(self) -> list | None:
-        """The merged quad-set view collected driver-side WITHOUT read()'s
-        groupBy shuffle: raw delta rows stream to the driver and max_by
-        merges in a dict (each commit batch is a quad-set and d/a batches
-        carry distinct seqs, so the max seq per quad is unique). Returns
-        [(subj, pred, obj, prov), ...] or None when the RAW log exceeds
-        ``_ENTAIL_DRIVER_CAP`` rows (or the ``driver_cap`` override) — a
-        stricter bound than the merged size, so the only effect of long
-        delete histories is an earlier fall-back to the distributed plan.
-        A plain probe, not ``bounded_collect``: the fallback reads the
-        merged view, not the raw log, so it has nothing to reuse."""
-        cap = capped(_ENTAIL_DRIVER_CAP)
-        if cap <= 0:
-            return None
-        raw = self.tbl.read(self.spark, schema=RAW_SCHEMA)
-        rows = raw.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return None
-        best: dict = {}
-        for r in rows:
-            q = (r.subj, r.pred, r.obj, r.prov)
-            seq = r["__seq"]
-            cur = best.get(q)
-            if cur is None or seq > cur[0]:
-                best[q] = (seq, r["__op"])
-        return [q for q, (_, op) in best.items() if op == "a"]
+        """The latest merged quad set on the driver (see
+        :func:`_merge_files`), or None over the cap."""
+        merged = _merge_files(self.tbl.files(), capped(_DRIVER_CAP))
+        return merged and merged[0]
 
     def _entail_local(self, quads: list, graph: str, profile: str) -> int:
         """Exact in-memory mirror of the distributed entail() tail over the
@@ -1020,14 +1059,15 @@ class GraphStore:
         if window is None:
             return None
         # bounded driver fast path: a window AND store within
-        # ``_ENTAIL_DRIVER_CAP`` run the identical semi-naive algorithm
+        # ``_DRIVER_CAP`` run the identical semi-naive algorithm
         # in-memory — window collect, soundness scan, closure(window ∪
-        # schema), store anti-join — as TWO collects + ONE commit instead of
+        # schema), store anti-join — as ONE collect, ONE pyarrow read of
+        # the log and ONE commit instead of
         # checkpoint + probe + materialize + shuffle-join jobs. Falls
         # through to the distributed plan (over the materialized window)
         # when either side is over-cap; unsound windows return None (full
         # recompute) exactly as below.
-        wrows, window = bounded_collect(window, _ENTAIL_DRIVER_CAP,
+        wrows, window = bounded_collect(window, _DRIVER_CAP,
                                         site="graphstore.entail_window")
         if wrows is not None:
             if any(r["__op"] != "a" or r["prov"] == graph
@@ -1167,17 +1207,56 @@ class GraphStore:
             return self._memo[1]
 
     def query(self, text: str, version: int | None = None) -> DataFrame:
-        """SPARQL over the merged view. The memo entry is registered as a
-        temp view on its first query, so a query on a memo hit registers
-        and drops no view of its own (the two commands took about 12 ms
-        per query on a 4-CPU VM, more than compiling a lookup)."""
-        quads = self.read(version)
-        if self._memo and self._memo[1] is quads:
-            if not self._memo[2]:
-                quads.createOrReplaceTempView(self._view)
-                self._memo[2] = True
-            quads = self._view
-        return _answer(self.spark, quads, text, "prov")
+        """SPARQL over the merged view at ``version`` (default latest).
+
+        A log within ``_DRIVER_CAP`` raw rows is answered by the driver
+        twin of its files: a DataFrame over a ``pyarrow.Table`` with the
+        SQL path's columns and types, which runs no Spark job to build or
+        collect. Over the cap, under ``driver_cap(0)``, or for a query the
+        twin's evaluator rejects, the query compiles to one Spark SQL
+        statement over ``read()``. The memo entry is registered as a temp
+        view on its first query, so a query on a memo hit registers and
+        drops no view of its own (the two commands took about 12 ms per
+        query on a 4-CPU VM, more than compiling a lookup). One
+        ``graphstore.query`` span records the path taken (``driver`` or
+        ``sql``), the cap and, on the driver path, the rows out."""
+        q = parse_sparql(text)
+        files = self.tbl.files(version)
+        cap = capped(_DRIVER_CAP)
+        with maybe_span("graphstore.query", cap=cap) as span:
+            ev = self._twin_at(files, cap)
+            if ev is not None:
+                try:
+                    df, rows = _answer_local(self.spark, ev, q, "prov")
+                except SparqlError:
+                    pass
+                else:
+                    if span is not None:
+                        span.attributes.update(path="driver", rows=rows)
+                    return df
+            if span is not None:
+                span.attributes["path"] = "sql"
+            quads = self.read(version)
+            if self._memo and self._memo[1] is quads:
+                if not self._memo[2]:
+                    quads.createOrReplaceTempView(self._view)
+                    self._memo[2] = True
+                quads = self._view
+            return _answer(self.spark, quads, q, "prov")
+
+    def _twin_at(self, files: list[str], cap: int) -> _LocalEval | None:
+        """The twin of ``files``, built on a key change; None over ``cap``
+        raw rows."""
+        key = (self.spark.sparkContext.applicationId, tuple(files))
+        if self._twin and self._twin[0] == key:
+            return self._twin[1] if self._twin[2] <= cap else None
+        self._twin = None
+        merged = _merge_files(files, cap)
+        if merged is None:
+            return None
+        quads, raw = merged
+        self._twin = [key, _LocalEval(dict.fromkeys(quads)).indexed(), raw]
+        return self._twin[1]
 
     def history(self) -> list[dict]:
         return self.tbl.history()

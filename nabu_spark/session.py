@@ -130,16 +130,18 @@ def materialize(df: DataFrame) -> DataFrame:
     and a join multiplies its children's, so self-join rounds doubled the
     estimate's digits each round (11 closure rounds over a 1,024-edge
     chain: 8.81E+8452 B) until the planner's BigInt arithmetic dominated.
-    Partitioning, ordering and constraints stay, so joins and exchange
-    reuse plan as over the checkpoint itself."""
+    Partitioning and ordering stay, so joins and exchange reuse plan as
+    over the checkpoint itself. Constraints do not: those of a relation
+    whose column passed through an aliasing projection name attributes the
+    copy does not output, and the next checkpoint of a plan over it failed
+    with "key not found"."""
     ckpt = df.localCheckpoint(eager=True)
     spark = df.sparkSession
     jss, jvm = spark._jsparkSession, spark._jvm
     rdd = ckpt._jdf.queryExecution().analyzed()  # the checkpoint's LogicalRDD
     fresh = rdd.copy(rdd.output(), rdd.rdd(), rdd.outputPartitioning(),
                      rdd.outputOrdering(), rdd.isStreaming(), rdd.stream(),
-                     jss, jvm.scala.Option.empty(),
-                     jvm.scala.Option.apply(rdd.constraints()))
+                     jss, jvm.scala.Option.empty(), jvm.scala.Option.empty())
     return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, fresh),
                      spark)
 

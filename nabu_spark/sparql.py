@@ -72,8 +72,11 @@ One parse, two evaluators:
   term strings — no driver-side iteration, no per-row Python.
 - ``sparql_eval_local(triples, text)`` — in-memory evaluator over one small
   graph (a per-document subgraph). Used by the SHACL engine for sh:sparql
-  constraints (per-focus-node, inside mapInPandas) and by the test suite as
-  an independent cross-check of the SQL compiler.
+  constraints (per-focus-node, inside mapInPandas), by the test suite as
+  an independent cross-check of the SQL compiler, and, hash-indexed, by
+  ``GraphStore.query`` to answer a store within its driver cap with no
+  Spark job. It evaluates OPTIONAL and MINUS bottom-up as hash joins on
+  the shared variables, as the SQL compiler's LEFT (ANTI) JOIN USING does.
 
 Terms are N-Triples strings ('<iri>', '"lit"', '"lit"@en', '"1"^^<dt>',
 '_:b0') exactly as produced by operators/triples.py. Comparison semantics
@@ -1389,23 +1392,24 @@ class _SqlCompiler:
             return (f"SELECT DISTINCT * FROM ({self._path_pairs(ast[1], graph)}"
                     f" UNION ALL {self._identity_pairs(graph)})")
         if tag in ("plus", "star"):
-            # __g gets a fresh alias too: a key passed through from below
-            # makes the closure's second materialize fail ("key not found")
-            edges = self.run(f"SELECT __src AS child, __dst AS parent"
-                             f"{g and ', __g AS __g'} "
-                             f"FROM ({self._path_pairs(ast[1], graph)})")
-            try:
-                closed = transitive_closure(edges, keys=["__g"] if keyed else [])
-            except RuntimeError as e:
-                raise SparqlError(f"path {e}") from e
+            edges = (f"SELECT __src AS child, __dst AS parent{g} "
+                     f"FROM ({self._path_pairs(ast[1], graph)})")
             name = f"c{len(self.views)}"
-            self.views[name] = closed
+            # a compiler without a session only tracks the columns
+            self.views[name] = self.spark and self._closure(edges, keyed)
             out = f"SELECT child AS __src, parent AS __dst{g} FROM {{{name}}}"
             if tag == "plus":
                 return out
             return (f"SELECT DISTINCT * FROM ({out} UNION ALL "
                     f"{self._identity_pairs(graph)})")
         raise SparqlError(f"bad path {ast!r}")
+
+    def _closure(self, edges: str, keyed: bool) -> DataFrame:
+        rel = self.run(edges)
+        try:
+            return transitive_closure(rel, keys=["__g"] if keyed else [])
+        except RuntimeError as e:
+            raise SparqlError(f"path {e}") from e
 
     def _identity_pairs(self, graph) -> str:
         # SPARQL zero-length path: every term occurring in the graph
@@ -1658,9 +1662,10 @@ def sparql_query(quads: DataFrame, text: str, graph_col: str | None = None) -> D
     return _answer(quads.sparkSession, quads, text, graph_col)
 
 
-def _answer(spark, quads, text: str, graph_col: str | None) -> DataFrame:
+def _answer(spark, quads, text: str | Query,
+            graph_col: str | None) -> DataFrame:
     """``sparql_query`` over ``quads``, a DataFrame or a registered view."""
-    q = parse_sparql(text)
+    q = text if isinstance(text, Query) else parse_sparql(text)
     comp = _SqlCompiler(spark, {"q": quads}, graph_col, q.from_graphs,
                         q.from_named)
     if q.describe is not None:
@@ -1679,16 +1684,32 @@ def _answer(spark, quads, text: str, graph_col: str | None) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# local (in-memory) backend — per-graph, used by SHACL sh:sparql
+# local (in-memory) backend: SHACL's sh:sparql constraints, the agreement
+# oracle of the SQL compiler, and GraphStore.query's driver twin of a
+# bounded store (served as a LocalTableScan DataFrame by _answer_local)
 # ---------------------------------------------------------------------------
 
 
 class _LocalEval:
-    def __init__(self, triples: list[tuple],
-                 from_graphs: list | None = None,
-                 from_named: list | None = None):
-        # triples: (s, p, o) or (s, p, o, g)
+    """Evaluates parsed groups over in-memory triples: (s, p, o) or
+    (s, p, o, g) tuples, g None for the default graph.
+
+    A pattern with a bound subject, object or predicate looks its triples
+    up in a hash index on that position (``index``: position -> {term:
+    [triple, ...]}). A one-shot evaluator builds an index only when a
+    pattern meets more than one input row; a single row filters the
+    triples on that position in one pass, which costs less than building
+    the index. A served twin builds all three up front (``indexed``) and
+    keeps them current through ``add``/``discard``."""
+
+    def __init__(self, triples, from_graphs: list | None = None,
+                 from_named: list | None = None, *,
+                 index: dict | None = None):
         self.triples = triples
+        self.index = {} if index is None else index
+        # pre-bound variables (SHACL's $this): the start row of the query
+        # and of every group evaluated bottom-up inside it
+        self.seed: dict = {}
         # FROM/FROM NAMED twin of _SqlCompiler: dataset clause replaces the
         # store's dataset (see the SQL compiler for the semantics)
         if from_graphs is not None or from_named is not None:
@@ -1698,10 +1719,51 @@ class _LocalEval:
             self.default_triples = sorted({
                 t[:3] for t in triples if len(t) > 3 and t[3] in fg
             })
+            self.default_index: dict = {}
             self.named_set: set | None = set(from_named or ())
         else:
             self.default_triples = triples
+            self.default_index = self.index
             self.named_set = None
+
+    def indexed(self) -> "_LocalEval":
+        for pos in range(3):
+            self._lookup(self.index, self.triples, pos, True)
+        return self
+
+    def dataset(self, from_graphs, from_named) -> "_LocalEval":
+        """This evaluator under a query's dataset clause, sharing the
+        triples and their indexes."""
+        if from_graphs is None and from_named is None:
+            return self
+        return _LocalEval(self.triples, from_graphs, from_named,
+                          index=dict(self.index))
+
+    def add(self, t: tuple) -> None:
+        """Assert ``t`` into a twin whose ``triples`` is a dict."""
+        if t not in self.triples:
+            self.triples[t] = None
+            for pos, idx in self.index.items():
+                idx.setdefault(t[pos], []).append(t)
+
+    def discard(self, t: tuple) -> None:
+        if self.triples.pop(t, False) is None:
+            for pos, idx in self.index.items():
+                bucket = idx[t[pos]]
+                bucket.remove(t)
+                if not bucket:
+                    del idx[t[pos]]
+
+    @staticmethod
+    def _lookup(index: dict, src, pos: int, build: bool) -> dict | None:
+        """The hash index of ``src`` on ``pos``; None when it is not built
+        and ``build`` is false."""
+        idx = index.get(pos)
+        if idx is None and build:
+            idx = index[pos] = {}
+            for t in src:
+                idx.setdefault(t[pos], []).append(t)
+        return idx
 
     def expr(self, e, row: dict, want: str = "bool"):
         tag = e[0]
@@ -1971,9 +2033,18 @@ class _LocalEval:
 
     def pattern(self, s, p, o, graph, rows: list[dict]) -> list[dict]:
         out = []
-        src = self.default_triples if graph is None else self.triples
+        src, index = ((self.default_triples, self.default_index)
+                      if graph is None else (self.triples, self.index))
         for row in rows:
-            for t in src:
+            cands = src
+            for pos, atom in ((0, s), (2, o), (1, p)):
+                v = atom[1] if atom[0] == "term" else row.get(atom[1])
+                if v is not None:
+                    idx = self._lookup(index, src, pos, len(rows) > 1)
+                    cands = (idx.get(v, ()) if idx is not None
+                             else [t for t in src if t[pos] == v])
+                    break
+            for t in cands:
                 nb: dict = {}
                 if not self._match(s, t[0], row, nb):
                     continue
@@ -1992,12 +2063,18 @@ class _LocalEval:
         return out
 
     # -- property paths (mirrors _SqlCompiler._path_pairs) ------------------
-    def _graph_triples(self, graph):
+    def _graph_triples(self, graph, pred=None):
+        """The triples a path step ranges over; only those with predicate
+        ``pred`` when it is given and the predicate index is built."""
+        src, index = ((self.default_triples, self.default_index)
+                      if graph is None else (self.triples, self.index))
+        if pred is not None and 1 in index:
+            src = index[1].get(pred, ())
         if graph is None:
-            return self.default_triples
+            return src
         if graph[0] == "term":
             return [
-                t for t in self.triples
+                t for t in src
                 if len(t) > 3 and t[3] == graph[1]
                 and (self.named_set is None or t[3] in self.named_set)
             ]
@@ -2013,7 +2090,7 @@ class _LocalEval:
     def _path_pairs(self, ast, graph) -> set:
         tag = ast[0]
         if tag == "p":
-            return {(t[0], t[2]) for t in self._graph_triples(graph)
+            return {(t[0], t[2]) for t in self._graph_triples(graph, ast[1])
                     if t[1] == ast[1]}
         if tag == "nps":
             return {(t[0], t[2]) for t in self._graph_triples(graph)
@@ -2095,30 +2172,17 @@ class _LocalEval:
             elif tag == "filter":
                 filters.append(item[1])
             elif tag == "optional":
-                nxt = []
-                for row in rows:
-                    matched = self.group(item[1], [row], graph)
-                    nxt.extend(matched if matched else [row])
-                rows = nxt
+                rows = _left_join(rows,
+                                  self.group(item[1], [self.seed], graph))
             elif tag == "exists":
                 rows = [
                     row for row in rows
                     if bool(self.group(item[1], [dict(row)], graph)) == item[2]
                 ]
             elif tag == "minus":
-                sols = self.group(item[1], [{}], graph)
-
-                def _removed(row: dict) -> bool:
-                    for s in sols:
-                        shared = [
-                            k for k in row
-                            if k in s and row[k] is not None and s[k] is not None
-                        ]
-                        if shared and all(row[k] == s[k] for k in shared):
-                            return True
-                    return False
-
-                rows = [row for row in rows if not _removed(row)]
+                rows = _left_join(rows,
+                                  self.group(item[1], [self.seed], graph),
+                                  anti=True)
             elif tag == "union":
                 nxt = []
                 for b in item[1]:
@@ -2188,13 +2252,47 @@ class _LocalEval:
         return [r for r in rows if all(self.expr(f, r) for f in filters)]
 
 
+def _left_join(rows: list[dict], sols: list[dict], *,
+               anti: bool = False) -> list[dict]:
+    """``rows`` LEFT JOIN, or with ``anti`` LEFT ANTI JOIN, ``sols``
+    on the variables both sides bind, as ``_SqlCompiler.group`` joins
+    OPTIONAL and MINUS with USING: the solutions are hashed once on those
+    variables and an unbound one matches nothing. With no shared variable
+    a left join is a cross product and MINUS removes nothing (§8.3). A row
+    that OPTIONAL does not extend carries the inner variables unbound."""
+    rvars = set().union(*sols)
+    shared = sorted(rvars.intersection(*rows) if len(rows) == 1
+                    else rvars & set().union(*rows))
+    if anti and not shared:
+        return rows
+    table: dict[tuple, list[dict]] = {}
+    for s in sols:
+        key = tuple(map(s.get, shared))
+        if None not in key:
+            table.setdefault(key, []).append(s)
+    unbound = dict.fromkeys(rvars)
+    out = []
+    for r in rows:
+        key = tuple(map(r.get, shared))
+        hits = table.get(key, ()) if None not in key else ()
+        if anti:
+            if not hits:
+                out.append(r)
+        elif hits:
+            out.extend({**r, **s} for s in hits)
+        else:
+            out.append({**unbound, **r})
+    return out
+
+
 def _apply_select_local(ev: "_LocalEval", q: Query, rows: list[dict]) -> list[dict]:
     """Aggregates, projection, DISTINCT and solution modifiers over solved
     bindings — shared by sparql_eval_local and local subquery evaluation
     (mirrors _SqlCompiler.select)."""
     has_agg = any(isinstance(s, Agg) for s in q.select)
     if has_agg or q.group_by:
-        groups: dict[tuple, list[dict]] = {}
+        # without GROUP BY the solutions form one group, even none of them
+        groups: dict[tuple, list[dict]] = {} if q.group_by else {(): []}
         for r in rows:
             key = tuple(r.get(v) for v in q.group_by)
             groups.setdefault(key, []).append(r)
@@ -2254,10 +2352,19 @@ def _apply_select_local(ev: "_LocalEval", q: Query, rows: list[dict]) -> list[di
                 seen.add(key)
                 uniq.append(r)
         rows = uniq
+    return _slice_local(rows, q)
+
+
+def _slice_local(rows: list[dict], q: Query) -> list[dict]:
+    """ORDER BY, OFFSET and LIMIT over solved rows (OFFSET applies before
+    LIMIT, as in SPARQL)."""
     for var, asc in reversed(q.order_by):
         # unbound sorts lowest (spec; Spark ASC = NULLS FIRST)
-        rows.sort(key=lambda r: (r.get(var) is not None, r.get(var)),
-                  reverse=not asc)
+        try:
+            rows.sort(key=lambda r: (r.get(var) is not None, r.get(var)),
+                      reverse=not asc)
+        except TypeError as e:
+            raise SparqlError(f"ORDER BY ?{var} over numbers and terms") from e
     if q.offset:
         rows = rows[q.offset:]
     if q.limit is not None:
@@ -2277,27 +2384,27 @@ def sparql_eval_local(
     deterministic order."""
     q = text if isinstance(text, Query) else parse_sparql(text)
     ev = _LocalEval(triples, q.from_graphs, q.from_named)
+    ev.seed = dict(bindings or {})
+    return _eval_local(ev, q)
+
+
+def _eval_local(ev: _LocalEval, q: Query) -> list[dict]:
+    """``q``'s rows from an evaluator already scoped to its dataset."""
     if q.describe is not None:
         nodes = {a[1] for a in q.describe if a[0] == "term"}
         if any(a[0] == "var" for a in q.describe):
-            sol = ev.group(q.where, [dict(bindings or {})])
+            sol = ev.group(q.where, [ev.seed])
             for a in q.describe:
                 if a[0] == "var":
                     nodes |= {r[a[1]] for r in sol if r.get(a[1]) is not None}
         out = sorted({(t[0], t[1], t[2]) for t in ev.default_triples
                       if t[0] in nodes})
         return [dict(zip(("subj", "pred", "obj"), t)) for t in out]
-    rows = ev.group(q.where, [dict(bindings or {})])
+    rows = ev.group(q.where, [ev.seed])
     if q.ask:
         return [{"ask": bool(rows)}]
     if q.construct is not None:
-        for var, asc in reversed(q.order_by):
-            rows.sort(key=lambda r: (r.get(var) is not None, r.get(var)),
-                      reverse=not asc)
-        if q.offset:
-            rows = rows[q.offset:]
-        if q.limit is not None:
-            rows = rows[: q.limit]
+        rows = _slice_local(rows, q)
         seen = set()
         out = []
         for r in rows:
@@ -2311,6 +2418,82 @@ def sparql_eval_local(
                 out.append(dict(zip(("subj", "pred", "obj"), vals)))
         return out
     return _apply_select_local(ev, q, rows)
+
+
+def _computed_vars(g: Group) -> set:
+    """Variables a BIND or a subquery aggregate may bind to a number or a
+    boolean, where every other variable binds terms."""
+    out: set = set()
+    for item in g.items:
+        tag = item[0]
+        if tag == "bind":
+            out.add(item[2])
+        elif tag == "subquery":
+            out |= {s.alias for s in item[1].select if isinstance(s, Agg)}
+            out |= _computed_vars(item[1].where)
+        elif tag in ("optional", "exists", "minus"):
+            out |= _computed_vars(item[1])
+        elif tag == "union":
+            for b in item[1]:
+                out |= _computed_vars(b)
+        elif tag == "graph":
+            out |= _computed_vars(item[2])
+    return out
+
+
+def _answer_local(spark, ev: _LocalEval, q: Query,
+                  graph_col: str | None) -> tuple[DataFrame, int]:
+    """``(df, rows)``: ``q`` answered by ``ev`` as a DataFrame over a
+    ``pyarrow.Table`` of ``rows`` rows. Spark plans it as a
+    LocalTableScan, so neither building nor collecting it runs a job (a
+    list of rows would plan a Scan ExistingRDD). Its columns
+    are named and typed as the SQL path's:
+    variables, GROUP_CONCAT and SAMPLE string, COUNT bigint, SUM, AVG, MIN
+    and MAX double, ASK one boolean ``ask``, CONSTRUCT and DESCRIBE
+    subj/pred/obj. Raises SparqlError when the rows cannot say which type
+    the SQL path would give a column."""
+    import pyarrow as pa
+
+    rows = _eval_local(ev.dataset(q.from_graphs, q.from_named), q)
+    types = {str: pa.string(), float: pa.float64(), int: pa.int64(),
+             bool: pa.bool_()}
+    if q.ask:
+        fields = [pa.field("ask", pa.bool_(), False)]
+    elif q.describe is not None or q.construct is not None:
+        # a column is non-null when every template triple fixes it
+        fixed = [q.construct is not None
+                 and all(t[i][0] == "term" for t in q.construct)
+                 for i in (1, 2, 3)]
+        fields = [pa.field(c, pa.string(), not f)
+                  for c, f in zip(("subj", "pred", "obj"), fixed)]
+    else:
+        comp = _SqlCompiler(None, {}, graph_col, q.from_graphs, q.from_named)
+        cols = comp.select(comp.group(q.where), q)[1]
+        aggs = {s.alias: s.func for s in q.select if isinstance(s, Agg)}
+        computed = _computed_vars(q.where)
+        fields = []
+        for c in cols:
+            func = aggs.get(c)
+            if func == "count":
+                fields.append(pa.field(c, pa.int64(), False))
+            elif func == "group_concat":
+                fields.append(pa.field(c, pa.string(), False))
+            elif func in ("sum", "avg", "min", "max"):
+                fields.append(pa.field(c, pa.float64()))
+            else:
+                kinds = {type(r[c]) for r in rows if r.get(c) is not None}
+                if len(kinds) > 1 or (not kinds and c in computed):
+                    raise SparqlError(f"no single column type for ?{c}")
+                fields.append(pa.field(
+                    c, types[kinds.pop()] if kinds else pa.string()))
+    if not fields:
+        # a query without variables keeps its rows but no columns
+        unit = pa.table({"__unit": pa.array([1] * len(rows), pa.int8())})
+        return spark.createDataFrame(unit).select(), len(rows)
+    schema = pa.schema(fields)
+    table = pa.table({c: [r.get(c) for r in rows] for c in schema.names},
+                     schema=schema)
+    return spark.createDataFrame(table), len(rows)
 
 
 # ---------------------------------------------------------------------------

@@ -94,3 +94,38 @@ def test_cap_raises_naming_the_site(spark):
     with pytest.raises(RuntimeError, match="probe did not converge in 2"):
         fixpoint(df, lambda d: d.withColumn("id", F.col("id") + 1),
                  lambda prev, cur: False, cap=2, site="probe")
+
+
+def _closed(df):
+    return sorted(tuple(r) for r in df.select(
+        "child", "parent", "__g").collect())
+
+
+def test_keyed_closure_over_aliased_key_columns(spark):
+    """The distributed closure of edges whose key column passes through a
+    projection that aliased it below equals the driver closure. Each round
+    checkpoints a plan over the previous checkpoint; while checkpoints kept
+    their constraints (here the filter's ``isnotnull(__g)``), the
+    pass-through edges failed with "key not found: __g#…"."""
+    quads = spark.createDataFrame(
+        [(f"<urn:n{i}>", f"<urn:n{i + 1}>", f"<urn:g{i // 10}>")
+         for i in range(20)], "subj string, obj string, prov string")
+    inner = ("SELECT subj AS __src, obj AS __dst, prov AS __g FROM {q} "
+             "WHERE prov IS NOT NULL")
+    edge_sets = {
+        "pass-through": spark.sql(
+            f"SELECT __src AS child, __dst AS parent, __g FROM ({inner})",
+            q=quads),
+        "re-aliased": spark.sql(
+            "SELECT __src AS child, __dst AS parent, __g AS __g "
+            f"FROM ({inner})", q=quads),
+        "dataframe": quads.filter(F.col("prov").isNotNull()).select(
+            F.col("subj").alias("child"), F.col("obj").alias("parent"),
+            F.col("prov").alias("__g")),
+    }
+    for name, edges in edge_sets.items():
+        want = _closed(transitive_closure(edges, keys=["__g"]))
+        assert len(want) == 2 * 55, name  # two 10-edge chains
+        with driver_cap(0):
+            assert _closed(transitive_closure(edges, keys=["__g"])) == want, \
+                name

@@ -17,6 +17,7 @@ from nabu_spark.graphstore import (
     apply_update_local,
     parse_update,
 )
+from nabu_spark.session import driver_cap
 
 def _store(spark, rows):
     return spark.createDataFrame(
@@ -558,6 +559,19 @@ class TestRollbackSequencing:
         assert not any(s == "<urn:z2>" for s, _, _, _ in rows)
 
 
+# ASK, and EXISTS groups that share no variable with the outer pattern
+ASK_EXISTS = (
+    "ASK { ?s <urn:p> ?o }",
+    "ASK { <urn:zz> ?p ?o }",
+    "SELECT ?s WHERE { ?s <urn:p> ?o "
+    "FILTER EXISTS { <urn:c> <urn:q> ?x } }",
+    "SELECT ?s WHERE { ?s <urn:p> ?o "
+    "FILTER NOT EXISTS { <urn:c> <urn:q> ?x } }",
+    "SELECT ?s WHERE { ?s <urn:p> ?o "
+    "FILTER NOT EXISTS { <urn:zz> ?p ?x } }",
+)
+
+
 def _jobs_launched(spark, fn):
     """Spark job ids that ``fn()`` launched, via a one-off job group."""
     import uuid
@@ -619,30 +633,25 @@ class TestGroundUpdatePath:
         assert got == sorted(apply_update_local(BASE, script), key=_key)
 
     def test_query_construction_launches_no_job(self, spark, tmp_path):
-        gs = GraphStore(spark, str(tmp_path / "g4"))
-        gs.init(_store(spark, BASE))
-        gs.update('DELETE DATA { <urn:a> <urn:p> "1" }')
-        text = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
-        assert _jobs_launched(spark, lambda: gs.query(text)) == []
-        assert len(gs.query(text).collect()) == 2
-        # ASK and an EXISTS that shares no variable compile to SQL EXISTS
-        from nabu_spark.sparql import sparql_eval_local
+        # pins the SQL path: the driver twin would answer these otherwise
+        with driver_cap(0):
+            gs = GraphStore(spark, str(tmp_path / "g4"))
+            gs.init(_store(spark, BASE))
+            gs.update('DELETE DATA { <urn:a> <urn:p> "1" }')
+            text = "SELECT ?s ?o WHERE { ?s <urn:p> ?o }"
+            assert _jobs_launched(spark, lambda: gs.query(text)) == []
+            assert len(gs.query(text).collect()) == 2
+            # ASK and an EXISTS that shares no variable compile to SQL EXISTS
+            from nabu_spark.sparql import sparql_eval_local
 
-        quads = [tuple(r) for r in gs.read().collect()]
-        for text in (
-                "ASK { ?s <urn:p> ?o }",
-                "ASK { <urn:zz> ?p ?o }",
-                "SELECT ?s WHERE { ?s <urn:p> ?o "
-                "FILTER EXISTS { <urn:c> <urn:q> ?x } }",
-                "SELECT ?s WHERE { ?s <urn:p> ?o "
-                "FILTER NOT EXISTS { <urn:c> <urn:q> ?x } }",
-                "SELECT ?s WHERE { ?s <urn:p> ?o "
-                "FILTER NOT EXISTS { <urn:zz> ?p ?x } }"):
-            assert _jobs_launched(spark, lambda: gs.query(text)) == [], text
-            got = sorted(tuple(r) for r in gs.query(text).collect())
-            want = sorted(tuple(r.values())
-                          for r in sparql_eval_local(quads, text))
-            assert got == want, text
+            quads = [tuple(r) for r in gs.read().collect()]
+            for text in ASK_EXISTS:
+                assert _jobs_launched(spark, lambda: gs.query(text)) == [], \
+                    text
+                got = sorted(tuple(r) for r in gs.query(text).collect())
+                want = sorted(tuple(r.values())
+                              for r in sparql_eval_local(quads, text))
+                assert got == want, text
 
     def test_redundant_insert_keeps_views_incremental(self, spark, tmp_path):
         from nabu_spark.matview import MaterializedView
@@ -816,15 +825,17 @@ class TestReadMemo:
 
     def test_lookup_on_hit_scans_cache_without_exchange(self, spark,
                                                         tmp_path):
-        gs = GraphStore(spark, str(tmp_path / "hit"))
-        gs.init(_store(spark, BASE))
-        gs.update('INSERT DATA { <urn:a> <urn:p> "9" }')
-        gs.read().count()  # fills the cache
-        df = gs.query("SELECT ?p ?o WHERE { <urn:a> ?p ?o }")
-        assert len(df.collect()) == 3
-        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
-        assert "InMemoryTableScanExec" in nodes
-        assert not [n for n in nodes if "Exchange" in n]
+        # pins the SQL path: the driver twin would answer this otherwise
+        with driver_cap(0):
+            gs = GraphStore(spark, str(tmp_path / "hit"))
+            gs.init(_store(spark, BASE))
+            gs.update('INSERT DATA { <urn:a> <urn:p> "9" }')
+            gs.read().count()  # fills the cache
+            df = gs.query("SELECT ?p ?o WHERE { <urn:a> ?p ?o }")
+            assert len(df.collect()) == 3
+            nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+            assert "InMemoryTableScanExec" in nodes
+            assert not [n for n in nodes if "Exchange" in n]
 
     def test_one_persisted_relation_per_store(self, spark, tmp_path):
         def persisted():
@@ -894,24 +905,205 @@ class TestQueryCompile:
     @pytest.mark.parametrize("template", sorted(TEMPLATES))
     def test_template_compiles_in_few_round_trips(self, spark, tmp_path,
                                                   template):
-        gs = GraphStore(spark, str(tmp_path / "rt"))
-        gs.init(_store(spark, BASE))
-        gs.read().count()  # fills the memo: every query below is a hit
-        text = TEMPLATES[template]
-        gs.query(text)  # first use of each JVM function is not counted
-        client = spark.sparkContext._gateway._gateway_client
-        send, calls, me = client.send_command, [], threading.get_ident()
+        # pins the SQL path: the driver twin would answer these otherwise
+        with driver_cap(0):
+            gs = GraphStore(spark, str(tmp_path / "rt"))
+            gs.init(_store(spark, BASE))
+            gs.read().count()  # fills the memo: every query below is a hit
+            text = TEMPLATES[template]
+            gs.query(text)  # first use of each JVM function is not counted
+            client = spark.sparkContext._gateway._gateway_client
+            send, calls, me = client.send_command, [], threading.get_ident()
 
-        def counted(*args, **kwargs):
-            # py4j's finalizer thread frees dead proxies through the same
-            # client; only this thread's calls belong to the query
-            if threading.get_ident() == me:
-                calls.append(args[0])
-            return send(*args, **kwargs)
+            def counted(*args, **kwargs):
+                # py4j's finalizer thread frees dead proxies through the
+                # same client; only this thread's calls belong to the query
+                if threading.get_ident() == me:
+                    calls.append(args[0])
+                return send(*args, **kwargs)
 
-        client.send_command = counted
+            client.send_command = counted
+            try:
+                gs.query(text)
+            finally:
+                client.send_command = send
+            assert len(calls) <= 25, (template, len(calls))
+
+
+RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+
+
+def _served_quads():
+    """BASE plus sites that every perfbench template reaches: Places with
+    and without a name, and hy_features position chains to mainstems."""
+    out = list(BASE)
+    for i in range(12):
+        s = f"<https://geoconnex.us/iow/demo/site-12{i}>"
+        g = None if i % 3 == 0 else f"<urn:site-g{i % 2}>"
+        out.append((s, RDF_TYPE, "<https://schema.org/Place>", g))
+        if i % 4:
+            out.append((s, "<https://schema.org/name>",
+                        f'"MONITORING SITE 12{i}"', g))
+        out += [(s, f"<{HYF}referencedPosition>", f"_:rp{i}", g),
+                (f"_:rp{i}", f"<{HYF}HY_IndirectPosition>", f"_:ip{i}", g),
+                (f"_:ip{i}", f"<{HYF}linearElement>",
+                 f"<https://geoconnex.us/ref/mainstems/3680{i % 3}>", g)]
+    return out
+
+
+# beyond the templates and ASK_EXISTS: the hash joins, graph and dataset
+# scoping, aggregates, the other query forms, and a computed column the
+# driver cannot type (it falls back to SQL)
+TWIN_QUERIES = (
+    "SELECT ?s ?n WHERE { ?s a <https://schema.org/Place> "
+    "OPTIONAL { ?s <https://schema.org/name> ?n "
+    'FILTER(STRENDS(STR(?n), "5")) } }',
+    "SELECT ?s WHERE { ?s a <https://schema.org/Place> "
+    "MINUS { ?s <https://schema.org/name> ?n } }",
+    "SELECT ?g ?s WHERE { GRAPH ?g { ?s <urn:p> ?o } }",
+    "SELECT ?s ?o FROM <urn:g1> WHERE { ?s <urn:p> ?o }",
+    "SELECT ?g ?s FROM NAMED <urn:g2> WHERE { GRAPH ?g { ?s ?p ?o } }",
+    "SELECT ?g (COUNT(?s) AS ?n) (SUM(?o) AS ?tot) (MAX(?o) AS ?hi) "
+    "(GROUP_CONCAT(?s) AS ?all) (SAMPLE(?s) AS ?one) "
+    "WHERE { GRAPH ?g { ?s ?p ?o } } GROUP BY ?g",
+    "SELECT (COUNT(*) AS ?n) WHERE { ?s <urn:zz> ?o }",
+    "SELECT * WHERE { ?s <urn:q> ?o OPTIONAL { ?o <urn:p> ?v } }",
+    'SELECT * WHERE { <urn:a> <urn:p> "1" }',
+    "CONSTRUCT { ?s <urn:r> ?o } WHERE { ?s <urn:q> ?o }",
+    "DESCRIBE <urn:a>",
+    "SELECT ?s ?d WHERE { ?s <urn:zz> ?o BIND(?o * 2 AS ?d) }",
+)
+
+
+def _buckets(ev):
+    return {pos: {k: sorted(b, key=_key) for k, b in idx.items()}
+            for pos, idx in ev.index.items()}
+
+
+def _answers(gs, text, version=None):
+    df = gs.query(text, version=version)
+    return sorted((tuple(r) for r in df.collect()), key=_key), df.schema
+
+
+class TestQueryTwin:
+    """A store within the driver cap answers queries from its driver
+    twin, with no Spark job; every answer equals the SQL path's."""
+
+    def _served(self, spark, tmp_path):
+        gs = GraphStore(spark, str(tmp_path / "twin"))
+        gs.init(_store(spark, _served_quads()))
+        return gs
+
+    @pytest.mark.parametrize(
+        "text", [*TEMPLATES.values(), *ASK_EXISTS, *TWIN_QUERIES])
+    def test_rows_and_schema_equal_the_sql_path(self, spark, tmp_path, text):
+        gs = self._served(spark, tmp_path)
+        got = _answers(gs, text)
+        with driver_cap(0):
+            want = _answers(gs, text)
+        assert got == want
+
+    def test_templates_find_rows(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        for name, text in TEMPLATES.items():
+            assert _answers(gs, text)[0], name
+
+    def test_query_and_collect_launch_no_job(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        for text in [*TEMPLATES.values(), *ASK_EXISTS, *TWIN_QUERIES[:-1]]:
+            assert _jobs_launched(
+                spark, lambda: gs.query(text).collect()) == [], text
+        assert "LocalTableScan" in gs.query(TEMPLATES["lookup"]) \
+            ._jdf.queryExecution().executedPlan().toString()
+
+    def test_ground_updates_advance_the_twin(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        gs.query(TEMPLATES["lookup"])
+        ev = gs._twin[1]
+        cur = set(_served_quads())
+        for text in (
+                'INSERT DATA { <urn:a> <urn:p> "9" . '
+                'GRAPH <urn:g1> { <urn:n> <urn:q> <urn:a> } }',
+                'DELETE DATA { <urn:a> <urn:p> "1" } ; '
+                'INSERT DATA { <urn:a> <urn:p> "1" }',
+                'DELETE DATA { <urn:a> <urn:q> <urn:b> }',
+                'INSERT DATA { <urn:a> <urn:p> "9" }',  # redundant
+                'DELETE DATA { <urn:zz> <urn:p> "0" }'):  # absent
+            gs.update(text)
+            cur = apply_update_local(cur, text)
+            assert gs._twin[1] is ev  # advanced, not rebuilt
+            assert gs._twin[0][1] == tuple(gs.tbl.files())
+            fresh = GraphStore(spark, gs.tbl.root)
+            fresh.query(TEMPLATES["lookup"])
+            assert set(ev.triples) == set(fresh._twin[1].triples) == cur
+            assert _buckets(ev) == _buckets(fresh._twin[1])
+            got = _answers(gs, TEMPLATES["lookup"])
+            with driver_cap(0):
+                assert got == _answers(gs, TEMPLATES["lookup"])
+
+    def test_other_key_changes_give_the_right_rows(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        root = gs.tbl.root
+        v0 = gs.tbl.latest_version()
+        text = "SELECT ?s ?p ?o WHERE { ?s ?p ?o }"
+
+        def check(version=None):
+            got = _answers(gs, text, version)
+            with driver_cap(0):
+                want = _answers(gs, text, version)
+            assert got == want
+            return {r[:3] for r in got[0]}
+
+        base = check()
+        gs.update('INSERT DATA { <urn:n> <urn:p> "7" }')
+        assert ("<urn:n>", "<urn:p>", '"7"') in check()
+        gs.update("DELETE { ?s <urn:q> ?o } WHERE { ?s <urn:q> ?o }")
+        assert ("<urn:a>", "<urn:q>", "<urn:b>") not in check()
+        assert check(v0) == base  # time travel
+        gs.rollback(v0)
+        assert check() == base
+        gs.update('DELETE DATA { <urn:a> <urn:p> "1" }')
+        gs.compact()
+        assert ("<urn:a>", "<urn:p>", '"1"') not in check()
+        # a commit by another instance on the same root
+        GraphStore(spark, root).update('INSERT DATA { <urn:o> <urn:p> "8" }')
+        assert ("<urn:o>", "<urn:p>", '"8"') in check()
+
+    def test_over_the_cap_takes_the_sql_path(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        gs.query(TEMPLATES["lookup"])
+        with driver_cap(1):
+            df = gs.query(TEMPLATES["lookup"])
+            assert "LocalTableScan" not in \
+                df._jdf.queryExecution().executedPlan().toString()
+            assert len(df.collect()) == 2
+        assert _jobs_launched(
+            spark, lambda: gs.query(TEMPLATES["lookup"]).collect()) == []
+
+    def test_path_decisions_are_recorded_as_spans(self, spark, tmp_path):
+        from nabu_spark.telemetry import Tracer, set_active
+
+        gs = self._served(spark, tmp_path)
+        text = TEMPLATES["lookup"]
+        gs.query(text)
+        tracer = Tracer()
+        set_active(tracer)
         try:
-            gs.query(text)
+            gs.query(text)  # a hit
+            gs.update('INSERT DATA { <urn:a> <urn:p> "9" }')
+            gs.query(text)  # the read-back of an update
+            with driver_cap(1):
+                gs.query(text)  # over the cap
+            gs.query(TWIN_QUERIES[-1])  # a column the driver cannot type
         finally:
-            client.send_command = send
-        assert len(calls) <= 25, (template, len(calls))
+            set_active(None)
+        spans = [s.attributes for s in tracer.spans
+                 if s.name == "graphstore.query"]
+        cap = 100_000
+        assert spans == [
+            {"cap": cap, "path": "driver", "rows": 2},
+            {"cap": cap, "path": "driver", "rows": 3},
+            {"cap": 1, "path": "sql"},
+            {"cap": cap, "path": "sql"}]
+        assert [s.attributes["memo"] for s in tracer.spans
+                if s.name == "graphstore.read"] == ["miss", "hit"]

@@ -203,11 +203,9 @@ def test_no_unused_module_imports():
 
 
 # functions that may call `.limit(...).collect()` directly: the bounded
-# collect itself, the merged-view probe whose fallback has nothing to reuse,
-# and the refusal caps, which never fall back
+# collect itself and the refusal caps, which never fall back
 BOUNDED_PROBES = {
     "nabu_spark/session.py::bounded_collect",
-    "nabu_spark/graphstore.py::GraphStore._collect_merged",
     "nabu_spark/graphstore.py::GraphStore.to_trig",
     "nabu_spark/operators/reasoner.py::_typed_props",
     "nabu_spark/cli.py::_print_query_result",

@@ -92,6 +92,12 @@ AGREEMENT_QUERIES = [
     "OPTIONAL { ?s t:lang ?l } }",
     "PREFIX t: <urn:t:> SELECT ?s WHERE { ?s t:age ?a "
     "OPTIONAL { ?s t:lang ?l } FILTER(!bound(?l)) }",
+    # OPTIONAL whose group filters its own bindings: a left join on ?s
+    "PREFIX t: <urn:t:> SELECT ?s ?o ?n WHERE { ?s t:age ?a "
+    'OPTIONAL { ?s t:knows ?o . ?o t:name ?n FILTER(?n != "Person 2") } }',
+    # MINUS on a shared variable, its group a join of two patterns
+    "PREFIX t: <urn:t:> SELECT ?s ?a WHERE { ?s t:age ?a "
+    "MINUS { ?s t:knows ?o . ?o t:lang ?l } }",
     # UNION (both branches bind ?s only)
     "PREFIX t: <urn:t:> SELECT DISTINCT ?s WHERE { { ?s a t:Admin } UNION "
     '{ ?s t:lang "hallo"@de } }',
