@@ -734,29 +734,25 @@ def _apply_one_local(cur: set, op, op_index: int) -> set:
 # ---------------------------------------------------------------------------
 
 
-def _merge_files(files: list[str], cap: int) -> tuple[list, int] | None:
-    """``(quads, raw rows)``: the merged quad set of delta-log ``files``,
-    read by pyarrow on the driver with no Spark job, as [(subj, pred, obj,
-    prov), ...]. It is read()'s max_by(__op, __seq) per quad: rows sorted
-    by __seq fill a dict, so each quad keeps its last op (each commit
-    batch is a quad set and its d/a rows carry distinct seqs). None, with
-    no data read, when the footers count more than ``cap`` raw rows — a
-    stricter bound than the merged size, so a long delete history only
-    falls back earlier."""
+def _merge_files(files: list[str]) -> list:
+    """The merged quad set of delta-log ``files``, read by pyarrow on the
+    driver with no Spark job, as [(subj, pred, obj, prov), ...]. It is
+    read()'s max_by(__op, __seq) per quad: rows sorted by __seq fill a
+    dict, so each quad keeps its last op (each commit batch is a quad set
+    and its d/a rows carry distinct seqs). Callers bound the raw row count
+    (``_parquet_rows``) before calling — a stricter bound than the merged
+    size, so a long delete history only falls back earlier."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    raw = _parquet_rows(files)
-    if cap <= 0 or raw > cap:
-        return None
     schema = to_arrow_schema(RAW_SCHEMA)
     log = pa.concat_tables(
         pq.read_table(f, columns=schema.names).cast(schema) for f in files
     ).sort_by("__seq")
     s, p, o, g, op = (log.column(c).to_pylist() for c in schema.names[:5])
     last = dict(zip(zip(s, p, o, g), op))
-    return [q for q, op in last.items() if op == "a"], raw
+    return [q for q, op in last.items() if op == "a"]
 
 
 def _tag(quads: DataFrame, op: str, seq: int) -> DataFrame:
@@ -797,8 +793,8 @@ class GraphStore:
         # one read() memo entry
         self._memo: list | None = None
         self._view = f"nabu_store_{uuid.uuid4().hex}"
-        # [key, indexed _LocalEval over the merged quads, raw log rows]:
-        # the one query twin
+        # [key, indexed _LocalEval over the merged quads (None until a
+        # read within the cap builds it), raw log rows]: the one query twin
         self._twin: list | None = None
 
     # -- write paths --------------------------------------------------------
@@ -876,17 +872,20 @@ class GraphStore:
         Only when ``v`` holds exactly the twin's files plus the ones just
         committed, and the log stays within the cap; otherwise (another
         instance committed in between, or the twin is of another version)
-        the twin is dropped."""
+        the twin is dropped. A twin that the log outgrows is released, and
+        its row count is kept."""
         twin, self._twin = self._twin, None
         m = self.tbl.manifest(v)
         if (twin is None or m["operation"] != "append"
-                or tuple(m["files"]) != twin[0][1] + tuple(m["new_files"])
-                or twin[2] + len(rows) > capped(_DRIVER_CAP)):
+                or tuple(m["files"]) != twin[0][1] + tuple(m["new_files"])):
             return
-        ev = twin[1]
-        for *q, op, _ in rows:
-            (ev.add if op == "a" else ev.discard)(tuple(q))
-        self._twin = [(twin[0][0], tuple(m["files"])), ev, twin[2] + len(rows)]
+        ev, raw = twin[1], twin[2] + len(rows)
+        if raw > capped(_DRIVER_CAP):
+            ev = None
+        elif ev is not None:
+            for *q, op, _ in rows:
+                (ev.add if op == "a" else ev.discard)(tuple(q))
+        self._twin = [(twin[0][0], tuple(m["files"])), ev, raw]
 
     def append_quads(self, quads: DataFrame, stage: str = "append") -> int:
         """Append a batch of quads as one snapshot of 'a' rows — O(batch),
@@ -1006,8 +1005,10 @@ class GraphStore:
     def _collect_merged(self) -> list | None:
         """The latest merged quad set on the driver (see
         :func:`_merge_files`), or None over the cap."""
-        merged = _merge_files(self.tbl.files(), capped(_DRIVER_CAP))
-        return merged and merged[0]
+        files, cap = self.tbl.files(), capped(_DRIVER_CAP)
+        if cap <= 0 or _parquet_rows(files) > cap:
+            return None
+        return _merge_files(files)
 
     def _entail_local(self, quads: list, graph: str, profile: str) -> int:
         """Exact in-memory mirror of the distributed entail() tail over the
@@ -1245,17 +1246,20 @@ class GraphStore:
             return _answer(self.spark, quads, q, "prov")
 
     def _twin_at(self, files: list[str], cap: int) -> _LocalEval | None:
-        """The twin of ``files``, built on a key change; None over ``cap``
-        raw rows."""
-        key = (self.spark.sparkContext.applicationId, tuple(files))
-        if self._twin and self._twin[0] == key:
-            return self._twin[1] if self._twin[2] <= cap else None
-        self._twin = None
-        merged = _merge_files(files, cap)
-        if merged is None:
+        """The twin of ``files``; None over ``cap`` raw rows. A key change
+        reads the footers' row count once, and the twin is built on the
+        first read within the cap, so a store over the cap pays no footer
+        read per query."""
+        if cap <= 0:
             return None
-        quads, raw = merged
-        self._twin = [key, _LocalEval(dict.fromkeys(quads)).indexed(), raw]
+        key = (self.spark.sparkContext.applicationId, tuple(files))
+        if not self._twin or self._twin[0] != key:
+            self._twin = [key, None, _parquet_rows(files)]
+        if self._twin[2] > cap:
+            return None
+        if self._twin[1] is None:
+            self._twin[1] = _LocalEval(
+                dict.fromkeys(_merge_files(files))).indexed()
         return self._twin[1]
 
     def history(self) -> list[dict]:

@@ -94,6 +94,7 @@ import hashlib
 import math
 import re
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -193,6 +194,7 @@ class Query:
     having: object | None = None       # filter over grouped output
     from_graphs: list | None = None    # FROM <g>* (dataset default graph)
     from_named: list | None = None     # FROM NAMED <g>*
+    calls: frozenset = frozenset()     # functions the text calls anywhere
 
 
 class _Parser:
@@ -200,6 +202,7 @@ class _Parser:
         self.toks = _tokenize(text)
         self.i = 0
         self.prefixes: dict[str, str] = {}
+        self.calls: set[str] = set()
 
     # -- token plumbing -----------------------------------------------------
     def _peek(self, k: int = 0):
@@ -865,6 +868,7 @@ class _Parser:
                     f"{fname.lower()} pattern/replacement/flags must be "
                     "constant strings"
                 )
+            self.calls.add(fname)
             return ("call", fname, args)
         if kind == "NUM":
             self.i += 1
@@ -874,7 +878,10 @@ class _Parser:
 
 
 def parse_sparql(text: str) -> Query:
-    return _Parser(text).parse()
+    parser = _Parser(text)
+    q = parser.parse()
+    q.calls = frozenset(parser.calls)
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -1079,6 +1086,8 @@ class _SqlCompiler:
             if isinstance(v, str):
                 sql = sql.replace("{%s}" % k, _q(v))
             elif "{%s}" % k in sql:
+                if isinstance(v, partial):  # a path closure, run on first use
+                    v = self.views[k] = v()
                 # the formatter drops the view after the call, and dropping
                 # a view uncaches the plan it names: a no-op filter keeps
                 # that plan apart from the caller's cached one
@@ -1395,8 +1404,9 @@ class _SqlCompiler:
             edges = (f"SELECT __src AS child, __dst AS parent{g} "
                      f"FROM ({self._path_pairs(ast[1], graph)})")
             name = f"c{len(self.views)}"
-            # a compiler without a session only tracks the columns
-            self.views[name] = self.spark and self._closure(edges, keyed)
+            # computed when a statement reading it runs: compiling a
+            # query runs no Spark job
+            self.views[name] = partial(self._closure, edges, keyed)
             out = f"SELECT child AS __src, parent AS __dst{g} FROM {{{name}}}"
             if tag == "plus":
                 return out
@@ -2261,8 +2271,7 @@ def _left_join(rows: list[dict], sols: list[dict], *,
     a left join is a cross product and MINUS removes nothing (§8.3). A row
     that OPTIONAL does not extend carries the inner variables unbound."""
     rvars = set().union(*sols)
-    shared = sorted(rvars.intersection(*rows) if len(rows) == 1
-                    else rvars & set().union(*rows))
+    shared = sorted(rvars & set().union(*rows))
     if anti and not shared:
         return rows
     table: dict[tuple, list[dict]] = {}
@@ -2441,6 +2450,96 @@ def _computed_vars(g: Group) -> set:
     return out
 
 
+def _expr_vars(e) -> set:
+    if e[0] == "var":
+        return {e[1]}
+    out: set = set()
+    for a in e[1:]:
+        for x in a if isinstance(a, list) else [a]:
+            if isinstance(x, tuple):
+                out |= _expr_vars(x)
+    return out
+
+
+def _scoped(g: Group, graph=None,
+            outer: frozenset = frozenset()) -> tuple[set, set]:
+    """``(scope, maybe)``: the variables ``g``'s solutions carry, as the
+    SQL compiler's columns, and those a solution may leave unbound.
+
+    Raises SparqlError where the local evaluator and the SQL statement
+    part ways. One case is a join on a variable that may be unbound: SQL's
+    USING and equality match no NULL, while the local evaluator treats an
+    unbound variable as compatible with any value. Another is a join on a
+    variable of ``outer``, which the local evaluator has bound when it
+    evaluates a UNION, GRAPH or EXISTS group with the enclosing rows in
+    view; its OPTIONAL, MINUS and subquery joins then also match on that
+    variable, where SQL joins the group's own columns. The last is a
+    FILTER or BIND naming a variable its group does not bind, which SQL
+    cannot resolve."""
+    scope: set = set()
+    maybe: set = set()
+    filters = []
+    for item in g.items:
+        tag = item[0]
+        if tag == "filter":
+            filters.append(item[1])
+            continue
+        if tag == "bind":
+            if not _expr_vars(item[1]) <= scope:
+                raise SparqlError("BIND names a variable out of scope")
+            scope.add(item[2])
+            maybe.add(item[2])  # an expression error leaves it unbound
+            continue
+        if tag == "triple":
+            atoms = [item[1], item[3], *([graph] if graph else [])]
+            if item[2][0] != "path":
+                atoms.append(item[2])
+            vs, mb = {a[1] for a in atoms if a[0] == "var"}, set()
+        elif tag == "graph":
+            vs, mb = _scoped(item[2], item[1], outer | scope)
+        elif tag == "exists":
+            vs, mb = _scoped(item[1], graph, outer | scope)
+        elif tag == "union":
+            parts = [_scoped(b, graph, outer | scope) for b in item[1]]
+            vs = set().union(*(p[0] for p in parts))
+            mb = set().union(*(p[1] | (vs - p[0]) for p in parts))
+        elif tag == "values":
+            vs = set(item[1])
+            mb = {v for i, v in enumerate(item[1])
+                  if any(r[i] is None for r in item[2])}
+        else:  # optional, minus and subquery join bottom-up
+            vs, mb = (_projected(item[1], graph) if tag == "subquery"
+                      else _scoped(item[1], graph))
+            if vs & (outer - scope):
+                raise SparqlError("a join on an enclosing group's variable")
+        if scope & vs & (maybe | mb):
+            raise SparqlError("a join on a variable that may be unbound")
+        if tag in ("exists", "minus"):
+            continue
+        maybe |= mb | (vs - scope if tag == "optional" else set())
+        scope |= vs
+    if not all(_expr_vars(f) <= scope for f in filters):
+        raise SparqlError("FILTER names a variable out of scope")
+    return scope, maybe
+
+
+def _projected(q: Query, graph=None) -> tuple[set, set]:
+    """``_scoped`` for the solutions ``q`` projects."""
+    scope, maybe = _scoped(q.where, graph)
+    aggs = {s.alias: s for s in q.select if isinstance(s, Agg)}
+    if not all(_expr_vars(a.arg) <= scope for a in aggs.values()
+               if a.arg is not None):
+        raise SparqlError("an aggregate names a variable out of scope")
+    cols = [s.alias if isinstance(s, Agg) else s[1]
+            for s in q.select] or q.group_by
+    if not cols:
+        return scope, maybe
+    return set(cols), {
+        c for c in cols if c in aggs and aggs[c].func not in
+        ("count", "group_concat") or c not in aggs and (
+            c in maybe or c not in scope)}
+
+
 def _answer_local(spark, ev: _LocalEval, q: Query,
                   graph_col: str | None) -> tuple[DataFrame, int]:
     """``(df, rows)``: ``q`` answered by ``ev`` as a DataFrame over a
@@ -2448,12 +2547,26 @@ def _answer_local(spark, ev: _LocalEval, q: Query,
     LocalTableScan, so neither building nor collecting it runs a job (a
     list of rows would plan a Scan ExistingRDD). Its columns
     are named and typed as the SQL path's:
-    variables, GROUP_CONCAT and SAMPLE string, COUNT bigint, SUM, AVG, MIN
-    and MAX double, ASK one boolean ``ask``, CONSTRUCT and DESCRIBE
-    subj/pred/obj. Raises SparqlError when the rows cannot say which type
-    the SQL path would give a column."""
+    variables and SAMPLE by their values (string for terms), GROUP_CONCAT
+    string, COUNT bigint, SUM, AVG, MIN and MAX double, ASK one boolean
+    ``ask``, CONSTRUCT and DESCRIBE subj/pred/obj. Raises SparqlError for a query the SQL compiler
+    rejects, for one whose answer the two evaluators may not agree on
+    (``_projected``), for one that calls REGEX or REPLACE (Python's
+    ``re`` and the Java regex behind RLIKE disagree on ``\\w``, case
+    folding and syntax), and when the rows cannot say which type the SQL
+    path would give a column."""
     import pyarrow as pa
 
+    if q.calls & {"REGEX", "REPLACE"}:
+        raise SparqlError("REGEX and REPLACE run as Java regex, in SQL")
+    _projected(q)
+    # compiling checks the query as the SQL path does and names its
+    # columns; it runs nothing
+    comp = _SqlCompiler(spark, {}, graph_col, q.from_graphs, q.from_named)
+    if q.describe is not None:
+        comp.describe(q)
+    else:
+        rel = comp.group(q.where)
     rows = _eval_local(ev.dataset(q.from_graphs, q.from_named), q)
     types = {str: pa.string(), float: pa.float64(), int: pa.int64(),
              bool: pa.bool_()}
@@ -2467,10 +2580,14 @@ def _answer_local(spark, ev: _LocalEval, q: Query,
         fields = [pa.field(c, pa.string(), not f)
                   for c, f in zip(("subj", "pred", "obj"), fixed)]
     else:
-        comp = _SqlCompiler(None, {}, graph_col, q.from_graphs, q.from_named)
-        cols = comp.select(comp.group(q.where), q)[1]
+        cols = comp.select(rel, q)[1]
         aggs = {s.alias: s.func for s in q.select if isinstance(s, Agg)}
         computed = _computed_vars(q.where)
+        # SAMPLE is typed by its values, like a variable; over anything
+        # but a term variable it may be a number
+        computed |= {s.alias for s in q.select if isinstance(s, Agg)
+                     and s.func == "sample" and not (
+                         s.arg[0] == "var" and s.arg[1] not in computed)}
         fields = []
         for c in cols:
             func = aggs.get(c)

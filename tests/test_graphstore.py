@@ -948,7 +948,8 @@ def _served_quads():
                 (f"_:rp{i}", f"<{HYF}HY_IndirectPosition>", f"_:ip{i}", g),
                 (f"_:ip{i}", f"<{HYF}linearElement>",
                  f"<https://geoconnex.us/ref/mainstems/3680{i % 3}>", g)]
-    return out
+    return out + [("<urn:e>", "<urn:label>", '"Café"', None),
+                  ("<urn:f>", "<urn:label>", '"ÉCOLE"', None)]
 
 
 # beyond the templates and ASK_EXISTS: the hash joins, graph and dataset
@@ -971,7 +972,37 @@ TWIN_QUERIES = (
     'SELECT * WHERE { <urn:a> <urn:p> "1" }',
     "CONSTRUCT { ?s <urn:r> ?o } WHERE { ?s <urn:q> ?o }",
     "DESCRIBE <urn:a>",
+    "SELECT ?s ?o WHERE { ?s <urn:q>+ ?o }",
+    "SELECT ?s (SAMPLE(?d) AS ?x) WHERE { ?s <urn:p> ?o BIND(?o * 2 AS ?d) } "
+    "GROUP BY ?s",
+    "SELECT (SAMPLE(?n) AS ?x) WHERE { { SELECT ?s (COUNT(?o) AS ?n) "
+    "WHERE { ?s ?p ?o } GROUP BY ?s } }",
     "SELECT ?s ?d WHERE { ?s <urn:zz> ?o BIND(?o * 2 AS ?d) }",
+)
+
+# queries the twin leaves to SQL: a column it cannot type; joins on a
+# variable that may be unbound, which SQL's USING never matches and the
+# local evaluator treats as compatible; and REGEX and REPLACE, where
+# Python's re and the Java regex behind RLIKE disagree on \w and case
+# folding over non-ASCII text, and re rejects \p{L}
+SQL_ONLY_QUERIES = (
+    TWIN_QUERIES[-1],
+    "SELECT (SAMPLE(?d) AS ?x) WHERE { ?s <urn:zz> ?o BIND(?o * 2 AS ?d) }",
+    "SELECT ?s ?o ?x WHERE { { ?s <urn:p> ?o } UNION { ?s <urn:zz> ?x } "
+    "OPTIONAL { ?s <urn:q> ?x } }",
+    "SELECT ?s ?o WHERE { { ?s <urn:p> ?o } UNION { ?s <urn:zz> ?x } "
+    "MINUS { ?s <urn:q> ?x } }",
+    "SELECT ?s ?n WHERE { ?s <urn:q> ?o OPTIONAL { ?o <urn:zz> ?n } "
+    "?s <urn:p> ?n }",
+    'SELECT ?s ?o WHERE { ?s <urn:p> ?o VALUES (?s ?o) { (UNDEF "1") } }',
+    "SELECT ?s ?n WHERE { ?s <urn:q> ?o OPTIONAL { ?o <urn:zz> ?n } "
+    "{ SELECT ?n WHERE { ?x <urn:p> ?n } } }",
+    "SELECT ?s ?o WHERE { ?s <urn:p> ?o "
+    "{ ?s <urn:q> ?z MINUS { ?z <urn:p> ?o } } }",
+    r'SELECT ?s WHERE { ?s <urn:label> ?n FILTER(REGEX(?n, "^\w+$")) }',
+    'SELECT ?s WHERE { ?s <urn:label> ?n FILTER(REGEX(?n, "^école$", "i")) }',
+    r'SELECT ?s WHERE { ?s <urn:label> ?n FILTER(REGEX(?n, "^\p{L}+$")) }',
+    r'SELECT ?r WHERE { ?s <urn:label> ?n BIND(REPLACE(?n, "\w", "x") AS ?r) }',
 )
 
 
@@ -1002,6 +1033,23 @@ class TestQueryTwin:
         with driver_cap(0):
             want = _answers(gs, text)
         assert got == want
+
+    @pytest.mark.parametrize("text", SQL_ONLY_QUERIES)
+    def test_queries_the_twin_leaves_take_the_sql_path(self, spark, tmp_path,
+                                                       text):
+        from nabu_spark.telemetry import Tracer, set_active
+
+        gs = self._served(spark, tmp_path)
+        tracer = Tracer()
+        set_active(tracer)
+        try:
+            got = _answers(gs, text)
+        finally:
+            set_active(None)
+        assert [s.attributes["path"] for s in tracer.spans
+                if s.name == "graphstore.query"] == ["sql"]
+        with driver_cap(0):
+            assert got == _answers(gs, text)
 
     def test_templates_find_rows(self, spark, tmp_path):
         gs = self._served(spark, tmp_path)
@@ -1079,6 +1127,38 @@ class TestQueryTwin:
             assert len(df.collect()) == 2
         assert _jobs_launched(
             spark, lambda: gs.query(TEMPLATES["lookup"]).collect()) == []
+
+    def test_over_the_cap_reads_no_footer_per_query(self, spark, tmp_path,
+                                                    monkeypatch):
+        import pyarrow.parquet as pq
+
+        gs = self._served(spark, tmp_path)
+        text = TEMPLATES["lookup"]
+        opened = []
+
+        class Counted(pq.ParquetFile):
+            def __init__(self, source, *args, **kwargs):
+                opened.append(source)
+                super().__init__(source, *args, **kwargs)
+
+        monkeypatch.setattr(pq, "ParquetFile", Counted)
+        with driver_cap(0):
+            gs.query(text)
+        assert opened == []
+        with driver_cap(1):
+            gs.query(text)  # the new key's row count, read once
+            assert opened
+            opened.clear()
+            gs.query(text)
+            gs.update('INSERT DATA { <urn:a> <urn:p> "9" }')
+            opened.clear()  # the commit counts its own file's rows
+            gs.query(text)
+        assert opened == []
+        # back within the cap, the twin is built from the files
+        got = _answers(gs, text)
+        assert gs._twin[1] is not None
+        with driver_cap(0):
+            assert got == _answers(gs, text)
 
     def test_path_decisions_are_recorded_as_spans(self, spark, tmp_path):
         from nabu_spark.telemetry import Tracer, set_active
