@@ -754,7 +754,8 @@ ex:DatasetShape a sh:NodeShape ;
 def q_shacl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native SHACL-lite validation (§2 #35, shacl.go:69-94 semantics) over
     the documents-derived KG graphs: per-graph conformance + violation
-    count, evaluated distributed (groupBy prov + applyInPandas)."""
+    count, evaluated distributed (one per-graph mapInArrow pass over
+    prov-sorted partitions)."""
     from nabu_spark.operators.shacl import shacl_validate_quads
     from nabu_spark.pipeline import pages_to_quads_fused
     from nabu_spark.sources.documents import pages_from_documents

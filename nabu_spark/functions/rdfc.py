@@ -17,8 +17,8 @@ release diffing, and cross-run byte-identical N-Quads.
 Scale shape: blank nodes never cross document boundaries in this pipeline,
 so canonicalization is graph-local — the distributed operator
 (operators/graphops.py::canonical_quads) runs it per prov group inside one
-mapInPandas pass over prov-sorted partitions, no shuffle beyond the one
-co-location. Worst-case permutation blowup is bounded by ``max_degree``
+per-graph mapInArrow pass over prov-sorted partitions, no shuffle beyond
+the one co-location. Worst-case permutation blowup is bounded by ``max_degree``
 (documents with pathological automorphic bnode meshes become error rows,
 never stuck tasks).
 

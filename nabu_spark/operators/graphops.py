@@ -25,9 +25,10 @@ tiny relative to the corpus (assertions only).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .dedup import dedup_clusters
+from .graphpass import map_graphs
 
 OWL_SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 
@@ -73,10 +74,10 @@ def integrity_report(quads: DataFrame) -> DataFrame:
     return objs.join(subjects, "obj", "left_anti")
 
 
-CANONICAL_SCHEMA = (
-    "subj string, pred string, obj string, prov string, "
-    "graph_sha256 string, error_code string"
-)
+CANONICAL_SCHEMA = T.StructType([
+    T.StructField(name, T.StringType())
+    for name in ("subj", "pred", "obj", "prov", "graph_sha256", "error_code")
+])
 
 
 def canonical_quads(quads: DataFrame, *, max_degree: int = 8) -> DataFrame:
@@ -93,15 +94,13 @@ def canonical_quads(quads: DataFrame, *, max_degree: int = 8) -> DataFrame:
     cross-graph SPARQL join on bnodes) use the extraction path's
     ``bnode_mode='rdfc'`` doc-scoped labels instead.
 
-    Blank nodes never cross document boundaries, so the only shuffle
-    co-locates each prov; contiguous groups then stream through ONE
-    mapInPandas per partition (same shape as shacl_validate_quads — ms-per-
-    group applyInPandas overhead dominates on small graphs). A graph whose
-    bnode mesh exceeds ``max_degree`` (pathological automorphisms) becomes
-    a single error row with error_code='canon_blowup' instead of a stuck
-    permutation search — lineage, not task failure."""
-    import pandas as pd
-
+    Blank nodes never cross document boundaries, so each graph, the
+    null-prov default graph included, is canonicalized in one per-graph
+    ``mapInArrow`` pass (:func:`~nabu_spark.operators.graphpass.map_graphs`).
+    A graph whose bnode mesh exceeds ``max_degree`` (pathological
+    automorphisms) becomes a single error row with
+    error_code='canon_blowup' instead of a stuck permutation search —
+    lineage, not task failure."""
     from ..functions.rdfc import CanonicalizationError, canonicalize_triples
 
     def canon_rows(prov: str, triples: list[tuple[str, str, str]]) -> list[dict]:
@@ -122,30 +121,4 @@ def canonical_quads(quads: DataFrame, *, max_degree: int = 8) -> DataFrame:
             for s, p, o in canon
         ]
 
-    def canon_partition(it):
-        pending_prov = None
-        pending: list[tuple[str, str, str]] = []
-        out: list[dict] = []
-        for pdf in it:
-            for prov, s, p, o in zip(
-                pdf["prov"], pdf["subj"], pdf["pred"], pdf["obj"]
-            ):
-                if prov != pending_prov:
-                    if pending_prov is not None:
-                        out.extend(canon_rows(pending_prov, pending))
-                    pending_prov, pending = prov, []
-                pending.append((s, p, o))
-            if out:
-                yield pd.DataFrame(out)
-                out = []
-        if pending_prov is not None:
-            out.extend(canon_rows(pending_prov, pending))
-        if out:
-            yield pd.DataFrame(out)
-
-    return (
-        quads.select("prov", "subj", "pred", "obj")
-        .repartition(F.col("prov"))
-        .sortWithinPartitions("prov")
-        .mapInPandas(canon_partition, CANONICAL_SCHEMA)
-    )
+    return map_graphs(quads, canon_rows, CANONICAL_SCHEMA)

@@ -30,7 +30,6 @@ one local or POSIX-shared filesystem.
 from __future__ import annotations
 
 import gzip
-import itertools
 import json
 import os
 import shutil
@@ -38,10 +37,10 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.bytesum import MASK64
+from .graphpass import runs
 
 
 def with_release_name(quads: DataFrame) -> DataFrame:
@@ -198,18 +197,6 @@ class _GraphFile:
             os.remove(self.tmp)
 
 
-def _runs(batches):
-    """``(release_name, values)`` per run of equal names in ``(release_name,
-    value)`` batches sorted by name (release lines, or graph file contents);
-    the run boundaries come from Arrow."""
-    for batch in batches:
-        runs = pc.run_end_encode(batch.column(0))
-        start = 0
-        for name, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
-            yield name, batch.column(1).slice(start, end - start)
-            start = end
-
-
 def _write_graphs(lines: DataFrame, sort: tuple[str, ...], path_of, level) -> list[dict]:
     """Write every graph of ``(release_name, line)`` to one file in one Spark
     job: lines shuffled by graph, sorted by ``sort`` within each partition,
@@ -222,10 +209,10 @@ def _write_graphs(lines: DataFrame, sort: tuple[str, ...], path_of, level) -> li
         ctx = TaskContext.get()
         part, attempt = ctx.partitionId(), ctx.taskAttemptId()
         rows = []
-        for name, runs in itertools.groupby(_runs(batches), key=lambda run: run[0]):
+        for name, parts in runs(batches):
             with _GraphFile(path_of(name, part), attempt, level) as out:
-                for _, run in runs:
-                    out.write(run)
+                for chunk in parts:
+                    out.write(chunk.column(1))
             rows.append({"release_name": name, "path": out.path, "lines": out.lines,
                          # the uint64 sum's bits in a signed long
                          "bytesum": out.bytesum - (out.bytesum >> 63 << 64)})
@@ -343,10 +330,10 @@ def pull_release_graphs(
 
     def write_groups(batches):
         done = []
-        for name, runs in itertools.groupby(_runs(batches), key=lambda run: run[0]):
+        for name, parts in runs(batches):
             with open(os.path.join(dest_dir, name), "wb") as fh:
-                for _, run in runs:
-                    fh.writelines(run.to_pylist())
+                for chunk in parts:
+                    fh.writelines(chunk.column(1).to_pylist())
             done.append(name)
         yield pa.RecordBatch.from_arrays([pa.array(done, pa.string())], ["release_name"])
 

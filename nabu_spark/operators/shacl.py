@@ -21,8 +21,9 @@ pre-check (a node typed schema:Place or schema:Dataset must exist,
 shacl.go:78-92), then shape conformance; any violation -> conforms=false.
 
 Spark shape: document graphs are independent, so the distributed form
-co-locates each prov (repartition + sortWithinPartitions) and streams
-contiguous groups through one mapInPandas per partition — graph-local
+co-locates each prov (repartition + sortWithinPartitions) and evaluates
+each contiguous graph, the null-prov default graph included, in one
+per-graph ``mapInArrow`` pass (operators/graphpass.py) — graph-local
 evaluation, no cross-graph state, the same pure function the driver uses
 for single documents. The gate corpus classification
 (shacl_validator/testdata/{valid,invalid}) is asserted in
@@ -34,11 +35,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..functions.ntriples import unescape_literal
 from ..sparql import parse_sparql, sparql_eval_local
 from ..functions.turtle import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, parse_turtle
+from .graphpass import map_graphs
 
 SH = "http://www.w3.org/ns/shacl#"
 XSD_STRING = "<http://www.w3.org/2001/XMLSchema#string>"
@@ -618,57 +620,24 @@ def shacl_validate_quads(
     quads: DataFrame, shapes_ttl: str, *, precheck: bool = True, cap: int = 20
 ) -> DataFrame:
     """Distributed SHACL-lite over a quads table: one row per document graph
-    (prov) with conformance + capped violation sample. Graphs are
-    independent, so the only shuffle co-locates each prov
-    (repartition + sortWithinPartitions); evaluation then streams contiguous
-    groups through ONE mapInPandas per partition — one Python call per Arrow
-    batch instead of one per graph (applyInPandas costs ~ms per group, which
-    dominates when graphs are small). The boundary group of every batch is
-    carried over until the prov changes."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811 (local for closure)
-
+    (prov, the null-prov default graph included) with conformance + capped
+    violation sample, evaluated in one per-graph Arrow pass
+    (:func:`~nabu_spark.operators.graphpass.map_graphs`)."""
     sg = parse_shapes(shapes_ttl)
 
     def eval_graph_rows(prov, triples):
         conforms, results = validate_graph(sg, triples, precheck=precheck)
         n_viol = sum(1 for r in results if r[4] == SEVERITY_VIOLATION)
         msgs = sorted(f"{c}:{p}:{m}" for _, p, c, m, _sev in results)[:cap]
-        return {
+        return [{
             "prov": prov,
             "conforms": conforms,
             "n_violations": n_viol,
             "n_warnings": len(results) - n_viol,
             "violations": msgs,
-        }
+        }]
 
-    def eval_partition(it):
-        pending_prov = None
-        pending: list[tuple[str, str, str]] = []
-        out: list[dict] = []
-        for pdf in it:
-            for prov, s, p, o in zip(
-                pdf["prov"], pdf["subj"], pdf["pred"], pdf["obj"]
-            ):
-                if prov != pending_prov:
-                    if pending_prov is not None:
-                        out.append(eval_graph_rows(pending_prov, pending))
-                    pending_prov, pending = prov, []
-                pending.append((s, p, o))
-            if out:
-                yield pd.DataFrame(out)
-                out = []
-        if pending_prov is not None:
-            out.append(eval_graph_rows(pending_prov, pending))
-        if out:
-            yield pd.DataFrame(out)
-
-    return (
-        quads.select("prov", "subj", "pred", "obj")
-        .repartition(F.col("prov"))
-        .sortWithinPartitions("prov")
-        .mapInPandas(eval_partition, VALIDATION_SCHEMA)
-    )
+    return map_graphs(quads, eval_graph_rows, VALIDATION_SCHEMA)
 
 
 def geoconnex_shapes_ttl() -> str:
@@ -758,38 +727,9 @@ def shacl_report_quads(
     """Distributed standard-vocabulary validation reports: one
     sh:ValidationReport graph PER document graph, tagged with the same
     prov, ready to release beside the data or serialize with
-    functions.turtle.serialize_turtle. Same single-shuffle partition
-    streaming as :func:`shacl_validate_quads`."""
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811
-
+    functions.turtle.serialize_turtle. Same per-graph pass as
+    :func:`shacl_validate_quads`."""
     sg = parse_shapes(shapes_ttl)
-
-    def eval_partition(it):
-        pending_prov = None
-        pending: list[tuple[str, str, str]] = []
-        out: list[dict] = []
-        for pdf in it:
-            for prov, s, p, o in zip(
-                pdf["prov"], pdf["subj"], pdf["pred"], pdf["obj"]
-            ):
-                if prov != pending_prov:
-                    if pending_prov is not None:
-                        out.extend(_report_rows(pending_prov, pending, sg,
-                                                precheck))
-                    pending_prov, pending = prov, []
-                pending.append((s, p, o))
-            if out:
-                yield pd.DataFrame(out)
-                out = []
-        if pending_prov is not None:
-            out.extend(_report_rows(pending_prov, pending, sg, precheck))
-        if out:
-            yield pd.DataFrame(out)
-
-    return (
-        quads.select("prov", "subj", "pred", "obj")
-        .repartition(F.col("prov"))
-        .sortWithinPartitions("prov")
-        .mapInPandas(eval_partition, REPORT_SCHEMA)
-    )
+    return map_graphs(
+        quads, lambda prov, triples: _report_rows(prov, triples, sg, precheck),
+        REPORT_SCHEMA)

@@ -29,11 +29,13 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 QUAD_SCHEMA = ("subj string, pred string, obj string, prov string, "
                "src_file string, error_code string")
+_ARROW_SCHEMA = pa.schema([(name, pa.string()) for name in (
+    "subj", "pred", "obj", "prov", "src_file", "error_code")])
 
 
 def _file_graph(path: str) -> str:
@@ -59,13 +61,13 @@ def read_turtle(
                 F.col("value").alias("text"))
     )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from nabu_spark.functions.trig import parse_trig
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "subj", "pred", "obj", "prov", "src_file", "error_code")}
-            for src, text in zip(pdf["src_file"], pdf["text"]):
+        for batch in batches:
+            out: dict[str, list] = {k: [] for k in _ARROW_SCHEMA.names}
+            for src, text in zip(batch.column("src_file").to_pylist(),
+                                 batch.column("text").to_pylist()):
                 try:
                     quads = parse_trig(text)
                 except Exception as e:  # malformed document -> error row
@@ -84,9 +86,9 @@ def read_turtle(
                     out["prov"].append(g if g is not None else default_g)
                     out["src_file"].append(src)
                     out["error_code"].append(None)
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pydict(out, schema=_ARROW_SCHEMA)
 
-    return docs.mapInPandas(parse, schema=QUAD_SCHEMA)
+    return docs.mapInArrow(parse, schema=QUAD_SCHEMA)
 
 
 def turtle_quads(spark: SparkSession, path: str, *,

@@ -72,7 +72,7 @@ One parse, two evaluators:
   term strings — no driver-side iteration, no per-row Python.
 - ``sparql_eval_local(triples, text)`` — in-memory evaluator over one small
   graph (a per-document subgraph). Used by the SHACL engine for sh:sparql
-  constraints (per-focus-node, inside mapInPandas), by the test suite as
+  constraints (per-focus-node, inside mapInArrow), by the test suite as
   an independent cross-check of the SQL compiler, and, hash-indexed, by
   ``GraphStore.query`` to answer a store within its driver cap with no
   Spark job. It evaluates OPTIONAL and MINUS bottom-up as hash joins on
@@ -903,6 +903,20 @@ def term_lex(t):
     return m.group(1) if m else t
 
 
+_STRING_ESCAPES = {"\\": "\\", '"': '"', "'": "'", "n": "\n", "r": "\r",
+                   "t": "\t", "b": "\b", "f": "\f"}
+_ESCAPE_RE = re.compile(r"\\(.)", re.S)
+
+
+def string_value(t: str) -> str:
+    r"""The string a constant literal denotes: its lexical form with the
+    SPARQL string escapes ``\\ \" \' \n \r \t \b \f`` decoded. Any other
+    backslash sequence stays, so a pattern written ``"\w"`` still reaches
+    the regex engine as ``\w``."""
+    return _ESCAPE_RE.sub(
+        lambda m: _STRING_ESCAPES.get(m.group(1), m.group(0)), term_lex(t))
+
+
 def term_num(t) -> float | None:
     if t is None:
         return None
@@ -1164,7 +1178,7 @@ class _SqlCompiler:
             return f"({arg(0, 'term')} IS NOT NULL)"
         if fn in ("REGEX", "REPLACE"):
             # the parser keeps pattern, replacement and flags constant
-            consts = [term_lex(a[1]) for a in args[1:]]
+            consts = [string_value(a[1]) for a in args[1:]]
             pat = consts[0]
             if len(args) == (3 if fn == "REGEX" else 4) and "i" in consts[-1]:
                 pat = "(?i)" + pat
@@ -1656,13 +1670,16 @@ def sparql_query(quads: DataFrame, text: str, graph_col: str | None = None) -> D
     native numerics). The query compiles to one parameter-bound Spark SQL
     statement; only a closure path (+/*) runs one more, for its edges.
 
-    Known divergences from full SPARQL (documented, shared with tests and
-    identical in both backends):
+    Known divergences from full SPARQL (documented, shared with tests):
 
     - a UNION branch that leaves a variable unbound which earlier patterns
       in the same group DID bind joins as NULL (row dropped) rather than
       as "compatible with anything" — keep shared variables bound in every
-      branch.
+      branch. ``sparql_eval_local`` treats the unbound variable as
+      compatible, so the two backends differ: over a graph where ``?s``
+      has ``p`` and ``q`` but no ``zz``, ``?s p ?o . { ?s q ?w } UNION
+      { ?s zz ?o }`` gives no row here and one row there. ``_scoped``
+      finds such joins, and ``GraphStore.query`` sends them to SQL.
     - SELECT expressions ``(expr AS ?v)`` desugar to a trailing BIND, so
       ?v is visible to FILTERs in the same WHERE group; per spec the
       projection expression is evaluated after the WHERE and ?v would be
@@ -1875,8 +1892,8 @@ class _LocalEval:
             v = self.expr(args[0], row, "str")
             if v is None:
                 return None  # error propagates (Spark: rlike(null) is null)
-            pat = term_lex(args[1][1])
-            flags = re.I if len(args) > 2 and "i" in term_lex(args[2][1]) else 0
+            pat = string_value(args[1][1])
+            flags = re.I if len(args) > 2 and "i" in string_value(args[2][1]) else 0
             return re.search(pat, str(v), flags) is not None
         if fn == "RAND":
             import random as _random
@@ -1962,10 +1979,10 @@ class _LocalEval:
                 return s_[start - 1:start - 1 + ln]
             return s_[start - 1:]
         if fn == "REPLACE":
-            pat = term_lex(args[1][1])
+            pat = string_value(args[1][1])
             # Java-style $n group refs (what regexp_replace uses) -> Python
-            rep = re.sub(r"\$(\d)", r"\\\1", term_lex(args[2][1]))
-            flags = term_lex(args[3][1]) if len(args) > 3 else ""
+            rep = re.sub(r"\$(\d)", r"\\\1", string_value(args[2][1]))
+            flags = string_value(args[3][1]) if len(args) > 3 else ""
             return re.sub(pat, rep, str(term_lex(v)),
                           flags=re.I if "i" in flags else 0)
         if fn in ("STRBEFORE", "STRAFTER"):
@@ -2776,7 +2793,7 @@ def write_results(df: DataFrame, path: str, *, format: str = "csv",
 
     Rendering parity: N-Triples lines are assembled entirely JVM-side
     (the engine's native term representation IS N-Triples). CSV/TSV rows
-    are rendered by ONE Arrow-batched ``mapInPandas`` pass that reuses the
+    are rendered by ONE ``mapInArrow`` pass that reuses the
     exact per-term functions of the collected serializers (``_term_csv`` /
     ``_term_tsv``), so a written shard-set equals the collected output
     byte-for-byte on sorted data lines (pinned by test). Every shard is a
@@ -2805,7 +2822,7 @@ def write_results(df: DataFrame, path: str, *, format: str = "csv",
         import csv as _csv
         import io as _io
 
-        import pandas as _pd
+        import pyarrow as _pa
 
         if is_csv:
             buf = _io.StringIO()
@@ -2826,17 +2843,14 @@ def write_results(df: DataFrame, path: str, *, format: str = "csv",
                 return "\t".join(_term_tsv(v) for v in vals)
 
             header = "\t".join("?" + c for c in cols)
-        yield _pd.DataFrame({"value": [header]})
-        for pdf in batches:
-            # .tolist() + isna: Python-native values and None for nulls, so
-            # the shared per-term renderers see exactly what the collected
+        yield _pa.RecordBatch.from_pydict({"value": [header]})
+        for batch in batches:
+            # to_pylist: Python-native values and None for nulls, so the
+            # shared per-term renderers see exactly what the collected
             # serializers see from Row cells
-            col_vals = [
-                [None if _pd.isna(v) else v for v in pdf[c].tolist()]
-                for c in cols
-            ]
+            col_vals = [batch.column(c).to_pylist() for c in cols]
             lines = [row_line(vals) for vals in zip(*col_vals)] if cols else []
-            yield _pd.DataFrame({"value": _pd.Series(lines, dtype="object")})
+            yield _pa.RecordBatch.from_pydict({"value": _pa.array(lines, _pa.string())})
 
-    (df.mapInPandas(render, schema="value string")
+    (df.mapInArrow(render, schema="value string")
        .write.mode(mode).text(path))

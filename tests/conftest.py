@@ -28,3 +28,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+@pytest.fixture
+def arrow_batches_of_two(spark):
+    """Two-row Arrow batches into Python passes, so a graph of three triples
+    spans batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    yield
+    spark.conf.set(key, old)

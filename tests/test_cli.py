@@ -103,6 +103,18 @@ def test_cli_lifecycle(spark, tmp_path, capsys):
     assert line.endswith(" .") and line.startswith("<")
 
 
+PLACE_SHAPES = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix schema: <https://schema.org/> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+@prefix ex: <http://t.org/shapes#> .
+ex:PlaceShape a sh:NodeShape ;
+    sh:targetClass schema:Place ;
+    sh:property [ sh:path schema:name ; sh:minCount 1 ;
+                  sh:datatype xsd:string ] .
+"""
+
+
 @pytest.mark.slow
 def test_cli_validate(spark, tmp_path):
     from nabu_spark.datagen import generate_pages
@@ -114,18 +126,7 @@ def test_cli_validate(spark, tmp_path):
     )
     shapes_path = str(tmp_path / "shapes.ttl")
     with open(shapes_path, "w") as fh:
-        fh.write(
-            """
-@prefix sh: <http://www.w3.org/ns/shacl#> .
-@prefix schema: <https://schema.org/> .
-@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
-@prefix ex: <http://t.org/shapes#> .
-ex:PlaceShape a sh:NodeShape ;
-    sh:targetClass schema:Place ;
-    sh:property [ sh:path schema:name ; sh:minCount 1 ;
-                  sh:datatype xsd:string ] .
-"""
-        )
+        fh.write(PLACE_SHAPES)
     out_dir = str(tmp_path / "val")
     rc, out = run_cli(
         ["validate", "--quads", quads_path, "--shapes", shapes_path,
@@ -139,6 +140,25 @@ ex:PlaceShape a sh:NodeShape ;
     assert set(report.columns) == {
         "prov", "conforms", "n_violations", "n_warnings", "violations"
     }
+
+
+def test_cli_validate_fails_on_the_default_graph(spark, tmp_path, capsys):
+    """A table whose quads all have a null prov is one graph, the default
+    graph, and its violation fails ``--exit-on-failure``."""
+    from nabu_spark.cli import main
+
+    quads_path = str(tmp_path / "quads")
+    spark.createDataFrame(
+        [("<urn:a>", "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>",
+          "<https://schema.org/Place>", None)],
+        "subj string, pred string, obj string, prov string",
+    ).write.parquet(quads_path)
+    shapes_path = tmp_path / "shapes.ttl"
+    shapes_path.write_text(PLACE_SHAPES)
+    rc = main(["validate", "--quads", quads_path, "--shapes", str(shapes_path),
+               "--out", str(tmp_path / "val"), "--exit-on-failure"])
+    summary = _last_json(capsys.readouterr().out)
+    assert (summary["graphs"], summary["failures"], rc) == (1, 1, 1)
 
 
 @pytest.mark.slow

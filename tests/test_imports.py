@@ -1,10 +1,13 @@
 """The pages -> release path imports no pandas. A Python worker that
 unpickles one of this path's closures imports the closure's module, and a
 pandas import is most of a cold import's cost (~290 ms of 294 ms for
-``nabu_spark.operators.release``), paid again by every fresh worker."""
+``nabu_spark.operators.release``), paid again by every fresh worker.
+The RDF read, query and per-graph modules run their Python passes as
+``mapInArrow`` and name no pandas at all."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -18,6 +21,44 @@ PAGE_PATH_MODULES = (
     "nabu_spark.operators.triples",
     "nabu_spark.operators.release",
 )
+
+
+ARROW_PASS_MODULES = (
+    "operators/graphpass.py",
+    "operators/shacl.py",
+    "operators/graphops.py",
+    "sparql.py",
+    "sources/turtle.py",
+)
+
+PANDAS_PASSES = {"mapInPandas", "applyInPandas", "pandas_udf"}
+
+
+def _pandas_uses(path: str):
+    """``file:line name`` for every pandas import, function-local ones
+    included, and every pandas pass the module names."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module or "", *(a.name for a in node.names)]
+        elif isinstance(node, ast.Attribute):
+            names = [node.attr]
+        elif isinstance(node, ast.Name):
+            names = [node.id]
+        else:
+            continue
+        for name in names:
+            if name.split(".")[0] == "pandas" or name in PANDAS_PASSES:
+                yield f"{os.path.relpath(path, REPO)}:{node.lineno} {name}"
+
+
+def test_arrow_pass_modules_name_no_pandas():
+    found = [hit for m in ARROW_PASS_MODULES
+             for hit in _pandas_uses(os.path.join(REPO, "nabu_spark", m))]
+    assert found == []
 
 
 def _imports_pandas(code: str) -> bool:

@@ -403,8 +403,8 @@ class TestCurateShape:
 
 class TestTurtleSourceShape:
     def test_one_arrow_pass_no_shuffle(self, spark, tmp_path):
-        """Bulk Turtle ingest = file scan + ONE MapInPandas; no Exchange,
-        no row-at-a-time Python."""
+        """Bulk Turtle ingest = file scan + ONE MapInArrow; no Exchange,
+        no pandas pass, no row-at-a-time Python."""
         import os
 
         from nabu_spark.sources.turtle import turtle_quads
@@ -414,8 +414,8 @@ class TestTurtleSourceShape:
         with open(os.path.join(d, "a.ttl"), "w") as fh:
             fh.write('@prefix p: <urn:p:> .\n<urn:d:1> p:x "v" .\n')
         plan = plan_of(turtle_quads(spark, d))
-        assert plan.count("MapInPandas") == 1
-        assert "Exchange" not in plan
+        assert plan.count("MapInArrow") == 1
+        assert "MapInPandas" not in plan and "Exchange" not in plan
         assert "BatchEvalPython" not in plan
 
 

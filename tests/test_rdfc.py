@@ -190,9 +190,12 @@ class TestDistributedOperator:
         assert subjects == {"_:c14n0", "_:c14n1"}
         assert all(r.error_code is None for r in out)
 
-    def test_canonical_quads_match_the_local_canonical_form(self, spark):
-        """Per prov, canonical_quads' rows are canonical_ntriples' lines in
-        order and graph_sha256 is canonical_graph_hash."""
+    def test_canonical_quads_match_the_local_canonical_form(
+            self, spark, arrow_batches_of_two):
+        """Per prov, the null-prov default graph included and whichever
+        Arrow batches a graph spans, canonical_quads' rows are
+        canonical_ntriples' lines in order and graph_sha256 is
+        canonical_graph_hash."""
         from nabu_spark.operators.graphops import canonical_quads
 
         graphs = {
@@ -200,6 +203,8 @@ class TestDistributedOperator:
                           ("<urn:s>", "<urn:p>", "_:x")],
             "<urn:g:b>": [("_:k", "<urn:p>", "_:k"), ("<urn:s>", "<urn:q>", '"w"')],
             "<urn:g:c>": [("<urn:s>", "<urn:q>", '"w"')] * 2,
+            None: [("_:d", "<urn:p>", "_:e"), ("_:e", "<urn:p>", "_:d"),
+                   ("_:d", "<urn:q>", '"v"')],
         }
         quads = spark.createDataFrame(
             [(*t, g) for g, ts in graphs.items() for t in ts],

@@ -157,6 +157,43 @@ class TestDistributedValidation:
         assert "gate languages only" in out["<urn:iow:summoned:s:1>"]["violations"][0]
         assert out["<urn:iow:summoned:s:2>"]["conforms"] is True
 
+    def test_operators_equal_per_graph_calls(self, spark, arrow_batches_of_two):
+        """Each graph, the null-prov default graph included and whichever
+        Arrow batches it spans, gives the rows of one driver-side call."""
+        from nabu_spark.operators.shacl import _report_rows, shacl_report_quads
+
+        rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+        dataset = "<https://schema.org/Dataset>"
+        name, lang = "<https://schema.org/name>", "<https://schema.org/inLanguage>"
+        graphs = {
+            "<urn:g:0>": [("<urn:d0>", rdf_type, dataset), ("<urn:d0>", name, '"a"'),
+                          ("<urn:d0>", lang, '"en"')],
+            "<urn:g:1>": [("<urn:d1>", rdf_type, dataset), ("<urn:d1>", name, '"b"'),
+                          ("<urn:d1>", lang, '"fr"')],
+            # the default graph: no schema:name, a language out of the gate
+            None: [("<urn:d2>", rdf_type, dataset), ("<urn:d2>", lang, '"fr"'),
+                   ("<urn:d2>", "<https://schema.org/url>", '"u"')],
+            # untyped: fails the pre-check
+            "<urn:g:3>": [("<urn:d3>", name, '"c"')],
+        }
+        quads = spark.createDataFrame(
+            [(*t, g) for g, ts in graphs.items() for t in ts],
+            "subj string, pred string, obj string, prov string").repartition(3)
+        sg = parse_shapes(MINI_SHAPES)
+        want = {}
+        for prov, ts in graphs.items():
+            conforms, results = validate_graph(sg, ts)
+            n_viol = sum(r[4] == "Violation" for r in results)
+            want[prov] = (conforms, n_viol, len(results) - n_viol,
+                          sorted(f"{c}:{p}:{m}" for _, p, c, m, _ in results))
+        got = {r.prov: (r.conforms, r.n_violations, r.n_warnings, r.violations)
+               for r in shacl_validate_quads(quads, MINI_SHAPES).collect()}
+        assert got == want
+        assert want[None][1] == 2
+        report = sorted(tuple(r) for r in shacl_report_quads(quads, MINI_SHAPES).collect())
+        assert report == sorted(
+            tuple(r.values()) for g, ts in graphs.items() for r in _report_rows(g, ts, sg, True))
+
     def test_precheck_in_operator(self, spark):
         quads = spark.createDataFrame(
             [("<https://d.org/0>", "<https://schema.org/name>", '"x"', "<urn:g>")],
@@ -725,7 +762,7 @@ class TestTurtleLongStrings:
 class TestSparqlConstraintDistributed:
     def test_sh_sparql_through_quads_operator(self, spark):
         """sh:sparql constraints (compiled Query dataclasses) must survive
-        closure pickling into the distributed mapInPandas evaluator."""
+        closure pickling into the distributed per-graph evaluator."""
         from nabu_spark.operators.shacl import shacl_validate_quads
 
         shapes = '''

@@ -214,6 +214,14 @@ class TestAgreement:
         df_rows, local_rows = both(spark, small_graph(), q)
         assert df_rows == local_rows == [(iri("p7"),)]
 
+    def test_regex_and_replace_decode_string_escapes(self, spark):
+        # the SPARQL strings are ^urn:\w$ and \s(\d): the regex \w and \s,
+        # not a literal backslash
+        q = (r'SELECT ?s ?r WHERE { ?s ?p ?n FILTER(REGEX(STR(?s), "^urn:\\w$")) '
+             r'BIND(REPLACE(STR(?n), "\\s(\\d)", "-$1") AS ?r) }')
+        df_rows, local_rows = both(spark, [("<urn:x>", iri("name"), '"Person 1"')], q)
+        assert df_rows == local_rows == [("<urn:x>", "Person-1")]
+
     def test_subquery_requires_projection(self):
         with pytest.raises(SparqlError, match="projection"):
             parse_sparql(
