@@ -77,6 +77,9 @@ One parse, two evaluators:
   ``GraphStore.query`` to answer a store within its driver cap with no
   Spark job. It evaluates OPTIONAL and MINUS bottom-up as hash joins on
   the shared variables, as the SQL compiler's LEFT (ANTI) JOIN USING does.
+  Each query is compiled once (its expressions become closures kept with
+  the parsed query) and each pattern is planned once per input row; a
+  property path with a bound end is stepped from that end.
 
 Terms are N-Triples strings ('<iri>', '"lit"', '"lit"@en', '"1"^^<dt>',
 '_:b0') exactly as produced by operators/triples.py. Comparison semantics
@@ -92,9 +95,17 @@ from __future__ import annotations
 
 import hashlib
 import math
+import operator
+import random
 import re
+import time
+import uuid
+from collections import defaultdict
 from dataclasses import dataclass, field
 from functools import partial
+from itertools import repeat
+from operator import itemgetter, methodcaller
+from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -195,6 +206,9 @@ class Query:
     from_graphs: list | None = None    # FROM <g>* (dataset default graph)
     from_named: list | None = None     # FROM NAMED <g>*
     calls: frozenset = frozenset()     # functions the text calls anywhere
+    # the local evaluator's compiled expressions (sparql._Plan)
+    plan: object = field(default_factory=lambda: _Plan(), repr=False,
+                         compare=False)
 
 
 class _Parser:
@@ -894,10 +908,17 @@ _LIT_RE = re.compile(r'^"(.*)"(?:@([A-Za-z0-9-]+)|\^\^<([^<>]*)>)?$', re.S)
 def term_lex(t):
     """Lexical form: IRI content, literal lexical form (raw), bnode label.
     Non-string values (numerics produced by BIND arithmetic / aggregates)
-    pass through unchanged."""
+    pass through unchanged. IRIs, plain literals and anything that is not
+    a literal are cut without the regex: ``_LIT_RE``'s greedy group takes
+    everything between the first and the last quote of a plain literal."""
     if not isinstance(t, str):
         return t
-    if t.startswith("<") and t.endswith(">"):
+    head = t[:1]
+    if head == "<":
+        return t[1:-1] if t[-1] == ">" else t
+    if head != '"':
+        return t
+    if len(t) > 1 and t[-1] == '"':
         return t[1:-1]
     m = _LIT_RE.match(t)
     return m.group(1) if m else t
@@ -1713,8 +1734,354 @@ def _answer(spark, quads, text: str | Query,
 # ---------------------------------------------------------------------------
 # local (in-memory) backend: SHACL's sh:sparql constraints, the agreement
 # oracle of the SQL compiler, and GraphStore.query's driver twin of a
-# bounded store (served as a LocalTableScan DataFrame by _answer_local)
+# bounded store (served as a LocalTableScan DataFrame by _answer_local).
+# A query is planned and compiled once: its expressions become closures
+# over a solution row (_Plan, kept with the parsed Query), and a triple
+# pattern sorts its positions once per input row, so the loops over
+# candidate triples and solutions interpret nothing.
 # ---------------------------------------------------------------------------
+
+_CMP_OPS = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+            "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+_ARITH_OPS = {"+": operator.add, "-": operator.sub, "*": operator.mul,
+              "/": lambda a, b: a / b if b else None}
+_DT_MATCH = re.compile(_DT_RE).match
+_DAY_TIME = "http://www.w3.org/2001/XMLSchema#dayTimeDuration"
+
+
+def _dt_part(grp: int):
+    def part(v):
+        m = _DT_MATCH(str(term_lex(v)))
+        return float(m.group(grp)) if m and m.group(grp) else None
+    return part
+
+
+def _tz(v):
+    m = _DT_MATCH(str(term_lex(v)))
+    return (m.group(7) or "") if m else None
+
+
+def _timezone(v):
+    tz = _tz(v)
+    if not tz:
+        return None
+    hh, mm = (0, 0) if tz == "Z" else (int(tz[1:3]), int(tz[4:6]))
+    if hh == 0 and mm == 0:
+        return f'"PT0S"^^<{_DAY_TIME}>'
+    sign = "-" if tz[0] == "-" else ""
+    body = "PT" + (f"{hh}H" if hh else "") + (f"{mm}M" if mm else "")
+    return f'"{sign}{body}"^^<{_DAY_TIME}>'
+
+
+def _on_num(f):
+    def op(v):
+        n = term_num(v)
+        return None if n is None else f(n)
+    return op
+
+
+def _is_numeric(v) -> bool:
+    if isinstance(v, (int, float)):
+        return True
+    if not v.startswith('"'):
+        return False
+    return term_num(v) is not None and term_datatype(v) in _XSD_NUMERIC
+
+
+def _hex(h):
+    return lambda v: h(str(term_lex(v)).encode("utf-8")).hexdigest()
+
+
+def _langmatches(lang, rng) -> bool:
+    lang, rng = str(lang).lower(), str(rng).lower()
+    if rng == "*":
+        return lang != ""
+    return lang == rng or lang.startswith(rng + "-")
+
+
+def _strbefore(a, b) -> str:
+    a, b = str(a), str(b)
+    i = a.find(b)
+    return a[:i] if i >= 0 else ""
+
+
+def _strafter(a, b) -> str:
+    a, b = str(a), str(b)
+    i = a.find(b)
+    return a[i + len(b):] if i >= 0 else ""
+
+
+# functions of one bound term (the call is unbound when the term is)
+_TERM_OPS = {
+    "STR": term_lex, "LANG": term_lang, "DATATYPE": term_datatype,
+    "ISIRI": lambda v: v.startswith("<"),
+    "ISLITERAL": lambda v: v.startswith('"'),
+    "ISBLANK": lambda v: v.startswith("_:"),
+    "STRLEN": lambda v: float(len(term_lex(v))),
+    "UCASE": lambda v: term_lex(v).upper(),
+    "LCASE": lambda v: term_lex(v).lower(),
+    # str(): native numerics from arithmetic/aggregates must coerce like
+    # the SQL side's cast-to-string, not crash
+    "ENCODE_FOR_URI": lambda v: quote(str(term_lex(v)), safe=""),
+    "TZ": _tz, "TIMEZONE": _timezone, "ISNUMERIC": _is_numeric,
+    "IRI": lambda v: f"<{term_lex(v)}>",
+    "ABS": _on_num(abs),
+    "CEIL": _on_num(lambda n: float(math.ceil(n))),
+    "FLOOR": _on_num(lambda n: float(math.floor(n))),
+    # HALF_UP away from zero, matching Spark's round()
+    "ROUND": _on_num(lambda n: float(
+        math.floor(n + 0.5) if n >= 0 else math.ceil(n - 0.5))),
+    **{fn: _dt_part(i + 1) for i, fn in enumerate(
+        ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS"))},
+    **{fn: _hex(getattr(hashlib, fn.lower())) for fn in (
+        "MD5", "SHA1", "SHA256", "SHA384", "SHA512")},
+}
+# functions of a bound term's lexical form and a second, string argument
+_PAIR_OPS = {
+    "CONTAINS": operator.contains, "STRSTARTS": str.startswith,
+    "STRENDS": str.endswith, "STRBEFORE": _strbefore, "STRAFTER": _strafter,
+    "STRLANG": lambda a, b: f'"{a}"@{b}',
+    "STRDT": lambda a, b: f'"{a}"^^<{b}>',
+}
+
+
+class _Plan:
+    """A parsed query's expressions compiled to closures over a solution
+    row. ``fn(e, want)`` compiles ``e`` the first time it is asked for:
+    the function handler, the comparison mode and the constants' lexical
+    forms are fixed then, so evaluating a FILTER, BIND or aggregate
+    argument walks no expression tree. A query keeps its plan
+    (``Query.plan``), so SHACL's per-focus-node calls over one parsed query
+    reuse it; ``state`` holds what one evaluation fixes (NOW, BNODE()'s
+    counter) and is cleared when an evaluation starts. A pickled plan
+    comes back empty."""
+
+    def __init__(self):
+        self.fns: dict = {}
+        self.state: dict = {}
+
+    def __reduce__(self):
+        return _Plan, ()
+
+    def fn(self, e, want: str = "bool"):
+        hit = self.fns.get((id(e), want))
+        if hit is None:
+            # the entry holds e, so no other expression can take its id
+            hit = self.fns[id(e), want] = (e, self._compile(e, want))
+        return hit[1]
+
+    def _compile(self, e, want):
+        tag = e[0]
+        if tag == "var":
+            name = e[1]
+            if want == "num":
+                return lambda r: term_num(r.get(name))
+            if want == "str":
+                return lambda r: term_lex(r.get(name))
+            return methodcaller("get", name)
+        if tag in ("const", "num"):
+            v = (float(e[1]) if tag == "num" else term_num(e[1])
+                 if want == "num" else term_lex(e[1]) if want == "str"
+                 else e[1])
+            return lambda r: v
+        # three-valued logic (None = error/unknown), matching both SPARQL
+        # error propagation and Spark SQL null semantics: a top-level FILTER
+        # keeps a row only on True, so None is falsy there — but under '!'
+        # an error stays an error instead of flipping to True
+        if tag in ("and", "or"):
+            fa, fb = self.fn(e[1]), self.fn(e[2])
+            decides = tag == "or"  # True decides OR, False decides AND
+
+            def junction(r):
+                a, b = fa(r), fb(r)
+                if a is decides or b is decides:
+                    return decides
+                return None if a is None or b is None else not decides
+            return junction
+        if tag == "not":
+            fa = self.fn(e[1])
+
+            def negation(r):
+                a = fa(r)
+                return None if a is None else not a
+            return negation
+        if tag in ("cmp", "arith"):
+            if tag == "cmp":
+                op, mode = _CMP_OPS[e[1]], _cmp_mode(e[2], e[3])
+            else:
+                op, mode = _ARITH_OPS[e[1]], "num"
+            fa, fb = self.fn(e[2], mode), self.fn(e[3], mode)
+
+            def binary(r):
+                va, vb = fa(r), fb(r)
+                return None if va is None or vb is None else op(va, vb)
+            return binary
+        if tag == "call":
+            return self._call(e[1], e[2], want)
+        raise SparqlError(f"bad expr {e!r}")
+
+    def _call(self, fn, args, want):
+        if fn in ("COALESCE", "IF"):
+            if want == "bool":
+                def term_valued(r):
+                    raise SparqlError(
+                        f"{fn} is term-valued; compare it explicitly")
+                return term_valued
+            if fn == "COALESCE":
+                fs = [self.fn(a, want) for a in args]
+
+                def coalesce(r):
+                    for f in fs:
+                        v = f(r)
+                        if v is not None:
+                            return v
+                    return None
+                return coalesce
+            fc, ft, ff = (self.fn(args[0]), self.fn(args[1], want),
+                          self.fn(args[2], want))
+
+            def if_(r):
+                c = fc(r)
+                return None if c is None else ft(r) if c else ff(r)
+            return if_
+        if fn == "CONCAT":
+            fs = [self.fn(a, "str") for a in args]
+
+            def concat(r):
+                parts = [f(r) for f in fs]
+                return (None if any(p is None for p in parts)
+                        else "".join(map(str, parts)))
+            return concat
+        if fn in ("SAMETERM", "LANGMATCHES"):
+            want, op = (("term", operator.eq) if fn == "SAMETERM"
+                        else ("str", _langmatches))
+            fa, fb = self.fn(args[0], want), self.fn(args[1], want)
+
+            def two(r):
+                a, b = fa(r), fb(r)
+                return None if a is None or b is None else op(a, b)
+            return two
+        if fn == "REGEX":
+            fv = self.fn(args[0], "str")
+            pat = string_value(args[1][1])
+            flags = re.I if len(args) > 2 and "i" in string_value(
+                args[2][1]) else 0
+
+            def regex(r):
+                v = fv(r)
+                # error propagates (Spark: rlike(null) is null)
+                return None if v is None else re.search(
+                    pat, str(v), flags) is not None
+            return regex
+        state = self.state
+        if fn == "RAND":
+            return lambda r: random.random()
+        if fn == "NOW":
+            def now(r):
+                if "now" not in state:
+                    state["now"] = (
+                        '"' + time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime())
+                        + 'Z"^^<http://www.w3.org/2001/XMLSchema#dateTime>')
+                return state["now"]
+            return now
+        if fn == "UUID":
+            return lambda r: f"<urn:uuid:{uuid.uuid4()}>"
+        if fn == "STRUUID":
+            return lambda r: str(uuid.uuid4())
+        if fn == "BNODE" and not args:
+            def fresh(r):
+                state["bnode"] = state.get("bnode", -1) + 1
+                return f"_:bn{state['bnode']}"
+            return fresh
+        fv = self.fn(args[0], "str" if fn == "BNODE" else "term")
+        if fn == "BNODE":
+            def bnode(r):
+                s = fv(r)
+                return None if s is None else "_:bh" + hashlib.md5(
+                    str(s).encode("utf-8")).hexdigest()
+            return bnode
+        if fn == "BOUND":
+            return lambda r: fv(r) is not None
+        op = _TERM_OPS.get(fn)
+        if op is term_lex:  # STR; term_lex(None) is None
+            if args[0][0] in ("var", "const"):
+                return self.fn(args[0], "str")  # the same lexical form
+            return lambda r: term_lex(fv(r))
+        if op is not None:
+            def unary(r):
+                v = fv(r)
+                return None if v is None else op(v)
+            return unary
+        if fn in _PAIR_OPS:
+            op, fb = _PAIR_OPS[fn], self.fn(args[1], "str")
+            b = fb({}) if args[1][0] in ("const", "num") else None
+            if b is not None:
+                def with_constant(r):
+                    v = fv(r)
+                    return None if v is None else op(term_lex(v), b)
+                return with_constant
+
+            def pair(r):
+                v = fv(r)
+                if v is None:
+                    return None
+                b = fb(r)
+                return None if b is None else op(term_lex(v), b)
+            return pair
+        if fn == "SUBSTR":
+            fs = [self.fn(a, "num") for a in args[1:]]
+
+            def substr(r):
+                v = fv(r)
+                if v is None:
+                    return None
+                s_ = str(term_lex(v))
+                bounds = [f(r) for f in fs]
+                if any(n is None for n in bounds):
+                    return None
+                start = max(int(bounds[0]), 1)
+                if len(bounds) > 1:
+                    return s_[start - 1:start - 1 + max(int(bounds[1]), 0)]
+                return s_[start - 1:]
+            return substr
+        if fn == "REPLACE":
+            pat = string_value(args[1][1])
+            # Java-style $n group refs (what regexp_replace uses) -> Python
+            rep = re.sub(r"\$(\d)", r"\\\1", string_value(args[2][1]))
+            flags = (re.I if len(args) > 3 and "i" in string_value(
+                args[3][1]) else 0)
+
+            def replace(r):
+                v = fv(r)
+                return None if v is None else re.sub(
+                    pat, rep, str(term_lex(v)), flags=flags)
+            return replace
+
+        def unsupported(r):
+            if fv(r) is not None:
+                raise SparqlError(f"unsupported function {fn}")
+        return unsupported
+
+
+def _solutions(row: dict, fresh: dict, cands) -> list[dict]:
+    """One solution per candidate triple: ``row`` plus each variable of
+    ``fresh`` (variable -> position) bound to the triple's term there,
+    built as one dict."""
+    items = list(fresh.items())
+    if len(items) == 1:
+        (a, i), = items
+        if not row:
+            return [{a: t[i]} for t in cands]
+        return [{**row, a: t[i]} for t in cands]
+    if len(items) == 2:
+        (a, i), (b, j) = items
+        if not row:
+            return [{a: t[i], b: t[j]} for t in cands]
+        return [{**row, a: t[i], b: t[j]} for t in cands]
+    if not items:
+        return [dict(row) for _ in cands]
+    names, get = list(fresh), itemgetter(*fresh.values())
+    return [{**row, **dict(zip(names, get(t)))} for t in cands]
 
 
 class _LocalEval:
@@ -1724,10 +2091,17 @@ class _LocalEval:
     A pattern with a bound subject, object or predicate looks its triples
     up in a hash index on that position (``index``: position -> {term:
     [triple, ...]}). A one-shot evaluator builds an index only when a
-    pattern meets more than one input row; a single row filters the
-    triples on that position in one pass, which costs less than building
-    the index. A served twin builds all three up front (``indexed``) and
-    keeps them current through ``add``/``discard``."""
+    pattern meets more than one input row, or a path steps through it; a
+    single row filters the triples on that position in one pass, which
+    costs less than building the index. A served twin builds all three up
+    front (``indexed``) and keeps them current through ``add``/``discard``.
+
+    Each pattern is planned once per input row: its positions are sorted
+    into the one the index fixed, those that must equal a constant or a
+    bound value, those that bind a fresh variable and those that repeat
+    one, and each solution is built as one dict. Expressions run as the
+    closures of the query's ``_Plan``. The evaluator keeps no per-query
+    state, so a twin serves any number of queries unchanged."""
 
     def __init__(self, triples, from_graphs: list | None = None,
                  from_named: list | None = None, *,
@@ -1792,309 +2166,55 @@ class _LocalEval:
                 idx.setdefault(t[pos], []).append(t)
         return idx
 
-    def expr(self, e, row: dict, want: str = "bool"):
-        tag = e[0]
-        if tag == "var":
-            t = row.get(e[1])
-            if t is None:
-                return None
-            if want == "num":
-                return term_num(t)
-            if want == "str":
-                return term_lex(t)
-            return t
-        if tag == "const":
-            if want == "num":
-                return term_num(e[1])
-            if want == "str":
-                return term_lex(e[1])
-            return e[1]
-        if tag == "num":
-            return float(e[1])
-        # three-valued logic (None = error/unknown), matching both SPARQL
-        # error propagation and Spark SQL null semantics: a top-level FILTER
-        # keeps a row only on True, so None is falsy there — but under '!'
-        # an error stays an error instead of flipping to True
-        if tag == "and":
-            a, b = self.expr(e[1], row), self.expr(e[2], row)
-            if a is False or b is False:
-                return False
-            if a is None or b is None:
-                return None
-            return True
-        if tag == "or":
-            a, b = self.expr(e[1], row), self.expr(e[2], row)
-            if a is True or b is True:
-                return True
-            if a is None or b is None:
-                return None
-            return False
-        if tag == "not":
-            a = self.expr(e[1], row)
-            return None if a is None else not a
-        if tag == "cmp":
-            op, a, b = e[1], e[2], e[3]
-            mode = _cmp_mode(a, b)
-            va, vb = self.expr(a, row, mode), self.expr(b, row, mode)
-            if va is None or vb is None:
-                return None
-            return {
-                "=": va == vb, "!=": va != vb, "<": va < vb,
-                "<=": va <= vb, ">": va > vb, ">=": va >= vb,
-            }[op]
-        if tag == "arith":
-            va, vb = self.expr(e[2], row, "num"), self.expr(e[3], row, "num")
-            if va is None or vb is None:
-                return None
-            return {"+": va + vb, "-": va - vb, "*": va * vb,
-                    "/": va / vb if vb else None}[e[1]]
-        if tag == "call":
-            return self._call(e[1], e[2], row, want)
-        raise SparqlError(f"bad expr {e!r}")
-
-    def _call(self, fn, args, row, want):
-        if fn == "BOUND":
-            return self.expr(args[0], row, "term") is not None
-        if fn in ("COALESCE", "IF"):
-            if want == "bool":
-                raise SparqlError(f"{fn} is term-valued; compare it explicitly")
-            if fn == "COALESCE":
-                for a in args:
-                    v = self.expr(a, row, want)
-                    if v is not None:
-                        return v
-                return None
-            cond = self.expr(args[0], row)
-            if cond is None:
-                return None
-            return self.expr(args[1] if cond else args[2], row, want)
-        if fn == "CONCAT":
-            parts = [self.expr(a, row, "str") for a in args]
-            if any(p is None for p in parts):
-                return None
-            return "".join(str(p) for p in parts)
-        if fn == "SAMETERM":
-            a = self.expr(args[0], row, "term")
-            b = self.expr(args[1], row, "term")
-            if a is None or b is None:
-                return None
-            return a == b
-        if fn == "LANGMATCHES":
-            lang = self.expr(args[0], row, "str")
-            rng = self.expr(args[1], row, "str")
-            if lang is None or rng is None:
-                return None
-            lang, rng = str(lang).lower(), str(rng).lower()
-            if rng == "*":
-                return lang != ""
-            return lang == rng or lang.startswith(rng + "-")
-        if fn == "REGEX":
-            v = self.expr(args[0], row, "str")
-            if v is None:
-                return None  # error propagates (Spark: rlike(null) is null)
-            pat = string_value(args[1][1])
-            flags = re.I if len(args) > 2 and "i" in string_value(args[2][1]) else 0
-            return re.search(pat, str(v), flags) is not None
-        if fn == "RAND":
-            import random as _random
-
-            return _random.random()
-        if fn == "NOW":
-            if getattr(self, "_now", None) is None:
-                import time as _time
-
-                self._now = (
-                    '"' + _time.strftime("%Y-%m-%dT%H:%M:%S",
-                                         _time.gmtime())
-                    + 'Z"^^<http://www.w3.org/2001/XMLSchema#dateTime>')
-            return self._now
-        if fn == "UUID":
-            import uuid as _uuid
-
-            return f"<urn:uuid:{_uuid.uuid4()}>"
-        if fn == "STRUUID":
-            import uuid as _uuid
-
-            return str(_uuid.uuid4())
-        if fn == "BNODE":
-            if not args:
-                self._bnode_seq = getattr(self, "_bnode_seq", -1) + 1
-                return f"_:bn{self._bnode_seq}"
-            s = self.expr(args[0], row, "str")
-            if s is None:
-                return None
-            return "_:bh" + hashlib.md5(str(s).encode("utf-8")).hexdigest()
-        v = self.expr(args[0], row, "term")
-        if fn in ("ISIRI", "ISLITERAL", "ISBLANK"):
-            if v is None:
-                return None
-            return {"ISIRI": v.startswith("<"), "ISLITERAL": v.startswith('"'),
-                    "ISBLANK": v.startswith("_:")}[fn]
-        if v is None:
-            return None
-        if fn == "STR":
-            return term_lex(v)
-        if fn == "LANG":
-            return term_lang(v)
-        if fn == "DATATYPE":
-            return term_datatype(v)
-        if fn == "STRLEN":
-            return float(len(term_lex(v)))
-        if fn == "UCASE":
-            return term_lex(v).upper()
-        if fn == "LCASE":
-            return term_lex(v).lower()
-        if fn == "ENCODE_FOR_URI":
-            from urllib.parse import quote
-
-            # str(): native numerics from arithmetic/aggregates must
-            # coerce like the SQL side's cast-to-string, not crash
-            return quote(str(term_lex(v)), safe="")
-        if fn in ("YEAR", "MONTH", "DAY", "HOURS", "MINUTES", "SECONDS",
-                  "TZ"):
-            m = re.match(_DT_RE, str(term_lex(v)))
-            if fn == "TZ":
-                return (m.group(7) or "") if m else None
-            grp = {"YEAR": 1, "MONTH": 2, "DAY": 3, "HOURS": 4,
-                   "MINUTES": 5, "SECONDS": 6}[fn]
-            if m is None or not m.group(grp):
-                return None
-            return float(m.group(grp))
-        if fn in ("CONTAINS", "STRSTARTS", "STRENDS"):
-            b = self.expr(args[1], row, "str")
-            a = term_lex(v)
-            return {"CONTAINS": b in a, "STRSTARTS": a.startswith(b),
-                    "STRENDS": a.endswith(b)}[fn]
-        if fn == "SUBSTR":
-            s_ = str(term_lex(v))
-            start = self.expr(args[1], row, "num")
-            if start is None:
-                return None
-            start = max(int(start), 1)
-            if len(args) > 2:
-                ln = self.expr(args[2], row, "num")
-                if ln is None:
-                    return None
-                ln = max(int(ln), 0)
-                return s_[start - 1:start - 1 + ln]
-            return s_[start - 1:]
-        if fn == "REPLACE":
-            pat = string_value(args[1][1])
-            # Java-style $n group refs (what regexp_replace uses) -> Python
-            rep = re.sub(r"\$(\d)", r"\\\1", string_value(args[2][1]))
-            flags = string_value(args[3][1]) if len(args) > 3 else ""
-            return re.sub(pat, rep, str(term_lex(v)),
-                          flags=re.I if "i" in flags else 0)
-        if fn in ("STRBEFORE", "STRAFTER"):
-            b = self.expr(args[1], row, "str")
-            if b is None:
-                return None
-            a, b = str(term_lex(v)), str(b)
-            if b == "":
-                return "" if fn == "STRBEFORE" else a
-            i = a.find(b)
-            if i < 0:
-                return ""
-            return a[:i] if fn == "STRBEFORE" else a[i + len(b):]
-        if fn in ("ABS", "ROUND", "CEIL", "FLOOR"):
-            n = term_num(v)
-            if n is None:
-                return None
-            if fn == "ABS":
-                return abs(n)
-            if fn == "CEIL":
-                return float(math.ceil(n))
-            if fn == "FLOOR":
-                return float(math.floor(n))
-            # HALF_UP away from zero, matching Spark's round()
-            return float(math.floor(n + 0.5) if n >= 0 else math.ceil(n - 0.5))
-        if fn == "ISNUMERIC":
-            if isinstance(v, (int, float)):
-                return True
-            if not v.startswith('"'):
-                return False
-            return term_num(v) is not None and term_datatype(v) in _XSD_NUMERIC
-        if fn in ("MD5", "SHA1", "SHA256", "SHA384", "SHA512"):
-            data = str(term_lex(v)).encode("utf-8")
-            h = {"MD5": hashlib.md5, "SHA1": hashlib.sha1,
-                 "SHA256": hashlib.sha256, "SHA384": hashlib.sha384,
-                 "SHA512": hashlib.sha512}[fn]
-            return h(data).hexdigest()
-        if fn == "TIMEZONE":
-            m = re.match(_DT_RE, str(term_lex(v)))
-            tz = m.group(7) if m else None
-            if not tz:
-                return None
-            dt = "http://www.w3.org/2001/XMLSchema#dayTimeDuration"
-            if tz == "Z":
-                return f'"PT0S"^^<{dt}>'
-            sign = "-" if tz[0] == "-" else ""
-            hh, mm = int(tz[1:3]), int(tz[4:6])
-            if hh == 0 and mm == 0:
-                return f'"PT0S"^^<{dt}>'
-            body = "PT" + (f"{hh}H" if hh else "") + (f"{mm}M" if mm else "")
-            return f'"{sign}{body}"^^<{dt}>'
-        if fn == "IRI":
-            return f"<{term_lex(v)}>"
-        if fn == "STRLANG":
-            b = self.expr(args[1], row, "str")
-            if b is None:
-                return None
-            return f'"{term_lex(v)}"@{b}'
-        if fn == "STRDT":
-            b = self.expr(args[1], row, "str")
-            if b is None:
-                return None
-            return f'"{term_lex(v)}"^^<{b}>'
-        raise SparqlError(f"unsupported function {fn}")
-
-    def _match(self, atom, value, row, out):
-        if atom[0] == "term":
-            return atom[1] == value
-        var = atom[1]
-        bound = out.get(var, row.get(var))
-        if bound is not None:
-            return bound == value
-        out[var] = value
-        return True
+    def _scope(self, graph) -> tuple:
+        """(triples, index) a pattern in ``graph`` ranges over."""
+        if graph is None:
+            return self.default_triples, self.default_index
+        return self.triples, self.index
 
     def pattern(self, s, p, o, graph, rows: list[dict]) -> list[dict]:
-        out = []
-        src, index = ((self.default_triples, self.default_index)
-                      if graph is None else (self.triples, self.index))
+        src, index = self._scope(graph)
+        atoms = (s, p, o) if graph is None else (s, p, o, graph)
+        named = self.named_set
+        out: list[dict] = []
         for row in rows:
-            cands = src
-            for pos, atom in ((0, s), (2, o), (1, p)):
-                v = atom[1] if atom[0] == "term" else row.get(atom[1])
+            fixed: dict = {}  # position -> the term it must hold
+            fresh: dict = {}  # variable -> the position that binds it
+            same = []  # (position, position) holding one variable
+            for pos, (kind, name) in enumerate(atoms):
+                v = name if kind == "term" else row.get(name)
                 if v is not None:
+                    fixed[pos] = v
+                elif name in fresh:
+                    same.append((fresh[name], pos))
+                else:
+                    fresh[name] = pos
+            cands = src
+            for pos in (0, 2, 1):
+                if pos in fixed:
+                    v = fixed.pop(pos)
                     idx = self._lookup(index, src, pos, len(rows) > 1)
                     cands = (idx.get(v, ()) if idx is not None
                              else [t for t in src if t[pos] == v])
                     break
-            for t in cands:
-                nb: dict = {}
-                if not self._match(s, t[0], row, nb):
-                    continue
-                if not self._match(p, t[1], row, nb):
-                    continue
-                if not self._match(o, t[2], row, nb):
-                    continue
-                if graph is not None:
-                    if len(t) < 4 or t[3] is None:
-                        continue
-                    if self.named_set is not None and t[3] not in self.named_set:
-                        continue
-                    if not self._match(graph, t[3], row, nb):
-                        continue
-                out.append({**row, **nb})
+            if graph is not None:
+                cands = [t for t in cands if len(t) > 3 and t[3] is not None
+                         and (named is None or t[3] in named)]
+            if fixed:
+                get, want = itemgetter(*fixed), tuple(fixed.values())
+                if len(want) == 1:
+                    want = want[0]
+                cands = [t for t in cands if get(t) == want]
+            for i, j in same:
+                cands = [t for t in cands if t[i] == t[j]]
+            out += _solutions(row, fresh, cands)
         return out
 
     # -- property paths (mirrors _SqlCompiler._path_pairs) ------------------
     def _graph_triples(self, graph, pred=None):
         """The triples a path step ranges over; only those with predicate
         ``pred`` when it is given and the predicate index is built."""
-        src, index = ((self.default_triples, self.default_index)
-                      if graph is None else (self.triples, self.index))
+        src, index = self._scope(graph)
         if pred is not None and 1 in index:
             src = index[1].get(pred, ())
         if graph is None:
@@ -2157,37 +2277,131 @@ class _LocalEval:
             terms.add(t[2])
         return {(x, x) for x in terms}
 
-    def path_rows(self, s, ast, o, graph, rows: list[dict]) -> list[dict]:
-        if graph is not None and graph[0] == "var":
-            # GRAPH ?var: each named graph's path relation is independent
-            # (the SQL twin keys its joins on __g for the same effect)
-            out = []
-            for gname in self._named_graphs():
-                pairs = self._path_pairs(ast, ("term", gname))
-                for row in rows:
-                    for src, dst in pairs:
-                        nb: dict = {}
-                        if not self._match(s, src, row, nb):
-                            continue
-                        if not self._match(o, dst, row, nb):
-                            continue
-                        if not self._match(graph, gname, row, nb):
-                            continue
-                        out.append({**row, **nb})
+    def _touching(self, x, pos: int, graph) -> list:
+        """The triples of ``graph`` (None or a term) with ``x`` at
+        ``pos``, through the index on ``pos``."""
+        src, index = self._scope(graph)
+        ts = self._lookup(index, src, pos, True).get(x, ())
+        if graph is None:
+            return ts
+        g = graph[1]
+        if self.named_set is not None and g not in self.named_set:
+            return []
+        return [t for t in ts if len(t) > 3 and t[3] == g]
+
+    def _reach(self, ast, starts, graph, fwd: bool) -> dict:
+        """{start: {end, ...}}: the pairs of ``_path_pairs(ast, graph)``
+        that leave each of ``starts`` (``fwd``) or arrive at it, as the
+        other ends. It steps the path from the starts through the subject
+        and object indexes, so its cost follows the paths taken, not the
+        store."""
+        tag = ast[0]
+        if tag in ("p", "nps"):
+            pos, end, p = (0, 2, ast[1]) if fwd else (2, 0, ast[1])
+            if tag == "p":
+                return {x: {t[end] for t in self._touching(x, pos, graph)
+                            if t[1] == p} for x in starts}
+            return {x: {t[end] for t in self._touching(x, pos, graph)
+                        if t[1] not in p} for x in starts}
+        if tag == "inv":
+            return self._reach(ast[1], starts, graph, not fwd)
+        if tag == "seq":
+            cur = {x: {x} for x in starts}
+            for elt in (ast[1] if fwd else reversed(ast[1])):
+                step = self._reach(elt, set().union(*cur.values()), graph, fwd)
+                cur = {x: set().union(*map(step.__getitem__, mids))
+                       for x, mids in cur.items()}
+            return cur
+        if tag == "alt":
+            out = {x: set() for x in starts}
+            for elt in ast[1]:
+                for x, ends in self._reach(elt, starts, graph, fwd).items():
+                    out[x] |= ends
             return out
-        pairs = self._path_pairs(ast, graph)
-        out = []
-        for row in rows:
-            for src, dst in pairs:
-                nb: dict = {}
-                if not self._match(s, src, row, nb):
-                    continue
-                if not self._match(o, dst, row, nb):
-                    continue
-                out.append({**row, **nb})
+        if tag == "opt":
+            out = self._reach(ast[1], starts, graph, fwd)
+        elif tag in ("plus", "star"):
+            out, step = {}, {}
+            for x in starts:
+                seen, frontier = set(), {x}
+                while frontier:
+                    new = [n for n in frontier if n not in step]
+                    if new:
+                        step.update(self._reach(ast[1], new, graph, fwd))
+                    frontier = set().union(
+                        *map(step.__getitem__, frontier)) - seen
+                    seen |= frontier
+                out[x] = seen
+        else:
+            raise SparqlError(f"bad path {ast!r}")
+        if tag != "plus":
+            # the zero-length path: a term of the graph reaches itself
+            for x in starts:
+                if self._touching(x, 0, graph) or self._touching(x, 2, graph):
+                    out[x].add(x)
         return out
 
-    def group(self, g: Group, rows: list[dict], graph=None) -> list[dict]:
+    def path_rows(self, s, ast, o, graph, rows: list[dict]) -> list[dict]:
+        if graph is None or graph[0] == "term":
+            return self._path_in(s, ast, o, graph, rows)
+        # GRAPH ?var: each named graph's path relation is independent (the
+        # SQL twin keys its joins on __g for the same effect); a row joins
+        # a graph by binding ?var to it, or by having it bound to it
+        gv = graph[1]
+        out = []
+        for gname in self._named_graphs():
+            scoped = [r if r.get(gv) is not None else {**r, gv: gname}
+                      for r in rows if r.get(gv) in (None, gname)]
+            out += self._path_in(s, ast, o, ("term", gname), scoped)
+        return out
+
+    def _path_in(self, s, ast, o, graph, rows: list[dict]) -> list[dict]:
+        """``path_rows`` in one graph scope. The path is stepped once from
+        the values its bound end takes, a constant or the values the rows
+        bind (``_reach``), and each row looks its value up; a constant end
+        is preferred. A row that binds neither end takes the whole pair
+        set."""
+        reach: dict = {}
+
+        def ends(fwd: bool, v) -> set:
+            if fwd not in reach:
+                kind, name = s if fwd else o
+                starts = ({name} if kind == "term" else
+                          {r.get(name) for r in rows} - {None})
+                reach[fwd] = self._reach(ast, starts, graph, fwd)
+            return reach[fwd][v]
+
+        forward = s[0] == "term" or o[0] != "term"
+        pairs = None
+        out = []
+        for row in rows:
+            sv = s[1] if s[0] == "term" else row.get(s[1])
+            ov = o[1] if o[0] == "term" else row.get(o[1])
+            if sv is not None and (ov is None or forward):
+                found = ends(True, sv)
+                if ov is None:
+                    out += [{**row, o[1]: y} for y in found]
+                elif ov in found:
+                    out.append(dict(row))
+            elif ov is not None:
+                found = ends(False, ov)
+                if sv is None:
+                    out += [{**row, s[1]: x} for x in found]
+                elif sv in found:
+                    out.append(dict(row))
+            else:
+                if pairs is None:
+                    pairs = self._path_pairs(ast, graph)
+                if s[1] == o[1]:
+                    out += [{**row, s[1]: x} for x, y in pairs if x == y]
+                else:
+                    out += [{**row, s[1]: x, o[1]: y} for x, y in pairs]
+        return out
+
+    def group(self, g: Group, rows: list[dict], graph=None,
+              plan: _Plan | None = None) -> list[dict]:
+        if plan is None:
+            plan = _Plan()
         filters = []
         for item in g.items:
             tag = item[0]
@@ -2199,24 +2413,25 @@ class _LocalEval:
             elif tag == "filter":
                 filters.append(item[1])
             elif tag == "optional":
-                rows = _left_join(rows,
-                                  self.group(item[1], [self.seed], graph))
+                rows = _left_join(
+                    rows, self.group(item[1], [self.seed], graph, plan))
             elif tag == "exists":
                 rows = [
                     row for row in rows
-                    if bool(self.group(item[1], [dict(row)], graph)) == item[2]
+                    if bool(self.group(item[1], [dict(row)], graph, plan))
+                    == item[2]
                 ]
             elif tag == "minus":
-                rows = _left_join(rows,
-                                  self.group(item[1], [self.seed], graph),
-                                  anti=True)
+                rows = _left_join(
+                    rows, self.group(item[1], [self.seed], graph, plan),
+                    anti=True)
             elif tag == "union":
                 nxt = []
                 for b in item[1]:
-                    nxt.extend(self.group(b, rows, graph))
+                    nxt.extend(self.group(b, rows, graph, plan))
                 rows = nxt
             elif tag == "graph":
-                rows = self.group(item[2], rows, item[1])
+                rows = self.group(item[2], rows, item[1], plan)
             elif tag == "subquery":
                 # bottom-up: the subquery never sees outer bindings; its
                 # projected solutions join on the shared variables. A native
@@ -2224,8 +2439,7 @@ class _LocalEval:
                 # on the term's numeric value, mirroring the SQL join.
                 sub = item[1]
                 sols = _apply_select_local(
-                    self, sub, self.group(sub.where, [{}], graph)
-                )
+                    plan, sub, self.group(sub.where, [{}], graph, plan))
 
                 def _veq(a, b):
                     if a == b:
@@ -2254,8 +2468,8 @@ class _LocalEval:
             elif tag == "bind":
                 # fresh dicts: row objects may be aliased across UNION
                 # branches / OPTIONAL pass-throughs
-                rows = [{**row, item[2]: self.expr(item[1], row, "term")}
-                        for row in rows]
+                f, var = plan.fn(item[1], "term"), item[2]
+                rows = [{**row, var: f(row)} for row in rows]
             elif tag == "values":
                 vars_, vrows = item[1], item[2]
                 nxt = []
@@ -2276,7 +2490,10 @@ class _LocalEval:
                         if ok:
                             nxt.append({**row, **nb})
                 rows = nxt
-        return [r for r in rows if all(self.expr(f, r) for f in filters)]
+        for f in filters:
+            keep = plan.fn(f)
+            rows = [r for r in rows if keep(r)]
+        return rows
 
 
 def _left_join(rows: list[dict], sols: list[dict], *,
@@ -2291,16 +2508,25 @@ def _left_join(rows: list[dict], sols: list[dict], *,
     shared = sorted(rvars & set().union(*rows))
     if anti and not shared:
         return rows
-    table: dict[tuple, list[dict]] = {}
+    if len(shared) == 1:
+        key = methodcaller("get", shared[0])
+        keys = list(map(key, rows))
+        wanted = set(keys) - {None}
+    else:
+        def key(d):
+            return tuple(map(d.get, shared))
+        keys = list(map(key, rows))
+        wanted = {k for k in keys if None not in k}
+    # only the solutions some row can meet are hashed
+    table: dict = {}
     for s in sols:
-        key = tuple(map(s.get, shared))
-        if None not in key:
-            table.setdefault(key, []).append(s)
+        k = key(s)
+        if k in wanted:
+            table.setdefault(k, []).append(s)
     unbound = dict.fromkeys(rvars)
     out = []
-    for r in rows:
-        key = tuple(map(r.get, shared))
-        hits = table.get(key, ()) if None not in key else ()
+    for r, k in zip(rows, keys):
+        hits = table.get(k, ())
         if anti:
             if not hits:
                 out.append(r)
@@ -2311,59 +2537,74 @@ def _left_join(rows: list[dict], sols: list[dict], *,
     return out
 
 
-def _apply_select_local(ev: "_LocalEval", q: Query, rows: list[dict]) -> list[dict]:
+def _agg_values(plan: _Plan, arg, want: str):
+    """The function from a group's member rows to ``arg``'s values, None
+    where it is unbound or an error."""
+    if arg[0] == "var" and want == "term":
+        return lambda members: list(map(dict.get, members, repeat(arg[1])))
+    f = plan.fn(arg, want)
+    return lambda members: list(map(f, members))
+
+
+def _aggregate(plan: _Plan, s: Agg):
+    """The function from a group's member rows to aggregate ``s``."""
+    if s.func == "count" and s.arg is None:
+        return len
+    values = _agg_values(plan, s.arg, {"group_concat": "str", "count": "term",
+                                       "sample": "term"}.get(s.func, "num"))
+    if s.func == "count":
+        def count(members):
+            vals = [v for v in values(members) if v is not None]
+            return len(set(vals)) if s.distinct else len(vals)
+        return count
+    if s.func == "group_concat":
+        def group_concat(members):
+            vals = [str(v) for v in values(members) if v is not None]
+            return s.sep.join(sorted(set(vals) if s.distinct else vals))
+        return group_concat
+    if s.func == "sample":
+        def sample(members):
+            vals = [v for v in values(members) if v is not None]
+            return min(vals) if vals else None
+        return sample
+    reduce = {"sum": sum, "avg": lambda ns: sum(ns) / len(ns), "min": min,
+              "max": max}[s.func]
+
+    def numeric(members):
+        nums = [n for n in values(members) if n is not None]
+        return reduce(nums) if nums else None
+    return numeric
+
+
+def _apply_select_local(plan: _Plan, q: Query, rows: list[dict]) -> list[dict]:
     """Aggregates, projection, DISTINCT and solution modifiers over solved
     bindings — shared by sparql_eval_local and local subquery evaluation
     (mirrors _SqlCompiler.select)."""
-    has_agg = any(isinstance(s, Agg) for s in q.select)
-    if has_agg or q.group_by:
+    aggs = [(s.alias, _aggregate(plan, s)) for s in q.select
+            if isinstance(s, Agg)]
+    if aggs or q.group_by:
         # without GROUP BY the solutions form one group, even none of them
-        groups: dict[tuple, list[dict]] = {} if q.group_by else {(): []}
-        for r in rows:
-            key = tuple(r.get(v) for v in q.group_by)
-            groups.setdefault(key, []).append(r)
-        out_rows = []
+        keys = q.group_by
+        groups: dict = {(): rows} if not keys else defaultdict(list)
+        if len(keys) == 1:
+            key = methodcaller("get", keys[0])
+            for r in rows:
+                groups[key(r)].append(r)
+            groups = {(k,): members for k, members in groups.items()}
+        elif keys:
+            for r in rows:
+                groups[tuple(map(r.get, keys))].append(r)
+        rows = []
         for key, members in groups.items():
-            row = dict(zip(q.group_by, key))
-            for s in q.select:
-                if not isinstance(s, Agg):
-                    continue
-                if s.func == "count":
-                    if s.arg is None:
-                        row[s.alias] = len(members)
-                    else:
-                        vals = [ev.expr(s.arg, m, "term") for m in members]
-                        vals = [v for v in vals if v is not None]
-                        row[s.alias] = len(set(vals)) if s.distinct else len(vals)
-                elif s.func == "group_concat":
-                    vals = [ev.expr(s.arg, m, "str") for m in members]
-                    vals = [str(v) for v in vals if v is not None]
-                    if s.distinct:
-                        vals = set(vals)
-                    row[s.alias] = s.sep.join(sorted(vals))
-                elif s.func == "sample":
-                    vals = [ev.expr(s.arg, m, "term") for m in members]
-                    vals = [v for v in vals if v is not None]
-                    row[s.alias] = min(vals) if vals else None
-                else:
-                    nums = [ev.expr(s.arg, m, "num") for m in members]
-                    nums = [n for n in nums if n is not None]
-                    if not nums:
-                        row[s.alias] = None
-                    elif s.func == "sum":
-                        row[s.alias] = sum(nums)
-                    elif s.func == "avg":
-                        row[s.alias] = sum(nums) / len(nums)
-                    elif s.func == "min":
-                        row[s.alias] = min(nums)
-                    else:
-                        row[s.alias] = max(nums)
-            out_rows.append(row)
+            row = dict(zip(keys, key))
+            for alias, agg in aggs:
+                row[alias] = agg(members)
+            rows.append(row)
         if q.having is not None:
-            out_rows = [r for r in out_rows if ev.expr(q.having, r)]
-        rows = out_rows
+            keep = plan.fn(q.having)
+            rows = [r for r in rows if keep(r)]
         sel = [s[1] if not isinstance(s, Agg) else s.alias for s in q.select] \
-            or (q.group_by + [s.alias for s in q.select if isinstance(s, Agg)])
+            or (q.group_by + [alias for alias, _ in aggs])
     else:
         sel = [s[1] for s in q.select] if q.select else sorted(
             {k for r in rows for k in r}
@@ -2373,7 +2614,7 @@ def _apply_select_local(ev: "_LocalEval", q: Query, rows: list[dict]) -> list[di
         seen = set()
         uniq = []
         for r in rows:
-            key = tuple(sorted(r.items(), key=lambda kv: kv[0]))
+            key = tuple(map(r.get, sel))
             if key not in seen:
                 seen.add(key)
                 uniq.append(r)
@@ -2405,9 +2646,9 @@ def sparql_eval_local(
 ) -> list[dict]:
     """Evaluate a SPARQL SELECT over an in-memory triple list (3- or
     4-tuples). ``bindings`` pre-binds variables (SHACL's $this); ``text``
-    may be a pre-parsed Query so per-focus-node callers parse once. Returns
-    a list of {var: term} dicts restricted to the SELECT list, in a
-    deterministic order."""
+    may be a pre-parsed Query so per-focus-node callers parse and compile
+    once. Returns a list of {var: term} dicts restricted to the SELECT
+    list, in a deterministic order."""
     q = text if isinstance(text, Query) else parse_sparql(text)
     ev = _LocalEval(triples, q.from_graphs, q.from_named)
     ev.seed = dict(bindings or {})
@@ -2416,17 +2657,19 @@ def sparql_eval_local(
 
 def _eval_local(ev: _LocalEval, q: Query) -> list[dict]:
     """``q``'s rows from an evaluator already scoped to its dataset."""
+    plan = q.plan
+    plan.state.clear()
     if q.describe is not None:
         nodes = {a[1] for a in q.describe if a[0] == "term"}
         if any(a[0] == "var" for a in q.describe):
-            sol = ev.group(q.where, [ev.seed])
+            sol = ev.group(q.where, [ev.seed], None, plan)
             for a in q.describe:
                 if a[0] == "var":
                     nodes |= {r[a[1]] for r in sol if r.get(a[1]) is not None}
         out = sorted({(t[0], t[1], t[2]) for t in ev.default_triples
                       if t[0] in nodes})
         return [dict(zip(("subj", "pred", "obj"), t)) for t in out]
-    rows = ev.group(q.where, [ev.seed])
+    rows = ev.group(q.where, [ev.seed], None, plan)
     if q.ask:
         return [{"ask": bool(rows)}]
     if q.construct is not None:
@@ -2443,7 +2686,7 @@ def _eval_local(ev: _LocalEval, q: Query) -> list[dict]:
                 seen.add(vals)
                 out.append(dict(zip(("subj", "pred", "obj"), vals)))
         return out
-    return _apply_select_local(ev, q, rows)
+    return _apply_select_local(plan, q, rows)
 
 
 def _computed_vars(g: Group) -> set:

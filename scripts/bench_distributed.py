@@ -23,10 +23,16 @@ would otherwise shortcut):
   cc_10x            dedup_clusters under driver_cap(0) over the
                     minhash_10x pairs (970k edges at the default size)
   lsh_10x           lsh_topk over 2M synthetic 64-d embeddings, 50 queries
+  twin_cap          GraphStore.query on its driver twin against the warm
+                    SQL path (driver_cap(0)) at 30k, 60k and 100k quads
+                    (the twin's cap is 100k raw rows): a synthetic store of
+                    5 quads per site, perfbench's five read templates
 
 Each leg records wall seconds, output rows, fixpoint ROUNDS (from the
 operator's ``fixpoint`` span, read under an active tracer), and for
-minhash the dropped-bucket observation values. Results go to BENCH/SCALING.json and the generated
+minhash the dropped-bucket observation values. twin_cap records, per store
+size, the twin's build time and each template's median read on either
+path. Results go to BENCH/SCALING.json and the generated
 table in BENCH/SCALING.md.
 
 Usage: python scripts/bench_distributed.py [leg ...]   (default: all)
@@ -70,6 +76,120 @@ def traced_rounds(run, site: str):
     return out, spans[0].attributes.get("rounds") if spans else None
 
 
+HYF = "https://www.opengis.net/def/schema/hy_features/hyf/"
+SITE = "https://geoconnex.us/iow/demo/site-"
+
+
+def _site_store(spark, n_sites: int):
+    """5 quads per site in the site's own graph: its type, its name and a
+    3-step hyf position chain to one of 64 mainstems."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(n_sites)
+    i = F.col("id").cast("string")
+    site = F.concat(F.lit(f"<{SITE}"), i, F.lit(">"))
+    rp, ip = F.concat(F.lit("_:rp"), i), F.concat(F.lit("_:ip"), i)
+    main = F.concat(F.lit("<https://geoconnex.us/ref/mainstems/"),
+                    (F.col("id") % 64 + 36800).cast("string"), F.lit(">"))
+    quads = [
+        (site, F.lit("<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"),
+         F.lit("<https://schema.org/Place>")),
+        (site, F.lit("<https://schema.org/name>"),
+         F.concat(F.lit('"MONITORING SITE '), i, F.lit('"'))),
+        (site, F.lit(f"<{HYF}referencedPosition>"), rp),
+        (rp, F.lit(f"<{HYF}HY_IndirectPosition>"), ip),
+        (ip, F.lit(f"<{HYF}linearElement>"), main),
+    ]
+    prov = F.concat(F.lit("<urn:doc:"), i, F.lit(">")).alias("prov")
+    out = None
+    for s_, p_, o_ in quads:
+        part = ids.select(s_.alias("subj"), p_.alias("pred"),
+                          o_.alias("obj"), prov)
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def _template_reads(n_sites: int, k: int, rng) -> dict[str, list[str]]:
+    """``k`` instances of each of perfbench's five read templates; a
+    prefix picks about a hundred sites, as perfbench's does."""
+    def prefix():
+        i = str(n_sites // 2 + rng.randrange(n_sites // 2))
+        return i[:max(1, len(i) - 2)]
+
+    reads = {t: [] for t in ("lookup", "optional", "type_count", "path",
+                             "filter")}
+    for _ in range(k):
+        reads["lookup"].append(
+            f"SELECT ?p ?o WHERE {{ <{SITE}{rng.randrange(n_sites)}> ?p ?o }}")
+        reads["optional"].append(
+            "SELECT ?s ?n WHERE { { ?s a <https://schema.org/Place> "
+            f'FILTER(STRSTARTS(STR(?s), "{SITE}{prefix()}")) }} '
+            "OPTIONAL { ?s <https://schema.org/name> ?n } }")
+        reads["type_count"].append(
+            "SELECT ?t (COUNT(?s) AS ?n) WHERE { ?s a ?t } GROUP BY ?t")
+        reads["path"].append(
+            f"SELECT ?s WHERE {{ ?s <{HYF}referencedPosition>/"
+            f"<{HYF}HY_IndirectPosition>/<{HYF}linearElement> "
+            f"<https://geoconnex.us/ref/mainstems/{36800 + rng.randrange(64)}> }}")
+        reads["filter"].append(
+            "SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n "
+            f'FILTER(STRSTARTS(STR(?n), "MONITORING SITE {prefix()}")) }}')
+    return reads
+
+
+def twin_cap(spark, quads=(30_000, 60_000, 100_000), k: int = 7) -> dict:
+    """Per store size: the twin's build (merge of the log files and its
+    three indexes, the work of the first read after a key change) and each
+    template's median read, ``GraphStore.query(...).collect()``, on the
+    twin and on the SQL path under ``driver_cap(0)``. The SQL path is
+    warmed with one round of every template first. Both paths return the
+    same rows, which is checked on every read."""
+    import random
+    import shutil
+    import statistics
+    import tempfile
+
+    from nabu_spark.graphstore import _DRIVER_CAP, GraphStore
+    from nabu_spark.session import driver_cap
+
+    def timed(gs, text):
+        t = time.perf_counter()
+        rows = gs.query(text).collect()
+        return 1e3 * (time.perf_counter() - t), sorted(map(tuple, rows))
+
+    out = {}
+    root = tempfile.mkdtemp(prefix="twin-cap-")
+    try:
+        for n in quads:
+            gs = GraphStore(spark, os.path.join(root, str(n)))
+            gs.init(_site_store(spark, n // 5))
+            t = time.perf_counter()
+            assert gs._twin_at(gs.tbl.files(), _DRIVER_CAP) is not None
+            build_ms = 1e3 * (time.perf_counter() - t)
+            reads = _template_reads(n // 5, k, random.Random(n))
+            with driver_cap(0):
+                for texts in reads.values():
+                    timed(gs, texts[0])
+            twin, sql = {}, {}
+            for tmpl, texts in reads.items():
+                a, b = [], []
+                for text in texts:
+                    ms, rows = timed(gs, text)
+                    with driver_cap(0):
+                        ms_sql, rows_sql = timed(gs, text)
+                    assert rows == rows_sql, text
+                    a.append(ms)
+                    b.append(ms_sql)
+                twin[tmpl] = round(statistics.median(a), 1)
+                sql[tmpl] = round(statistics.median(b), 1)
+            out[str(n)] = {"twin_build_ms": round(build_ms, 1),
+                           "twin_ms": twin, "sql_ms": sql}
+            print(json.dumps({"twin_cap": n, **out[str(n)]}), flush=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -77,7 +197,7 @@ def main() -> None:
 
     legs = sys.argv[1:] or [
         "closure_dist", "rdfs_dist", "owl_dist", "sparql_path_dist",
-        "minhash_10x", "cc_10x", "lsh_10x",
+        "minhash_10x", "cc_10x", "lsh_10x", "twin_cap",
     ]
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("BENCH_DIST_DOCS", "2000000"))
@@ -288,6 +408,13 @@ def main() -> None:
         rows = out.count()
         record("lsh_10x", time.monotonic() - t0, rows, corpus=n_docs,
                n_queries=50)
+
+    # ---- twin_cap ----------------------------------------------------------
+    if "twin_cap" in legs:
+        t0 = time.monotonic()
+        sizes = twin_cap(spark)
+        record("twin_cap", time.monotonic() - t0, max(map(int, sizes)),
+               cores=cores, sizes=sizes)
 
     # ---- persist (merge: partial runs update only their legs) --------------
     out_path = os.path.join(REPO, "BENCH", "SCALING.json")

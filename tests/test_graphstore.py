@@ -1187,3 +1187,57 @@ class TestQueryTwin:
             {"cap": cap, "path": "sql"}]
         assert [s.attributes["memo"] for s in tracer.spans
                 if s.name == "graphstore.read"] == ["miss", "hit"]
+
+    def test_twin_keeps_no_state_across_queries(self, spark, tmp_path):
+        gs = self._served(spark, tmp_path)
+        gs.query(TEMPLATES["lookup"])
+        ev = gs._twin[1]
+        attrs = dict(vars(ev))
+        sizes = {pos: sorted((k, len(b)) for k, b in idx.items())
+                 for pos, idx in ev.index.items()}
+        texts = [*TWIN_QUERIES, *ASK_EXISTS, *TEMPLATES.values(),
+                 "SELECT ?s (NOW() AS ?t) (BNODE() AS ?b) "
+                 "WHERE { ?s <urn:p> ?o }",
+                 "SELECT ?s ?o FROM <urn:g1> FROM <urn:site-g1> "
+                 "WHERE { ?s ?p ?o }"]
+        texts += [TEMPLATES["optional"].replace("site-12", f"site-12{i}")
+                  for i in range(6)]
+        texts += [TEMPLATES["filter"].replace("SITE 12", f"SITE 12{i}")
+                  for i in range(6)]
+        texts += [TEMPLATES["path"].replace("36801", f"3680{i}")
+                  for i in (0, 2, 3)]
+        texts += [f"SELECT ?p ?o WHERE {{ <https://geoconnex.us/iow/demo/"
+                  f"site-12{i}> ?p ?o }}" for i in range(12)]
+        assert len(set(texts)) == len(texts) >= 50
+        for text in texts:
+            gs.query(text).collect()
+        assert gs._twin[1] is ev
+        assert vars(ev).keys() == attrs.keys()
+        assert all(vars(ev)[k] is v for k, v in attrs.items())
+        assert ev.seed == {}
+        assert {pos: sorted((k, len(b)) for k, b in idx.items())
+                for pos, idx in ev.index.items()} == sizes
+
+    def test_one_parsed_query_gives_the_same_rows_each_time(self):
+        import pickle
+
+        from nabu_spark.sparql import parse_sparql, sparql_eval_local
+
+        text = ("SELECT ?p ?o ?b ?n WHERE { $this ?p ?o "
+                "OPTIONAL { ?o <urn:p> ?n } FILTER(!ISBLANK(?o)) "
+                "BIND(BNODE() AS ?b) }")
+        q = parse_sparql(text)
+        quads = _served_quads()
+        nodes = ("<urn:a>", "<urn:c>", "<https://geoconnex.us/iow/demo/site-121>")
+        first = {n: sparql_eval_local(quads, q, {"this": n}) for n in nodes}
+        assert all(first.values())
+        for _ in range(3):
+            for n in nodes:
+                assert sparql_eval_local(quads, q, {"this": n}) == first[n]
+        # the same rows as a fresh parse, and from a pickled copy (SHACL
+        # ships its parsed constraints to the executors)
+        for n in nodes:
+            assert sparql_eval_local(
+                quads, parse_sparql(text), {"this": n}) == first[n]
+            assert sparql_eval_local(
+                quads, pickle.loads(pickle.dumps(q)), {"this": n}) == first[n]

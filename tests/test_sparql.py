@@ -15,6 +15,7 @@ import pytest
 
 from nabu_spark.session import driver_cap
 from nabu_spark.sparql import (
+    _LIT_RE,
     SparqlError,
     parse_sparql,
     sparql_eval_local,
@@ -164,6 +165,45 @@ AGREEMENT_QUERIES = [
     "(SAMPLE(?n) AS ?one) WHERE { ?s t:name ?n }",
     'PREFIX t: <urn:t:> SELECT ?o (GROUP_CONCAT(DISTINCT ?n) AS ?who) WHERE '
     "{ ?s t:knows ?o . ?s t:name ?n } GROUP BY ?o ORDER BY ?o",
+    # --- the local evaluator's pattern planner and compiled expressions ---
+    # a variable repeated inside one pattern, bound by it or earlier
+    "PREFIX t: <urn:t:> SELECT ?x WHERE { ?x t:knows ?x }",
+    "PREFIX t: <urn:t:> SELECT ?x ?o WHERE { ?x ?x ?o }",
+    "PREFIX t: <urn:t:> SELECT ?s ?p WHERE { ?s ?p ?s }",
+    "PREFIX t: <urn:t:> SELECT ?s ?p WHERE { ?s t:knows ?o . ?o ?p ?o }",
+    # STRSTARTS, CONTAINS and STRENDS over IRIs and plain, language-tagged
+    # and typed literals, with and without STR()
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(STRSTARTS(STR(?o), "urn:t:p")) }',
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(STRENDS(STR(?o), "3")) }',
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(CONTAINS(STR(?o), "all")) }',
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(STRSTARTS(?o, "Person")) }',
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(CONTAINS(?o, "2")) }',
+    'PREFIX t: <urn:t:> SELECT ?s ?o WHERE { ?s ?p ?o '
+    'FILTER(STRENDS(?o, "o")) }',
+    # a FILTER on an OPTIONAL variable left unbound; !BOUND; || with an
+    # erroring side (error || true keeps the row, error || false drops it)
+    "PREFIX t: <urn:t:> SELECT ?s ?a WHERE { ?s t:age ?a "
+    'OPTIONAL { ?s t:lang ?l } FILTER(STRSTARTS(STR(?l), "h")) }',
+    "PREFIX t: <urn:t:> SELECT ?s ?a WHERE { ?s t:age ?a "
+    "OPTIONAL { ?s t:lang ?l } FILTER(!BOUND(?l) && ?a > 25) }",
+    "PREFIX t: <urn:t:> SELECT ?s ?a WHERE { ?s t:age ?a "
+    'OPTIONAL { ?s t:lang ?l } FILTER(?l = "hallo"@de || ?a > 30) }',
+    "PREFIX t: <urn:t:> SELECT ?s ?a WHERE { ?s t:age ?a "
+    'OPTIONAL { ?s t:lang ?l } FILTER(?a > 30 || ?l != "hallo"@de) }',
+    # COUNT and COUNT DISTINCT over a sometimes-unbound variable, and a
+    # GROUP BY key that is sometimes unbound
+    "PREFIX t: <urn:t:> SELECT (COUNT(?l) AS ?n) (COUNT(DISTINCT ?l) AS ?d) "
+    "(COUNT(*) AS ?all) WHERE { ?s t:age ?a OPTIONAL { ?s t:lang ?l } }",
+    "PREFIX t: <urn:t:> SELECT ?o (COUNT(?l) AS ?n) (COUNT(DISTINCT ?l) AS ?d) "
+    "WHERE { ?s t:knows ?o OPTIONAL { ?s t:lang ?l } } GROUP BY ?o",
+    # (the count leads: both() sorts rows, and None does not sort)
+    "PREFIX t: <urn:t:> SELECT (COUNT(?s) AS ?n) ?l WHERE { ?s t:age ?a "
+    "OPTIONAL { ?s t:lang ?l } } GROUP BY ?l",
 ]
 
 
@@ -323,6 +363,13 @@ class TestParser:
         assert "integer" in t1[3][1] and "double" in t2[3][1]
 
     def test_term_helpers(self):
+        # term_lex cuts IRIs and plain literals without _LIT_RE, and must
+        # give what the regex gives
+        for t in ('"', '""', '"a"b"', '"x"@en', '"x"^^<dt>', r'"say \"hi\""',
+                  '"line 1\nline 2"', '"x"@en\n', "<urn:x>", "_:b0"):
+            m = _LIT_RE.match(t)
+            want = t[1:-1] if t.startswith("<") else m.group(1) if m else t
+            assert term_lex(t) == want, t
         assert term_lex("<urn:x>") == "urn:x"
         assert term_lex('"ab"@en') == "ab"
         assert term_lex(f'"7"^^<{XSD}integer>') == "7"
@@ -425,9 +472,33 @@ PATH_QUERIES = [
 ]
 
 
+# each path operator with a constant subject, a constant object, both ends
+# constant (true and false) and an end bound by an earlier pattern: the
+# local evaluator steps these paths from the values of their bound end
+PATH_END_QUERIES = [
+    f"PREFIX t: <urn:t:> SELECT {sel} WHERE {{ {body} }}"
+    for path in ("t:knows/t:knows", "^t:knows", "(t:knows|t:age)",
+                 "t:knows+", "t:knows*")
+    for sel, body in (
+        ("?o", f"t:p5 {path} ?o"),
+        ("?s", f"?s {path} t:p2"),
+        ("?a", f"t:p5 {path} t:p3 . t:p5 t:age ?a"),
+        ("?a", f"t:p2 {path} t:p4 . t:p2 t:age ?a"),
+        ("?s ?o", f"?s t:lang ?l . ?s {path} ?o"),
+        ("?s ?o", f"?o t:lang ?l . ?s {path} ?o"),
+        ("?s", f"?s t:knows ?o . ?s {path} ?o"),
+    )
+]
+
+
 class TestPropertyPaths:
     @pytest.mark.parametrize("q", PATH_QUERIES)
     def test_backends_agree(self, spark, q):
+        df_rows, local_rows = both(spark, small_graph(), q)
+        assert df_rows == local_rows
+
+    @pytest.mark.parametrize("q", PATH_END_QUERIES)
+    def test_bound_ends_agree(self, spark, q):
         df_rows, local_rows = both(spark, small_graph(), q)
         assert df_rows == local_rows
 
@@ -731,6 +802,21 @@ class TestDatasetClause:
             "WHERE { GRAPH ?g { ?s t:p ?o } }",
         )
         assert got == []
+
+    def test_graph_var_pattern_under_from_named(self, spark):
+        got = self._both(
+            spark,
+            "PREFIX t: <urn:t:> SELECT ?g ?s ?o FROM NAMED <urn:g:a> "
+            "WHERE { GRAPH ?g { ?s t:k ?o . ?s t:p ?v } }",
+        )
+        assert got == [("<urn:g:a>", iri("s1"), iri("s2"))]
+        got = self._both(
+            spark,
+            "PREFIX t: <urn:t:> SELECT ?g ?s FROM NAMED <urn:g:b> "
+            "FROM NAMED <urn:g:a> WHERE { GRAPH ?g { ?s t:p ?o } }",
+        )
+        assert got == [("<urn:g:a>", iri("s1")), ("<urn:g:a>", iri("s3")),
+                       ("<urn:g:b>", iri("s2"))]
 
     def test_from_named_only(self, spark):
         # bare patterns see an EMPTY default graph
