@@ -109,7 +109,7 @@ from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .operators.reasoner import _closure_local, transitive_closure
+from .operators.reasoner import transitive_closure
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
@@ -2210,23 +2210,7 @@ class _LocalEval:
             out += _solutions(row, fresh, cands)
         return out
 
-    # -- property paths (mirrors _SqlCompiler._path_pairs) ------------------
-    def _graph_triples(self, graph, pred=None):
-        """The triples a path step ranges over; only those with predicate
-        ``pred`` when it is given and the predicate index is built."""
-        src, index = self._scope(graph)
-        if pred is not None and 1 in index:
-            src = index[1].get(pred, ())
-        if graph is None:
-            return src
-        if graph[0] == "term":
-            return [
-                t for t in src
-                if len(t) > 3 and t[3] == graph[1]
-                and (self.named_set is None or t[3] in self.named_set)
-            ]
-        raise SparqlError("GRAPH ?var paths evaluate per graph — see path_rows")
-
+    # -- property paths (the pairs of _SqlCompiler._path_pairs) -------------
     def _named_graphs(self) -> list[str]:
         return sorted({
             t[3] for t in self.triples
@@ -2234,63 +2218,33 @@ class _LocalEval:
             and (self.named_set is None or t[3] in self.named_set)
         })
 
-    def _path_pairs(self, ast, graph) -> set:
-        tag = ast[0]
-        if tag == "p":
-            return {(t[0], t[2]) for t in self._graph_triples(graph, ast[1])
-                    if t[1] == ast[1]}
-        if tag == "nps":
-            return {(t[0], t[2]) for t in self._graph_triples(graph)
-                    if t[1] not in ast[1]}
-        if tag == "inv":
-            return {(d, s) for s, d in self._path_pairs(ast[1], graph)}
-        if tag == "seq":
-            pairs = None
-            for elt in ast[1]:
-                nxt = self._path_pairs(elt, graph)
-                if pairs is None:
-                    pairs = nxt
-                else:
-                    by_src: dict = {}
-                    for s, d in nxt:
-                        by_src.setdefault(s, []).append(d)
-                    pairs = {(s, d2) for s, d in pairs for d2 in by_src.get(d, ())}
-            return pairs
-        if tag == "alt":
-            out: set = set()
-            for elt in ast[1]:
-                out |= self._path_pairs(elt, graph)
-            return out
-        if tag == "opt":
-            return self._path_pairs(ast[1], graph) | self._identity_pairs(graph)
-        if tag in ("plus", "star"):
-            result = _closure_local(self._path_pairs(ast[1], graph))
-            if tag == "star":
-                result |= self._identity_pairs(graph)
-            return result
-        raise SparqlError(f"bad path {ast!r}")
-
-    def _identity_pairs(self, graph) -> set:
-        terms = set()
-        for t in self._graph_triples(graph):
-            terms.add(t[0])
-            terms.add(t[2])
-        return {(x, x) for x in terms}
-
-    def _touching(self, x, pos: int, graph) -> list:
-        """The triples of ``graph`` (None or a term) with ``x`` at
-        ``pos``, through the index on ``pos``."""
+    def _graph_terms(self, graph) -> set:
+        """The subjects and objects of ``graph`` (None or a term): the
+        starts of a path that binds neither end."""
         src, index = self._scope(graph)
-        ts = self._lookup(index, src, pos, True).get(x, ())
         if graph is None:
-            return ts
+            return (self._lookup(index, src, 0, True).keys()
+                    | self._lookup(index, src, 2, True).keys())
         g = graph[1]
         if self.named_set is not None and g not in self.named_set:
-            return []
-        return [t for t in ts if len(t) > 3 and t[3] == g]
+            return set()
+        return {x for t in src if len(t) > 3 and t[3] == g
+                for x in (t[0], t[2])}
+
+    def _touch(self, pos: int, graph):
+        """x -> the triples of ``graph`` (None or a term) with ``x`` at
+        ``pos``, through the index on ``pos``."""
+        src, index = self._scope(graph)
+        get = self._lookup(index, src, pos, True).get
+        if graph is None:
+            return lambda x: get(x, ())
+        g = graph[1]
+        if self.named_set is not None and g not in self.named_set:
+            return lambda x: ()
+        return lambda x: [t for t in get(x, ()) if len(t) > 3 and t[3] == g]
 
     def _reach(self, ast, starts, graph, fwd: bool) -> dict:
-        """{start: {end, ...}}: the pairs of ``_path_pairs(ast, graph)``
+        """{start: {end, ...}}: the pairs of path ``ast`` in ``graph``
         that leave each of ``starts`` (``fwd``) or arrive at it, as the
         other ends. It steps the path from the starts through the subject
         and object indexes, so its cost follows the paths taken, not the
@@ -2298,16 +2252,18 @@ class _LocalEval:
         tag = ast[0]
         if tag in ("p", "nps"):
             pos, end, p = (0, 2, ast[1]) if fwd else (2, 0, ast[1])
+            touch = self._touch(pos, graph)
             if tag == "p":
-                return {x: {t[end] for t in self._touching(x, pos, graph)
-                            if t[1] == p} for x in starts}
-            return {x: {t[end] for t in self._touching(x, pos, graph)
-                        if t[1] not in p} for x in starts}
+                return {x: {t[end] for t in touch(x) if t[1] == p}
+                        for x in starts}
+            return {x: {t[end] for t in touch(x) if t[1] not in p}
+                    for x in starts}
         if tag == "inv":
             return self._reach(ast[1], starts, graph, not fwd)
         if tag == "seq":
-            cur = {x: {x} for x in starts}
-            for elt in (ast[1] if fwd else reversed(ast[1])):
+            elts = ast[1] if fwd else ast[1][::-1]
+            cur = self._reach(elts[0], starts, graph, fwd)
+            for elt in elts[1:]:
                 step = self._reach(elt, set().union(*cur.values()), graph, fwd)
                 cur = {x: set().union(*map(step.__getitem__, mids))
                        for x, mids in cur.items()}
@@ -2321,23 +2277,29 @@ class _LocalEval:
         if tag == "opt":
             out = self._reach(ast[1], starts, graph, fwd)
         elif tag in ("plus", "star"):
-            out, step = {}, {}
+            # one step from every term the starts reach, taken a whole
+            # frontier at a time; then each start's closure over it
+            step: dict = {}
+            frontier = set(starts)
+            while frontier:
+                step.update(self._reach(ast[1], frontier, graph, fwd))
+                frontier = set().union(
+                    *map(step.__getitem__, frontier)).difference(step)
+            out = {}
             for x in starts:
-                seen, frontier = set(), {x}
+                seen, frontier = set(), step[x]
                 while frontier:
-                    new = [n for n in frontier if n not in step]
-                    if new:
-                        step.update(self._reach(ast[1], new, graph, fwd))
+                    seen |= frontier
                     frontier = set().union(
                         *map(step.__getitem__, frontier)) - seen
-                    seen |= frontier
                 out[x] = seen
         else:
             raise SparqlError(f"bad path {ast!r}")
         if tag != "plus":
             # the zero-length path: a term of the graph reaches itself
+            subj, obj = self._touch(0, graph), self._touch(2, graph)
             for x in starts:
-                if self._touching(x, 0, graph) or self._touching(x, 2, graph):
+                if subj(x) or obj(x):
                     out[x].add(x)
         return out
 
@@ -2359,8 +2321,8 @@ class _LocalEval:
         """``path_rows`` in one graph scope. The path is stepped once from
         the values its bound end takes, a constant or the values the rows
         bind (``_reach``), and each row looks its value up; a constant end
-        is preferred. A row that binds neither end takes the whole pair
-        set."""
+        is preferred. A row that binds neither end takes the path stepped
+        from every term of the graph."""
         reach: dict = {}
 
         def ends(fwd: bool, v) -> set:
@@ -2391,11 +2353,14 @@ class _LocalEval:
                     out.append(dict(row))
             else:
                 if pairs is None:
-                    pairs = self._path_pairs(ast, graph)
+                    pairs = self._reach(ast, self._graph_terms(graph), graph,
+                                        True)
                 if s[1] == o[1]:
-                    out += [{**row, s[1]: x} for x, y in pairs if x == y]
+                    out += [{**row, s[1]: x} for x, ys in pairs.items()
+                            if x in ys]
                 else:
-                    out += [{**row, s[1]: x, o[1]: y} for x, y in pairs]
+                    out += [{**row, s[1]: x, o[1]: y}
+                            for x, ys in pairs.items() for y in ys]
         return out
 
     def group(self, g: Group, rows: list[dict], graph=None,
@@ -2496,6 +2461,15 @@ class _LocalEval:
         return rows
 
 
+def _row_keys(rows: list[dict], names) -> list[tuple]:
+    """Each row's values of ``names``, None where unbound, as one tuple
+    per row: the hash keys of a join, a GROUP BY or DISTINCT. The tuples
+    are zipped from one column per name, not built row by row."""
+    if not names:
+        return [()] * len(rows)
+    return list(zip(*[map(dict.get, rows, repeat(n)) for n in names]))
+
+
 def _left_join(rows: list[dict], sols: list[dict], *,
                anti: bool = False) -> list[dict]:
     """``rows`` LEFT JOIN, or with ``anti`` LEFT ANTI JOIN, ``sols``
@@ -2508,19 +2482,11 @@ def _left_join(rows: list[dict], sols: list[dict], *,
     shared = sorted(rvars & set().union(*rows))
     if anti and not shared:
         return rows
-    if len(shared) == 1:
-        key = methodcaller("get", shared[0])
-        keys = list(map(key, rows))
-        wanted = set(keys) - {None}
-    else:
-        def key(d):
-            return tuple(map(d.get, shared))
-        keys = list(map(key, rows))
-        wanted = {k for k in keys if None not in k}
+    keys = _row_keys(rows, shared)
+    wanted = {k for k in keys if None not in k}
     # only the solutions some row can meet are hashed
     table: dict = {}
-    for s in sols:
-        k = key(s)
+    for s, k in zip(sols, _row_keys(sols, shared)):
         if k in wanted:
             table.setdefault(k, []).append(s)
     unbound = dict.fromkeys(rvars)
@@ -2586,14 +2552,9 @@ def _apply_select_local(plan: _Plan, q: Query, rows: list[dict]) -> list[dict]:
         # without GROUP BY the solutions form one group, even none of them
         keys = q.group_by
         groups: dict = {(): rows} if not keys else defaultdict(list)
-        if len(keys) == 1:
-            key = methodcaller("get", keys[0])
-            for r in rows:
-                groups[key(r)].append(r)
-            groups = {(k,): members for k, members in groups.items()}
-        elif keys:
-            for r in rows:
-                groups[tuple(map(r.get, keys))].append(r)
+        if keys:
+            for r, key in zip(rows, _row_keys(rows, keys)):
+                groups[key].append(r)
         rows = []
         for key, members in groups.items():
             row = dict(zip(keys, key))
@@ -2613,8 +2574,7 @@ def _apply_select_local(plan: _Plan, q: Query, rows: list[dict]) -> list[dict]:
     if q.distinct:
         seen = set()
         uniq = []
-        for r in rows:
-            key = tuple(map(r.get, sel))
+        for r, key in zip(rows, _row_keys(rows, sel)):
             if key not in seen:
                 seen.add(key)
                 uniq.append(r)
