@@ -779,8 +779,8 @@ class GraphStore:
     rewritten.
 
     A log of at most ``_DRIVER_CAP`` raw rows is also held on the driver,
-    under the same kind of key: the merged quads, hash-indexed, as the
-    twin that ``query`` answers from with no Spark job. A ground update
+    keyed on its manifest file list alone: the merged quads, hash-indexed,
+    as the twin that ``query`` answers from with no Spark job. A ground update
     applies its delta rows to the twin it was committed over; every other
     key change rebuilds the twin on the next query."""
 
@@ -793,8 +793,8 @@ class GraphStore:
         # one read() memo entry
         self._memo: list | None = None
         self._view = f"nabu_store_{uuid.uuid4().hex}"
-        # [key, indexed _LocalEval over the merged quads (None until a
-        # read within the cap builds it), raw log rows]: the one query twin
+        # [file list, indexed _LocalEval over the merged quads (None until
+        # a read within the cap builds it), raw log rows]: the one query twin
         self._twin: list | None = None
 
     # -- write paths --------------------------------------------------------
@@ -877,7 +877,7 @@ class GraphStore:
         twin, self._twin = self._twin, None
         m = self.tbl.manifest(v)
         if (twin is None or m["operation"] != "append"
-                or tuple(m["files"]) != twin[0][1] + tuple(m["new_files"])):
+                or tuple(m["files"]) != twin[0] + tuple(m["new_files"])):
             return
         ev, raw = twin[1], twin[2] + len(rows)
         if raw > capped(_DRIVER_CAP):
@@ -885,7 +885,7 @@ class GraphStore:
         elif ev is not None:
             for *q, op, _ in rows:
                 (ev.add if op == "a" else ev.discard)(tuple(q))
-        self._twin = [(twin[0][0], tuple(m["files"])), ev, raw]
+        self._twin = [tuple(m["files"]), ev, raw]
 
     def append_quads(self, quads: DataFrame, stage: str = "append") -> int:
         """Append a batch of quads as one snapshot of 'a' rows — O(batch),
@@ -1212,10 +1212,12 @@ class GraphStore:
 
         A log within ``_DRIVER_CAP`` raw rows is answered by the driver
         twin of its files: a DataFrame over a ``pyarrow.Table`` with the
-        SQL path's columns and types, which runs no Spark job to build or
-        collect. Over the cap, under ``driver_cap(0)``, or for a query the
-        twin's evaluator rejects, the query compiles to one Spark SQL
-        statement over ``read()``. The memo entry is registered as a temp
+        SQL path's columns and types, whose ``collect`` and ``count`` run
+        on the driver with no Py4J call; any other method plans it as a
+        LocalTableScan on first use, which runs no Spark job either. Over
+        the cap, under ``driver_cap(0)``, or for a query the twin's
+        evaluator rejects, the query compiles to one Spark SQL statement
+        over ``read()``. The memo entry is registered as a temp
         view on its first query, so a query on a memo hit registers and
         drops no view of its own (the two commands took about 12 ms per
         query on a 4-CPU VM, more than compiling a lookup). One
@@ -1252,7 +1254,8 @@ class GraphStore:
         read per query."""
         if cap <= 0:
             return None
-        key = (self.spark.sparkContext.applicationId, tuple(files))
+        # driver data: the files alone name it, whichever app reads them
+        key = tuple(files)
         if not self._twin or self._twin[0] != key:
             self._twin = [key, None, _parquet_rows(files)]
         if self._twin[2] > cap:

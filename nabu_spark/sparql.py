@@ -102,12 +102,15 @@ import time
 import uuid
 from collections import defaultdict
 from dataclasses import dataclass, field
-from functools import partial
+from functools import cached_property, partial
 from itertools import repeat
 from operator import itemgetter, methodcaller
 from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicFrame
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import _create_row
 
 from .operators.reasoner import transitive_closure
 
@@ -1734,7 +1737,9 @@ def _answer(spark, quads, text: str | Query,
 # ---------------------------------------------------------------------------
 # local (in-memory) backend: SHACL's sh:sparql constraints, the agreement
 # oracle of the SQL compiler, and GraphStore.query's driver twin of a
-# bounded store (served as a LocalTableScan DataFrame by _answer_local).
+# bounded store (served by _answer_local as a DataFrame held on the
+# driver: collect and count read its Arrow table, and any other method
+# plans it as a LocalTableScan on first use).
 # A query is planned and compiled once: its expressions become closures
 # over a solution row (_Plan, kept with the parsed Query), and a triple
 # pattern sorts its positions once per input row, so the loops over
@@ -2760,11 +2765,46 @@ def _projected(q: Query, graph=None) -> tuple[set, set]:
             c in maybe or c not in scope)}
 
 
+class _DriverFrame(_ClassicFrame):
+    """A DataFrame over a ``pyarrow.Table`` held on the driver.
+    ``collect`` and ``count`` answer from the table, so they run no job and
+    make no Py4J call; ``collect`` builds each Row from the Arrow columns,
+    typed as ``schema`` says. Any other method plans the table once, on
+    first use, as ``spark.createDataFrame(table)``: a LocalTableScan."""
+
+    def __init__(self, spark, table):
+        super().__init__(None, spark)
+        del self._jdf  # planned on first use
+        self._table = table
+        self.schema = from_arrow_schema(table.schema)
+
+    @cached_property
+    def _jdf(self):
+        import pyarrow as pa
+
+        t = self._table
+        if t.num_columns:
+            return self._session.createDataFrame(t)._jdf
+        # Spark takes no table without columns: plan one and drop it
+        unit = pa.table({"__unit": pa.array([1] * t.num_rows, pa.int8())})
+        return self._session.createDataFrame(unit).select()._jdf
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def collect(self) -> list:
+        t = self._table
+        cols = [c.to_pylist() for c in t.columns]
+        values = zip(*cols) if cols else repeat((), t.num_rows)
+        return list(map(partial(_create_row, t.column_names), values))
+
+
 def _answer_local(spark, ev: _LocalEval, q: Query,
                   graph_col: str | None) -> tuple[DataFrame, int]:
-    """``(df, rows)``: ``q`` answered by ``ev`` as a DataFrame over a
-    ``pyarrow.Table`` of ``rows`` rows. Spark plans it as a
-    LocalTableScan, so neither building nor collecting it runs a job (a
+    """``(df, rows)``: ``q`` answered by ``ev`` as a ``_DriverFrame`` over
+    a ``pyarrow.Table`` of ``rows`` rows. Its ``collect`` and ``count``
+    run on the driver; any other method plans the table as a
+    LocalTableScan on first use, so no method runs a job to read it (a
     list of rows would plan a Scan ExistingRDD). Its columns
     are named and typed as the SQL path's:
     variables and SAMPLE by their values (string for terms), GROUP_CONCAT
@@ -2823,14 +2863,14 @@ def _answer_local(spark, ev: _LocalEval, q: Query,
                     raise SparqlError(f"no single column type for ?{c}")
                 fields.append(pa.field(
                     c, types[kinds.pop()] if kinds else pa.string()))
-    if not fields:
+    if fields:
+        schema = pa.schema(fields)
+        table = pa.table({c: [r.get(c) for r in rows] for c in schema.names},
+                         schema=schema)
+    else:
         # a query without variables keeps its rows but no columns
-        unit = pa.table({"__unit": pa.array([1] * len(rows), pa.int8())})
-        return spark.createDataFrame(unit).select(), len(rows)
-    schema = pa.schema(fields)
-    table = pa.table({c: [r.get(c) for r in rows] for c in schema.names},
-                     schema=schema)
-    return spark.createDataFrame(table), len(rows)
+        table = pa.table({"__unit": pa.nulls(len(rows))}).select([])
+    return _DriverFrame(spark, table), len(rows)
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,10 @@ operator's ``fixpoint`` span, read under an active tracer), and for
 minhash the dropped-bucket observation values. twin_cap records, per store
 size, the twin's build time and each template's median read on either
 path. Results go to BENCH/SCALING.json and the generated
-table in BENCH/SCALING.md.
+table in BENCH/SCALING.md. Each leg carries the settings it ran with:
+``cores``, ``steal_pct`` (the host's steal share when the leg ended) and,
+for the 10x legs, ``n_docs_10x``. A run merges its legs into the file and
+leaves the other legs as they were recorded.
 
 Usage: python scripts/bench_distributed.py [leg ...]   (default: all)
 Env:   SPARK_GRAFT_CPUS (default 32), BENCH_DIST_DOCS (default 2_000_000)
@@ -58,6 +61,22 @@ def _steal_pct() -> float:
         return 100.0 * vals[7] / max(1, sum(vals))
     except Exception:
         return -1.0
+
+
+def labelled_legs(old: dict) -> dict:
+    """The legs of a SCALING.json, each with its own settings. A leg
+    recorded when the file kept one header of settings for every leg
+    (``cores``, ``n_docs_10x``, ``steal_pct_at_end``) takes the fields it
+    lacks from that header."""
+    legs = {}
+    for name, leg in old.get("legs", {}).items():
+        fill = {"cores": old.get("cores"),
+                "steal_pct": old.get("steal_pct_at_end")}
+        if name.endswith("_10x"):
+            fill["n_docs_10x"] = old.get("n_docs_10x")
+        legs[name] = {**{k: v for k, v in fill.items() if v is not None},
+                      **leg}
+    return legs
 
 
 def traced_rounds(run, site: str):
@@ -207,7 +226,10 @@ def main() -> None:
     results: dict[str, dict] = {}
 
     def record(name: str, sec: float, rows: int, **extra) -> None:
-        results[name] = {"sec": round(sec, 2), "rows": int(rows), **extra}
+        results[name] = {"sec": round(sec, 2), "rows": int(rows), **extra,
+                         "cores": cores, "steal_pct": round(_steal_pct(), 2)}
+        if name.endswith("_10x"):
+            results[name]["n_docs_10x"] = n_docs
         print(json.dumps({"leg": name, **results[name]}), flush=True)
 
     # ---- closure_dist ------------------------------------------------------
@@ -414,24 +436,16 @@ def main() -> None:
         t0 = time.monotonic()
         sizes = twin_cap(spark)
         record("twin_cap", time.monotonic() - t0, max(map(int, sizes)),
-               cores=cores, sizes=sizes)
+               sizes=sizes)
 
     # ---- persist (merge: partial runs update only their legs) --------------
     out_path = os.path.join(REPO, "BENCH", "SCALING.json")
     prior = {}
     if os.path.exists(out_path):
-        try:
-            prior = json.load(open(out_path)).get("legs", {})
-        except Exception:
-            prior = {}
-    payload = {
-        "cores": cores,
-        "n_docs_10x": n_docs,
-        "steal_pct_at_end": round(_steal_pct(), 2),
-        "legs": {**prior, **results},
-    }
+        with open(out_path) as fh:
+            prior = labelled_legs(json.load(fh))
     with open(out_path, "w") as fh:
-        json.dump(payload, fh, indent=1)
+        json.dump({"legs": {**prior, **results}}, fh, indent=1)
     print(f"wrote {out_path}")
 
 

@@ -897,6 +897,26 @@ TEMPLATES = {
 }
 
 
+def _py4j_calls(spark, fn):
+    """The Py4J commands that ``fn()`` sends from the calling thread."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls, me = client.send_command, [], threading.get_ident()
+
+    def counted(*args, **kwargs):
+        # py4j's finalizer thread frees dead proxies through the
+        # same client; only this thread's calls belong to fn
+        if threading.get_ident() == me:
+            calls.append(args[0])
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        client.send_command = send
+    return calls
+
+
 class TestQueryCompile:
     """A query compiles to one parameter-bound SQL statement: on a memo hit
     ``GraphStore.query`` crosses the Py4J boundary a bounded number of
@@ -912,21 +932,7 @@ class TestQueryCompile:
             gs.read().count()  # fills the memo: every query below is a hit
             text = TEMPLATES[template]
             gs.query(text)  # first use of each JVM function is not counted
-            client = spark.sparkContext._gateway._gateway_client
-            send, calls, me = client.send_command, [], threading.get_ident()
-
-            def counted(*args, **kwargs):
-                # py4j's finalizer thread frees dead proxies through the
-                # same client; only this thread's calls belong to the query
-                if threading.get_ident() == me:
-                    calls.append(args[0])
-                return send(*args, **kwargs)
-
-            client.send_command = counted
-            try:
-                gs.query(text)
-            finally:
-                client.send_command = send
+            calls = _py4j_calls(spark, lambda: gs.query(text))
             assert len(calls) <= 25, (template, len(calls))
 
 
@@ -1064,6 +1070,68 @@ class TestQueryTwin:
         assert "LocalTableScan" in gs.query(TEMPLATES["lookup"]) \
             ._jdf.queryExecution().executedPlan().toString()
 
+    @pytest.mark.parametrize("template", sorted(TEMPLATES))
+    def test_collect_and_count_stay_on_the_driver(self, spark, tmp_path,
+                                                  template):
+        gs = self._served(spark, tmp_path)
+        text = TEMPLATES[template]
+        gs.query(text).collect()  # builds the twin
+
+        def read():
+            df = gs.query(text)
+            assert len(df.collect()) == df.count() > 0
+
+        assert _py4j_calls(spark, read) == []
+        assert _jobs_launched(spark, read) == []
+
+    @pytest.mark.parametrize(
+        "text", [*TEMPLATES.values(), ASK_EXISTS[0], TWIN_QUERIES[0]])
+    def test_dataframe_methods_equal_the_sql_path(self, spark, tmp_path,
+                                                  text):
+        gs = self._served(spark, tmp_path)
+
+        def methods(df, keys, tag):
+            first, out = df.columns[0], str(tmp_path / f"out_{tag}")
+            df.createOrReplaceTempView(f"twin_{tag}")
+            df.write.parquet(out)
+            back = spark.read.parquet(out)
+            arrow = df.toArrow()
+            return (
+                df.count(),
+                df.first() is None, len(df.take(1)),
+                len(df.limit(1).collect()),
+                sorted((r.asDict() for r in df.collect()),
+                       key=lambda d: _key(d.values())),
+                _rows(df.join(keys, first)),
+                _rows(df.crossJoin(spark.range(2))),
+                _rows(back), back.schema,
+                _rows(spark.sql(f"SELECT * FROM twin_{tag}")),
+                arrow.schema,
+                sorted(zip(*(c.to_pylist() for c in arrow.columns)),
+                       key=_key))
+
+        with driver_cap(0):
+            sql = gs.query(text)
+        keys = sql.select(sql.columns[0]).distinct()  # built by Spark
+        want = methods(sql, keys, "sql")
+        twin = gs.query(text)
+        assert type(twin) is not type(sql)  # the driver twin answered
+        assert methods(twin, keys, "twin") == want
+
+    def test_query_without_variables_keeps_its_row_count(self, spark,
+                                                         tmp_path):
+        gs = self._served(spark, tmp_path)
+        for text, n in (('SELECT * WHERE { <urn:a> <urn:p> "1" }', 1),
+                        ('SELECT * WHERE { <urn:a> <urn:p> "7" }', 0),
+                        ('SELECT * WHERE { { <urn:a> <urn:p> "1" } UNION '
+                         '{ <urn:c> <urn:p> "3" } }', 2)):
+            df = gs.query(text)
+            assert df.columns == [] and df.count() == n, text
+            assert [r.asDict() for r in df.collect()] == [{}] * n, text
+            assert df.limit(5).count() == n, text  # the planned frame
+            with driver_cap(0):
+                assert gs.query(text).count() == n, text
+
     def test_ground_updates_advance_the_twin(self, spark, tmp_path):
         gs = self._served(spark, tmp_path)
         gs.query(TEMPLATES["lookup"])
@@ -1080,7 +1148,7 @@ class TestQueryTwin:
             gs.update(text)
             cur = apply_update_local(cur, text)
             assert gs._twin[1] is ev  # advanced, not rebuilt
-            assert gs._twin[0][1] == tuple(gs.tbl.files())
+            assert gs._twin[0] == tuple(gs.tbl.files())
             fresh = GraphStore(spark, gs.tbl.root)
             fresh.query(TEMPLATES["lookup"])
             assert set(ev.triples) == set(fresh._twin[1].triples) == cur

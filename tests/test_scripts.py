@@ -35,3 +35,31 @@ def test_scripts_put_their_own_checkout_on_sys_path():
         for line in _absolute_sys_path_entries(ast.parse(path.read_text()))
     }
     assert not found, f"literal absolute sys.path entries: {sorted(found)}"
+
+
+def _bench_distributed():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_distributed", SCRIPTS / "bench_distributed.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_bench_distributed_legs_keep_their_own_settings():
+    labelled_legs = _bench_distributed().labelled_legs
+    old = {"cores": 32, "n_docs_10x": 2_000_000, "steal_pct_at_end": 0.05,
+           "legs": {"closure_dist": {"sec": 20.8, "rows": 6},
+                    "cc_10x": {"sec": 12.2, "rows": 9},
+                    "twin_cap": {"sec": 29.8, "rows": 1, "cores": 4,
+                                 "steal_pct": 0.03}}}
+    legs = labelled_legs(old)
+    assert legs == {
+        "closure_dist": {"cores": 32, "steal_pct": 0.05, "sec": 20.8,
+                         "rows": 6},
+        "cc_10x": {"cores": 32, "steal_pct": 0.05, "n_docs_10x": 2_000_000,
+                   "sec": 12.2, "rows": 9},
+        "twin_cap": {"sec": 29.8, "rows": 1, "cores": 4, "steal_pct": 0.03}}
+    # a file written since has no header, and its legs pass unchanged
+    assert labelled_legs({"legs": legs}) == legs
